@@ -16,12 +16,22 @@ Reference semantics preserved exactly:
 - nothing found → {'Unknown': 100.0};
 - values normalized to sum 100, rounded half-even to 1 decimal
   (Python round == Spark bround).
+
+The kernel is SQL text (``language_distribution_sql``) so the silver
+builder hands it to the engine in one parse. Each intermediate — the
+matched topic languages, the (keys, values) pair and the total — is
+bound once per row through ``sqltext.let`` instead of being re-derived
+inside every branch and lambda that uses it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from stacktrend_spark.functions.sqltext import apply_sql, let
 
 #: keyword → display name (b2s:412-419), insertion order significant
 PROGRAMMING_LANGUAGES: tuple[tuple[str, str], ...] = (
@@ -33,9 +43,81 @@ PROGRAMMING_LANGUAGES: tuple[tuple[str, str], ...] = (
     ("dockerfile", "Dockerfile"), ("yaml", "YAML"), ("json", "JSON"), ("sql", "SQL"),
 )
 
+_LANG_PAIRS = (
+    "array("
+    + ", ".join(f"struct('{k}' AS key, '{v}' AS name)" for k, v in PROGRAMMING_LANGUAGES)
+    + ")"
+)
+
+
+def _bround(v: str) -> str:
+    return f"bround({v}, 1)"
+
+
+def language_distribution_sql(
+    language: str, topics: str, round_sql: Callable[[str], str] = _bround
+) -> str:
+    """SQL text of the Map<String,Double> of language shares for the SQL
+    operands ``language`` and ``topics``; ``round_sql`` renders the
+    per-share rounding (default the reference's half-even
+    ``bround(x, 1)``)."""
+    # per topic: all matching display names, in rule order; flattened in
+    # topic order — matches the reference's nested-loop append order
+    matched = (
+        f"flatten(transform(coalesce({topics}, array()), t -> transform("
+        f"filter({_LANG_PAIRS}, p -> contains(lower(t), p.key)), p -> p.name)))"
+    )
+    has_primary = (
+        "(ld_in.lang IS NOT NULL AND trim(ld_in.lang) != '' "
+        "AND NOT (lower(ld_in.lang) IN ('null', 'none')))"
+    )
+    # unique topic languages in first-occurrence order, minus an exact
+    # string match of the primary key (the reference keys primaries by
+    # the RAW language value, so only exact equality collides)
+    uniq_minus_primary = (
+        "CASE WHEN ld_n.hp THEN array_remove(array_distinct(ld_in.m), ld_in.lang) "
+        "ELSE array_distinct(ld_in.m) END"
+    )
+    # remaining share (30 with a primary, else 100) per topic OCCURRENCE
+    per_lang = "CASE WHEN ld_n.hp THEN 30.0D ELSE 100.0D END / CAST(ld_n.n AS DOUBLE)"
+    keys = (
+        "CASE WHEN ld_n.hp AND ld_n.n > 0 THEN concat(array(ld_in.lang), ld_u.u) "
+        "WHEN ld_n.hp THEN array(ld_in.lang) "
+        "WHEN ld_n.n > 0 THEN ld_u.u "
+        "ELSE array('Unknown') END"
+    )
+    vals = (
+        f"CASE WHEN ld_n.hp AND ld_n.n > 0 THEN concat(array(70.0D), transform(ld_u.u, u -> {per_lang})) "
+        "WHEN ld_n.hp THEN array(70.0D) "
+        f"WHEN ld_n.n > 0 THEN transform(ld_u.u, u -> {per_lang}) "
+        "ELSE array(100.0D) END"
+    )
+    total = "aggregate(ld_kv.vals, 0.0D, (acc, x) -> acc + x)"
+    shares = (
+        f"map_from_arrays(ld_kv.keys, transform(ld_kv.vals, v -> "
+        f"{round_sql('v / ld_total * 100.0D')}))"
+    )
+    return let(
+        f"named_struct('lang', {language}, 'm', {matched})",
+        "ld_in",
+        let(
+            f"named_struct('hp', {has_primary}, 'n', size(ld_in.m))",
+            "ld_n",
+            let(
+                f"named_struct('u', {uniq_minus_primary})",
+                "ld_u",
+                let(
+                    f"named_struct('keys', {keys}, 'vals', {vals})",
+                    "ld_kv",
+                    let(total, "ld_total", shares),
+                ),
+            ),
+        ),
+    )
+
 
 def language_distribution(
-    language: Column, topics: Column, round_fn=None
+    language: Column | str, topics: Column | str, round_fn=None
 ) -> Column:
     """Map<String,Double> of estimated language shares (sums to ~100).
 
@@ -45,63 +127,10 @@ def language_distribution(
     deterministic half-up formula instead, because DuckDB's ROUND is
     half-up and the two differ on exactly-representable ties."""
     if round_fn is None:
-        round_fn = lambda v: F.bround(v, 1)  # noqa: E731
-    # one F.expr parse instead of ~70 py4j expression-builder calls:
-    # the SQL parser yields the identical array<struct<key,name>>
-    # literal tree, but driver-side construction drops from ~0.25 s to
-    # ~ms per call — this expression is rebuilt on every build_silver
-    # (r13 optimization; measured in OPTIMIZATION_r13.md)
-    lang_pairs = F.expr(
-        "array("
-        + ", ".join(
-            f"struct('{k}' AS key, '{v}' AS name)"
-            for k, v in PROGRAMMING_LANGUAGES
-        )
-        + ")"
+        return apply_sql(language_distribution_sql, language, topics)
+    unrounded = apply_sql(
+        lambda lang, tops: language_distribution_sql(lang, tops, round_sql=lambda v: v),
+        language,
+        topics,
     )
-    # per topic: all matching display names, in rule order; flattened in
-    # topic order — matches the reference's nested-loop append order
-    matched = F.flatten(
-        F.transform(
-            F.coalesce(topics, F.array()),
-            lambda t: F.transform(
-                F.filter(lang_pairs, lambda p: F.lower(t).contains(p["key"])),
-                lambda p: p["name"],
-            ),
-        )
-    )
-    has_primary = (
-        language.isNotNull()
-        & (F.trim(language) != "")
-        & ~F.lower(language).isin("null", "none")
-    )
-    n_occurrences = F.size(matched)
-    remaining = F.when(has_primary, F.lit(30.0)).otherwise(F.lit(100.0))
-    per_lang = remaining / n_occurrences.cast("double")
-    # unique topic languages in first-occurrence order, minus an exact
-    # string match of the primary key (the reference keys primaries by
-    # the RAW language value, so only exact equality collides)
-    uniq = F.array_distinct(matched)
-    uniq_minus_primary = F.when(
-        has_primary, F.array_remove(uniq, language)
-    ).otherwise(uniq)
-
-    keys_with_primary = F.concat(F.array(language), uniq_minus_primary)
-    vals_with_primary = F.concat(
-        F.array(F.lit(70.0)), F.transform(uniq_minus_primary, lambda _: per_lang)
-    )
-    keys = (
-        F.when(has_primary & (n_occurrences > 0), keys_with_primary)
-        .when(has_primary, F.array(language))
-        .when(n_occurrences > 0, uniq_minus_primary)
-        .otherwise(F.array(F.lit("Unknown")))
-    )
-    vals = (
-        F.when(has_primary & (n_occurrences > 0), vals_with_primary)
-        .when(has_primary, F.array(F.lit(70.0)))
-        .when(n_occurrences > 0, F.transform(uniq_minus_primary, lambda _: per_lang))
-        .otherwise(F.array(F.lit(100.0)))
-    )
-    total = F.aggregate(vals, F.lit(0.0), lambda acc, x: acc + x)
-    normalized = F.transform(vals, lambda v: round_fn(v / total * 100.0))
-    return F.map_from_arrays(keys, normalized)
+    return F.transform_values(unrounded, lambda _, v: round_fn(v))

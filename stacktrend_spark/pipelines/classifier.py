@@ -60,7 +60,7 @@ class Classifier(ABC):
 
 class RuleBasedClassifier(Classifier):
     """Deterministic keyword classifier — the test-time stand-in for the
-    LLM (FIXTURES.md §5). Pure column expressions: scans topics + name
+    LLM (FIXTURES.md §5). One SQL-text projection: scans topics + name
     for the first matching rule; unmatched → ("Other", "unknown", 0.1),
     the reference's default (b2s:544-548). Confidence is derived
     deterministically from match position: first-rule matches score
@@ -68,32 +68,26 @@ class RuleBasedClassifier(Classifier):
     sides of the split are exercised."""
 
     def classify(self, repos: DataFrame) -> DataFrame:
-        haystack = F.concat_ws(
-            " ",
-            F.lower(F.coalesce(F.col("name"), F.lit(""))),
-            F.concat_ws(" ", F.coalesce(F.col("topics"), F.array())),
-        )
-        cat = sub_c = conf = None
+        cat, sub_c, conf = [], [], []
         for idx, (kw, category, sub) in enumerate(_RULES):
-            cond = haystack.contains(kw)
+            cond = f"WHEN contains(haystack, '{kw}')"
+            cat.append(f"{cond} THEN '{category}'")
+            sub_c.append(f"{cond} THEN '{sub}'")
             # later (weaker) rules get lower confidence, dipping below
             # the 0.8 preserve threshold for the tail
-            confidence = F.lit(round(0.95 - 0.05 * idx, 2))
-            if cat is None:
-                cat = F.when(cond, F.lit(category))
-                sub_c = F.when(cond, F.lit(sub))
-                conf = F.when(cond, confidence)
-            else:
-                cat = cat.when(cond, F.lit(category))
-                sub_c = sub_c.when(cond, F.lit(sub))
-                conf = conf.when(cond, confidence)
-        return repos.select(
-            F.col("repository_id"),
-            cat.otherwise("Other").alias("technology_category"),
-            sub_c.otherwise("unknown").alias("technology_subcategory"),
-            F.greatest(conf.otherwise(F.lit(0.1)), F.lit(0.1)).alias(
-                "classification_confidence"
-            ),
+            conf.append(f"{cond} THEN {round(0.95 - 0.05 * idx, 2)!r}D")
+        # the haystack is projected once: the three CASE chains name it
+        # 54 times, which as inlined text made analysis twice as slow
+        return repos.selectExpr(
+            "repository_id",
+            "concat_ws(' ', lower(coalesce(name, '')),"
+            " concat_ws(' ', coalesce(topics, array()))) AS haystack",
+        ).selectExpr(
+            "repository_id",
+            f"CASE {' '.join(cat)} ELSE 'Other' END AS technology_category",
+            f"CASE {' '.join(sub_c)} ELSE 'unknown' END AS technology_subcategory",
+            f"greatest(CASE {' '.join(conf)} ELSE 0.1D END, 0.1D)"
+            " AS classification_confidence",
         )
 
 
@@ -276,16 +270,14 @@ def apply_classification(repos: DataFrame, labels: DataFrame) -> DataFrame:
     SURVEY §4 anti-pattern 2). Unlabeled rows get the reference default
     ("Other", "unknown", 0.1)."""
     joined = repos.join(F.broadcast(labels), "repository_id", "left")
-    return (
-        joined.withColumn(
-            "technology_category", F.coalesce(F.col("technology_category"), F.lit("Other"))
-        )
-        .withColumn(
-            "technology_subcategory",
-            F.coalesce(F.col("technology_subcategory"), F.lit("unknown")),
-        )
-        .withColumn(
-            "classification_confidence",
-            F.coalesce(F.col("classification_confidence"), F.lit(0.1)),
-        )
+    return joined.withColumns(
+        {
+            "technology_category": F.expr("coalesce(technology_category, 'Other')"),
+            "technology_subcategory": F.expr(
+                "coalesce(technology_subcategory, 'unknown')"
+            ),
+            "classification_confidence": F.expr(
+                "coalesce(classification_confidence, 0.1D)"
+            ),
+        }
     )

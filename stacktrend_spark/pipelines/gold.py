@@ -10,141 +10,107 @@ with real lag() when history is present.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from stacktrend_spark.functions.sqltext import iso_date
+
+# Every frame below is declared as SQL text — one parse per aggregate
+# or projection instead of a Column-DSL chain (functions/sqltext.py).
+# Float literals carry the D suffix: a bare 0.3 in Spark SQL is a
+# DECIMAL, where the Python float of the reference formulas is DOUBLE.
+
+
+def _agg(df: DataFrame, keys: list[str], *exprs: str) -> DataFrame:
+    return df.groupBy(*keys).agg(*[F.expr(e) for e in exprs])
+
+
+def _rank(order: str) -> str:
+    # rankings carry a deterministic tiebreaker: the reference's bare
+    # orderBy(desc(metric)) is nondeterministic under ties
+    return f"row_number() OVER (ORDER BY {order} DESC, technology_category ASC)"
 
 
 def tech_metrics(silver: DataFrame) -> DataFrame:
     """Gold table 1 (s2g:133-311): category rollup → momentum →
     lifecycle → ranks → risk."""
-    agg = (
-        silver.groupBy("technology_category")
-        .agg(
-            F.count("repository_id").alias("total_repositories"),
-            F.sum("stargazers_count").alias("total_stars"),
-            F.sum("forks_count").alias("total_forks"),
-            F.sum("watchers_count").alias("total_watchers"),
-            F.avg("stargazers_count").alias("avg_stars_per_repo"),
-            F.avg("forks_count").alias("avg_forks_per_repo"),
-            F.avg("community_health_score").alias("avg_community_health"),
-            F.avg("quality_score").alias("avg_quality_score"),
-            F.avg("star_velocity_30d").alias("avg_star_velocity"),
-            F.avg("commit_frequency_30d").alias("avg_commit_frequency"),
-            F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_repositories"),
-            F.avg("days_since_creation").alias("avg_repository_age_days"),
-            F.countDistinct("license_category").alias("license_diversity_count"),
-        )
-        .withColumn(
-            "active_repositories_percentage",
-            F.col("active_repositories") / F.col("total_repositories") * 100,
-        )
+    agg = _agg(
+        silver,
+        ["technology_category"],
+        "count(repository_id) AS total_repositories",
+        "sum(stargazers_count) AS total_stars",
+        "sum(forks_count) AS total_forks",
+        "sum(watchers_count) AS total_watchers",
+        "avg(stargazers_count) AS avg_stars_per_repo",
+        "avg(forks_count) AS avg_forks_per_repo",
+        "avg(community_health_score) AS avg_community_health",
+        "avg(quality_score) AS avg_quality_score",
+        "avg(star_velocity_30d) AS avg_star_velocity",
+        "avg(commit_frequency_30d) AS avg_commit_frequency",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
+        "avg(days_since_creation) AS avg_repository_age_days",
+        "count(DISTINCT license_category) AS license_diversity_count",
     )
-    # momentum score (s2g:168-186)
-    momentum = (
-        agg.withColumn(
-            "popularity_score",
-            F.least(F.log10(F.greatest(F.col("total_stars"), F.lit(1))) * 10, F.lit(40)),
-        )
-        .withColumn("growth_score", F.least(F.col("avg_star_velocity") * 100, F.lit(30)))
-        .withColumn("health_score_weighted", F.col("avg_community_health") * 0.3)
-        .withColumn(
-            "momentum_score",
-            (
-                F.col("popularity_score")
-                + F.col("growth_score")
-                + F.col("health_score_weighted")
-            ).cast("double"),
-        )
-        .drop("popularity_score", "growth_score", "health_score_weighted")
+    staged = agg.selectExpr(
+        "*",
+        "active_repositories / total_repositories * 100 AS active_repositories_percentage",
+        # momentum score (s2g:168-186): popularity + growth + weighted health
+        "CAST(least(log10(greatest(total_stars, 1)) * 10, 40)"
+        " + least(avg_star_velocity * 100, 30)"
+        " + avg_community_health * 0.3D AS DOUBLE) AS momentum_score",
+        # lifecycle staging (s2g:199-213)
+        "CASE WHEN avg_star_velocity > 1.0D AND avg_repository_age_days < 730 THEN 'emerging'"
+        " WHEN avg_star_velocity > 0.5D AND total_repositories >= 5 THEN 'growing'"
+        " WHEN total_repositories >= 10 AND avg_repository_age_days > 1095 THEN 'mature'"
+        " WHEN avg_star_velocity < 0.1D THEN 'declining'"
+        " ELSE 'stable' END AS lifecycle_stage",
+        "CASE WHEN avg_star_velocity > 0.5D THEN 'rising'"
+        " WHEN avg_star_velocity > 0.1D THEN 'stable'"
+        " ELSE 'declining' END AS momentum_trend",
     )
-    # lifecycle staging (s2g:199-213)
-    staged = momentum.withColumn(
-        "lifecycle_stage",
-        F.when(
-            (F.col("avg_star_velocity") > 1.0) & (F.col("avg_repository_age_days") < 730),
-            "emerging",
-        )
-        .when(
-            (F.col("avg_star_velocity") > 0.5) & (F.col("total_repositories") >= 5),
-            "growing",
-        )
-        .when(
-            (F.col("total_repositories") >= 10)
-            & (F.col("avg_repository_age_days") > 1095),
-            "mature",
-        )
-        .when(F.col("avg_star_velocity") < 0.1, "declining")
-        .otherwise("stable"),
-    ).withColumn(
-        "momentum_trend",
-        F.when(F.col("avg_star_velocity") > 0.5, "rising")
-        .when(F.col("avg_star_velocity") > 0.1, "stable")
-        .otherwise("declining"),
+    # rankings (s2g:225-236) and risk metrics (s2g:245-260)
+    ranked = staged.selectExpr(
+        "*",
+        f"{_rank('total_stars')} AS popularity_rank",
+        f"{_rank('avg_star_velocity')} AS growth_rank",
+        f"{_rank('avg_community_health')} AS health_rank",
+        f"{_rank('momentum_score')} AS momentum_rank",
+        f"{_rank('momentum_score')} AS overall_rank",
+        "CASE WHEN total_repositories <= 2 THEN 100.0D"
+        " WHEN total_repositories <= 5 THEN 60.0D"
+        " WHEN total_repositories <= 10 THEN 30.0D"
+        " ELSE 10.0D END AS single_maintainer_risk",
+        "CAST(least(license_diversity_count * 20, 100) AS DOUBLE) AS license_diversity_score",
     )
-
-    # rankings (s2g:225-236) — tiebreaker added: the reference's bare
-    # orderBy(desc(metric)) is nondeterministic under ties
-    def rank(col: str) -> F.Column:
-        return F.row_number().over(
-            W.orderBy(F.desc(col), F.asc("technology_category"))
-        )
-
-    ranked = (
-        staged.withColumn("popularity_rank", rank("total_stars"))
-        .withColumn("growth_rank", rank("avg_star_velocity"))
-        .withColumn("health_rank", rank("avg_community_health"))
-        .withColumn("momentum_rank", rank("momentum_score"))
-        .withColumn("overall_rank", rank("momentum_score"))
-    )
-    # risk metrics (s2g:245-260)
-    return (
-        ranked.withColumn(
-            "single_maintainer_risk",
-            F.when(F.col("total_repositories") <= 2, 100.0)
-            .when(F.col("total_repositories") <= 5, 60.0)
-            .when(F.col("total_repositories") <= 10, 30.0)
-            .otherwise(10.0),
-        )
-        .withColumn(
-            "license_diversity_score",
-            F.least(F.col("license_diversity_count") * 20, F.lit(100)).cast("double"),
-        )
-        .withColumn(
-            "sustainability_score",
-            (
-                F.col("active_repositories_percentage") * 0.4
-                + F.col("avg_community_health") * 0.3
-                + (100 - F.col("single_maintainer_risk")) * 0.3
-            ).cast("double"),
-        )
+    return ranked.selectExpr(
+        "*",
+        "CAST(active_repositories_percentage * 0.4D"
+        " + avg_community_health * 0.3D"
+        " + (100 - single_maintainer_risk) * 0.3D AS DOUBLE) AS sustainability_score",
     )
 
 
 def repo_ranks(silver: DataFrame) -> DataFrame:
     """Gold table 2 (s2g:359-388): per-repo momentum + category (W2) and
     global (W1) ranks."""
-    per_repo = silver.withColumn(
-        "repo_momentum",
-        (
-            F.least(F.log10(F.greatest(F.col("stargazers_count"), F.lit(1))) * 15, F.lit(60))
-            + F.col("quality_score") * 0.4
-        ).cast("double"),
+    per_repo = silver.selectExpr(
+        "*",
+        "CAST(least(log10(greatest(stargazers_count, 1)) * 15, 60)"
+        " + quality_score * 0.4D AS DOUBLE) AS repo_momentum",
     )
-    w_cat = W.partitionBy("technology_category").orderBy(
-        F.desc("quality_score"), F.asc("repository_id")
-    )
-    w_global = W.orderBy(F.desc("repo_momentum"), F.asc("repository_id"))
-    w_stars = W.orderBy(F.desc("stargazers_count"), F.asc("repository_id"))
-    return per_repo.select(
+    return per_repo.selectExpr(
         "repository_id",
         "name",
         "technology_category",
         "stargazers_count",
         "quality_score",
         "repo_momentum",
-        F.row_number().over(w_cat).alias("category_quality_rank"),
-        F.row_number().over(w_global).alias("global_momentum_rank"),
-        F.row_number().over(w_stars).alias("global_star_rank"),
+        "row_number() OVER (PARTITION BY technology_category"
+        " ORDER BY quality_score DESC, repository_id ASC) AS category_quality_rank",
+        "row_number() OVER (ORDER BY repo_momentum DESC, repository_id ASC)"
+        " AS global_momentum_rank",
+        "row_number() OVER (ORDER BY stargazers_count DESC, repository_id ASC)"
+        " AS global_star_rank",
         "partition_date",
     )
 
@@ -154,155 +120,132 @@ def trend_daily(silver: DataFrame, history: DataFrame | None = None) -> DataFram
     W3 market share. With ``history`` (prior trend_daily rows) present,
     momentum_change/rank_change are computed with real lag() — the
     reference hard-codes them to 0 ("Placeholder", s2g:423-424)."""
-    daily = (
-        silver.groupBy("technology_category", "partition_date")
-        .agg(
-            F.count("repository_id").alias("repository_count"),
-            F.sum("stargazers_count").alias("daily_total_stars"),
-            F.avg("quality_score").alias("avg_quality"),
-            F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_count"),
-        )
-        .withColumn(
-            "market_share",
-            F.col("daily_total_stars")
-            / F.sum("daily_total_stars").over(W.partitionBy("partition_date")),
-        )
+    daily = _agg(
+        silver,
+        ["technology_category", "partition_date"],
+        "count(repository_id) AS repository_count",
+        "sum(stargazers_count) AS daily_total_stars",
+        "avg(quality_score) AS avg_quality",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_count",
+    ).selectExpr(
+        "*",
+        "daily_total_stars / sum(daily_total_stars) OVER (PARTITION BY partition_date)"
+        " AS market_share",
     )
     if history is not None:
         merged = history.select(*daily.columns).unionByName(daily)
-        w = W.partitionBy("technology_category").orderBy("partition_date")
-        return (
-            merged.withColumn(
-                "momentum_change",
-                F.coalesce(
-                    F.col("market_share") - F.lag("market_share").over(w), F.lit(0.0)
-                ),
-            )
-            .withColumn(
-                "rank_change",
-                F.coalesce(
-                    F.col("repository_count") - F.lag("repository_count").over(w),
-                    F.lit(0),
-                ).cast("long"),
-            )
+        w = "OVER (PARTITION BY technology_category ORDER BY partition_date)"
+        return merged.selectExpr(
+            "*",
+            f"coalesce(market_share - lag(market_share) {w}, 0.0D) AS momentum_change",
+            f"CAST(coalesce(repository_count - lag(repository_count) {w}, 0) AS BIGINT)"
+            " AS rank_change",
         )
-    return daily.withColumn("momentum_change", F.lit(0.0)).withColumn(
-        "rank_change", F.lit(0).cast("long")
+    return daily.selectExpr(
+        "*", "0.0D AS momentum_change", "CAST(0 AS BIGINT) AS rank_change"
     )
 
 
 def tech_health(silver: DataFrame) -> DataFrame:
     """Gold table 4 (s2g:460-492): health stats + stddev dispersion +
     sustainability/risk chains."""
-    agg = silver.groupBy("technology_category").agg(
-        F.count("repository_id").alias("repo_count"),
-        F.avg("community_health_score").alias("avg_health"),
-        F.stddev("stargazers_count").alias("star_dispersion"),
-        F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_repos"),
-        F.countDistinct("license_category").alias("license_variety"),
-        F.avg("open_issues_count").alias("avg_open_issues"),
-    )
-    active_ratio = F.col("active_repos") / F.col("repo_count")
-    return agg.withColumn(
-        "health_status",
-        F.when((F.col("avg_health") >= 80) & (active_ratio >= 0.7), "thriving")
-        .when(F.col("avg_health") >= 60, "healthy")
-        .when(F.col("avg_health") >= 40, "stable")
-        .otherwise("at_risk"),
-    ).withColumn(
-        "abandonment_risk",
-        F.when(active_ratio < 0.2, "high")
-        .when(active_ratio < 0.5, "medium")
-        .otherwise("low"),
+    active_ratio = "active_repos / repo_count"
+    return _agg(
+        silver,
+        ["technology_category"],
+        "count(repository_id) AS repo_count",
+        "avg(community_health_score) AS avg_health",
+        "stddev(stargazers_count) AS star_dispersion",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repos",
+        "count(DISTINCT license_category) AS license_variety",
+        "avg(open_issues_count) AS avg_open_issues",
+    ).selectExpr(
+        "*",
+        f"CASE WHEN avg_health >= 80 AND {active_ratio} >= 0.7D THEN 'thriving'"
+        " WHEN avg_health >= 60 THEN 'healthy'"
+        " WHEN avg_health >= 40 THEN 'stable'"
+        " ELSE 'at_risk' END AS health_status",
+        f"CASE WHEN {active_ratio} < 0.2D THEN 'high'"
+        f" WHEN {active_ratio} < 0.5D THEN 'medium'"
+        " ELSE 'low' END AS abandonment_risk",
     )
 
 
 def lang_stats(silver: DataFrame) -> DataFrame:
     """Gold table 5 (s2g:514-545): primary-language rollup → W4 global
     share → W1 rank → adoption stage."""
-    agg = silver.filter(F.col("primary_language").isNotNull()).groupBy(
-        "primary_language"
-    ).agg(
-        F.count("repository_id").alias("repo_count"),
-        F.sum("stargazers_count").alias("total_stars"),
-        F.avg("quality_score").alias("avg_quality"),
-        F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_repos"),
-    )
-    share = F.col("total_stars") / F.sum("total_stars").over(W.partitionBy())
-    return (
-        agg.withColumn("star_share", share)
-        .withColumn(
-            "language_rank",
-            F.row_number().over(
-                W.orderBy(F.desc("total_stars"), F.asc("primary_language"))
-            ),
-        )
-        .withColumn(
-            "adoption_stage",
-            F.when(share >= 0.2, "dominant")
-            .when(share >= 0.1, "major")
-            .when(share >= 0.02, "established")
-            .otherwise("niche"),
-        )
+    share = "total_stars / sum(total_stars) OVER ()"
+    return _agg(
+        silver.filter("primary_language IS NOT NULL"),
+        ["primary_language"],
+        "count(repository_id) AS repo_count",
+        "sum(stargazers_count) AS total_stars",
+        "avg(quality_score) AS avg_quality",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repos",
+    ).selectExpr(
+        "*",
+        f"{share} AS star_share",
+        "row_number() OVER (ORDER BY total_stars DESC, primary_language ASC)"
+        " AS language_rank",
+        f"CASE WHEN {share} >= 0.2D THEN 'dominant'"
+        f" WHEN {share} >= 0.1D THEN 'major'"
+        f" WHEN {share} >= 0.02D THEN 'established'"
+        " ELSE 'niche' END AS adoption_stage",
     )
 
 
 def market_pulse(silver: DataFrame, as_of_date: str) -> DataFrame:
     """Gold table 6 (s2g:567-580) — single-row market summary, computed
     in-plan (the reference collects scalars to the driver, A11 ⟲)."""
-    return (
-        silver.agg(
-            F.count("repository_id").alias("total_repositories"),
-            F.sum("stargazers_count").alias("total_stars"),
-            F.avg("quality_score").alias("avg_quality_score"),
-            F.avg("community_health_score").alias("avg_health_score"),
-            F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_repositories"),
-            F.countDistinct("technology_category").alias("categories_tracked"),
-        )
-        .withColumn(
-            "market_activity_ratio",
-            F.col("active_repositories") / F.col("total_repositories"),
-        )
-        .withColumn("measurement_date", F.lit(as_of_date))
+    return silver.selectExpr(
+        "count(repository_id) AS total_repositories",
+        "sum(stargazers_count) AS total_stars",
+        "avg(quality_score) AS avg_quality_score",
+        "avg(community_health_score) AS avg_health_score",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
+        "count(DISTINCT technology_category) AS categories_tracked",
+    ).selectExpr(
+        "*",
+        "active_repositories / total_repositories AS market_activity_ratio",
+        f"{iso_date(as_of_date)} AS measurement_date",
     )
 
 
 def adoption_matrix(silver: DataFrame, as_of_date: str) -> DataFrame:
     """Gold table 7 (s2g:603-630): topic explode → self-reference filter
     (P9) → co-occurrence counts with HAVING (P12) → correlation score."""
-    return (
-        silver.select("technology_category", "stargazers_count", "topics_standardized")
-        .filter(F.col("topics_standardized").isNotNull())
-        .filter(F.size("topics_standardized") > 0)
-        .select(
+    pairs = (
+        silver.filter(
+            "topics_standardized IS NOT NULL AND size(topics_standardized) > 0"
+        )
+        .selectExpr(
             "technology_category",
             "stargazers_count",
-            F.explode("topics_standardized").alias("topic"),
+            "explode(topics_standardized) AS topic",
         )
-        .filter(F.col("topic") != F.col("technology_category"))
-        .groupBy("technology_category", "topic")
-        .agg(
-            F.count(F.lit(1)).alias("co_occurrence_count"),
-            F.sum("stargazers_count").alias("combined_stars"),
+        .filter("topic != technology_category")
+    )
+    scored = (
+        _agg(
+            pairs,
+            ["technology_category", "topic"],
+            "count(1) AS co_occurrence_count",
+            "sum(stargazers_count) AS combined_stars",
         )
-        .filter(F.col("co_occurrence_count") >= 3)
-        .withColumn(
-            "correlation_score",
-            F.log10(F.greatest(F.col("combined_stars"), F.lit(1)))
-            * F.sqrt(F.col("co_occurrence_count")),
+        .filter("co_occurrence_count >= 3")
+        .selectExpr(
+            "*",
+            "log10(greatest(combined_stars, 1)) * sqrt(co_occurrence_count)"
+            " AS correlation_score",
         )
-        .withColumn(
-            "ecosystem_strength",
-            F.when(F.col("correlation_score") > 10, "strong")
-            .when(F.col("correlation_score") > 5, "moderate")
-            .otherwise("weak"),
-        )
-        .select(
-            F.col("technology_category").alias("tech_primary"),
-            F.col("topic").alias("tech_secondary"),
-            "co_occurrence_count",
-            "correlation_score",
-            "ecosystem_strength",
-            F.lit(as_of_date).alias("partition_date"),
-        )
+    )
+    return scored.selectExpr(
+        "technology_category AS tech_primary",
+        "topic AS tech_secondary",
+        "co_occurrence_count",
+        "correlation_score",
+        "CASE WHEN correlation_score > 10 THEN 'strong'"
+        " WHEN correlation_score > 5 THEN 'moderate'"
+        " ELSE 'weak' END AS ecosystem_strength",
+        f"{iso_date(as_of_date)} AS partition_date",
     )

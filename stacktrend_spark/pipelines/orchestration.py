@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stacktrend_spark.functions.sqltext import iso_date
 from stacktrend_spark.pipelines import gold, personal
 from stacktrend_spark.pipelines.classifier import Classifier, RuleBasedClassifier
 from stacktrend_spark.pipelines.medallion import MedallionStore
@@ -58,7 +59,9 @@ def run_trend_pipeline(
     silver (reusing confident prior classifications from the stored
     silver — the MERGE-driven smart split), s2g derives the seven gold
     tables from the STORED silver. Returns the materialized frames
-    keyed by layer-qualified names."""
+    keyed by layer-qualified names. A malformed ``as_of_date`` raises
+    ValueError before anything is written."""
+    iso_date(as_of_date)
     classifier = classifier or RuleBasedClassifier()
     out: dict[str, DataFrame] = {}
 
@@ -154,7 +157,9 @@ def run_personal_pipeline(
 ) -> dict[str, DataFrame]:
     """Stage chain prdfp:14-222: personal ingestion (repos + activity)
     → silver (curated portfolio + activity metrics) → the three
-    portfolio gold tables (prs2g)."""
+    portfolio gold tables (prs2g). A malformed ``as_of_date`` raises
+    ValueError before anything is written."""
+    iso_date(as_of_date)
     classifier = classifier or RuleBasedClassifier()
     out: dict[str, DataFrame] = {}
 

@@ -12,60 +12,63 @@ for top-technologies folded into the plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stacktrend_spark.functions.sqltext import iso_date
+
 PERIODS = ("7d", "30d", "90d")
+
+# Frames are declared as SQL text, one parse per aggregate or
+# projection (functions/sqltext.py); float literals carry the D suffix
+# so they stay DOUBLE as in the reference formulas.
 
 
 def activity_metrics(activity: DataFrame, as_of_date: str) -> DataFrame:
     """Per-(repository, period) activity rollup (prb2s:578-634): commit/
     issue/release count-ifs, coalesced line stats, commit frequency and
     the capped development-velocity blend."""
-    as_of = F.lit(as_of_date).cast("timestamp")
+    as_of = iso_date(as_of_date)
+    aggs = [
+        F.expr(e)
+        for e in (
+            "sum(CASE WHEN activity_type = 'commit' THEN 1 ELSE 0 END) AS total_commits",
+            "sum(CASE WHEN activity_type = 'issue' THEN 1 ELSE 0 END) AS total_issues",
+            "sum(CASE WHEN activity_type = 'release' THEN 1 ELSE 0 END) AS total_releases",
+            "sum(coalesce(additions, 0)) AS lines_added",
+            "sum(coalesce(deletions, 0)) AS lines_deleted",
+            "sum(coalesce(changed_files, 0)) AS files_changed",
+            "max(activity_date) AS last_activity_date",
+        )
+    ]
     frames = []
     for period in PERIODS:
         days = int(period[:-1])
-        cutoff = as_of - F.expr(f"INTERVAL {days} DAYS")
         frames.append(
-            activity.filter(F.col("activity_date") >= cutoff)
+            activity.filter(
+                f"activity_date >= CAST({as_of} AS TIMESTAMP) - INTERVAL {days} DAYS"
+            )
             .groupBy("repository_id")
-            .agg(
-                F.sum(F.when(F.col("activity_type") == "commit", 1).otherwise(0)).alias(
-                    "total_commits"
-                ),
-                F.sum(F.when(F.col("activity_type") == "issue", 1).otherwise(0)).alias(
-                    "total_issues"
-                ),
-                F.sum(F.when(F.col("activity_type") == "release", 1).otherwise(0)).alias(
-                    "total_releases"
-                ),
-                F.sum(F.coalesce(F.col("additions"), F.lit(0))).alias("lines_added"),
-                F.sum(F.coalesce(F.col("deletions"), F.lit(0))).alias("lines_deleted"),
-                F.sum(F.coalesce(F.col("changed_files"), F.lit(0))).alias("files_changed"),
-                F.max("activity_date").alias("last_activity_date"),
+            .agg(*aggs)
+            .selectExpr(
+                "*",
+                f"'{period}' AS measurement_period",
+                f"CAST(total_commits / {days} AS DOUBLE) AS commit_frequency",
             )
-            .withColumn("measurement_period", F.lit(period))
-            .withColumn(
-                "commit_frequency",
-                (F.col("total_commits") / F.lit(days)).cast("double"),
+            .selectExpr(
+                "*",
+                "CAST(least(1.0D, commit_frequency * 0.4D"
+                " + least(1.0D, lines_added / 1000.0D) * 0.3D"
+                " + least(1.0D, files_changed / 100.0D) * 0.3D) AS DOUBLE)"
+                " AS development_velocity",
             )
-            .withColumn(
-                "development_velocity",
-                F.least(
-                    F.lit(1.0),
-                    F.col("commit_frequency") * 0.4
-                    + F.least(F.lit(1.0), F.col("lines_added") / 1000.0) * 0.3
-                    + F.least(F.lit(1.0), F.col("files_changed") / 100.0) * 0.3,
-                ).cast("double"),
+            .selectExpr(
+                "*",
+                "CASE WHEN development_velocity >= 0.7D THEN 'increasing'"
+                " WHEN development_velocity >= 0.3D THEN 'stable'"
+                " ELSE 'decreasing' END AS activity_trend",
+                f"{as_of} AS partition_date",
             )
-            .withColumn(
-                "activity_trend",
-                F.when(F.col("development_velocity") >= 0.7, "increasing")
-                .when(F.col("development_velocity") >= 0.3, "stable")
-                .otherwise("decreasing"),
-            )
-            .withColumn("partition_date", F.lit(as_of_date))
         )
     out = frames[0]
     for df in frames[1:]:
@@ -78,26 +81,25 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
     top technologies/languages to the driver and re-embeds them as
     array literals; we keep everything in-plan: top-k via window rank,
     folded back with collect_list over an ordered struct."""
-    totals = silver.agg(
-        F.count("repository_id").alias("total_repositories"),
-        F.sum("stargazers_count").alias("total_stars"),
-        F.sum("forks_count").alias("total_forks"),
-        F.sum(F.when(F.col("is_active"), 1).otherwise(0)).alias("active_repositories"),
-        F.avg("quality_score").alias("avg_quality_score"),
-        F.countDistinct("technology_category").alias("n_categories"),
-        F.countDistinct("primary_language").alias("n_languages"),
+    totals = silver.selectExpr(
+        "count(repository_id) AS total_repositories",
+        "sum(stargazers_count) AS total_stars",
+        "sum(forks_count) AS total_forks",
+        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
+        "avg(quality_score) AS avg_quality_score",
+        "count(DISTINCT technology_category) AS n_categories",
+        "count(DISTINCT primary_language) AS n_languages",
     )
 
     def top_list(col: str) -> DataFrame:
-        w = W.orderBy(F.desc("count"), F.asc(col))
         return (
-            silver.filter(F.col(col).isNotNull())
+            silver.filter(f"{col} IS NOT NULL")
             .groupBy(col)
-            .agg(F.count(F.lit(1)).alias("count"))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= top_k)
-            .agg(F.sort_array(F.collect_list(F.struct("rnk", col))).alias("s"))
-            .select(F.transform(F.col("s"), lambda x: x[col]).alias(f"top_{col}"))
+            .agg(F.expr("count(1) AS count"))
+            .selectExpr("*", f"row_number() OVER (ORDER BY `count` DESC, {col} ASC) AS rnk")
+            .filter(f"rnk <= {int(top_k)}")
+            .selectExpr(f"sort_array(collect_list(struct(rnk, {col}))) AS s")
+            .selectExpr(f"transform(s, x -> x.{col}) AS top_{col}")
         )
 
     tech = top_list("technology_category")
@@ -105,31 +107,25 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
     # all three sides are 1-row aggregates: hint broadcast so the plan
     # stays a BroadcastNestedLoopJoin under AQE instead of a cartesian
     joined = totals.crossJoin(F.broadcast(tech)).crossJoin(F.broadcast(lang))
-    active_ratio = F.col("active_repositories") / F.greatest(
-        F.col("total_repositories"), F.lit(1)
-    )
-    return (
-        joined.withColumn(
-            "primary_technologies", F.col("top_technology_category")
-        )
-        .withColumn("primary_languages", F.col("top_primary_language"))
-        .drop("top_technology_category", "top_primary_language")
-        .withColumn(
-            "portfolio_diversity_score",
-            (
-                F.col("n_categories") / F.greatest(F.col("total_repositories"), F.lit(1))
-                + F.col("n_languages") / F.greatest(F.col("total_repositories"), F.lit(1))
-            )
-            / 2.0,
-        )
-        .withColumn(
-            "activity_level",
-            F.when(active_ratio >= 0.7, "high")
-            .when(active_ratio >= 0.3, "medium")
-            .otherwise("low"),
-        )
-        .withColumn("measurement_date", F.lit(as_of_date))
-        .withColumn("partition_date", F.lit(as_of_date))
+    day = iso_date(as_of_date)
+    n = "greatest(total_repositories, 1)"
+    active_ratio = f"active_repositories / {n}"
+    return joined.selectExpr(
+        "total_repositories",
+        "total_stars",
+        "total_forks",
+        "active_repositories",
+        "avg_quality_score",
+        "n_categories",
+        "n_languages",
+        "top_technology_category AS primary_technologies",
+        "top_primary_language AS primary_languages",
+        f"(n_categories / {n} + n_languages / {n}) / 2.0D AS portfolio_diversity_score",
+        f"CASE WHEN {active_ratio} >= 0.7D THEN 'high'"
+        f" WHEN {active_ratio} >= 0.3D THEN 'medium'"
+        " ELSE 'low' END AS activity_level",
+        f"{day} AS measurement_date",
+        f"{day} AS partition_date",
     )
 
 
@@ -139,8 +135,9 @@ def repo_health_dashboard(
     """Gold: repo_health_dashboard (prs2g:158-254): silver ⟕ 30d
     activity (J3) → weighted health score → grade → status →
     recommended actions."""
+    day = iso_date(as_of_date)
     if activity_30d is not None:
-        act = activity_30d.filter(F.col("measurement_period") == "30d").select(
+        act = activity_30d.filter("measurement_period = '30d'").selectExpr(
             "repository_id",
             "total_commits",
             "total_issues",
@@ -149,91 +146,61 @@ def repo_health_dashboard(
         )
         df = silver.join(act, "repository_id", "left")
     else:
-        df = (
-            silver.withColumn("total_commits", F.lit(0))
-            .withColumn("total_issues", F.lit(0))
-            .withColumn("development_velocity", F.lit(0.0))
-            .withColumn("last_activity_date", F.col("processed_timestamp"))
+        df = silver.selectExpr(
+            "*",
+            "0 AS total_commits",
+            "0 AS total_issues",
+            "0.0D AS development_velocity",
+            "processed_timestamp AS last_activity_date",
         )
     # the reference's health blend treats quality_score as 0-1; our
     # silver keeps it 0-100 (b2s scale), so it is normalized here
-    health = F.least(
-        F.lit(1.0),
-        (
-            (F.col("quality_score") / 100.0) * 0.4
-            + F.coalesce(F.col("development_velocity"), F.lit(0.0)) * 0.3
-            + F.when(F.col("is_active"), 0.3).otherwise(0.0)
-        ).cast("double"),
+    scored = df.selectExpr(
+        "*",
+        "coalesce(total_commits, 0) AS commits_30d",
+        "coalesce(total_issues, 0) AS issues_30d",
+        "least(1.0D, CAST((quality_score / 100.0D) * 0.4D"
+        " + coalesce(development_velocity, 0.0D) * 0.3D"
+        " + CASE WHEN is_active THEN 0.3D ELSE 0.0D END AS DOUBLE)) AS health_score",
+    ).selectExpr(
+        "*",
+        "CASE WHEN health_score >= 0.8D THEN 'A'"
+        " WHEN health_score >= 0.6D THEN 'B'"
+        " WHEN health_score >= 0.4D THEN 'C'"
+        " WHEN health_score >= 0.2D THEN 'D'"
+        " ELSE 'F' END AS health_grade",
+        "CASE WHEN days_since_push <= 7 THEN 'active'"
+        " WHEN days_since_push <= 30 THEN 'stable'"
+        " ELSE 'dormant' END AS activity_status",
     )
-    scored = (
-        df.withColumn("commits_30d", F.coalesce(F.col("total_commits"), F.lit(0)))
-        .withColumn("issues_30d", F.coalesce(F.col("total_issues"), F.lit(0)))
-        .withColumn("health_score", health)
-        .withColumn(
-            "health_grade",
-            F.when(F.col("health_score") >= 0.8, "A")
-            .when(F.col("health_score") >= 0.6, "B")
-            .when(F.col("health_score") >= 0.4, "C")
-            .when(F.col("health_score") >= 0.2, "D")
-            .otherwise("F"),
-        )
-        .withColumn(
-            "activity_status",
-            F.when(F.col("days_since_push") <= 7, "active")
-            .when(F.col("days_since_push") <= 30, "stable")
-            .otherwise("dormant"),
-        )
-        .withColumn(
-            "attention_needed",
-            F.when(
-                F.col("health_grade").isin("D", "F")
-                | (F.col("activity_status") == "dormant")
-                | (F.col("open_issues_count") > 10),
-                True,
-            ).otherwise(False),
-        )
-        .withColumn(
-            "recommended_actions",
-            F.when(
-                F.col("activity_status") == "dormant",
-                F.array(F.lit("review-purpose"), F.lit("archive-or-update")),
-            )
-            .when(
-                F.col("open_issues_count") > 10,
-                F.array(F.lit("address-issues"), F.lit("triage-backlog")),
-            )
-            .when(
-                F.col("quality_score") < 50.0,
-                F.array(F.lit("improve-documentation"), F.lit("add-license")),
-            )
-            .otherwise(F.array(F.lit("maintain-current-status"))),
-        )
-    )
-    return scored.select(
+    return scored.selectExpr(
         "repository_id",
-        F.col("name").alias("repository_name"),
+        "name AS repository_name",
         "technology_category",
         "stargazers_count",
         "commits_30d",
         "issues_30d",
-        F.coalesce(F.col("development_velocity"), F.lit(0.0)).alias(
-            "development_velocity"
-        ),
+        "coalesce(development_velocity, 0.0D) AS development_velocity",
         "health_grade",
         "health_score",
         "activity_status",
-        "attention_needed",
-        "recommended_actions",
-        F.lit(as_of_date).alias("measurement_date"),
-        F.lit(as_of_date).alias("partition_date"),
+        "CASE WHEN health_grade IN ('D', 'F') OR activity_status = 'dormant'"
+        " OR open_issues_count > 10 THEN true ELSE false END AS attention_needed",
+        "CASE WHEN activity_status = 'dormant'"
+        " THEN array('review-purpose', 'archive-or-update')"
+        " WHEN open_issues_count > 10 THEN array('address-issues', 'triage-backlog')"
+        " WHEN quality_score < 50.0D THEN array('improve-documentation', 'add-license')"
+        " ELSE array('maintain-current-status') END AS recommended_actions",
+        f"{day} AS measurement_date",
+        f"{day} AS partition_date",
     )
 
 
 def development_velocity(activity_metrics_df: DataFrame, as_of_date: str) -> DataFrame:
     """Gold: development_velocity (prs2g:263-289): the 30d period slice
     with projections and trend labels."""
-    m30 = activity_metrics_df.filter(F.col("measurement_period") == "30d")
-    return m30.select(
+    day = iso_date(as_of_date)
+    return activity_metrics_df.filter("measurement_period = '30d'").selectExpr(
         "repository_id",
         "total_commits",
         "total_issues",
@@ -244,7 +211,7 @@ def development_velocity(activity_metrics_df: DataFrame, as_of_date: str) -> Dat
         "commit_frequency",
         "development_velocity",
         "activity_trend",
-        (F.col("commit_frequency") * 365).alias("projected_annual_commits"),
-        F.lit(as_of_date).alias("measurement_date"),
-        F.lit(as_of_date).alias("partition_date"),
+        "commit_frequency * 365 AS projected_annual_commits",
+        f"{day} AS measurement_date",
+        f"{day} AS partition_date",
     )

@@ -18,8 +18,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stacktrend_spark.functions.keywords import extract_keywords
-from stacktrend_spark.functions.langdist import language_distribution
+from stacktrend_spark.functions.keywords import extract_keywords_sql
+from stacktrend_spark.functions.langdist import language_distribution_sql
+from stacktrend_spark.functions.sqltext import iso_date
 from stacktrend_spark.pipelines.classifier import Classifier, apply_classification
 from stacktrend_spark.pipelines.schemas import SILVER_COLUMNS
 
@@ -37,54 +38,48 @@ def _clean(bronze: DataFrame, as_of_date: str) -> DataFrame:
     """Cleaning chain (b2s:686-734): regex sanitation, language
     normalization, topic standardization, license categorization,
     activity windows from the pinned as_of_date."""
-    as_of = F.lit(as_of_date).cast("date")
-    lic = F.col("license_name")
-    # ONE withColumns projection instead of a 12-deep withColumn chain
-    # (r13 optimization, guide §7.3 driver-side planning cost): each
-    # withColumn adds a nested Project the analyzer re-walks at every
-    # action embedding this lineage (both silver writes). Same column
-    # append order and identical expressions — intra-chain references
+    day = iso_date(as_of_date)
+    as_of = f"CAST({day} AS DATE)"
+    # ONE projection declared as SQL text: one parse per column on the
+    # driver instead of a Column-DSL chain costing several py4j round
+    # trips per function call. Intra-projection references
     # (primary_language → language_distribution, description_clean /
     # topics_standardized → keywords, days_since_push → is_active) are
-    # inlined as shared local expression objects; Catalyst common
-    # subexpression elimination dedups them at codegen.
-    desc_clean = F.when(
-        F.col("description").isNotNull(),
-        F.regexp_replace(F.col("description"), r"[^\w\s\-\.\,\:]", ""),
-    ).otherwise(F.lit(None).cast("string"))
-    primary = F.when(
-        F.col("language").isNotNull(), F.lower(F.trim(F.col("language")))
-    ).otherwise("unknown")
-    topics_std = F.when(
-        F.col("topics").isNotNull(),
-        F.transform(F.col("topics"), lambda x: F.lower(F.trim(x))),
-    ).otherwise(F.array().cast("array<string>"))
-    days_push = F.datediff(as_of, F.col("pushed_at"))
-    return bronze.withColumns(
-        {
-            "name_clean": F.regexp_replace(F.col("name"), r"[^\w\-\.]", ""),
-            "description_clean": desc_clean,
-            "primary_language": primary,
-            "language_distribution": language_distribution(
-                primary, F.col("topics")
-            ),
-            "topics_standardized": topics_std,
-            "keywords": extract_keywords(desc_clean, topics_std),
-            "license_category": F.when(
-                lic.isNotNull(),
-                F.when(lic.contains("MIT"), "permissive")
-                .when(lic.contains("Apache"), "permissive")
-                .when(lic.contains("GPL"), "copyleft")
-                .when(lic.contains("BSD"), "permissive")
-                .otherwise("other"),
-            ).otherwise("none"),
-            "days_since_push": days_push,
-            "days_since_creation": F.datediff(as_of, F.col("created_at")),
-            "is_active": days_push <= 90,
-            "processed_timestamp": F.lit(as_of_date).cast("timestamp"),
-            "partition_date": F.lit(as_of_date),
-        }
+    # inlined as repeated text; Catalyst common subexpression
+    # elimination dedups them at codegen.
+    desc_clean = (
+        "CASE WHEN description IS NOT NULL "
+        r"THEN regexp_replace(description, r'[^\w\s\-\.\,\:]', '') "
+        "ELSE CAST(NULL AS STRING) END"
     )
+    primary = "CASE WHEN language IS NOT NULL THEN lower(trim(language)) ELSE 'unknown' END"
+    topics_std = (
+        "CASE WHEN topics IS NOT NULL THEN transform(topics, x -> lower(trim(x))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    days_push = f"datediff({as_of}, pushed_at)"
+    columns = {
+        "name_clean": r"regexp_replace(name, r'[^\w\-\.]', '')",
+        "description_clean": desc_clean,
+        "primary_language": primary,
+        "language_distribution": language_distribution_sql(primary, "topics"),
+        "topics_standardized": topics_std,
+        "keywords": extract_keywords_sql(desc_clean, topics_std),
+        "license_category": "CASE WHEN license_name IS NOT NULL THEN CASE"
+        " WHEN contains(license_name, 'MIT') THEN 'permissive'"
+        " WHEN contains(license_name, 'Apache') THEN 'permissive'"
+        " WHEN contains(license_name, 'GPL') THEN 'copyleft'"
+        " WHEN contains(license_name, 'BSD') THEN 'permissive'"
+        " ELSE 'other' END ELSE 'none' END",
+        "days_since_push": days_push,
+        "days_since_creation": f"datediff({as_of}, created_at)",
+        "is_active": f"{days_push} <= 90",
+        "processed_timestamp": f"CAST({day} AS TIMESTAMP)",
+        "partition_date": day,
+    }
+    # withColumns keeps replace-in-place semantics: bronze already
+    # carries partition_date
+    return bronze.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
 def _metrics(df: DataFrame) -> DataFrame:
@@ -93,43 +88,24 @@ def _metrics(df: DataFrame) -> DataFrame:
     deterministic id-derived stand-in (same 0-10 range) so goldens are
     stable; the personal pipeline computes the real value from the
     activity table (personal.py)."""
-    stars = F.col("stargazers_count")
-    has_description = F.col("description").isNotNull()
-    has_license = F.col("license_name").isNotNull()
-    has_topics = F.size(F.col("topics")) > 0
-    reasonable_size = F.col("size") > 0
-    # single withColumns projection (r13, same rationale as _clean):
-    # every metric reads only pre-existing columns, so one Project is
-    # expression-identical to the old 4-deep chain
-    return df.withColumns(
-        {
-            "star_velocity_30d": F.when(
-                F.col("days_since_creation") > 0,
-                stars / F.greatest(F.col("days_since_creation"), F.lit(1)),
-            ).otherwise(0.0),
-            "commit_frequency_30d": F.when(
-                F.col("is_active"),
-                (F.col("repository_id") % 100).cast("double") / 10.0,
-            ).otherwise(0.0),
-            "community_health_score": (
-                F.when(has_description, 20).otherwise(0)
-                + F.when(has_license, 20).otherwise(0)
-                + F.when(has_topics, 20).otherwise(0)
-                + F.when(F.col("is_active"), 20).otherwise(0)
-                + F.when(reasonable_size, 20).otherwise(0)
-            ).cast("double"),
-            "quality_score": (
-                F.least(F.log10(F.greatest(stars, F.lit(1))) * 10, F.lit(50))
-                + F.least(
-                    F.log10(F.greatest(F.col("forks_count"), F.lit(1))) * 5,
-                    F.lit(25),
-                )
-                + F.when(F.col("has_wiki"), 10).otherwise(0)
-                + F.when(F.col("has_pages"), 10).otherwise(0)
-                + F.least(F.size(F.col("topics")) * 2, F.lit(15))
-            ).cast("double"),
-        }
-    )
+    # one projection: every metric reads only pre-existing columns
+    columns = {
+        "star_velocity_30d": "CASE WHEN days_since_creation > 0"
+        " THEN stargazers_count / greatest(days_since_creation, 1) ELSE 0.0D END",
+        "commit_frequency_30d": "CASE WHEN is_active"
+        " THEN CAST(repository_id % 100 AS DOUBLE) / 10.0D ELSE 0.0D END",
+        "community_health_score": "CAST(CASE WHEN description IS NOT NULL THEN 20 ELSE 0 END"
+        " + CASE WHEN license_name IS NOT NULL THEN 20 ELSE 0 END"
+        " + CASE WHEN size(topics) > 0 THEN 20 ELSE 0 END"
+        " + CASE WHEN is_active THEN 20 ELSE 0 END"
+        " + CASE WHEN `size` > 0 THEN 20 ELSE 0 END AS DOUBLE)",
+        "quality_score": "CAST(least(log10(greatest(stargazers_count, 1)) * 10, 50)"
+        " + least(log10(greatest(forks_count, 1)) * 5, 25)"
+        " + CASE WHEN has_wiki THEN 10 ELSE 0 END"
+        " + CASE WHEN has_pages THEN 10 ELSE 0 END"
+        " + least(size(topics) * 2, 15) AS DOUBLE)",
+    }
+    return df.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
 def _validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -137,18 +113,15 @@ def _validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     missing-name / negative-star rows."""
     flagged = df.withColumn(
         "data_quality_flags",
-        F.when(
-            F.col("name").isNull() | (F.trim(F.col("name")) == ""),
-            F.array(F.lit("missing_name")),
-        )
-        .when(F.col("stargazers_count") < 0, F.array(F.lit("negative_stars")))
-        .when(F.col("community_health_score") < 0, F.array(F.lit("invalid_health_score")))
-        .otherwise(F.array().cast("array<string>")),
+        F.expr(
+            "CASE WHEN name IS NULL OR trim(name) = '' THEN array('missing_name')"
+            " WHEN stargazers_count < 0 THEN array('negative_stars')"
+            " WHEN community_health_score < 0 THEN array('invalid_health_score')"
+            " ELSE CAST(array() AS ARRAY<STRING>) END"
+        ),
     )
-    bad = F.array_contains(F.col("data_quality_flags"), "missing_name") | (
-        F.col("stargazers_count") < 0
-    )
-    return flagged.filter(~bad), flagged.filter(bad)
+    bad = "array_contains(data_quality_flags, 'missing_name') OR stargazers_count < 0"
+    return flagged.filter(f"NOT ({bad})"), flagged.filter(bad)
 
 
 def smart_split(
@@ -160,16 +133,17 @@ def smart_split(
     metrics; the rest go to the classifier. Returns
     (needs_classification, metrics_only, reusable_labels)."""
     if existing_silver is None:
-        empty = bronze.sparkSession.createDataFrame(
-            [], "repository_id long, technology_category string, "
-            "technology_subcategory string, classification_confidence double"
+        empty = bronze.sparkSession.sql(
+            "SELECT CAST(NULL AS BIGINT) AS repository_id,"
+            " CAST(NULL AS STRING) AS technology_category,"
+            " CAST(NULL AS STRING) AS technology_subcategory,"
+            " CAST(NULL AS DOUBLE) AS classification_confidence WHERE false"
         )
         return bronze, bronze.limit(0), empty
     well_classified = existing_silver.filter(
-        (F.col("technology_category") != "Other")
-        & (F.col("technology_subcategory") != "unknown")
-        & (F.col("classification_confidence") >= CONFIDENCE_THRESHOLD)
-    ).select(
+        "technology_category != 'Other' AND technology_subcategory != 'unknown'"
+        f" AND classification_confidence >= {CONFIDENCE_THRESHOLD!r}D"
+    ).selectExpr(
         "repository_id",
         "technology_category",
         "technology_subcategory",
@@ -177,7 +151,7 @@ def smart_split(
     )
     needs = bronze.join(well_classified, "repository_id", "left_anti")
     metrics_only = bronze.join(
-        well_classified.select("repository_id"), "repository_id", "left_semi"
+        well_classified.selectExpr("repository_id"), "repository_id", "left_semi"
     )
     return needs, metrics_only, well_classified
 
@@ -197,7 +171,7 @@ def build_silver(
     labeled = apply_classification(bronze, labels)
     cleaned = _metrics(_clean(labeled, as_of_date))
     good, bad = _validate(cleaned)
-    return SilverResult(silver=good.select(*SILVER_COLUMNS), quarantined=bad)
+    return SilverResult(silver=good.selectExpr(*SILVER_COLUMNS), quarantined=bad)
 
 
 def observe_quality(df: DataFrame, name: str = "silver_quality"):

@@ -11,11 +11,14 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
-from stacktrend_spark.functions.langdist import language_distribution
+from stacktrend_spark.functions.langdist import (
+    PROGRAMMING_LANGUAGES,
+    language_distribution,
+)
 from stacktrend_spark.functions.rounding import fround, sql_round
 from stacktrend_spark.operators.merge import (
     merge_full_sync,
@@ -170,6 +173,83 @@ def test_langdist_normalized(spark, rows):
         shares = list(row.m.values())
         assert all(s >= 0.0 for s in shares)
         assert abs(sum(shares) - 100.0) <= 0.05 * len(shares) + 1e-9
+
+
+def _langdist_reference(language, topics) -> dict:
+    """Pure-Python transcription of extract_language_distribution
+    (b2s:403-445): the primary gets 70, every topic language occurrence
+    an equal part of the rest, a topic language equal to the primary
+    key is skipped, shares are normalized to 100 and rounded to one
+    decimal. Blank means empty after trimming spaces (Spark's trim)."""
+    dist: dict = {}
+    if (
+        language is not None
+        and language.strip(" ") != ""
+        and language.lower() not in ("null", "none")
+    ):
+        dist[language] = 70.0
+    found = [
+        name
+        for topic in topics or []
+        if topic is not None
+        for key, name in PROGRAMMING_LANGUAGES
+        if key in topic.lower()
+    ]
+    if found:
+        share = (30.0 if dist else 100.0) / len(found)
+        for name in dict.fromkeys(found):
+            if name not in dist:
+                dist[name] = share
+    if not dist:
+        return {"Unknown": 100.0}
+    total = sum(dist.values())
+    return {k: round(v / total * 100.0, 1) for k, v in dist.items()}
+
+
+_primary = st.one_of(
+    st.none(),
+    st.sampled_from(
+        ["", " ", "null", "NULL", "None", "none", "Python", "python", "Go",
+         "C++", "Rust", "R", "Shell", "JavaScript"]
+    ),
+)
+_topic = st.one_of(
+    st.none(),
+    st.sampled_from(
+        ["python-lib", "Python", "rust", "go-tool", "cpp", "c++", "csharp-c#",
+         "bash", "shell", "database", "web", "r", "ml", "json-yaml-sql",
+         "javascript", "typescript", "kotlin", "", "GO"]
+    ),
+)
+
+
+@settings(_SETTINGS, max_examples=25)
+@given(
+    rows=st.lists(
+        st.tuples(_primary, st.one_of(st.none(), st.lists(_topic, max_size=6))),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example(rows=[(None, None), ("", []), ("null", ["rust"]), ("None", ["python-lib"])])
+@example(rows=[("Python", ["python-lib", "python-lib", "bash", "shell"])])
+@example(rows=[("Shell", ["bash", "rust", "bash"]), ("Go", [None, "go-tool", "GO"])])
+def test_langdist_matches_reference(spark, rows):
+    """language_distribution equals the Python transcription map for
+    map, key order included."""
+    df = spark.createDataFrame(
+        [(i, lang, topics) for i, (lang, topics) in enumerate(rows)],
+        "id int, language string, topics array<string>",
+    )
+    # map_entries keeps the map's key order; a collected map arrives as
+    # an unordered dict
+    out = df.select(
+        "id",
+        F.map_entries(language_distribution(F.col("language"), F.col("topics"))).alias("e"),
+    ).collect()
+    got = {r.id: [(e.key, e.value) for e in r.e] for r in out}
+    for i, (lang, topics) in enumerate(rows):
+        assert got[i] == list(_langdist_reference(lang, topics).items()), (lang, topics)
 
 
 @_SETTINGS
