@@ -32,7 +32,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from stacktrend_spark.operators.ranking import release_pinned
 from stacktrend_spark.plans.registry import all_queries
 from stacktrend_spark.session import get_spark
 
@@ -418,7 +417,6 @@ def main() -> None:
         # them lazily); without this the cache accumulates across the
         # run and later queries measure GC pressure, not themselves
         spark.catalog.clearCache()
-        release_pinned()
         # label jobs (optimization guide §1.5) so UI/event-log trails
         # attribute stages to queries; no effect on timing or output
         spark.sparkContext.setJobDescription(f"bench cold: {name}")
@@ -453,7 +451,6 @@ def main() -> None:
         ref = prior_warm.get(name)
         if ref and ref > 0 and (warm[name] > 2.0 * ref or warm[name] < 0.5 * ref):
             spark.catalog.clearCache()
-            release_pinned()
             spark.sparkContext.setJobDescription(f"bench variance rerun: {name}")
             rerun = []
             for _ in range(3):

@@ -1,136 +1,59 @@
 """Scalable global ranking: two-phase range-partitioned row numbering.
 
-A global ``row_number() OVER (ORDER BY ...)`` is a single-partition
-window — SURVEY §2.5 W1 notes the reference's five global rank columns
-(silver_to_gold_analytics.py:225-236) are fine at its ~1k-row
-cardinality but a scale hazard: ALL rows funnel through one task.
+A global ``row_number() OVER (ORDER BY ...)`` funnels every row through
+one task (SURVEY §2.5 W1, silver_to_gold_analytics.py:225-236). Here the
+order keys are range-shuffled and sorted within partitions; per-partition
+counts (or sum / max partials) collect to the driver, and their
+cumulative offsets broadcast-join back onto the local ranks. Results
+equal the single-partition window when the order keys are a total order.
 
-The distributed plan here is the classic two-phase ranking:
-
-1. ``repartitionByRange`` on the order keys — rows land in partitions
-   whose id order matches the sort order (Spark's RangePartitioner
-   contract), each partition holding a contiguous key range — then
-   ``sortWithinPartitions`` on the same keys;
-2. ``monotonically_increasing_id`` over the sorted partitions encodes
-   BOTH phase-1 outputs in one map-side expression: the id layout is
-   ``(partition_id << 33) + row_index``, so ``_pid = id >> 33`` and
-   the local rank is ``(id & (2^33 - 1)) + 1`` — no per-partition
-   window, no hash-on-pid exchange (the r2-r9 implementation paid a
-   SECOND full shuffle there: ``W.partitionBy(_pid)`` inserts an
-   ENSURE_REQUIREMENTS hash exchange because Catalyst cannot know the
-   range exchange already clusters by pid);
-3. the tagged frame is **persisted**, per-partition counts collect to
-   the driver (one O(#partitions) action), and cumulative offsets
-   broadcast-join back; global rank = offset + local rank.
-
-Why the persist is load-bearing, not an optimization: the offsets and
-the local ranks MUST read the SAME physical partitioning.
-RangePartitioner samples its boundaries per execution (reservoir seed
-varies by RDD id), and a lazy two-branch plan over the same logical
-subtree does NOT reliably share one Exchange — column pruning narrows
-the offsets branch, the subtrees stop canonicalizing equal, exchange
-reuse (and AQE's stage cache) miss, and each branch gets its OWN
-sampled boundaries. Offsets from one partitioning joined onto ranks
-from another silently corrupt the output (r10 review: reproduced at
-2M rows — 1,946,724 distinct ranks for 2,000,000 rows; the sf0.01
-gates can't see it because tiny inputs are fully sampled, making
-every execution's boundaries identical). A lazy rewrite that relied
-on exchange reuse was landed and REVERTED this round for exactly that
-defect — do not remove the persist without pinning one
-materialization some other way.
-
-Total cost of the rank: one range shuffle + one in-partition sort +
-one cache materialization + an O(#partitions) driver step — instead
-of one task sorting 100 TB, and one full shuffle cheaper than the
-r2-r9 window form (the running sum/max below still need a real
-WindowExec for their prefix aggregates, so they keep the window form
-and its pid hash exchange). Per-partition rows must stay under 2^33
-(the id layout's offset width) — at 8.5 B rows/partition that is not
-a real limit.
-Results are identical to the single-partition window whenever the
-order keys are a total order (pass a unique tiebreaker), which is
-what the oracle asserts.
-
-Fault-tolerance caveat for CLUSTER deployments (r10 ADVICE): a bare
-``persist()`` pins one partitioning only while its cache blocks and
-shuffle files survive. If an executor or node is lost after the
-driver has collected the per-partition offsets, Spark recomputes the
-lost partitions THROUGH the range-sampling stage — new boundaries,
-stale offsets: the same silent-corruption class as the reverted lazy
-variant, and invisible in local-mode gates (one JVM never loses an
-executor). On a real cluster, make the materialization
-recompute-proof before the offsets collect: ``df.localCheckpoint()``
-severs lineage but dies with its executors, so for long jobs prefer
-``spark.sparkContext.setCheckpointDir(<reliable storage>)`` +
-``df.checkpoint()``, or persist with a replicated storage level
-(``StorageLevel.MEMORY_AND_DISK_2``). Local mode keeps the bare
-persist: it is cheaper and the single JVM cannot half-fail.
+Invariant: the offsets and the local ranks read ONE materialization.
+RangePartitioner samples its boundaries per execution, so each operator
+eagerly checkpoints its tagged frame (serialized, to bound the heap)
+before collecting: the lineage is cut, nothing can re-sample, and the
+ContextCleaner frees the blocks once the result frame is dropped. On a
+cluster, losing an executor that holds those blocks fails the query
+loudly instead of returning wrong ranks.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 #: monotonically_increasing_id packs the row index in the low 33 bits
 _MID_OFFSET_MASK = (1 << 33) - 1
 
-#: every frame persisted by an operator in this module, in call order.
-#: The persist is load-bearing (module header) so operators cannot
-#: unpersist eagerly — the returned DataFrame still reads the cache.
-#: Long-lived multi-query sessions (the 387-query gate, sf1 sweeps)
-#: should call release_pinned() between queries once results are
-#: materialized, or spark.catalog.clearCache() (bench.py already
-#: does); r10 review.
-_PINNED: list[DataFrame] = []
-
 
 def release_pinned() -> int:
-    """Unpersist every frame pinned by this module's operators and
-    return how many were released. Safe ONLY after the caller has
-    materialized (collected/written) the operator results — an
-    unpersist before that forces a recompute whose re-sampled range
-    boundaries would no longer match the collected offsets."""
-    n = len(_PINNED)
-    while _PINNED:
-        _PINNED.pop().unpersist()
-    return n
+    """No-op kept for perfbench/run.py, which imports it and which
+    changes only together with the benchmark: the operators no longer
+    hold anything that needs releasing."""
+    return 0
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    # Self-evict entries whose cache is already gone (a harness that
-    # calls spark.catalog.clearCache() without release_pinned(), r10
-    # ADVICE): storageLevel reads the live cache manager, so a cleared
-    # frame reports NONE and holding its plan reference buys nothing.
-    def _alive(d: DataFrame) -> bool:
-        # a frame bound to a dead/stopped session raises on the JVM
-        # round-trip — evict it rather than poison every later _pin
-        # (tests/conftest.py rebuilds the session after JVM death)
-        try:
-            return d.storageLevel.useMemory or d.storageLevel.useDisk
-        except Exception:
-            return False
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
-    _PINNED[:] = [d for d in _PINNED if _alive(d)]
-    _PINNED.append(df.persist())
-    return df
+
+def _ranged(
+    df: DataFrame, order_cols: list[Column], num_partitions: int | None
+) -> DataFrame:
+    if num_partitions:
+        return df.repartitionByRange(num_partitions, *order_cols)
+    return df.repartitionByRange(*order_cols)
 
 
 def _tagged(
     df: DataFrame, order_cols: list[Column], num_partitions: int | None
 ) -> DataFrame:
     """Range-shuffle + in-partition sort + (pid, local-rank) tagging
-    from the monotonic id layout. The caller MUST persist the result
-    before fanning out (module header: the partitioning is sampled
-    per execution, so every consumer has to read one materialization).
-    """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    )
+    from the monotonic id layout ``(partition_id << 33) + row_index``.
+    Per-partition rows must stay under 2^33."""
     return (
-        ranged.sortWithinPartitions(*order_cols)
+        _ranged(df, order_cols, num_partitions)
+        .sortWithinPartitions(*order_cols)
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftrightunsigned("_mid", 33).cast("int"))
         .withColumn("_lrank", (F.col("_mid").bitwiseAND(_MID_OFFSET_MASK) + 1))
@@ -147,7 +70,7 @@ def global_rank_scalable(
     """Exact global row_number by ``order_cols`` without a
     single-partition window. ``order_cols`` must define a total order
     (include a unique tiebreaker) for a deterministic result."""
-    local = _pin(_tagged(df, order_cols, num_partitions))
+    local = _checkpoint(_tagged(df, order_cols, num_partitions))
     counts = sorted(
         (r["_pid"], r["_n"])
         for r in local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
@@ -177,7 +100,7 @@ def global_running_sum_scalable(
     without a single-partition window — same two-phase shape as
     :func:`global_rank_scalable`; the driver step carries (count, sum)
     partials per partition, so passing ``rank_col`` ALSO emits the
-    global row number from the same shuffle + cache (one pass for
+    global row number from the same shuffle + checkpoint (one pass for
     rank + prefix sum — the vocab_coverage_curve shape; r10 review).
     ``order_cols`` must define a total order (include a unique
     tiebreaker); ``value_col`` must be INTEGER-typed (the
@@ -186,8 +109,8 @@ def global_running_sum_scalable(
     partition contributes 0 instead of crashing the driver fold; r8
     review). The explicit ROWS frame avoids the default RANGE frame's
     tie-grouping. Unlike the rank operator, the prefix aggregation
-    needs a real window, so this keeps the r2-r9 window form (the
-    ``partitionBy(_pid)`` hash exchange included) with the persist
+    needs a real window, so this keeps the window form (the
+    ``partitionBy(_pid)`` hash exchange included) with the checkpoint
     pinning one partitioning for both the partials and the join.
     """
     vtype = dict(df.dtypes).get(value_col)
@@ -197,23 +120,20 @@ def global_running_sum_scalable(
             f"(exact offsets); got {value_col}: {vtype} — iscale the "
             "column first"
         )
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    )
     spec = W.partitionBy("_pid").orderBy(*order_cols)
     w = spec.rowsBetween(W.unboundedPreceding, W.currentRow)
-    local = ranged.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_lsum", F.sum(value_col).over(w)
+    local = (
+        _ranged(df, order_cols, num_partitions)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_lsum", F.sum(value_col).over(w))
     )
     if rank_col is not None:
         # same partitioning + ordering → Catalyst fuses this into the
         # SAME WindowExec as the prefix sum: rank + running sum from
-        # one shuffle, one sort, one cache (vocab_coverage_curve
+        # one shuffle, one sort, one checkpoint (vocab_coverage_curve
         # shape; r10 review)
         local = local.withColumn("_lrank", F.row_number().over(spec))
-    local = _pin(local)
+    local = _checkpoint(local)
     partials = sorted(
         (r["_pid"], r["_s"], r["_n"], r["_nn"])
         for r in local.groupBy("_pid")
@@ -269,7 +189,7 @@ def global_running_max_scalable(
     (rank / running sum / running max). Like the running sum (and
     unlike the rank), the prefix aggregate needs a real WindowExec, so
     this keeps the window-over-``spark_partition_id`` form with the
-    persist pinning one partitioning: range shuffle, per-partition
+    checkpoint pinning one partitioning: range shuffle, per-partition
     local running max in the ``_pid`` window, driver fold of
     whole-prior-partition maxima broadcast back and combined with
     ``greatest`` (which skips NULLs, so the first row of the first
@@ -283,19 +203,15 @@ def global_running_max_scalable(
     deterministic result; NULL values in ``value_col`` are skipped by
     MAX on both phases, matching the window semantics.
     """
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    )
     upper = 0 if inclusive else -1
     w = (
         W.partitionBy("_pid")
         .orderBy(*order_cols)
         .rowsBetween(W.unboundedPreceding, upper)
     )
-    local = _pin(
-        ranged.withColumn("_pid", F.spark_partition_id())
+    local = _checkpoint(
+        _ranged(df, order_cols, num_partitions)
+        .withColumn("_pid", F.spark_partition_id())
         .withColumn("_lmax", F.max(value_col).over(w))
     )
     partials = sorted(

@@ -536,14 +536,13 @@ def customer_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_cols=[F.col(order_col), F.col("o_custkey")],
             rank_col=rank_col,
         )
-    # NOTE (r13): an in-plan broadcast `ranked.agg(count)` replacing
-    # this eager count was tried and REVERTED — when the rank pins
-    # evict under memory pressure the broadcast branch recomputes the
-    # entire 3-rank lineage serially before the main stages (solo A/B
-    # in one window: warm 3.46 s with count() vs 7.33 s broadcast;
-    # parity in a low-pressure window). The eager count is bounded
-    # (one map-side-combined aggregate) and runs against the first
-    # rank's freshly pinned cache.
+    # NOTE: an in-plan broadcast `ranked.agg(count)` replacing this
+    # eager count was measured slower (warm 7.33 s against 3.46 s)
+    # while the ranks were cache-persisted: an evicted cache made the
+    # broadcast branch recompute all three ranks. Each rank is now an
+    # eager local checkpoint, so nothing upstream recomputes; the
+    # eager count stays because it is one bounded map-side-combined
+    # aggregate over `base`.
     n = base.count()  # bounded scalar
     return ranked.select(
         F.col("o_custkey").alias("cust_key"),

@@ -261,6 +261,8 @@ def test_global_rank_payload_columns_at_partial_sampling_scale(spark):
     out = global_rank_scalable(
         df, order_cols=[F.col("k"), F.col("id")], rank_col="r"
     ).select("r", "payload")  # keep payload alive downstream
+    # dropping every cache must not make the read re-sample boundaries
+    spark.catalog.clearCache()
     stats = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("r").alias("nd"),
@@ -283,15 +285,12 @@ def test_global_rank_payload_columns_at_partial_sampling_scale(spark):
 @pytest.mark.slow
 def test_fused_rank_and_running_sum_at_partial_sampling_scale(spark):
     """The rank_col fusion on global_running_sum_scalable rides the
-    same persisted partitioning as the prefix sum — pin it at the
+    same checkpointed partitioning as the prefix sum — pin it at the
     partial-boundary-sampling scale where the lazy design corrupted
     (tiny-input oracle gates cannot see this class; r10 review)."""
     from pyspark.sql import Window as W
 
-    from stacktrend_spark.operators.ranking import (
-        global_running_sum_scalable,
-        release_pinned,
-    )
+    from stacktrend_spark.operators.ranking import global_running_sum_scalable
 
     n = 1_000_000
     df = spark.range(n).select(
@@ -307,6 +306,7 @@ def test_fused_rank_and_running_sum_at_partial_sampling_scale(spark):
         sum_col="rs",
         rank_col="r",
     ).select("r", "rs", "payload")
+    spark.catalog.clearCache()
     stats = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("r").alias("nd"),
@@ -333,7 +333,6 @@ def test_fused_rank_and_running_sum_at_partial_sampling_scale(spark):
         .select("id", "r", "rs")
     )
     assert want.exceptAll(got).count() == 0 and got.exceptAll(want).count() == 0
-    assert release_pinned() >= 2  # the module releases its caches
 
 
 def test_running_max_matches_window_forms(spark):
@@ -409,31 +408,48 @@ def test_merge_null_keys_match_null_safely(spark):
     assert got2 == {(None, "old"), (1, "one")}  # NULL key exists -> dropped
 
 
-def test_pinned_cache_lifecycle(spark):
-    """r11 (r10 ADVICE): the module _PINNED list must not grow without
-    bound in harnesses that only clearCache (eviction happens on the
-    next _pin), and release_pinned() drains it completely. The r10
-    hazard class: a 387-query session leaking one DataFrame/JVM-plan
-    reference per ranking-operator call."""
-    from stacktrend_spark.operators import ranking
+def test_operator_checkpoints_are_freed_with_their_results(spark):
+    """The operators' local checkpoints are held only by their result
+    frames: once those are dropped, Spark's ContextCleaner frees every
+    block, so a long multi-query session does not accumulate them and
+    no harness has to release anything."""
+    import gc
+    import time
 
-    ranking.release_pinned()  # isolate from earlier tests
-    df = spark.range(200).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
+    from stacktrend_spark.operators.ranking import (
+        global_rank_scalable,
+        global_running_max_scalable,
+        global_running_sum_scalable,
     )
-    r1 = ranking.global_rank_scalable(df, [F.col("v"), F.col("id")])
-    assert r1.count() == 200
-    assert len(ranking._PINNED) == 1
-    # a harness that only clears the cache: the stale entry is evicted
-    # when the NEXT operator call pins (storageLevel reads NONE)
-    spark.catalog.clearCache()
-    r2 = ranking.global_rank_scalable(df, [F.col("v"), F.col("id")])
-    assert r2.count() == 200
-    assert len(ranking._PINNED) == 1, "cleared pin was not evicted"
-    # release drains everything and is idempotent
-    assert ranking.release_pinned() == 1
-    assert ranking.release_pinned() == 0
-    assert not ranking._PINNED
+
+    def run_and_drop():
+        df = spark.range(0, 200, 1, 2).select(F.col("id"), (F.col("id") % 7).alias("v"))
+        order = [F.col("v"), F.col("id")]
+        for _ in range(20):
+            for out in (
+                global_rank_scalable(df, order, num_partitions=2),
+                global_running_sum_scalable(df, order, "v", num_partitions=2),
+                global_running_max_scalable(df, order, "v", num_partitions=2),
+            ):
+                out.write.format("noop").mode("overwrite").save()
+
+    def cached_rdds() -> int:
+        # RDDInfo holds no reference to its RDD; getPersistentRDDs()
+        # would hand py4j a map that keeps every RDD it lists alive
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    start = cached_rdds()
+    run_and_drop()
+    # py4j releases JVM objects from a background thread, so keep
+    # collecting on both sides while polling
+    deadline = time.time() + 10
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        if cached_rdds() <= start or time.time() > deadline:
+            break
+        time.sleep(0.5)
+    assert cached_rdds() <= start
 
 
 def test_cobasket_pairs_matches_pair_self_join(spark):

@@ -8,7 +8,9 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from stacktrend_spark.operators.dedup import simhash_narrow
 from stacktrend_spark.plans.registry import all_queries
@@ -20,6 +22,23 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@pytest.fixture()
+def checkpointed(monkeypatch):
+    """Every frame handed to localCheckpoint while the test builds its
+    query. The ranking operators cut their lineage there, so their range
+    exchange and _pid windows live in these plans, not in the query's
+    own plan (which shows a LogicalRDD in their place)."""
+    frames = []
+    original = ClassicDataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        frames.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", capture)
+    return frames
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
@@ -431,15 +450,17 @@ def test_kmv_rank_cut_pushes_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in p
 
 
-def test_compaction_running_sum_is_two_phase(spark, sf_dir):
+def test_compaction_running_sum_is_two_phase(spark, sf_dir, checkpointed):
     """The compaction planner's running sum must come from the range-
     partitioned two-phase operator — a single-partition global window
     over the file catalog is the banned anti-pattern
     (operators/ranking.global_running_sum_scalable)."""
-    p = plan_of(all_queries()["compaction_bin_packing"].fn(spark, sf_dir))
+    df = all_queries()["compaction_bin_packing"].fn(spark, sf_dir)
+    plans = [plan_of(f) for f in (df, *checkpointed)]
     # two-phase = local window partitioned by _pid after a RangePartitioning
-    assert "rangepartitioning" in p.lower()
-    assert "SinglePartition" not in p.split("Window")[0] if "Window" in p else True
+    assert any("rangepartitioning" in p.lower() for p in plans)
+    for p in plans:
+        assert "SinglePartition" not in p.split("Window")[0] if "Window" in p else True
 
 
 def test_table_diff_drill_broadcasts_bucket_list(spark, sf_dir):
@@ -572,27 +593,19 @@ def test_incremental_dedup_probes_rep_index_only(spark, sf_dir):
     assert "HashAggregate" in p
 
 
-def test_budget_cut_has_no_single_partition_window(spark, sf_dir):
+def test_budget_cut_has_no_single_partition_window(spark, sf_dir, checkpointed):
     """quality_budget_cut's prefix sum must be the two-phase form:
     every WindowExec partitioned (by spark_partition_id), never a
     global single-partition window — at 100 TB an unpartitioned
     running sum serializes the whole corpus through one task."""
     df = all_queries()["quality_budget_cut"].fn(spark, sf_dir)
-    # the physical plan hides the window inside the persisted subtree;
-    # assert on the analyzed/optimized plan text instead
-    p = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in p.splitlines():
-        if "windowspecdefinition(" in line.lower():
-            assert "_pid" in line, f"unpartitioned window: {line.strip()}"
+    assert _unpartitioned_window_orderings(df, *checkpointed) == []
 
 
-def test_curriculum_rank_has_no_single_partition_window(spark, sf_dir):
+def test_curriculum_rank_has_no_single_partition_window(spark, sf_dir, checkpointed):
     """Same two-phase guarantee for the curriculum stage rank."""
     df = all_queries()["curriculum_stage_assign"].fn(spark, sf_dir)
-    p = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in p.splitlines():
-        if "windowspecdefinition(" in line.lower():
-            assert "_pid" in line, f"unpartitioned window: {line.strip()}"
+    assert _unpartitioned_window_orderings(df, *checkpointed) == []
 
 
 def test_feature_hashing_no_joins_no_window(spark, sf_dir):
@@ -680,50 +693,51 @@ def test_substring_spans_two_exchanges_and_pushdown(spark, sf_dir):
     assert "GreaterThanOrEqual(n_chars,32)" in p
 
 
-def _unpartitioned_window_orderings(df) -> list[str]:
+def _unpartitioned_window_orderings(*frames) -> list[str]:
     """Order-key text of every windowspecdefinition in the OPTIMIZED
-    plan that is NOT partitioned by the two-phase operator's _pid —
-    the physical plan hides windows inside persisted subtrees, so the
-    single-partition audit reads the optimized plan (same approach as
-    test_budget_cut_has_no_single_partition_window)."""
-    p = df._jdf.queryExecution().optimizedPlan().toString()
+    plans of ``frames`` (a query and the frames it checkpointed) that
+    is NOT partitioned by the two-phase operator's _pid — the physical
+    plan hides windows inside persisted subtrees, so the
+    single-partition audit reads the optimized plans."""
     bad = []
-    for line in p.splitlines():
-        low = line.lower()
-        if "windowspecdefinition(" in low and "_pid" not in low:
-            bad.append(line.strip())
+    for f in frames:
+        p = f._jdf.queryExecution().optimizedPlan().toString()
+        for line in p.splitlines():
+            low = line.lower()
+            if "windowspecdefinition(" in low and "_pid" not in low:
+                bad.append(line.strip())
     return bad
 
 
-def test_quantile_bins_rank_is_two_phase(spark, sf_dir):
+def test_quantile_bins_rank_is_two_phase(spark, sf_dir, checkpointed):
     """feature_quantile_bins' fence rank must be the range-partitioned
     two-phase form (r9 verdict task 2) — zero unpartitioned windows
     anywhere in the plan; at 100 TB a global row_number funnels every
     order through one task."""
     df = all_queries()["feature_quantile_bins"].fn(spark, sf_dir)
-    assert _unpartitioned_window_orderings(df) == []
+    assert _unpartitioned_window_orderings(df, *checkpointed) == []
 
 
-def test_quantile_drift_rank_is_two_phase(spark, sf_dir):
+def test_quantile_drift_rank_is_two_phase(spark, sf_dir, checkpointed):
     """Both year slices of quantile_drift_boundaries rank through the
     two-phase operator; the COUNT(*) OVER () joins back as a broadcast
     aggregate — zero unpartitioned windows (r9 verdict task 2)."""
     df = all_queries()["quantile_drift_boundaries"].fn(spark, sf_dir)
-    assert _unpartitioned_window_orderings(df) == []
+    assert _unpartitioned_window_orderings(df, *checkpointed) == []
 
 
-def test_gains_deciles_ntile_is_two_phase(spark, sf_dir):
+def test_gains_deciles_ntile_is_two_phase(spark, sf_dir, checkpointed):
     """model_gains_deciles' NTILE must come from the two-phase global
     rank + fill-rule expression (r9 verdict task 2). The only
     unpartitioned window allowed is the cumulative sum over the 10-row
     decile spine."""
     df = all_queries()["model_gains_deciles"].fn(spark, sf_dir)
-    bad = _unpartitioned_window_orderings(df)
+    bad = _unpartitioned_window_orderings(df, *checkpointed)
     assert all("decile" in b for b in bad), bad
     assert not any("ntile" in b.lower() for b in bad), bad
 
 
-def test_r10_extended_conversions_have_no_fact_scale_windows(spark, sf_dir):
+def test_r10_extended_conversions_have_no_fact_scale_windows(spark, sf_dir, checkpointed):
     """The r10 extension of the single-partition-window purge: the
     five remaining SF-scaling frames (customer ranks, user latencies,
     part dominance sweep, part layout ranks, vocabulary rank+prefix
@@ -737,15 +751,15 @@ def test_r10_extended_conversions_have_no_fact_scale_windows(spark, sf_dir):
         "vocab_coverage_curve",
     ):
         df = all_queries()[name].fn(spark, sf_dir)
-        assert _unpartitioned_window_orderings(df) == [], name
+        assert _unpartitioned_window_orderings(df, *checkpointed) == [], name
 
 
-def test_theilsen_pair_rank_is_two_phase(spark, sf_dir):
+def test_theilsen_pair_rank_is_two_phase(spark, sf_dir, checkpointed):
     """theilsen_mann_kendall's median-slope rank runs over the O(n²)
     pair grid — that frame must use the two-phase operator (r9 verdict
     task 2); the only unpartitioned window allowed is the month-spine
     row_number (calendar-bounded)."""
     df = all_queries()["theilsen_mann_kendall"].fn(spark, sf_dir)
-    bad = _unpartitioned_window_orderings(df)
+    bad = _unpartitioned_window_orderings(df, *checkpointed)
     assert all("mth" in b for b in bad), bad
     assert not any("slope" in b.lower() for b in bad), bad

@@ -566,10 +566,7 @@ _rank_rows = st.lists(
 def test_two_phase_rank_matches_window(spark, rows, nparts):
     from pyspark.sql import Window as W
 
-    from stacktrend_spark.operators.ranking import (
-        global_rank_scalable,
-        release_pinned,
-    )
+    from stacktrend_spark.operators.ranking import global_rank_scalable
 
     df = spark.createDataFrame(
         [(k, v, i) for i, (k, v) in enumerate(rows)], "k long, v long, id long"
@@ -586,7 +583,6 @@ def test_two_phase_rank_matches_window(spark, rows, nparts):
             df, [F.col("k"), F.col("id")], "r", num_partitions=nparts
         ).collect()
     }
-    release_pinned()
     assert got == want
 
 
@@ -595,10 +591,7 @@ def test_two_phase_rank_matches_window(spark, rows, nparts):
 def test_two_phase_running_sum_and_fused_rank_match_window(spark, rows, nparts):
     from pyspark.sql import Window as W
 
-    from stacktrend_spark.operators.ranking import (
-        global_running_sum_scalable,
-        release_pinned,
-    )
+    from stacktrend_spark.operators.ranking import global_running_sum_scalable
 
     df = spark.createDataFrame(
         [(k, v, i) for i, (k, v) in enumerate(rows)], "k long, v long, id long"
@@ -623,7 +616,6 @@ def test_two_phase_running_sum_and_fused_rank_match_window(spark, rows, nparts):
             num_partitions=nparts,
         ).collect()
     }
-    release_pinned()
     assert got == want
 
 
@@ -636,10 +628,7 @@ def test_two_phase_running_sum_and_fused_rank_match_window(spark, rows, nparts):
 def test_two_phase_running_max_matches_window(spark, rows, nparts, inclusive):
     from pyspark.sql import Window as W
 
-    from stacktrend_spark.operators.ranking import (
-        global_running_max_scalable,
-        release_pinned,
-    )
+    from stacktrend_spark.operators.ranking import global_running_max_scalable
 
     df = spark.createDataFrame(
         [(k, v, i) for i, (k, v) in enumerate(rows)], "k long, v long, id long"
@@ -661,7 +650,6 @@ def test_two_phase_running_max_matches_window(spark, rows, nparts, inclusive):
             num_partitions=nparts,
         ).collect()
     }
-    release_pinned()
     assert got == want
 
 

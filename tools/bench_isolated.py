@@ -7,8 +7,8 @@ query session's heap/GC pressure (adjudicated r8→r9: the same code
 read 20.1 s in-session vs 15.6 s isolated). This tool is the clean
 protocol: each SUBSET of each series run happens in its OWN fresh
 Python process with nothing else on the box, using bench.py's exact
-measurement protocol (q1 + python-worker warmup, clearCache+
-release_pinned per query, 1 cold + median-of-3 warm).
+measurement protocol (q1 + python-worker warmup, clearCache
+per query, 1 cold + median-of-3 warm).
 
 Two pinned subsets, reported as separate totals:
 
@@ -153,13 +153,10 @@ def _uses_arrow(df) -> bool:
 
 
 def _measure(spark, specs, names, sf_dir, arrow_flags=None):
-    from stacktrend_spark.operators.ranking import release_pinned
-
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
     for name in names:
         spark.catalog.clearCache()
-        release_pinned()
         t0 = time.time()
         df = specs[name].fn(spark, sf_dir)
         df.count()
@@ -391,8 +388,8 @@ def run_series(sf_dir: str, n_runs: int = 3, cooldown: int = DEFAULT_COOLDOWN) -
         "protocol": (
             "each subset of each run = its OWN fresh process after a "
             "fixed cooldown (comparable then scale_ops, ordering "
-            "pinned), q1 + python-worker warmup, clearCache+"
-            "release_pinned per query, 1 cold + median-of-3 warm; "
+            "pinned), q1 + python-worker warmup, clearCache "
+            "per query, 1 cold + median-of-3 warm; "
             "comparable runs its subset (scalar anchors in place) then "
             "the arrow anchor; scale_ops runs all anchors first, then "
             "its subset; official cross-round number = value_normalized "

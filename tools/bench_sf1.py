@@ -44,7 +44,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF1_DIR = os.path.join(tempfile.gettempdir(), "stacktrend_sf1")
 SF01_DIR = "/root/testdata/sf0.1"
@@ -416,14 +416,6 @@ def main() -> None:
                 runs.append(round(time.time() - t1, 3))
             row[f"{tag}_warm_runs"] = runs
             row[f"{tag}_warm"] = sorted(runs)[1]
-            # each warm invocation of a two-phase ranking caller pins
-            # a fresh cache (the persist is load-bearing — see
-            # operators/ranking.py); release them so a 100+-row sweep
-            # doesn't accumulate pinned fact frames between the
-            # per-query clearCache calls (r10 review)
-            from stacktrend_spark.operators.ranking import release_pinned
-
-            release_pinned()
         alpha = math.log10(max(row["sf1_warm"], 1e-3) / max(row["sf0.1_warm"], 1e-3))
         row["alpha_warm"] = round(alpha, 3)
         (base_out if name in ORACLE_BASELINE else out)[name] = row

@@ -6,10 +6,11 @@ calm measurement window (the r11/r12 min-box discipline, one command).
 Run: python tools/box_probe.py
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stacktrend_spark.plans.registry import all_queries  # noqa: E402
 from stacktrend_spark.session import get_spark  # noqa: E402

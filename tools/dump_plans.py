@@ -1,7 +1,7 @@
 """Regenerate PLANS.md: formatted physical plans for representative
 queries, each with the scale property the plan is supposed to exhibit.
 
-Run: python tools/dump_plans.py   (writes /root/repo/PLANS.md)
+Run: python tools/dump_plans.py   (writes PLANS.md at the checkout root)
 
 The file is a judge/reviewer artifact: the claims in SCALE.md are
 checkable against these actual Catalyst outputs (and the plan-shape
@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from stacktrend_spark.plans.registry import all_queries  # noqa: E402
 from stacktrend_spark.session import get_spark  # noqa: E402
@@ -313,7 +315,7 @@ def main() -> None:
         if evidence:
             out += ["", "-- scan evidence --", *evidence]
         out += ["```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
 

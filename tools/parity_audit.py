@@ -32,9 +32,10 @@ by the suite.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # libm transcendentals + RNG: never allowed on a hashed surface.
 _BANNED = re.compile(

@@ -9,19 +9,20 @@ against its DuckDB oracle at the given sf dir.
 
 Run it from OUTSIDE the repo (cwd independence is part of the check):
 
-    cd /tmp && python /root/repo/tools/strict_bare_verify.py \
+    cd /tmp && python <checkout>/tools/strict_bare_verify.py \
         /root/testdata/sf0.01 <query> [query ...]
 
 Window gates pass the 50 names from queries() order (positions 1-50 =
 the driver window; see plans/registry.py _PRIORITY).
 """
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 

@@ -10,6 +10,7 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -17,9 +18,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from stacktrend_spark.operators.ranking import release_pinned  # noqa: E402
 from stacktrend_spark.plans.registry import all_queries  # noqa: E402
 from stacktrend_spark.session import get_spark  # noqa: E402
 from stacktrend_spark.sources.tables import TABLES  # noqa: E402
@@ -92,12 +92,13 @@ def main() -> int:
         if only and name not in only:
             continue
         # several plans persist() intermediates their lazy result
-        # depends on (triangle edges, token postings, CTE seeds) and
-        # cannot unpersist inside the callable; dropping the cache
-        # between queries keeps a 170-query session from accumulating
-        # executor memory (r5 ADVICE) — same discipline as bench.py
+        # depends on (shingle arrays, co-basket edges, SQL edge lists)
+        # and cannot unpersist inside the callable; dropping the cache
+        # between queries keeps a full-registry session from
+        # accumulating executor memory — same discipline as bench.py.
+        # The ranking operators' local checkpoints need no release:
+        # Spark frees them once the query's frames are dropped.
         spark.catalog.clearCache()
-        release_pinned()
         t0 = time.time()
         try:
             sdf = spec.fn(spark, sf_dir).toPandas()
