@@ -1,25 +1,24 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+"""Benchmark harness: times registered queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 testdata) on local[$SPARK_GRAFT_CPUS].
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": ...}
+    python bench.py                  # every HEADLINE query -> BENCH_FULL.json
+    python bench.py <query> [...]    # just those, merged into the files
 
-Each query is timed as a full materialization (count of the result —
-forces the whole plan without driver-side toPandas overhead). A warmup
-query first absorbs JVM/codegen startup so per-query numbers reflect
-steady-state execution.
+Every timing is ``measure()``: the frame is written through the noop
+sink, which runs the whole plan (a ``count()`` lets Catalyst prune what
+it does not read -- ``window_lead_ntile`` loses its Window). One cold
+run, then three warm runs whose median is the only estimator.
 
-Every headline query runs TWICE: cold (includes that query's own
-codegen compile) and warm (steady state — the number round-over-round
-comparisons should use).
+With query names (any registered query; an unknown name exits non-zero
+before Spark starts), HEADLINE rows merge into BENCH_FULL.json and the
+rest into BENCH_LITE.json. A merge refuses a file of another series
+(sink or scale factor), so no file mixes two kinds of number.
 
-Output discipline (round 2's full line overflowed the driver's tail
-capture → BENCH_r02 "parsed": null): the LAST stdout line is a COMPACT
-JSON summary — totals, per-query cold seconds rounded to 2 dp, and
-per-table input stats so round-over-round ratios are interpretable
-when the testdata is regenerated. The full detail (cold + warm per
-query, unrounded) is written to BENCH_FULL.json next to this script.
+The LAST stdout line is a COMPACT JSON summary (a full line once
+overflowed a tail capture): totals, per-query cold seconds
+at 2 dp, and per-table input rows, so ratios across rounds stay
+interpretable when the testdata is regenerated. The files hold the
+full detail.
 """
 
 from __future__ import annotations
@@ -27,13 +26,19 @@ from __future__ import annotations
 import glob
 import json
 import os
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
-from stacktrend_spark.plans.registry import all_queries
-from stacktrend_spark.session import get_spark
+from stacktrend_spark.plans.registry import all_queries  # noqa: E402
+from stacktrend_spark.session import get_spark  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: how every query is materialized; recorded in each result file
+SINK = "noop"
 
 #: headline set: the flagship rollup, a shuffle-heavy join chain, the
 #: full gold-layer acceptance surface, and the scale-critical
@@ -315,19 +320,17 @@ HEADLINE = [
     "dedup_hamming_band64",
 ]
 
-#: Exclusion manifest (r7 verdict task 3 — "no silent caps"): every
-#: registered query NOT in HEADLINE gets an explicit reason here, and
-#: bench.py emits the resolved map into BENCH_FULL.json. One-shot
-#: cold/warm timings for every excluded row live in BENCH_LITE.json
-#: (tools/bench_lite.py), so no query is without a recorded number.
+#: Exclusion manifest ("no silent caps"): every registered query NOT in
+#: HEADLINE gets an explicit reason here, and bench.py emits the
+#: resolved map into BENCH_FULL.json.
 EXCLUDE_TIER_REASONS = {
     # ground-truth baselines whose scale-safe twins are the headline
     "dedup_ngram_jaccard": "O(N²)-family ground-truth baseline; headline twin: dedup_minhash_lsh/dedup_minhash_star",
     "semdedup_recall_eval": "recall eval that runs the exhaustive ground truth inside itself; headline twin: dedup_semdedup_pairs",
 }
 EXCLUDE_DEFAULT_REASON = (
-    "outside HEADLINE to bound bench wall time; one-shot timing "
-    "recorded in BENCH_LITE.json (tools/bench_lite.py)"
+    "outside HEADLINE to bound bench wall time; `python bench.py <name>` "
+    "times it into BENCH_LITE.json"
 )
 
 
@@ -353,171 +356,192 @@ def input_stats(sf_dir: str) -> dict[str, dict[str, int]]:
     for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.splitext(os.path.basename(path))[0]
         try:
-            stats[name] = {
-                "rows": pq.read_metadata(path).num_rows,
-                "bytes": os.path.getsize(path),
-            }
+            stats[name] = {"rows": pq.read_metadata(path).num_rows, "bytes": os.path.getsize(path)}
         except Exception:
             stats[name] = {"rows": -1, "bytes": os.path.getsize(path)}
     return stats
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def scale_factor(sf_dir: str) -> float | str:
+    """The scale factor a testdata dir holds, from its ``sf<scale>`` name."""
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench")
-    specs = all_queries()
+    return float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # warmup: absorb JVM + codegen compile cost
-    specs["q1_pricing_summary"].fn(spark, sf_dir).count()
 
-    # Python-worker warmup: the first Arrow-batched query otherwise
-    # pays the one-time pool spin-up (32 forked workers each importing
-    # pandas+pyarrow — measured 13 s attributed to whichever grouped-map
-    # query runs first; capped_running_balance showed 16.1 s cold vs
-    # 2.2 s warm purely from this). On a real cluster the worker pool is
-    # long-lived per executor, so steady state is the honest per-query
-    # number; the spin-up cost is still reported, just attributed to
-    # itself (python_worker_warmup_sec) instead of one arbitrary query.
-    t0 = time.time()
+def _noop(df) -> None:
+    df.write.format(SINK).mode("overwrite").save()
+
+
+def measure(spark, name: str, fn, sf_dir: str | None) -> dict:
+    """Time the frame ``fn(spark, sf_dir)``, built anew inside the timer
+    and written through the noop sink under job group ``name``: one cold
+    run, then three warm runs whose median is the estimator.
+
+    Cached frames of earlier work are dropped first: several operators
+    persist() intermediates they cannot release, and a cache that grows
+    across a run makes later queries measure GC pressure."""
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobGroup(name, name)
+    runs = []
+    for _ in range(4):
+        t0 = time.time()
+        _noop(fn(spark, sf_dir))
+        runs.append(round(time.time() - t0, 3))
+    return {"cold": runs[0], "warm_runs": runs[1:], "warm": statistics.median(runs[1:])}
+
+
+def warm_up(spark, sf_dir: str) -> float:
+    """Absorb JVM start and codegen with one q1 run, then spin up the
+    Python worker pool, which the first Arrow-batched query would pay
+    otherwise (a grouped-map query once read 16.1 s cold, 2.2 s warm).
+    On a cluster the pool lives as long as its executor. Returns the
+    pool's spin-up seconds, reported as itself."""
+    _noop(all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
 
     def _ident(batches):
         yield from batches
 
-    spark.range(32).repartition(32).mapInPandas(_ident, "id long").count()
-    py_warmup = round(time.time() - t0, 3)
+    t0 = time.time()
+    _noop(spark.range(32).repartition(32).mapInPandas(_ident, "id long"))
+    return round(time.time() - t0, 3)
 
-    # chunk mode (local iteration only — the driver passes no args):
-    # with query names given, run just those HEADLINE entries and
-    # MERGE into the existing BENCH_FULL.json, so a full refresh can
-    # be composed from <10-min runs. No-arg behavior is unchanged.
-    picked = [a for a in sys.argv[1:] if not a.startswith("--")]
-    run_list = [n for n in HEADLINE if not picked or n in picked]
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
 
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    warm_runs: dict[str, list[float]] = {}
-    # committed warm medians from the last run — the reference the
-    # variance guard below compares against (read BEFORE overwrite)
-    prior_warm: dict[str, float] = {}
-    if os.path.exists(full_path):
-        with open(full_path) as f:
-            prior = json.load(f)
-        prior_warm = dict(prior.get("queries_warm", {}))
-        if picked:
-            timings = {n: v for n, v in prior.get("queries", {}).items() if n in HEADLINE}
-            warm = {n: v for n, v in prior.get("queries_warm", {}).items() if n in HEADLINE}
-            warm_runs = {
-                n: v for n, v in prior.get("queries_warm_runs", {}).items() if n in HEADLINE
-            }
-    for name in run_list:
-        # clean slate per query: several operators persist() small
-        # intermediates they cannot unpersist (the result depends on
-        # them lazily); without this the cache accumulates across the
-        # run and later queries measure GC pressure, not themselves
-        spark.catalog.clearCache()
-        # label jobs (optimization guide §1.5) so UI/event-log trails
-        # attribute stages to queries; no effect on timing or output
-        spark.sparkContext.setJobDescription(f"bench cold: {name}")
-        t0 = time.time()
-        specs[name].fn(spark, sf_dir).count()
-        timings[name] = round(time.time() - t0, 3)
-        # warm = MEDIAN of 3 runs (r5, verdict task 6): single warm
-        # runs moved ±0.3 s round-over-round with zero code change —
-        # the median floors that noise so real regressions show.
-        spark.sparkContext.setJobDescription(f"bench warm: {name}")
-        runs = []
-        for _ in range(3):
-            t1 = time.time()
-            specs[name].fn(spark, sf_dir).count()
-            runs.append(round(time.time() - t1, 3))
-        warm_runs[name] = runs
-        warm[name] = sorted(runs)[1]
+def load_series(path: str, sf, merge: bool) -> dict:
+    """The result file at ``path`` if it holds this run's series (same
+    sink and scale factor), else ``{}`` — or, when the run would merge
+    rows into it, a refusal: merged rows would mix two kinds of number
+    under one label."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        prior = json.load(f)
+    series = (prior.get("sink"), prior.get("sf"))
+    if series == (SINK, sf):
+        return prior
+    if merge:
+        raise SystemExit(
+            f"{path} holds sink={series[0]} sf={series[1]}, this run is "
+            f"sink={SINK} sf={sf}; move the file aside to start a new series"
+        )
+    return {}
 
-    # VARIANCE GUARD (r6 verdict task 2; SYMMETRIC since r8 per
-    # ADVICE): the r6 driver artifact showed ~8 comparable-subset
-    # outliers (e.g. gold_repo_health_dashboard 0.28 → 2.38 s) on
-    # untouched code — transient host contention read as a regression.
-    # If a comparable query's warm median came out >2× OR <0.5× its
-    # last committed value, re-measure it ONCE at the very end of the
-    # session (when whatever contended has moved on) and record BOTH
-    # sets; the official warm becomes the median of all 6 runs — still
-    # an honest estimator, but one a single noisy window can't own.
-    # The <0.5× side keeps a lucky quiet window from ratcheting the
-    # committed medians down (the asymmetry ADVICE flagged).
-    variance_reruns: dict[str, dict] = {}
-    for name in [n for n in COMPARABLE if n in run_list]:
-        ref = prior_warm.get(name)
-        if ref and ref > 0 and (warm[name] > 2.0 * ref or warm[name] < 0.5 * ref):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"bench variance rerun: {name}")
-            rerun = []
-            for _ in range(3):
-                t1 = time.time()
-                specs[name].fn(spark, sf_dir).count()
-                rerun.append(round(time.time() - t1, 3))
-            all6 = sorted(warm_runs[name] + rerun)
-            med6 = round((all6[2] + all6[3]) / 2, 3)
-            variance_reruns[name] = {
-                "prior_committed_warm": ref,
-                "first_warm_runs": warm_runs[name],
-                "rerun_warm_runs": rerun,
-                "official_warm_median6": med6,
-            }
-            warm_runs[name] = all6
-            warm[name] = med6
 
-    tables = input_stats(sf_dir)
+def write_full(path, prior, results, reruns, py_warmup, sf, tables) -> dict:
+    timings = {n: v for n, v in prior.get("queries", {}).items() if n in HEADLINE}
+    warm = {n: v for n, v in prior.get("queries_warm", {}).items() if n in HEADLINE}
+    warm_runs = {n: v for n, v in prior.get("queries_warm_runs", {}).items() if n in HEADLINE}
+    for name, r in results.items():
+        timings[name], warm[name], warm_runs[name] = r["cold"], r["warm"], r["warm_runs"]
+    # a chunked file may still lack comparable rows: no partial totals
+    whole = all(n in warm for n in COMPARABLE)
     full = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
+        "sink": SINK,
         "queries": timings,
         "queries_warm": warm,
         "queries_warm_runs": warm_runs,
         "warm_total": round(sum(warm.values()), 3),
-        "comparable_total": round(sum(timings[n] for n in COMPARABLE), 3),
-        "comparable_warm_total": round(sum(warm[n] for n in COMPARABLE), 3),
-        # real median across the comparable subset's per-query warm
-        # medians (r5 verdict: the old field duplicated the total)
-        "comparable_warm_median": round(
-            sorted(warm[n] for n in COMPARABLE)[len(COMPARABLE) // 2], 3
+        "comparable_total": round(sum(timings[n] for n in COMPARABLE), 3) if whole else None,
+        "comparable_warm_total": round(sum(warm[n] for n in COMPARABLE), 3) if whole else None,
+        # median across the comparable subset's per-query warm medians
+        "comparable_warm_median": (
+            round(statistics.median(warm[n] for n in COMPARABLE), 3) if whole else None
         ),
         "warm_is_median_of": 3,
-        "variance_reruns": variance_reruns,
+        "variance_reruns": reruns,
         "python_worker_warmup_sec": py_warmup,
         "comparable_n": len(COMPARABLE),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "n_queries_registered": len(specs),
+        "sf": sf,
+        "n_queries_registered": len(all_queries()),
         "n_queries_headline": len(HEADLINE),
-        # no silent caps (r7 verdict task 3): every registered-but-
-        # unbenched query appears here with its reason; one-shot
-        # timings for all of them live in BENCH_LITE.json.
-        "excluded_queries": excluded_queries(list(specs)),
+        "excluded_queries": excluded_queries(list(all_queries())),
         "input_tables": tables,
     }
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
-    with open(full_path, "w") as f:
+    with open(path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
+    return full
 
-    # Compact summary LAST so a tail capture always gets a complete,
-    # parseable line: cold seconds at 2 dp; warm only as totals; table
-    # stats compressed to rows only.
+
+def write_lite(path, prior, results, sf, tables) -> dict:
+    queries = {**prior.get("queries", {}), **results}
+    lite = {
+        "metric": "excluded_queries",
+        "unit": "sec",
+        "sink": SINK,
+        "sf": sf,
+        "n_excluded": len(queries),
+        "queries": queries,
+        "warm_total": round(sum(q["warm"] for q in queries.values()), 3),
+        "input_rows": {n: s["rows"] for n, s in tables.items()},
+    }
+    with open(path, "w") as f:
+        json.dump(lite, f, indent=1, sort_keys=True)
+    return lite
+
+
+def main(argv: list[str]) -> None:
+    specs = all_queries()
+    picked = list(dict.fromkeys(argv))
+    unknown = [n for n in picked if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    sf = scale_factor(SF_DIR)
+    head = [n for n in HEADLINE if not picked or n in picked]
+    rest = [n for n in picked if n not in HEADLINE]
+    full_path = os.path.join(REPO, "BENCH_FULL.json")
+    lite_path = os.path.join(REPO, "BENCH_LITE.json")
+    # read (and for a merge, check) both files before any Spark work
+    prior_full = load_series(full_path, sf, merge=bool(picked)) if head else {}
+    prior_lite = load_series(lite_path, sf, merge=True) if rest else {}
+
+    spark = get_spark("bench")
+    py_warmup = warm_up(spark, SF_DIR)
+    results = {n: measure(spark, n, specs[n].fn, SF_DIR) for n in head + rest}
+
+    # VARIANCE GUARD: host contention once read as a 1.35x regression on
+    # untouched code. A comparable query whose warm median is >2x OR
+    # <0.5x its committed value (the low side keeps a lucky quiet window
+    # from ratcheting the medians down) is measured again at the end of
+    # the session; both sets are kept, the median of all 6 is official.
+    reruns: dict[str, dict] = {}
+    prior_warm = prior_full.get("queries_warm", {})
+    for name in [n for n in COMPARABLE if n in results]:
+        r, ref = results[name], prior_warm.get(name)
+        if ref and (r["warm"] > 2.0 * ref or r["warm"] < 0.5 * ref):
+            again = measure(spark, name, specs[name].fn, SF_DIR)["warm_runs"]
+            all6 = sorted(r["warm_runs"] + again)
+            reruns[name] = {
+                "prior_committed_warm": ref,
+                "first_warm_runs": r["warm_runs"],
+                "rerun_warm_runs": again,
+                "official_warm_median6": round(statistics.median(all6), 3),
+            }
+            r["warm_runs"], r["warm"] = all6, reruns[name]["official_warm_median6"]
+
+    tables = input_stats(SF_DIR)
+    if rest:
+        lite = write_lite(lite_path, prior_lite, {n: results[n] for n in rest}, sf, tables)
+        print(json.dumps({k: lite[k] for k in ("metric", "sf", "n_excluded", "warm_total")}
+                         | {"detail": "BENCH_LITE.json"}))
+    if not head:
+        return
+    head_results = {n: results[n] for n in head}
+    full = write_full(full_path, prior_full, head_results, reruns, py_warmup, sf, tables)
+    # compact summary LAST: cold seconds at 2 dp, warm only as totals
     summary = {
         "metric": "headline_queries_total",
-        "value": round(sum(timings.values()), 2),
+        "value": round(full["value"], 2),
         "unit": "sec",
-        "queries": {n: round(t, 2) for n, t in timings.items()},
-        "warm_total": round(sum(warm.values()), 2),
+        "queries": {n: round(t, 2) for n, t in full["queries"].items()},
+        "warm_total": round(full["warm_total"], 2),
         "comparable_total": full["comparable_total"],
         "comparable_warm_total": full["comparable_warm_total"],
         "comparable_warm_median": full["comparable_warm_median"],
-        "variance_reruns": {
-            n: v["official_warm_median6"] for n, v in variance_reruns.items()
-        },
+        "variance_reruns": {n: v["official_warm_median6"] for n, v in reruns.items()},
         "python_worker_warmup_sec": py_warmup,
-        "sf": full["sf"],
+        "sf": sf,
         "input_rows": {n: s["rows"] for n, s in tables.items()},
         "detail": "BENCH_FULL.json",
     }
@@ -525,4 +549,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -57,9 +57,6 @@ _AS_OF_EVENTS = "2024-01-31 00:00:00"
 # the user-facing float form). Int64 headroom: irev·2e4 < 9.2e18 holds
 # to ~$4.6e12 revenue per brand; (x−p)·2e6 likewise — far beyond the
 # oracle-checked scales (at 100 TB you'd widen to DecimalType).
-# The four probe_tm_* queries below re-register round 2's float
-# constructs column-by-column so CORRECTNESS_r3 bisects which float op
-# diverges in the driver environment.
 
 # 10^(ndig-1) as an exact BIGINT via CASE (valid in both dialects;
 # idollars = irev // 100 has at most 17 digits for int64 irev).
@@ -214,104 +211,6 @@ def gold_tech_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(LEAST(100000000, GREATEST(0,"
             " 100000000 - momentum_score_micro + n_suppliers * 1000000)) AS BIGINT)"
         ).alias("concentration_risk_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Driver-environment bisection probes: round 2's float constructs,
-# re-registered ONE COLUMN AT A TIME. Locally every one of these is
-# bit-identical to the DuckDB oracle (verified r2); the driver has
-# failed the combined surface twice, so each probe isolates one float
-# op family — whichever probe comes back hash_match=false in
-# CORRECTNESS_r3 names the culprit.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "probe_tm_avg_price",
-    oracle=f"""
-        SELECT p.p_brand AS brand, {sql_davg('l.l_extendedprice')} AS avg_price
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        GROUP BY p.p_brand
-    """,
-    doc="tech_metrics probe: davg float surface only (fround of exact-int sum / count).",
-)
-def probe_tm_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part.select("p_partkey", "p_brand")), li.l_partkey == F.col("p_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(davg("l_extendedprice").alias("avg_price"))
-    )
-
-
-@register(
-    "probe_tm_revenue",
-    oracle=f"""
-        WITH rollup_ AS ({_TM_ROLLUP_SQL})
-        SELECT brand, CAST(irev AS DOUBLE) / 100.0 AS revenue FROM rollup_
-    """,
-    doc="tech_metrics probe: exact-int sum cast to double / 100.0 (single IEEE division).",
-)
-def probe_tm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _tm_rollup(spark, sf_dir).select(
-        "brand", (F.col("irev").cast("double") / 100.0).alias("revenue")
-    )
-
-
-@register(
-    "probe_tm_momentum",
-    oracle=f"""
-        WITH rollup_ AS ({_TM_ROLLUP_SQL})
-        SELECT brand,
-            {sql_round(f"LEAST(100.0, GREATEST(0.0, {sql_xlog10('GREATEST(irev // 100, 1)')} * 12.5))", 6)} AS momentum_score
-        FROM rollup_
-    """,
-    doc="tech_metrics probe: xlog10 decade-interpolated float momentum only.",
-)
-def probe_tm_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rollup = _tm_rollup(spark, sf_dir)
-    idollars = F.greatest(F.expr("irev DIV 100"), F.lit(1))
-    momentum = fround(
-        F.least(F.lit(100.0), F.greatest(F.lit(0.0), xlog10(idollars) * 12.5)), 6
-    )
-    return rollup.select("brand", momentum.alias("momentum_score"))
-
-
-@register(
-    "probe_tm_ranks",
-    oracle=f"""
-        WITH rollup_ AS ({_TM_ROLLUP_SQL})
-        SELECT brand,
-            CAST(ROW_NUMBER() OVER (ORDER BY irev DESC, brand)         AS BIGINT) AS revenue_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY total_qty DESC, brand)    AS BIGINT) AS volume_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY n_parts DESC, brand)      AS BIGINT) AS breadth_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY n_suppliers DESC, brand)  AS BIGINT) AS supplier_rank
-        FROM rollup_
-    """,
-    doc="tech_metrics probe: collect_list single-pass rank mechanism vs ROW_NUMBER (pure ints).",
-)
-def probe_tm_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rollup = _tm_rollup(spark, sf_dir)
-    rows = F.collect_list(
-        F.struct("irev", "total_qty", "n_parts", "n_suppliers", "brand")
-    ).over(W.partitionBy())
-
-    def rank(key: str) -> F.Column:
-        ahead = F.filter(
-            rows,
-            lambda r: (r[key] > F.col(key))
-            | ((r[key] == F.col(key)) & (r["brand"] < F.col("brand"))),
-        )
-        return (F.size(ahead) + 1).cast("long")
-
-    return rollup.select(
-        "brand",
-        rank("irev").alias("revenue_rank"),
-        rank("total_qty").alias("volume_rank"),
-        rank("n_parts").alias("breadth_rank"),
-        rank("n_suppliers").alias("supplier_rank"),
     )
 
 

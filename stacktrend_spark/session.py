@@ -16,6 +16,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """``spark.driver.memory`` for a host with ``physical_bytes`` of RAM:
+    half of it, capped at 32g. In local mode this heap holds the whole
+    engine, so it scales with the host rather than assuming one."""
+    return f"{min(physical_bytes // 2 // 2**20, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "stacktrend_spark",
     cpus: int | None = None,
@@ -44,7 +51,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # bucketed tables (operators/bucketing.py) go through

@@ -197,26 +197,16 @@ def test_current_window_has_50_distinct_registered_rows():
 
 
 def test_bench_subsets_pinned_and_disjoint():
-    """BENCH_ISO subset integrity: SCALE_OPS and the anchors are
-    registered, SCALE_OPS is disjoint from COMPARABLE (it exists
-    because the comparable set is blind to the ranking-operator
-    family), and every anchor is a COMPARABLE member (anchors must be
-    measured in every run to normalize it)."""
+    """BENCH_ISO subset integrity: SCALE_OPS is registered, pinned at 8
+    rows, and disjoint from COMPARABLE (it exists because the comparable
+    set is blind to the ranking-operator family)."""
     import sys
 
     sys.path.insert(0, REPO)
     from bench import COMPARABLE
-    from tools.bench_isolated import ANCHOR_REF, ARROW_ANCHOR_REF, SCALE_OPS
+    from tools.bench_isolated import SCALE_OPS
 
     registered = set(all_queries())
     assert set(SCALE_OPS) <= registered
-    assert set(ANCHOR_REF) <= registered
     assert not set(SCALE_OPS) & set(COMPARABLE)
-    assert set(ANCHOR_REF) <= set(COMPARABLE)
     assert len(SCALE_OPS) == len(set(SCALE_OPS)) == 8
-    # the Arrow anchor (r11 verdict task 3) is registered, is exactly
-    # one query, and is NOT a subset member on either side — it is
-    # measured additionally in every subprocess
-    assert set(ARROW_ANCHOR_REF) <= registered
-    assert len(ARROW_ANCHOR_REF) == 1
-    assert not set(ARROW_ANCHOR_REF) & (set(COMPARABLE) | set(SCALE_OPS))

@@ -1,73 +1,35 @@
-"""Isolated benchmark for the pinned cross-round subsets — the
-round-over-round performance metric (r9 verdict task 3; r10 verdict
-tasks 2+3; r11 verdict tasks 2+3 + ADVICE).
+"""Isolated benchmark for the two pinned cross-round subsets.
 
-In-session BENCH_FULL absolute values are contaminated by the 250+-
-query session's heap/GC pressure (adjudicated r8→r9: the same code
-read 20.1 s in-session vs 15.6 s isolated). This tool is the clean
-protocol: each SUBSET of each series run happens in its OWN fresh
-Python process with nothing else on the box, using bench.py's exact
-measurement protocol (q1 + python-worker warmup, clearCache
-per query, 1 cold + median-of-3 warm).
+A full bench session carries the heap and GC pressure of 250+ queries
+(the same code once read 20.1 s in-session and 15.6 s alone), so the
+number compared across rounds is measured here: each subset runs alone
+in its OWN fresh Python process, after a fixed cooldown idle gap (a box
+that has just run a test suite measures wide), with bench.py's protocol
+(``warm_up``, then ``measure`` per query). Each subset reports the
+median of its run totals, where a run total is the sum of the subset's
+per-query warm medians.
 
-Two pinned subsets, reported as separate totals:
-
-- ``COMPARABLE`` (29 rows, membership pinned since r1, defined in
-  bench.py) — the official cross-round number;
-- ``SCALE_OPS`` (8 rows, pinned r11 per the r10 verdict: the
-  comparable subset shares zero queries with the two-phase ranking
-  operator family, so regressions in ``operators/ranking.py`` and the
-  nine r10-converted queries were invisible to the official metric).
-  Since r12 it is measured in its OWN subprocess (r11 ADVICE: the
-  in-process-after-comparable ordering absorbed session heat — the
-  exact contamination class the fresh-process protocol cancels), and
-  its committed headline value is selected from the MINIMUM-box-factor
-  run, not the median series (r11 verdict task 2: the r11 artifact
-  committed an 11.367 s burst median against a 6.65-6.70 s agreed
-  steady state).
-
-De-noising (r10 verdict task 3 — the same code measured 15.7/19.9/
-17.6 s warm in ONE day, a ±13% box envelope larger than most real
-round-over-round deltas):
-
-- a fixed COOLDOWN idle gap runs before EVERY subset subprocess (the
-  r10 envelope's outlier series started right after 20 min of gates;
-  the accidental discovery was that a cooled box measures tight);
-- beside the raw median, the artifact reports an ANCHOR-NORMALIZED
-  total: raw total divided by the box factor, where the box factor is
-  the median of (this run's anchor warm / the anchor's committed
-  reference). The four scalar anchors are stable, code-frozen-since-r1
-  queries spanning scan/join/agg shapes; a run on a slow day inflates
-  anchors and subjects alike, so the normalized number cancels the
-  box. BASELINE.md states which number is the cross-round metric.
-- contention hits Arrow/Python-heavy rows 2-3x harder than the
-  scan/agg-shaped scalar anchors (r11 verdict task 3: series A run 3
-  read scalar box 1.373 while the Arrow-heavy rows ran ~1.65x clean),
-  so every subprocess ALSO measures one code-frozen grouped-Arrow
-  anchor (``ARROW_ANCHOR_REF``) and the artifact reports a
-  TWO-COMPONENT normalization: each subset query is divided by the
-  arrow box factor if its physical plan contains an Arrow/Python
-  exec node (detected from the executed plan, not a hand-pinned
-  list), else by the scalar box factor.
+- ``COMPARABLE`` (29 rows, defined in bench.py, membership pinned since
+  r1) -- the official cross-round number;
+- ``SCALE_OPS`` (8 rows) -- the two-phase ranking operator family,
+  which COMPARABLE does not touch.
 
 Modes:
 
-- ``python tools/bench_isolated.py [sf_dir]`` — 3-run series (each
-  subset in a fresh subprocess after a cooldown), writes
-  ``BENCH_ISO.json``.
-- ``python tools/bench_isolated.py [sf_dir] --single [--subset S]``
-  — one in-process measurement pass over subset S (``comparable``
-  default, or ``scale_ops``), prints one JSON line (the subprocess
-  worker).
-- ``--cooldown N`` — idle seconds before each subset subprocess
-  (default 60; 0 disables, e.g. for quick smoke checks; N must be a
-  nonnegative integer).
+- ``python tools/bench_isolated.py [sf_dir]`` -- 3 runs of each subset,
+  writes ``BENCH_ISO.json``;
+- ``python tools/bench_isolated.py [sf_dir] --single [--subset S]`` --
+  one in-process pass over subset S (``comparable`` default, or
+  ``scale_ops``), prints one JSON line (the subprocess worker);
+- ``--cooldown N`` -- idle seconds before each subset subprocess
+  (default 60; 0 disables, e.g. for quick smoke checks).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -75,9 +37,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-#: the two-phase-ranking-operator bench subset (r10 verdict task 2).
-#: Membership is PINNED — additions would break cross-round
-#: comparability; new scale operators get their own subset instead.
+from bench import COMPARABLE, SF_DIR, SINK, measure, warm_up  # noqa: E402
+
+#: the two-phase-ranking-operator bench subset. Membership is PINNED --
+#: additions would break cross-round comparability; new scale operators
+#: get their own subset instead.
 SCALE_OPS = (
     "feature_quantile_bins",
     "model_gains_deciles",
@@ -88,191 +52,30 @@ SCALE_OPS = (
     "rank_global_scalable",
     "conversion_latency_quantiles",
 )
-
-#: scalar anchor queries for box-factor normalization: code frozen
-#: since r1, cheap, spanning scan+agg / shuffle-join / multi-join-gold
-#: / hash-dedup shapes. Reference values = the committed r10 BENCH_ISO
-#: per-query warm medians (the first isolated-series artifact).
-ANCHOR_REF = {
-    "q1_pricing_summary": 0.610,
-    "join_revenue_by_nation": 0.790,
-    "gold_tech_metrics": 0.709,
-    "dedup_exact": 0.214,
-}
-
-#: Arrow-path anchor (r11 verdict task 3): one code-frozen-since-r9
-#: grouped-Arrow query (applyInPandas IQR per group) whose warm time
-#: tracks Python-worker/Arrow-transfer contention the scalar anchors
-#: are blind to. Reference = the r12 calibration (isolated comparable
-#: run, measured at the anchor's pinned post-subset position: 0.371 s
-#: at scalar box 1.069 → 0.347 s at box 1.0; SCALE.md "r12 Arrow
-#: anchor calibration"). ANCHOR POSITION IS PART OF THE REFERENCE:
-#: the same query measured anchors-first in a fresh process reads
-#: ~2x (JVM/JIT not yet warmed by the subset), so this reference is
-#: only valid for the comparable subprocess's post-subset slot — the
-#: scale_ops subprocess's anchors-first factors are position-biased
-#: and serve run SELECTION only (see protocol).
-ARROW_ANCHOR_REF = {
-    "grouped_applyinarrow_iqr": 0.347,
-}
-
-#: physical-plan substrings that mark a query as Arrow/Python-path for
-#: the two-component normalization (grouped/map Arrow stages, Pandas
-#: UDF evals, stateful Pandas): matched against the executed plan.
-_ARROW_PLAN_MARKERS = (
-    "InPandas",   # FlatMapGroupsInPandas / MapInPandas / ...WithState
-    "ArrowEval",  # vectorized (pandas_udf) projections
-    "EvalPython", # row-wise Python UDF fallback (still worker-bound)
-    "InArrow",    # applyInArrow / mapInArrow stages
-)
+SUBSETS = {"comparable": tuple(COMPARABLE), "scale_ops": SCALE_OPS}
 
 DEFAULT_COOLDOWN = 60
-
-
-def _uses_arrow(df) -> bool:
-    """True if the query's optimized physical plan contains an
-    Arrow/Python exec node — drives the two-component normalization
-    without a hand-pinned (driftable) membership list."""
-    try:
-        jvm = df.sparkSession._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-        plan = df._jdf.queryExecution().explainString(mode)
-    except Exception as e:
-        # r12 ADVICE: a silent False here degrades EVERY query to the
-        # scalar box factor with no signal — make the degradation
-        # visible in the run log so the artifact can be adjudicated.
-        print(
-            f"WARN _uses_arrow probe failed ({type(e).__name__}: {e}); "
-            "two-component normalization degraded to scalar-only",
-            file=sys.stderr,
-        )
-        return False
-    return any(m in plan for m in _ARROW_PLAN_MARKERS)
-
-
-def _measure(spark, specs, names, sf_dir, arrow_flags=None):
-    cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    for name in names:
-        spark.catalog.clearCache()
-        t0 = time.time()
-        df = specs[name].fn(spark, sf_dir)
-        df.count()
-        cold[name] = round(time.time() - t0, 3)
-        if arrow_flags is not None and name not in arrow_flags:
-            arrow_flags[name] = _uses_arrow(df)
-        runs = []
-        for _ in range(3):
-            t1 = time.time()
-            specs[name].fn(spark, sf_dir).count()
-            runs.append(round(time.time() - t1, 3))
-        warm[name] = sorted(runs)[1]
-    return cold, warm
+N_RUNS = 3
+USAGE = (
+    "usage: bench_isolated.py [sf_dir] [--single] "
+    "[--subset comparable|scale_ops] [--cooldown SECONDS>=0]"
+)
 
 
 def run_single(sf_dir: str, subset: str = "comparable") -> dict:
-    from bench import COMPARABLE
     from stacktrend_spark.plans.registry import all_queries
     from stacktrend_spark.session import get_spark
 
     spark = get_spark("bench_isolated")
     specs = all_queries()
-    specs["q1_pricing_summary"].fn(spark, sf_dir).count()
-
-    def _ident(batches):
-        yield from batches
-
-    spark.range(32).repartition(32).mapInPandas(_ident, "id long").count()
-
-    arrow_flags: dict[str, bool] = {}
-    arrow_anchor = next(iter(ARROW_ANCHOR_REF))
-    if subset == "comparable":
-        # scalar anchors are COMPARABLE members — measured in place,
-        # in the pinned r1 order; the arrow anchor runs AFTER the
-        # subset (pinned protocol position: it reflects the same
-        # session heat the subset itself carried)
-        cold, warm = _measure(spark, specs, COMPARABLE, sf_dir, arrow_flags)
-        _, aw = _measure(spark, specs, [arrow_anchor], sf_dir)
-        anchors_warm = {
-            **{n: warm[n] for n in ANCHOR_REF},
-            arrow_anchor: aw[arrow_anchor],
-        }
-    elif subset == "scale_ops":
-        # fresh process (r11 ADVICE): anchors FIRST (they estimate the
-        # box this subset is about to run on), then the subset
-        _, anchors_warm = _measure(
-            spark, specs, [*ANCHOR_REF, arrow_anchor], sf_dir
-        )
-        cold, warm = _measure(spark, specs, SCALE_OPS, sf_dir, arrow_flags)
-    elif subset == "anchors":
-        # calibration mode: anchors only (used to set/refresh
-        # ARROW_ANCHOR_REF against the committed scalar references)
-        cold, warm = _measure(spark, specs, [*ANCHOR_REF, arrow_anchor], sf_dir)
-        anchors_warm = dict(warm)
-    else:
-        raise ValueError(f"unknown subset {subset!r}")
+    warm_up(spark, sf_dir)
+    runs = {n: measure(spark, n, specs[n].fn, sf_dir) for n in SUBSETS[subset]}
     return {
         "subset": subset,
-        "warm_total": round(sum(warm.values()), 3),
-        "cold_total": round(sum(cold.values()), 3),
-        "queries_warm": warm,
-        "queries_arrow": arrow_flags,
-        "anchors_warm": anchors_warm,
-        "sf_dir": sf_dir,
-        "n": len(warm),
+        "warm_total": round(sum(r["warm"] for r in runs.values()), 3),
+        "cold_total": round(sum(r["cold"] for r in runs.values()), 3),
+        "queries_warm": {n: r["warm"] for n, r in runs.items()},
     }
-
-
-def box_factor(anchors_warm: dict[str, float]) -> float:
-    """Median of per-scalar-anchor (measured / reference) ratios — >1
-    means the box ran slow that day; dividing totals by it cancels
-    the day."""
-    ratios = sorted(
-        anchors_warm[name] / ref
-        for name, ref in ANCHOR_REF.items()
-        if name in anchors_warm
-    )
-    if not ratios:
-        raise ValueError(
-            "no anchor queries in anchors_warm — normalization would "
-            "silently disable; anchors: " + ", ".join(sorted(ANCHOR_REF))
-        )
-    mid = len(ratios) // 2
-    if len(ratios) % 2:
-        return ratios[mid]
-    return (ratios[mid - 1] + ratios[mid]) / 2.0
-
-
-def arrow_box_factor(anchors_warm: dict[str, float]) -> float | None:
-    """(measured / reference) for the Arrow anchor, or None if it was
-    not measured (e.g. an old artifact replayed through this code)."""
-    for name, ref in ARROW_ANCHOR_REF.items():
-        if name in anchors_warm:
-            return anchors_warm[name] / ref
-    return None
-
-
-def _normalized_total(run: dict) -> float:
-    return round(run["warm_total"] / box_factor(run["anchors_warm"]), 3)
-
-
-def _two_component_total(run: dict) -> float | None:
-    """Per-query normalization: Arrow-path queries divided by the
-    arrow box factor, everything else by the scalar box factor."""
-    bf = box_factor(run["anchors_warm"])
-    abf = arrow_box_factor(run["anchors_warm"])
-    if abf is None:
-        return None
-    flags = run.get("queries_arrow", {})
-    return round(
-        sum(
-            t / (abf if flags.get(name) else bf)
-            for name, t in run["queries_warm"].items()
-        ),
-        3,
-    )
 
 
 def _run_subset(sf_dir: str, subset: str, cooldown: int) -> dict:
@@ -280,127 +83,55 @@ def _run_subset(sf_dir: str, subset: str, cooldown: int) -> dict:
         print(f"cooldown {cooldown}s before {subset} run...", file=sys.stderr)
         time.sleep(cooldown)
     out = subprocess.run(
-        [
-            sys.executable,
-            os.path.abspath(__file__),
-            sf_dir,
-            "--single",
-            "--subset",
-            subset,
-        ],
+        [sys.executable, os.path.abspath(__file__), sf_dir, "--single", "--subset", subset],
         capture_output=True,
         text=True,
         check=True,
         cwd=REPO,
     )
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    return json.loads([l for l in out.stdout.splitlines() if l.startswith("{")][-1])
 
 
-def run_series(sf_dir: str, n_runs: int = 3, cooldown: int = DEFAULT_COOLDOWN) -> dict:
-    comp_runs, so_runs = [], []
-    for i in range(n_runs):
-        comp = _run_subset(sf_dir, "comparable", cooldown)
-        comp_runs.append(comp)
-        so = _run_subset(sf_dir, "scale_ops", cooldown)
-        so_runs.append(so)
+def run_series(sf_dir: str, cooldown: int = DEFAULT_COOLDOWN) -> dict:
+    runs: dict[str, list[dict]] = {s: [] for s in SUBSETS}
+    for i in range(N_RUNS):
+        for subset in SUBSETS:
+            runs[subset].append(_run_subset(sf_dir, subset, cooldown))
         print(
-            f"run {i + 1}/{n_runs}: warm={comp['warm_total']}s "
-            f"(box={box_factor(comp['anchors_warm']):.3f}, "
-            f"arrow_box={arrow_box_factor(comp['anchors_warm']):.3f}) "
-            f"scale_ops_warm={so['warm_total']}s "
-            f"(box={box_factor(so['anchors_warm']):.3f})",
+            f"run {i + 1}/{N_RUNS}: "
+            + " ".join(f"{s}={r[-1]['warm_total']}s" for s, r in runs.items()),
             file=sys.stderr,
         )
-    warm_totals = sorted(r["warm_total"] for r in comp_runs)
-    cold_totals = sorted(r["cold_total"] for r in comp_runs)
-    norm_totals = sorted(_normalized_total(r) for r in comp_runs)
-    two_comp_totals = sorted(
-        t for t in (_two_component_total(r) for r in comp_runs) if t is not None
-    )
-    # SCALE_OPS headline = the minimum-box-factor run (r11 verdict
-    # task 2: a burst median is not the family's steady state; the
-    # min-box run is the series' cleanest measurement)
-    so_clean = min(so_runs, key=lambda r: box_factor(r["anchors_warm"]))
-    names = comp_runs[0]["queries_warm"].keys()
+
+    def series(subset: str, key: str) -> list[float]:
+        return sorted(r[key] for r in runs[subset])
+
     per_query = {
-        name: sorted(r["queries_warm"][name] for r in comp_runs)[n_runs // 2]
-        for name in names
+        name: statistics.median(r["queries_warm"][name] for r in subset_runs)
+        for subset_runs in runs.values()
+        for name in subset_runs[0]["queries_warm"]
     }
-    per_query.update(so_clean["queries_warm"])
-    mid = n_runs // 2
     return {
         "metric": "comparable_warm_median_isolated",
-        "value": warm_totals[mid],
-        "value_normalized": norm_totals[mid],
-        # r12 ADVICE: index by the FILTERED list's own median — a
-        # partial list (arrow anchor measured in only some runs) made
-        # [mid] an IndexError despite the truthiness guard
-        "value_normalized_two_component": (
-            two_comp_totals[len(two_comp_totals) // 2]
-            if two_comp_totals
-            else None
-        ),
-        "scale_ops_warm_clean": so_clean["warm_total"],
-        "scale_ops_box_clean": round(
-            box_factor(so_clean["anchors_warm"]), 3
-        ),
-        "scale_ops_selection": (
-            "min-box-factor run; RAW total is the cross-round number "
-            "(compare vs the r11 steady-state pin 6.65-6.70 s raw) — "
-            "the anchors-first box factors are position-biased vs the "
-            "r10 references and rank runs within a series only; with "
-            "--scale-ops-global the committed value is the ROUND-GLOBAL "
-            "min-box run across all series written this round (r12 "
-            "verdict task 4: the close series' min-box is not "
-            "necessarily the round's cleanest measurement)"
-        ),
+        "value": statistics.median(series("comparable", "warm_total")),
+        "scale_ops_warm": statistics.median(series("scale_ops", "warm_total")),
         "unit": "sec",
-        "series_warm": warm_totals,
-        "series_cold": cold_totals,
-        "series_warm_normalized": norm_totals,
-        "series_warm_two_component": two_comp_totals,
-        "series_scale_ops_warm": sorted(r["warm_total"] for r in so_runs),
-        "series_scale_ops_cold": sorted(r["cold_total"] for r in so_runs),
-        "box_factors": sorted(
-            round(box_factor(r["anchors_warm"]), 3) for r in comp_runs
-        ),
-        "box_factors_arrow": sorted(
-            round(arrow_box_factor(r["anchors_warm"]), 3)
-            for r in comp_runs
-            if arrow_box_factor(r["anchors_warm"]) is not None
-        ),
-        "box_factors_scale_ops": sorted(
-            round(box_factor(r["anchors_warm"]), 3) for r in so_runs
-        ),
-        "anchor_ref": ANCHOR_REF,
-        "arrow_anchor_ref": ARROW_ANCHOR_REF,
-        "queries_arrow": {
-            **comp_runs[0].get("queries_arrow", {}),
-            **so_clean.get("queries_arrow", {}),
-        },
+        "sink": SINK,
+        "series_warm": series("comparable", "warm_total"),
+        "series_cold": series("comparable", "cold_total"),
+        "series_scale_ops_warm": series("scale_ops", "warm_total"),
+        "series_scale_ops_cold": series("scale_ops", "cold_total"),
         "queries_warm_median": per_query,
         "sf_dir": sf_dir,
-        "n_queries": comp_runs[0]["n"],
-        "n_scale_ops": so_runs[0]["n"],
-        "n_runs": n_runs,
+        "n_queries": len(COMPARABLE),
+        "n_scale_ops": len(SCALE_OPS),
+        "n_runs": N_RUNS,
         "cooldown_sec": cooldown,
         "protocol": (
-            "each subset of each run = its OWN fresh process after a "
-            "fixed cooldown (comparable then scale_ops, ordering "
-            "pinned), q1 + python-worker warmup, clearCache "
-            "per query, 1 cold + median-of-3 warm; "
-            "comparable runs its subset (scalar anchors in place) then "
-            "the arrow anchor; scale_ops runs all anchors first, then "
-            "its subset; official cross-round number = value_normalized "
-            "(scalar-anchor-normalized median of run warm totals, "
-            "BASELINE.md) with value_normalized_two_component beside it "
-            "(arrow-path queries normalized by the arrow box factor; "
-            "both anchor references are position-pinned — see "
-            "ARROW_ANCHOR_REF); scale_ops headline = the MINIMUM-box-"
-            "factor run's RAW warm total (not the series median — r11 "
-            "verdict task 2; its anchors-first box factors rank runs "
-            "within the series only)"
+            "each subset of each run in its own fresh process after the "
+            "cooldown (comparable, then scale_ops); bench.warm_up, then "
+            "bench.measure per query (noop sink, 1 cold + median of 3 "
+            "warm); value = median of the comparable run warm totals"
         ),
     }
 
@@ -408,70 +139,23 @@ def run_series(sf_dir: str, n_runs: int = 3, cooldown: int = DEFAULT_COOLDOWN) -
 def main() -> None:
     argv = sys.argv[1:]
     single = "--single" in argv
-    carry_global = "--scale-ops-global" in argv
-    argv = [a for a in argv if a != "--scale-ops-global"]
-    cooldown = DEFAULT_COOLDOWN
-    if "--cooldown" in argv:
-        i = argv.index("--cooldown")
-        # strict nonnegative integer (r11 ADVICE: lstrip('-') let
-        # negatives through to time.sleep, a first-run ValueError)
-        if i + 1 >= len(argv) or not argv[i + 1].isdigit():
-            sys.exit(
-                "usage: bench_isolated.py [sf_dir] [--single] "
-                "[--subset comparable|scale_ops] [--cooldown SECONDS>=0]"
-            )
-        cooldown = int(argv[i + 1])
-        del argv[i : i + 2]
-    subset = "comparable"
-    if "--subset" in argv:
-        i = argv.index("--subset")
-        if i + 1 >= len(argv) or argv[i + 1] not in (
-            "comparable",
-            "scale_ops",
-            "anchors",
-        ):
-            sys.exit("--subset takes 'comparable', 'scale_ops' or 'anchors'")
-        subset = argv[i + 1]
-        del argv[i : i + 2]
-    args = [a for a in argv if a != "--single"]
-    sf_dir = args[0] if args else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
+    argv = [a for a in argv if a != "--single"]
+    opts = {"--cooldown": str(DEFAULT_COOLDOWN), "--subset": "comparable"}
+    for flag in opts:
+        if flag in argv:
+            i = argv.index(flag)
+            if i + 1 >= len(argv):
+                sys.exit(USAGE)
+            opts[flag] = argv[i + 1]
+            del argv[i : i + 2]
+    if not opts["--cooldown"].isdigit() or opts["--subset"] not in SUBSETS or len(argv) > 1:
+        sys.exit(USAGE)
+    sf_dir = argv[0] if argv else SF_DIR
     if single:
-        print(json.dumps(run_single(sf_dir, subset)))
+        print(json.dumps(run_single(sf_dir, opts["--subset"])))
         return
-    result = run_series(sf_dir, cooldown=cooldown)
+    result = run_series(sf_dir, cooldown=int(opts["--cooldown"]))
     out_path = os.path.join(REPO, "BENCH_ISO.json")
-    if carry_global:
-        # r12 verdict task 4: later series this round carry the
-        # round-global min-box SCALE_OPS run forward, so the committed
-        # headline is self-consistent without a SCALE.md footnote.
-        # Only valid WITHIN a round (pass it on every series after the
-        # round's first; never on the first — the existing file holds
-        # the PREVIOUS round's value at that point).
-        try:
-            with open(out_path) as f:
-                prev = json.load(f)
-        except (OSError, ValueError):
-            prev = {}
-        prev_box = prev.get("scale_ops_box_clean")
-        if (
-            prev_box is not None
-            and prev.get("sf_dir") == result["sf_dir"]
-            and prev_box < result["scale_ops_box_clean"]
-        ):
-            result["scale_ops_warm_clean"] = prev["scale_ops_warm_clean"]
-            result["scale_ops_box_clean"] = prev_box
-            for name in SCALE_OPS:
-                if name in prev.get("queries_warm_median", {}):
-                    result["queries_warm_median"][name] = prev[
-                        "queries_warm_median"
-                    ][name]
-            result["scale_ops_selection_scope"] = (
-                "round-global min-box (carried from an earlier series "
-                "this round; this series' own min-box run is in "
-                "series_scale_ops_warm)"
-            )
     with open(out_path, "w") as f:
         json.dump(result, f, indent=2, sort_keys=True)
         f.write("\n")

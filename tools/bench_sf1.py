@@ -25,13 +25,16 @@ not by making every key 10× hotter:
   degree distribution preserved
 - orders/customer: o_orderkey/o_custkey/c_custkey shifted consistently
 
-The generated dir lives under the system temp dir (same policy as the
-session warehouse) and is reused if present.
+The base is $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata); the
+generated 10x dir lives under the system temp dir (same policy as the
+session warehouse), is named after the base, and is reused if present.
+Every timing is bench.py's ``measure()`` (noop sink, warm median).
 
 Usage: python tools/bench_sf1.py [--regen] [query ...]
 
 With query names given, only those HEAVY entries run and their rows
-are MERGED into the existing BENCH_SF1.json — chunked runs compose.
+are MERGED into the existing BENCH_SF1.json -- chunked runs compose,
+within one series (same sink and base scale factor).
 """
 
 from __future__ import annotations
@@ -42,12 +45,15 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SF1_DIR = os.path.join(tempfile.gettempdir(), "stacktrend_sf1")
-SF01_DIR = "/root/testdata/sf0.1"
+from bench import SF_DIR, SINK, load_series, measure, scale_factor, warm_up  # noqa: E402
+
+X10_DIR = os.path.join(
+    tempfile.gettempdir(), "stacktrend_x10_" + os.path.basename(SF_DIR.rstrip("/"))
+)
 
 #: ORACLE-BASELINE TIER (r6 verdict task 3): queries whose OUTPUT
 #: CONTRACT is intentionally exhaustive — they enumerate a quadratic
@@ -251,7 +257,7 @@ def generate(target: str) -> None:
 
     os.makedirs(target, exist_ok=True)
     con = duckdb.connect()
-    src = SF01_DIR.rstrip("/")
+    src = SF_DIR.rstrip("/")
 
     def copy_scaled(name: str, select: str) -> None:
         table_ref = "'" + src + "/" + name + ".parquet'"
@@ -367,64 +373,44 @@ def generate(target: str) -> None:
 
 
 def main() -> None:
-    if "--regen" in sys.argv and os.path.isdir(SF1_DIR):
-        shutil.rmtree(SF1_DIR)
-    if not os.path.isdir(os.path.join(SF1_DIR)) or not os.path.exists(
-        os.path.join(SF1_DIR, "embeddings.parquet")
-    ):
-        print("generating sf1 dataset ...", file=sys.stderr)
-        generate(SF1_DIR)
+    picked = [a for a in sys.argv[1:] if not a.startswith("--")]
+    unknown = set(picked) - set(HEAVY) - set(ORACLE_BASELINE)
+    if unknown:
+        sys.exit(f"not HEAVY or ORACLE_BASELINE rows: {sorted(unknown)}")
+    sf = scale_factor(SF_DIR)
+    path = os.path.join(REPO, "BENCH_SF1.json")
+    prior = load_series(path, sf, merge=bool(picked))
+    if "--regen" in sys.argv and os.path.isdir(X10_DIR):
+        shutil.rmtree(X10_DIR)
+    if not os.path.exists(os.path.join(X10_DIR, "embeddings.parquet")):
+        print("generating the 10x dataset ...", file=sys.stderr)
+        generate(X10_DIR)
 
     from stacktrend_spark.plans.registry import all_queries
     from stacktrend_spark.session import get_spark
 
     spark = get_spark("bench_sf1")
     specs = all_queries()
-    specs["q1_pricing_summary"].fn(spark, SF01_DIR).count()  # JVM warm
-    specs["sim_bruteforce_topk"].fn(spark, SF01_DIR).count()  # py workers warm
+    warm_up(spark, SF_DIR)
 
-    picked = [a for a in sys.argv[1:] if not a.startswith("--")]
     run_list = [n for n in HEAVY if not picked or n in picked]
-    # oracle-baseline rows run ONLY when explicitly picked
+    # oracle-baseline rows run ONLY when explicitly picked, so their
+    # records survive a full (no-args) sweep of the same series
     run_list += [n for n in ORACLE_BASELINE if n in picked]
-
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "BENCH_SF1.json")
-    out: dict[str, dict] = {}
-    base_out: dict[str, dict] = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            prior = json.load(f)
-        # oracle-baseline rows run ONLY when picked, so their committed
-        # records must survive a full (no-args) sweep — load them
-        # unconditionally (r9 review finding: a full run used to drop
-        # the whole oracle_baseline_tier section)
-        base_out = prior.get("oracle_baseline_tier", {})
-        if picked:
-            out = prior.get("queries", {})
+    base_out: dict[str, dict] = prior.get("oracle_baseline_tier", {})
+    out: dict[str, dict] = prior.get("queries", {}) if picked else {}
+    tags = ((f"sf{sf:g}", SF_DIR), (f"sf{sf * _REPLICAS:g}", X10_DIR))
     for name in run_list:
         row: dict[str, float | list[float]] = {}
-        for tag, d in (("sf0.1", SF01_DIR), ("sf1", SF1_DIR)):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            specs[name].fn(spark, d).count()
-            row[f"{tag}_cold"] = round(time.time() - t0, 3)
-            runs = []
-            for _ in range(3):
-                t1 = time.time()
-                specs[name].fn(spark, d).count()
-                runs.append(round(time.time() - t1, 3))
-            row[f"{tag}_warm_runs"] = runs
-            row[f"{tag}_warm"] = sorted(runs)[1]
-        alpha = math.log10(max(row["sf1_warm"], 1e-3) / max(row["sf0.1_warm"], 1e-3))
-        row["alpha_warm"] = round(alpha, 3)
+        for tag, d in tags:
+            row.update({f"{tag}_{k}": v for k, v in measure(spark, name, specs[name].fn, d).items()})
+        lo, hi = (row[f"{tag}_warm"] for tag, _ in tags)
+        row["alpha_warm"] = round(math.log10(max(hi, 1e-3) / max(lo, 1e-3)), 3)
         (base_out if name in ORACLE_BASELINE else out)[name] = row
-        print(f"{name}: sf0.1 warm={row['sf0.1_warm']}s  "
-              f"sf1 warm={row['sf1_warm']}s  alpha={row['alpha_warm']}")
+        print(f"{name}: {tags[0][0]} warm={lo}s  {tags[1][0]} warm={hi}s  "
+              f"alpha={row['alpha_warm']}")
 
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "BENCH_SF1.json")
-    payload = {"replicas": _REPLICAS, "queries": out}
+    payload = {"replicas": _REPLICAS, "sink": SINK, "sf": sf, "queries": out}
     if base_out:
         payload["oracle_baseline_tier"] = base_out
         payload["oracle_baseline_note"] = (

@@ -17,6 +17,9 @@ over g·(g+1)/2 independent triangle-grid cells. Wall-clock converges
 to ~max(cell)·ceil(cells/cores) — bounded, and shrinking as the
 cluster widens, which is the property that matters at 100 TB.
 
+Both variants are timed with bench.py's ``measure()`` (noop sink, warm
+median); the row-identity check runs as an untimed count.
+
 Usage: python tools/bench_skew_guard.py [n_rows] [hot_fraction]
 Prints one JSON line; paste the numbers into SCALE.md.
 """
@@ -26,9 +29,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import measure  # noqa: E402
 
 DIM = 16
 MAX_BUCKET_ROWS = 1000
@@ -58,14 +62,15 @@ def build_fixture(spark, n_rows: int, hot_fraction: float):
             ]
         ).alias("embedding"),
     )
-    return df.repartition(32).persist()
+    # a checkpoint, not persist(): measure() clears the cache per query,
+    # and the fixture must stay materialized outside the timings
+    return df.repartition(32).localCheckpoint(eager=True)
 
 
-def measure(df, max_bucket_rows):
+def near_dup_pairs(df, max_bucket_rows):
     from stacktrend_spark.operators.similarity import cosine_near_dup_pairs
 
-    t0 = time.time()
-    n = cosine_near_dup_pairs(
+    return cosine_near_dup_pairs(
         df,
         THRESHOLD,
         id_col="vec_id",
@@ -73,8 +78,7 @@ def measure(df, max_bucket_rows):
         bucket_col="label",
         dim=DIM,
         max_bucket_rows=max_bucket_rows,
-    ).count()
-    return round(time.time() - t0, 3), n
+    )
 
 
 def main() -> None:
@@ -84,20 +88,13 @@ def main() -> None:
     hot_fraction = float(sys.argv[2]) if len(sys.argv) > 2 else 0.20
     spark = get_spark("bench_skew_guard")
     df = build_fixture(spark, n_rows, hot_fraction)
-    df.count()  # materialize the fixture outside the timings
-
-    # warm the Python worker pool so neither variant pays spin-up
-    def _ident(batches):
-        yield from batches
-
-    spark.range(32).repartition(32).mapInPandas(_ident, "id long").count()
-
-    guarded_sec, guarded_n = measure(df, MAX_BUCKET_ROWS)
-    unguarded_sec, unguarded_n = measure(df, None)
-    # second sample each, report the min (steady state)
-    guarded_sec = min(guarded_sec, measure(df, MAX_BUCKET_ROWS)[0])
-    unguarded_sec = min(unguarded_sec, measure(df, None)[0])
-
+    guarded = measure(
+        spark, "skew_guard_guarded", lambda *_: near_dup_pairs(df, MAX_BUCKET_ROWS), None
+    )
+    unguarded = measure(spark, "skew_guard_unguarded", lambda *_: near_dup_pairs(df, None), None)
+    guarded_sec, unguarded_sec = guarded["warm"], unguarded["warm"]
+    guarded_n = near_dup_pairs(df, MAX_BUCKET_ROWS).count()
+    unguarded_n = near_dup_pairs(df, None).count()
     assert guarded_n == unguarded_n, (guarded_n, unguarded_n)
     print(
         json.dumps(
