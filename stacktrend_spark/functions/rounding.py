@@ -98,7 +98,8 @@ def sql_davg(expr: str, d: int = 2, n: int = 6) -> str:
 # and the remaining ops are correctly-rounded IEEE arithmetic — so both
 # engines produce the same bits. The function is monotonic, equals
 # log10 exactly at powers of 10, and linearly interpolates within each
-# decade (max error vs true log10 ≈ 0.031) — the right shape for
+# decade (it undershoots true log10 by at most 0.27, at x/10^(d-1) =
+# 9/ln 10 ≈ 3.9) — the right shape for
 # log-scaled momentum scores without the libm lottery.
 # ---------------------------------------------------------------------------
 
@@ -133,6 +134,25 @@ def sql_xlog10(expr: str) -> str:
     )
 
 
+def sql_xlog10_micro(expr: str) -> str:
+    """xlog10(GREATEST(expr, 1)) in integer µ-units, as SQL for the
+    oracle: (d − 1)·10⁶ + round((x − p)·10⁶ / 9p) with p = 10^(d−1)
+    (the Spark SQL form is pipelines/gold.xlog10_micro)."""
+    v = f"GREATEST({expr}, 1)"
+    d = f"LENGTH(CAST({v} AS VARCHAR))"
+    p = f"CAST(RPAD('1', CAST({d} AS INTEGER), '0') AS BIGINT)"
+    return f"(({d} - 1) * 1000000 + (2 * ({v} - {p}) * 1000000 + 9 * {p}) // (18 * {p}))"
+
+
+def sql_avg_micro(expr: str) -> str:
+    """Round-half-up µ-unit average of exact µ-rounded values, as SQL
+    for the oracle (the Spark SQL form is pipelines/gold.avg_micro)."""
+    return (
+        f"(2 * SUM({sql_iscale(expr, 6)}) + COUNT({expr}))"
+        f" // NULLIF(2 * COUNT({expr}), 0)"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Deterministic dispersion: STDDEV_SAMP's double summation order differs
 # between Spark's partial aggregation and DuckDB's scan order, so the
@@ -149,23 +169,30 @@ def sql_xlog10(expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def dstd(col: Column | str, d: int = 2, n: int = 4) -> Column:
-    """Spark: deterministic sample stddev of a d-decimal column.
+def spark_sql_dstd(col: str, d: int = 2, n: int = 4) -> str:
+    """Spark SQL text of the deterministic sample stddev of a d-decimal
+    column (the ``dstd`` op tree; ``sql_dstd`` is the oracle's form).
 
     NULL for groups of fewer than 2 rows (STDDEV_SAMP semantics; also
     keeps the n-1 divisor nonzero under ANSI mode).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    i = iscale(c, d)
-    cnt = F.count(c).cast("double")
-    s1 = F.sum(i).cast("double")
+    i = f"CAST(floor({col} * {float(10 ** d)!r}D + 0.5D) AS BIGINT)"
+    cnt = f"CAST(count({col}) AS DOUBLE)"
+    s1 = f"CAST(sum({i}) AS DOUBLE)"
     # cast ONE OPERAND 128-bit BEFORE multiplying: (i*i) in int64 wraps
     # silently past |i| ~ 3e9 while DuckDB's HUGEINT cast raises — the
     # widening must cover the product, not just the sum (r8 review)
-    s2 = F.sum(i.cast("decimal(38,0)") * i).cast("double")
-    var = (s2 - s1 * s1 / cnt) / (cnt - F.lit(1.0))
-    std = fround(F.sqrt(F.greatest(var, F.lit(0.0))) / F.lit(float(10**d)), n)
-    return F.when(F.count(c) >= 2, std)
+    s2 = f"CAST(sum(CAST({i} AS DECIMAL(38,0)) * {i}) AS DOUBLE)"
+    var = f"(({s2} - {s1} * {s1} / {cnt}) / ({cnt} - 1.0D))"
+    k = f"{float(10 ** n)!r}D"
+    std = f"floor(sqrt(greatest({var}, 0.0D)) / {float(10 ** d)!r}D * {k} + 0.5D) / {k}"
+    return f"CASE WHEN count({col}) >= 2 THEN {std} END"
+
+
+def dstd(col: str, d: int = 2, n: int = 4) -> Column:
+    """Spark: deterministic sample stddev of a d-decimal column (one SQL
+    parse instead of a Column-DSL chain of several hundred py4j calls)."""
+    return F.expr(spark_sql_dstd(col, d, n))
 
 
 def sql_dstd(expr: str, d: int = 2, n: int = 4) -> str:

@@ -6,6 +6,31 @@ upgrades (documented where they occur): every global ranking carries a
 deterministic tiebreaker, and the stubbed history comparisons
 (momentum_change/rank_change = lit(0), s2g:423-424) are implemented
 with real lag() when history is present.
+
+These functions are the only definition of the trend tables: the
+registered gold_* queries (plans/gold_mirrors.py) call them on the
+testdata, so the DuckDB oracle gate proves the formulas production
+runs. Every value is therefore exact across engines (PARITY.md), which
+departs from the s2g arithmetic in these places:
+
+- averages are µ-unit BIGINTs: each value is rounded once to µ-units
+  (``iscale``), the integers are summed and the sum divided by the
+  count with round-half-up integer division; the user-facing DOUBLE is
+  that integer / 10⁶ (s2g: ``avg`` over doubles, whose low bits follow
+  the summation order);
+- ``log10`` is ``xlog10``, the decade-interpolated log10 of
+  functions/rounding.py, in integer µ-units (at most 0.27 below log10);
+- the momentum, repo-momentum and sustainability scores are sums of
+  µ-unit integers (``*_micro`` columns, the DOUBLE score is / 10⁶);
+  the 0.3 and 0.4 weights truncate toward zero in integer division;
+- ``stddev`` is ``dstd`` (exact integer moments, rounded to 4 places);
+- ratio thresholds compare integers by cross-multiplication
+  (``active / n >= 0.7`` is ``active * 10 >= n * 7``);
+- every divisor that depends on the data goes through ``try_divide``
+  (or ``nullif`` for integer ``DIV``), so a zero-star partition or an
+  empty silver yields NULL shares instead of an ANSI DIVIDE_BY_ZERO;
+- the five tech_metrics ranks come from one unordered window over the
+  category rows (bounded: one row per category), not five sorts.
 """
 
 from __future__ import annotations
@@ -13,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stacktrend_spark.functions.rounding import spark_sql_dstd
 from stacktrend_spark.functions.sqltext import iso_date
 
 # Every frame below is declared as SQL text — one parse per aggregate
@@ -25,10 +51,42 @@ def _agg(df: DataFrame, keys: list[str], *exprs: str) -> DataFrame:
     return df.groupBy(*keys).agg(*[F.expr(e) for e in exprs])
 
 
-def _rank(order: str) -> str:
-    # rankings carry a deterministic tiebreaker: the reference's bare
-    # orderBy(desc(metric)) is nondeterministic under ties
-    return f"row_number() OVER (ORDER BY {order} DESC, technology_category ASC)"
+def _micro(x: str) -> str:
+    """``x`` rounded half up to exact µ-units (rounding.iscale at 6)."""
+    return f"CAST(floor({x} * 1000000D + 0.5D) AS BIGINT)"
+
+
+def avg_micro(x: str) -> str:
+    """Average of ``x`` in µ-units: exact integer sum over the count,
+    rounded half up; NULL over no values."""
+    return f"(2 * sum({_micro(x)}) + count({x})) DIV nullif(2 * count({x}), 0)"
+
+
+def avg_of(x: str) -> str:
+    return f"{avg_micro(x)} / 1000000D"
+
+
+def xlog10_micro(x: str) -> str:
+    """xlog10(greatest(x, 1)) in µ-units for a BIGINT ``x``:
+    (d − 1)·10⁶ + round((x − p)·10⁶ / 9p) with d digits and p = 10^(d−1).
+    Exact while (x − p)·2·10⁶ fits a BIGINT (x < 4.6e12)."""
+    v = f"greatest({x}, 1)"
+    d = f"length(CAST({v} AS STRING))"
+    p = f"CAST(rpad('1', {d}, '0') AS BIGINT)"
+    return f"(({d} - 1) * 1000000 + (2 * ({v} - {p}) * 1000000 + 9 * {p}) DIV (18 * {p}))"
+
+
+_ACTIVE = "sum(CASE WHEN is_active THEN 1 ELSE 0 END)"
+
+
+def _rank(key: str) -> str:
+    """Row number over (key DESC, technology_category ASC) as 1 + the
+    count of ``peers`` strictly ahead — the category is unique per row,
+    so this equals the sorted row_number."""
+    return (
+        f"size(filter(peers, p -> p.{key} > {key} OR (p.{key} = {key}"
+        " AND p.technology_category < technology_category))) + 1"
+    )
 
 
 def tech_metrics(silver: DataFrame) -> DataFrame:
@@ -41,52 +99,73 @@ def tech_metrics(silver: DataFrame) -> DataFrame:
         "sum(stargazers_count) AS total_stars",
         "sum(forks_count) AS total_forks",
         "sum(watchers_count) AS total_watchers",
-        "avg(stargazers_count) AS avg_stars_per_repo",
-        "avg(forks_count) AS avg_forks_per_repo",
-        "avg(community_health_score) AS avg_community_health",
-        "avg(quality_score) AS avg_quality_score",
-        "avg(star_velocity_30d) AS avg_star_velocity",
-        "avg(commit_frequency_30d) AS avg_commit_frequency",
-        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
-        "avg(days_since_creation) AS avg_repository_age_days",
+        f"{avg_micro('stargazers_count')} AS stars_u",
+        f"{avg_micro('forks_count')} AS forks_u",
+        f"{avg_micro('community_health_score')} AS health_u",
+        f"{avg_micro('quality_score')} AS quality_u",
+        f"{avg_micro('star_velocity_30d')} AS velocity_u",
+        f"{avg_micro('commit_frequency_30d')} AS commit_u",
+        f"{_ACTIVE} AS active_repositories",
+        f"{avg_micro('days_since_creation')} AS age_u",
         "count(DISTINCT license_category) AS license_diversity_count",
     )
     staged = agg.selectExpr(
         "*",
-        "active_repositories / total_repositories * 100 AS active_repositories_percentage",
+        "(200000000 * active_repositories + total_repositories)"
+        " DIV nullif(2 * total_repositories, 0) AS active_u",
         # momentum score (s2g:168-186): popularity + growth + weighted health
-        "CAST(least(log10(greatest(total_stars, 1)) * 10, 40)"
-        " + least(avg_star_velocity * 100, 30)"
-        " + avg_community_health * 0.3D AS DOUBLE) AS momentum_score",
+        f"least({xlog10_micro('total_stars')} * 10, 40000000)"
+        " + least(velocity_u * 100, 30000000) + (health_u * 3) DIV 10 AS momentum_score_micro",
+        "CASE WHEN total_repositories <= 2 THEN 100 WHEN total_repositories <= 5 THEN 60"
+        " WHEN total_repositories <= 10 THEN 30 ELSE 10 END AS risk",
+    ).selectExpr(
+        "*",
+        "(4 * active_u + 3 * health_u + 3000000 * (100 - risk)) DIV 10"
+        " AS sustainability_score_micro",
+        # every category row once, for the five ranks below: one
+        # unordered window, one exchange and no sort, where five
+        # row_number windows plan five sorts. Valid because categories
+        # are few; unbounded rankings belong to operators/ranking.py.
+        "collect_list(struct(technology_category, total_stars, velocity_u, health_u,"
+        " momentum_score_micro)) OVER () AS peers",
+    )
+    return staged.selectExpr(
+        "technology_category",
+        "total_repositories",
+        "total_stars",
+        "total_forks",
+        "total_watchers",
+        "stars_u / 1000000D AS avg_stars_per_repo",
+        "forks_u / 1000000D AS avg_forks_per_repo",
+        "health_u / 1000000D AS avg_community_health",
+        "quality_u / 1000000D AS avg_quality_score",
+        "velocity_u / 1000000D AS avg_star_velocity",
+        "commit_u / 1000000D AS avg_commit_frequency",
+        "active_repositories",
+        "age_u / 1000000D AS avg_repository_age_days",
+        "license_diversity_count",
+        "active_u / 1000000D AS active_repositories_percentage",
+        "momentum_score_micro / 1000000D AS momentum_score",
+        "momentum_score_micro",
         # lifecycle staging (s2g:199-213)
-        "CASE WHEN avg_star_velocity > 1.0D AND avg_repository_age_days < 730 THEN 'emerging'"
-        " WHEN avg_star_velocity > 0.5D AND total_repositories >= 5 THEN 'growing'"
-        " WHEN total_repositories >= 10 AND avg_repository_age_days > 1095 THEN 'mature'"
-        " WHEN avg_star_velocity < 0.1D THEN 'declining'"
+        "CASE WHEN velocity_u > 1000000 AND age_u < 730000000 THEN 'emerging'"
+        " WHEN velocity_u > 500000 AND total_repositories >= 5 THEN 'growing'"
+        " WHEN total_repositories >= 10 AND age_u > 1095000000 THEN 'mature'"
+        " WHEN velocity_u < 100000 THEN 'declining'"
         " ELSE 'stable' END AS lifecycle_stage",
-        "CASE WHEN avg_star_velocity > 0.5D THEN 'rising'"
-        " WHEN avg_star_velocity > 0.1D THEN 'stable'"
+        "CASE WHEN velocity_u > 500000 THEN 'rising'"
+        " WHEN velocity_u > 100000 THEN 'stable'"
         " ELSE 'declining' END AS momentum_trend",
-    )
-    # rankings (s2g:225-236) and risk metrics (s2g:245-260)
-    ranked = staged.selectExpr(
-        "*",
+        # rankings (s2g:225-236) and risk metrics (s2g:245-260)
         f"{_rank('total_stars')} AS popularity_rank",
-        f"{_rank('avg_star_velocity')} AS growth_rank",
-        f"{_rank('avg_community_health')} AS health_rank",
-        f"{_rank('momentum_score')} AS momentum_rank",
-        f"{_rank('momentum_score')} AS overall_rank",
-        "CASE WHEN total_repositories <= 2 THEN 100.0D"
-        " WHEN total_repositories <= 5 THEN 60.0D"
-        " WHEN total_repositories <= 10 THEN 30.0D"
-        " ELSE 10.0D END AS single_maintainer_risk",
+        f"{_rank('velocity_u')} AS growth_rank",
+        f"{_rank('health_u')} AS health_rank",
+        f"{_rank('momentum_score_micro')} AS momentum_rank",
+        f"{_rank('momentum_score_micro')} AS overall_rank",
+        "CAST(risk AS DOUBLE) AS single_maintainer_risk",
         "CAST(least(license_diversity_count * 20, 100) AS DOUBLE) AS license_diversity_score",
-    )
-    return ranked.selectExpr(
-        "*",
-        "CAST(active_repositories_percentage * 0.4D"
-        " + avg_community_health * 0.3D"
-        " + (100 - single_maintainer_risk) * 0.3D AS DOUBLE) AS sustainability_score",
+        "sustainability_score_micro / 1000000D AS sustainability_score",
+        "sustainability_score_micro",
     )
 
 
@@ -95,8 +174,8 @@ def repo_ranks(silver: DataFrame) -> DataFrame:
     global (W1) ranks."""
     per_repo = silver.selectExpr(
         "*",
-        "CAST(least(log10(greatest(stargazers_count, 1)) * 15, 60)"
-        " + quality_score * 0.4D AS DOUBLE) AS repo_momentum",
+        f"least({xlog10_micro('stargazers_count')} * 15, 60000000)"
+        f" + ({_micro('quality_score')} * 4) DIV 10 AS repo_momentum_micro",
     )
     return per_repo.selectExpr(
         "repository_id",
@@ -104,10 +183,10 @@ def repo_ranks(silver: DataFrame) -> DataFrame:
         "technology_category",
         "stargazers_count",
         "quality_score",
-        "repo_momentum",
+        "repo_momentum_micro / 1000000D AS repo_momentum",
         "row_number() OVER (PARTITION BY technology_category"
         " ORDER BY quality_score DESC, repository_id ASC) AS category_quality_rank",
-        "row_number() OVER (ORDER BY repo_momentum DESC, repository_id ASC)"
+        "row_number() OVER (ORDER BY repo_momentum_micro DESC, repository_id ASC)"
         " AS global_momentum_rank",
         "row_number() OVER (ORDER BY stargazers_count DESC, repository_id ASC)"
         " AS global_star_rank",
@@ -125,12 +204,12 @@ def trend_daily(silver: DataFrame, history: DataFrame | None = None) -> DataFram
         ["technology_category", "partition_date"],
         "count(repository_id) AS repository_count",
         "sum(stargazers_count) AS daily_total_stars",
-        "avg(quality_score) AS avg_quality",
-        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_count",
+        f"{avg_of('quality_score')} AS avg_quality",
+        f"{_ACTIVE} AS active_count",
     ).selectExpr(
         "*",
-        "daily_total_stars / sum(daily_total_stars) OVER (PARTITION BY partition_date)"
-        " AS market_share",
+        "try_divide(daily_total_stars,"
+        " sum(daily_total_stars) OVER (PARTITION BY partition_date)) AS market_share",
     )
     if history is not None:
         merged = history.select(*daily.columns).unionByName(daily)
@@ -149,24 +228,23 @@ def trend_daily(silver: DataFrame, history: DataFrame | None = None) -> DataFram
 def tech_health(silver: DataFrame) -> DataFrame:
     """Gold table 4 (s2g:460-492): health stats + stddev dispersion +
     sustainability/risk chains."""
-    active_ratio = "active_repos / repo_count"
     return _agg(
         silver,
         ["technology_category"],
         "count(repository_id) AS repo_count",
-        "avg(community_health_score) AS avg_health",
-        "stddev(stargazers_count) AS star_dispersion",
-        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repos",
+        f"{avg_of('community_health_score')} AS avg_health",
+        f"{spark_sql_dstd('stargazers_count')} AS star_dispersion",
+        f"{_ACTIVE} AS active_repos",
         "count(DISTINCT license_category) AS license_variety",
-        "avg(open_issues_count) AS avg_open_issues",
+        f"{avg_of('open_issues_count')} AS avg_open_issues",
     ).selectExpr(
         "*",
-        f"CASE WHEN avg_health >= 80 AND {active_ratio} >= 0.7D THEN 'thriving'"
+        "CASE WHEN avg_health >= 80 AND active_repos * 10 >= repo_count * 7 THEN 'thriving'"
         " WHEN avg_health >= 60 THEN 'healthy'"
         " WHEN avg_health >= 40 THEN 'stable'"
         " ELSE 'at_risk' END AS health_status",
-        f"CASE WHEN {active_ratio} < 0.2D THEN 'high'"
-        f" WHEN {active_ratio} < 0.5D THEN 'medium'"
+        "CASE WHEN active_repos * 5 < repo_count THEN 'high'"
+        " WHEN active_repos * 2 < repo_count THEN 'medium'"
         " ELSE 'low' END AS abandonment_risk",
     )
 
@@ -174,14 +252,14 @@ def tech_health(silver: DataFrame) -> DataFrame:
 def lang_stats(silver: DataFrame) -> DataFrame:
     """Gold table 5 (s2g:514-545): primary-language rollup → W4 global
     share → W1 rank → adoption stage."""
-    share = "total_stars / sum(total_stars) OVER ()"
+    share = "try_divide(total_stars, sum(total_stars) OVER ())"
     return _agg(
         silver.filter("primary_language IS NOT NULL"),
         ["primary_language"],
         "count(repository_id) AS repo_count",
         "sum(stargazers_count) AS total_stars",
-        "avg(quality_score) AS avg_quality",
-        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repos",
+        f"{avg_of('quality_score')} AS avg_quality",
+        f"{_ACTIVE} AS active_repos",
     ).selectExpr(
         "*",
         f"{share} AS star_share",
@@ -200,13 +278,13 @@ def market_pulse(silver: DataFrame, as_of_date: str) -> DataFrame:
     return silver.selectExpr(
         "count(repository_id) AS total_repositories",
         "sum(stargazers_count) AS total_stars",
-        "avg(quality_score) AS avg_quality_score",
-        "avg(community_health_score) AS avg_health_score",
-        "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
+        f"{avg_of('quality_score')} AS avg_quality_score",
+        f"{avg_of('community_health_score')} AS avg_health_score",
+        f"{_ACTIVE} AS active_repositories",
         "count(DISTINCT technology_category) AS categories_tracked",
     ).selectExpr(
         "*",
-        "active_repositories / total_repositories AS market_activity_ratio",
+        "try_divide(active_repositories, total_repositories) AS market_activity_ratio",
         f"{iso_date(as_of_date)} AS measurement_date",
     )
 
@@ -235,7 +313,7 @@ def adoption_matrix(silver: DataFrame, as_of_date: str) -> DataFrame:
         .filter("co_occurrence_count >= 3")
         .selectExpr(
             "*",
-            "log10(greatest(combined_stars, 1)) * sqrt(co_occurrence_count)"
+            f"{xlog10_micro('combined_stars')} / 1000000D * sqrt(co_occurrence_count)"
             " AS correlation_score",
         )
     )

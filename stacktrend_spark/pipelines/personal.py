@@ -8,6 +8,13 @@ unions; kept, it's 3 cheap plans) and personal_repos_silver_to_gold.py:
 velocity), with the pinned ``as_of_date`` replacing datetime.now()
 (SURVEY §4 anti-pattern 4) and the overview's driver-side collect()s
 for top-technologies folded into the plan.
+
+Like pipelines/gold.py, these are the only definition of the three
+tables (the gold_* queries of plans/gold_mirrors.py call them), so
+their arithmetic is exact across engines: the overview's average is
+µ-unit (``gold.avg_of``) and its activity thresholds compare integers
+by cross-multiplication; the velocity and health blends are per-row
+trees of correctly rounded double operations.
 """
 
 from __future__ import annotations
@@ -16,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.sqltext import iso_date
+from stacktrend_spark.pipelines.gold import avg_of
 
 PERIODS = ("7d", "30d", "90d")
 
@@ -86,7 +94,7 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
         "sum(stargazers_count) AS total_stars",
         "sum(forks_count) AS total_forks",
         "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
-        "avg(quality_score) AS avg_quality_score",
+        f"{avg_of('quality_score')} AS avg_quality_score",
         "count(DISTINCT technology_category) AS n_categories",
         "count(DISTINCT primary_language) AS n_languages",
     )
@@ -109,7 +117,6 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
     joined = totals.crossJoin(F.broadcast(tech)).crossJoin(F.broadcast(lang))
     day = iso_date(as_of_date)
     n = "greatest(total_repositories, 1)"
-    active_ratio = f"active_repositories / {n}"
     return joined.selectExpr(
         "total_repositories",
         "total_stars",
@@ -121,8 +128,8 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
         "top_technology_category AS primary_technologies",
         "top_primary_language AS primary_languages",
         f"(n_categories / {n} + n_languages / {n}) / 2.0D AS portfolio_diversity_score",
-        f"CASE WHEN {active_ratio} >= 0.7D THEN 'high'"
-        f" WHEN {active_ratio} >= 0.3D THEN 'medium'"
+        f"CASE WHEN active_repositories * 10 >= {n} * 7 THEN 'high'"
+        f" WHEN active_repositories * 10 >= {n} * 3 THEN 'medium'"
         " ELSE 'low' END AS activity_level",
         f"{day} AS measurement_date",
         f"{day} AS partition_date",

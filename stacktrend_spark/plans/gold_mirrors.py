@@ -1,844 +1,452 @@
 """The reference's gold-layer analytic queries (SURVEY §2.11 — the
-declared acceptance surface), re-expressed over the harness testdata.
+declared acceptance surface), run over the harness testdata.
 
-Each of the 10 gold tables is a composition of already-verified
-primitives; the mapping substitutes the testdata's entities for the
-reference's (technology_category → p_brand / event_type / mktsegment,
-repository → part / customer, stars → revenue / balance) while keeping
-the exact composition shape: multi-agg rollup → derived scores →
-lifecycle/health CASE chains → multi-metric window ranks → shares.
-
-Determinism: every score is either exact integer arithmetic or routed
-through fround(); every rank carries a unique tiebreaker; the as-of
-date is pinned (SURVEY §4 anti-patterns 3/4).
+Each query maps testdata rows onto the silver (or bronze activity)
+columns a gold function reads — lineitems, parts, customers and events
+stand in for repositories, their brands, types, segments and event
+types for technology categories, cents for stars — and calls that
+function from pipelines/gold.py or pipelines/personal.py, the only
+Spark-side definition of the formulas (exact across engines: PARITY.md).
+The role maps are SQL both engines read alike; the DuckDB oracles that
+consume them are written by hand, so the gate compares two independent
+derivations of the production arithmetic. Oracle literals are cast to
+DOUBLE where Spark SQL reads a ``D``-suffixed double, and integer SUMs
+are cast back from DuckDB's HUGEINT to BIGINT.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stacktrend_spark.functions.rounding import (
-    davg,
-    dstd,
-    dsum,
-    fround,
-    iscale,
-    sql_davg,
-    sql_dstd,
-    sql_dsum,
-    sql_iscale,
-    sql_round,
-    sql_xlog10,
-    xlog10,
-)
+from stacktrend_spark.functions.rounding import sql_avg_micro, sql_dstd, sql_iscale, sql_xlog10_micro
+from stacktrend_spark.pipelines import gold, personal
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
-_AS_OF_EVENTS = "2024-01-31 00:00:00"
+#: the events span January 2024; every mirror reports as of its end
+_AS_OF = "2024-01-31"
+
+# Role maps. The one bare decimal literal, 0.5, meets a DOUBLE in both
+# engines and is promoted to DOUBLE; CAST(l_quantity AS BIGINT) rounds in
+# DuckDB and truncates in Spark, which agree on the integral quantities.
+_CENTS = "CAST(floor({} * 100 + 0.5) AS BIGINT)"
+
+#: a lineitem is a repository of its part's brand
+_LINEITEM_REPOS = (
+    "p_brand AS technology_category", "l_orderkey AS repository_id",
+    "CAST(l_quantity AS BIGINT) AS stargazers_count", "l_linenumber AS forks_count",
+    f"{_CENTS.format('l_extendedprice')} AS watchers_count",
+    "l_discount * 1000 AS community_health_score", "l_tax * 1000 AS quality_score",
+    "l_discount * 10 AS star_velocity_30d", "l_tax * 100 AS commit_frequency_30d",
+    "l_linestatus = 'O' AS is_active", "p_size * 50 AS days_since_creation",
+    "l_returnflag AS license_category",
+)
+#: a part is a repository of its type; the words of its name are topics
+_PART_REPOS = (
+    "p_partkey AS repository_id", "p_name AS name", "p_type AS technology_category",
+    "CAST(p_size AS BIGINT) AS stargazers_count", "p_retailprice / 10 AS quality_score",
+    "split(p_name, ' ') AS topics_standardized", f"'{_AS_OF}' AS partition_date",
+)
+#: an event is a repository of its type landed on its day
+_EVENT_REPOS = (
+    "event_id AS repository_id", "event_type AS technology_category",
+    "date_trunc('day', ts) AS partition_date",
+    f"{_CENTS.format('value')} AS stargazers_count", "value AS quality_score",
+    "value / 3 AS community_health_score", "user_id % 2 = 0 AS is_active",
+)
+#: a customer is a repository of its segment, "written in" its nation
+_CUSTOMER_REPOS = (
+    "c_custkey AS repository_id", "c_name AS name", "c_mktsegment AS technology_category",
+    "CAST(c_nationkey AS STRING) AS primary_language",
+    f"{_CENTS.format('c_acctbal')} AS stargazers_count",
+    "CAST(c_nationkey AS BIGINT) AS forks_count",
+    "CAST(c_nationkey AS BIGINT) AS open_issues_count", "c_acctbal > 0 AS is_active",
+    "c_acctbal / 100 AS quality_score",
+    "CAST(c_custkey % 6 * 20 AS DOUBLE) AS community_health_score",
+    "CAST(c_custkey % 3 AS STRING) AS license_category", "c_custkey % 45 AS days_since_push",
+)
+#: events as bronze activity: a user is a repository; purchases, errors
+#: and signups are its commits, issues and releases
+_EVENT_ACTIVITY = (
+    "user_id AS repository_id",
+    "CASE event_type WHEN 'purchase' THEN 'commit' WHEN 'error' THEN 'issue'"
+    " WHEN 'signup' THEN 'release' ELSE event_type END AS activity_type",
+    "ts AS activity_date", "CAST(floor(value + 0.5) AS BIGINT) AS additions",
+    "event_id % 7 AS deletions",
+    "CASE WHEN event_type = 'view' THEN NULL ELSE CAST(1 AS BIGINT) END AS changed_files",
+)
 
 
-# ---------------------------------------------------------------------------
-# Gold table 1: tech_metrics (silver_to_gold_analytics.py:133-311) —
-# the flagship rollup: A1 multi-agg → log-momentum score → lifecycle
-# when-chain → five W1 rank columns → composite risk score.
-# Mirror: per-brand market metrics from lineitem ⋈ part.
-# ---------------------------------------------------------------------------
-# Round-3 parity hardening: round 2's all-IEEE-correctly-rounded float
-# surface STILL hash-failed in the driver environment (local DuckDB is
-# bit-identical), so every hashed score column is now derived FULLY in
-# int64 space and emitted as exact micro-units (×1e6 BIGINT):
-#   avg_price_micro          = round(irev·10⁴ / n)            [µ-dollars]
-#   momentum_score_micro     = clamp(xlog10µ(dollars)·25 DIV 2, 0, 1e8)
-#   concentration_risk_micro = clamp(1e8 − momentum + supp·1e6, 0, 1e8)
-# where xlog10µ is the decade-interpolated log10 (see rounding.xlog10)
-# computed with integer rounding: (d−1)·1e6 + (2·(x−p)·1e6 + 9p) DIV 18p.
-# Divide by 1e6 for the reference's 0–100 scale (pipelines/gold.py keeps
-# the user-facing float form). Int64 headroom: irev·2e4 < 9.2e18 holds
-# to ~$4.6e12 revenue per brand; (x−p)·2e6 likewise — far beyond the
-# oracle-checked scales (at 100 TB you'd widen to DecimalType).
-
-# 10^(ndig-1) as an exact BIGINT via CASE (valid in both dialects;
-# idollars = irev // 100 has at most 17 digits for int64 irev).
-_TM_IP_SPARK = _TM_IP_DUCK = "CASE ndig " + " ".join(
-    f"WHEN {k} THEN CAST({10 ** (k - 1)} AS BIGINT)" for k in range(1, 19)
-) + " END"
-
-_TM_ROLLUP_SQL = f"""
-        SELECT
-            p.p_brand                                        AS brand,
-            CAST(COUNT(*) AS BIGINT)                         AS n_lineitems,
-            CAST(COUNT(DISTINCT l.l_partkey) AS BIGINT)      AS n_parts,
-            CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT)      AS n_suppliers,
-            CAST(SUM({sql_iscale('l.l_extendedprice')}) AS BIGINT) AS irev,
-            CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        FROM lineitem l
-        JOIN part p ON l.l_partkey = p.p_partkey
-        GROUP BY p.p_brand
-"""
+def _load(spark: SparkSession, sf_dir: str, table: str, role_map: tuple[str, ...]) -> DataFrame:
+    return load_table(spark, sf_dir, table).selectExpr(*role_map)
 
 
-def _tm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lineitem_repos(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part.select("p_partkey", "p_brand")), li.l_partkey == F.col("p_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).alias("n_lineitems"),
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.countDistinct("l_suppkey").alias("n_suppliers"),
-            F.sum(iscale("l_extendedprice")).alias("irev"),
-            F.sum(F.col("l_quantity").cast("long")).alias("total_qty"),
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    return li.join(F.broadcast(part), li.l_partkey == part.p_partkey).selectExpr(*_LINEITEM_REPOS)
+
+
+def _event_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return personal.activity_metrics(_load(spark, sf_dir, "events", _EVENT_ACTIVITY), _AS_OF)
+
+
+def _select(role_map: tuple[str, ...], source: str) -> str:
+    return f"SELECT {', '.join(role_map)} FROM {source}"
+
+
+def _avg(x: str) -> str:
+    return f"CAST({sql_avg_micro(x)} AS DOUBLE) / 1000000.0"
+
+
+_ACTIVE = "CAST(SUM(CASE WHEN is_active THEN 1 ELSE 0 END) AS BIGINT)"
+
+# the 30-day activity metrics (personal.activity_metrics) of _EVENT_ACTIVITY
+_ACTIVITY_30D = f"""
+    act AS ({_select(_EVENT_ACTIVITY, "events")}
+        WHERE ts >= TIMESTAMP '{_AS_OF} 00:00:00' - INTERVAL 30 DAY),
+    m AS (
+        SELECT repository_id,
+            CAST(SUM(CASE WHEN activity_type = 'commit' THEN 1 ELSE 0 END) AS BIGINT) AS total_commits,
+            CAST(SUM(CASE WHEN activity_type = 'issue' THEN 1 ELSE 0 END) AS BIGINT) AS total_issues,
+            CAST(SUM(CASE WHEN activity_type = 'release' THEN 1 ELSE 0 END) AS BIGINT) AS total_releases,
+            CAST(SUM(COALESCE(additions, 0)) AS BIGINT) AS lines_added,
+            CAST(SUM(COALESCE(deletions, 0)) AS BIGINT) AS lines_deleted,
+            CAST(SUM(COALESCE(changed_files, 0)) AS BIGINT) AS files_changed
+        FROM act GROUP BY 1
+    ),
+    vel AS (
+        SELECT *, LEAST(1.0::DOUBLE, commit_frequency * 0.4::DOUBLE
+            + LEAST(1.0::DOUBLE, lines_added / 1000.0::DOUBLE) * 0.3::DOUBLE
+            + LEAST(1.0::DOUBLE, files_changed / 100.0::DOUBLE) * 0.3::DOUBLE)
+            AS development_velocity
+        FROM (SELECT *, total_commits / 30::DOUBLE AS commit_frequency FROM m)
+    )"""
+
+
+# Gold table 1: tech_metrics (silver_to_gold_analytics.py:133-311), per
+# brand. PARITY.md Tier 0: hashed on its integer and label columns.
+def exact_columns(df: DataFrame) -> DataFrame:
+    """The Tier-0 surface of a frame: every column but the DOUBLEs (the
+    µ-unit integers / 10⁶)."""
+    return df.select(*[c for c, t in df.dtypes if t != "double"])
+
+
+def tech_metrics_oracle(silver: str) -> str:
+    """DuckDB: ``exact_columns(gold.tech_metrics(...))`` over the rows of
+    the SQL query ``silver``."""
+    return f"""
+        WITH silver AS ({silver}),
+        agg AS (
+            SELECT technology_category,
+                CAST(COUNT(repository_id) AS BIGINT) AS total_repositories,
+                CAST(SUM(stargazers_count) AS BIGINT) AS total_stars,
+                CAST(SUM(forks_count) AS BIGINT) AS total_forks,
+                CAST(SUM(watchers_count) AS BIGINT) AS total_watchers,
+                {sql_avg_micro('community_health_score')} AS health_u,
+                {sql_avg_micro('star_velocity_30d')} AS velocity_u,
+                {_ACTIVE} AS active_repositories, {sql_avg_micro('days_since_creation')} AS age_u,
+                CAST(COUNT(DISTINCT license_category) AS BIGINT) AS license_diversity_count
+            FROM silver GROUP BY 1
+        ),
+        scored AS (
+            SELECT *, (200000000 * active_repositories + total_repositories)
+                    // NULLIF(2 * total_repositories, 0) AS active_u,
+                CAST(LEAST({sql_xlog10_micro('total_stars')} * 10, 40000000)
+                    + LEAST(velocity_u * 100, 30000000) + (health_u * 3) // 10 AS BIGINT)
+                    AS momentum_score_micro,
+                CASE WHEN total_repositories <= 2 THEN 100 WHEN total_repositories <= 5 THEN 60
+                     WHEN total_repositories <= 10 THEN 30 ELSE 10 END AS risk
+            FROM agg
         )
-    )
+        SELECT technology_category, total_repositories, total_stars, total_forks,
+            total_watchers, active_repositories, license_diversity_count, momentum_score_micro,
+            CASE WHEN velocity_u > 1000000 AND age_u < 730000000 THEN 'emerging'
+                 WHEN velocity_u > 500000 AND total_repositories >= 5 THEN 'growing'
+                 WHEN total_repositories >= 10 AND age_u > 1095000000 THEN 'mature'
+                 WHEN velocity_u < 100000 THEN 'declining' ELSE 'stable' END AS lifecycle_stage,
+            CASE WHEN velocity_u > 500000 THEN 'rising' WHEN velocity_u > 100000 THEN 'stable'
+                 ELSE 'declining' END AS momentum_trend,
+            ROW_NUMBER() OVER (ORDER BY total_stars DESC, technology_category) AS popularity_rank,
+            ROW_NUMBER() OVER (ORDER BY velocity_u DESC, technology_category) AS growth_rank,
+            ROW_NUMBER() OVER (ORDER BY health_u DESC, technology_category) AS health_rank,
+            ROW_NUMBER() OVER (ORDER BY momentum_score_micro DESC, technology_category) AS momentum_rank,
+            ROW_NUMBER() OVER (ORDER BY momentum_score_micro DESC, technology_category) AS overall_rank,
+            CAST((4 * active_u + 3 * health_u + 3000000 * (100 - risk)) // 10 AS BIGINT)
+                AS sustainability_score_micro
+        FROM scored
+    """
 
 
 @register(
     "gold_tech_metrics",
-    oracle=f"""
-        WITH rollup_ AS ({_TM_ROLLUP_SQL}),
-        dig AS (
-            SELECT *, LENGTH(CAST(GREATEST(irev // 100, 1) AS VARCHAR)) AS ndig,
-                   CAST(GREATEST(irev // 100, 1) AS BIGINT) AS idollars
-            FROM rollup_
-        ),
-        pw AS (
-            SELECT *, {_TM_IP_DUCK} AS ip FROM dig
-        ),
-        scored AS (
-            SELECT *,
-                CAST(CAST(ndig - 1 AS BIGINT) * 1000000
-                     + (2 * (idollars - ip) * 1000000 + 9 * ip) // (18 * ip) AS BIGINT) AS ilogm,
-                CAST((2 * irev * 10000 + n_lineitems) // (2 * n_lineitems) AS BIGINT) AS avg_price_micro
-            FROM pw
-        ),
-        mom AS (
-            SELECT *,
-                CAST(LEAST(100000000, GREATEST(0, (ilogm * 25) // 2)) AS BIGINT) AS momentum_score_micro
-            FROM scored
-        ),
-        staged AS (
-            SELECT *,
-                CASE WHEN momentum_score_micro >= 80000000 THEN 'Mainstream'
-                     WHEN momentum_score_micro >= 60000000 THEN 'Growth'
-                     WHEN momentum_score_micro >= 40000000 THEN 'Emerging'
-                     ELSE 'Experimental' END AS lifecycle_stage
-            FROM mom
-        )
-        SELECT
-            brand, n_lineitems, n_parts, n_suppliers, total_qty,
-            CAST(irev AS BIGINT) AS revenue_cents,
-            avg_price_micro, momentum_score_micro, lifecycle_stage,
-            CAST(ROW_NUMBER() OVER (ORDER BY irev DESC, brand)          AS BIGINT) AS revenue_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY total_qty DESC, brand)    AS BIGINT) AS volume_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY n_parts DESC, brand)      AS BIGINT) AS breadth_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY n_suppliers DESC, brand)  AS BIGINT) AS supplier_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY momentum_score_micro DESC, brand) AS BIGINT) AS momentum_rank,
-            CAST(LEAST(100000000, GREATEST(0,
-                 100000000 - momentum_score_micro + n_suppliers * 1000000)) AS BIGINT) AS concentration_risk_micro
-        FROM staged
-    """,
-    doc="Gold tech_metrics: A1 → momentum → lifecycle CASE → 5 W1 ranks → risk (s2g:133-311); scores as exact µ-unit BIGINTs.",
+    oracle=tech_metrics_oracle(
+        _select(_LINEITEM_REPOS, "lineitem JOIN part ON l_partkey = p_partkey")
+    ),
+    doc="Gold tech_metrics: A1 → momentum → lifecycle CASE → 5 ranks in one window → sustainability (s2g:133-311); gold.tech_metrics over lineitems as repos, hashed on its exact integer columns.",
 )
 def gold_tech_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    staged = (
-        _tm_rollup(spark, sf_dir)
-        .withColumn("idollars", F.greatest(F.expr("irev DIV 100"), F.lit(1).cast("long")))
-        .withColumn("ndig", F.length(F.col("idollars").cast("string")))
-        .withColumn("ip", F.expr(_TM_IP_SPARK))
-        .withColumn(
-            "ilogm",
-            F.expr(
-                "CAST(CAST(ndig - 1 AS BIGINT) * 1000000"
-                " + (2 * (idollars - ip) * 1000000 + 9 * ip) DIV (18 * ip) AS BIGINT)"
-            ),
-        )
-        .withColumn(
-            "avg_price_micro",
-            F.expr("CAST((2 * irev * 10000 + n_lineitems) DIV (2 * n_lineitems) AS BIGINT)"),
-        )
-        .withColumn(
-            "momentum_score_micro",
-            F.expr("CAST(LEAST(100000000, GREATEST(0, (ilogm * 25) DIV 2)) AS BIGINT)"),
-        )
-        .withColumn(
-            "lifecycle_stage",
-            F.when(F.col("momentum_score_micro") >= 80000000, "Mainstream")
-            .when(F.col("momentum_score_micro") >= 60000000, "Growth")
-            .when(F.col("momentum_score_micro") >= 40000000, "Emerging")
-            .otherwise("Experimental"),
-        )
-    )
-
-    # Five ranks over five different orderings in ONE window pass: a
-    # single unordered global window collects the (bounded: 25 brands)
-    # group rows once — one Exchange, ZERO sorts — and each rank is
-    # `1 + |rows strictly ahead of me in that ordering|` via codegen'd
-    # array filters (brand is unique, so this equals ROW_NUMBER over
-    # (key DESC, brand ASC)). Five separate row_number windows would
-    # plan one exchange + five sorts. Only valid because cardinality is
-    # reference-bounded; the unbounded-scale rank lives in
-    # operators/ranking.py (rank_global_scalable, driver-green).
-    rows = F.collect_list(
-        F.struct("irev", "total_qty", "n_parts", "n_suppliers", "momentum_score_micro", "brand")
-    ).over(W.partitionBy())
-
-    def rank(key: str) -> F.Column:
-        ahead = F.filter(
-            rows,
-            lambda r: (r[key] > F.col(key))
-            | ((r[key] == F.col(key)) & (r["brand"] < F.col("brand"))),
-        )
-        return (F.size(ahead) + 1).cast("long")
-
-    return staged.select(
-        "brand",
-        "n_lineitems",
-        "n_parts",
-        "n_suppliers",
-        "total_qty",
-        F.col("irev").alias("revenue_cents"),
-        "avg_price_micro",
-        "momentum_score_micro",
-        "lifecycle_stage",
-        rank("irev").alias("revenue_rank"),
-        rank("total_qty").alias("volume_rank"),
-        rank("n_parts").alias("breadth_rank"),
-        rank("n_suppliers").alias("supplier_rank"),
-        rank("momentum_score_micro").alias("momentum_rank"),
-        F.expr(
-            "CAST(LEAST(100000000, GREATEST(0,"
-            " 100000000 - momentum_score_micro + n_suppliers * 1000000)) AS BIGINT)"
-        ).alias("concentration_risk_micro"),
-    )
+    return exact_columns(gold.tech_metrics(_lineitem_repos(spark, sf_dir)))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 2: repo_ranks (s2g:359-388) — per-entity momentum, rank
-# within category (W2) + global rank (W1).
-# Mirror: per-part revenue momentum, ranked within brand and globally.
-# ---------------------------------------------------------------------------
+# Gold table 2: repo_ranks (s2g:359-388), per part
 @register(
     "gold_repo_ranks",
     oracle=f"""
-        WITH per_part AS (
-            SELECT
-                p.p_brand                               AS brand,
-                l.l_partkey                             AS partkey,
-                SUM({sql_iscale('l.l_extendedprice')})  AS irev,
-                CAST(COUNT(*) AS BIGINT)                AS n_lineitems
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            GROUP BY p.p_brand, l.l_partkey
+        WITH silver AS ({_select(_PART_REPOS, "part")}),
+        scored AS (
+            SELECT *, LEAST({sql_xlog10_micro('stargazers_count')} * 15, 60000000)
+                + ({sql_iscale('quality_score', 6)} * 4) // 10 AS momentum_u
+            FROM silver
         )
-        SELECT
-            brand, partkey, n_lineitems,
-            CAST(irev AS DOUBLE) / 100.0 AS revenue,
-            {sql_round(f"{sql_xlog10('GREATEST(irev // 100, 1)')} * 20.0", 6)} AS momentum_score,
-            CAST(ROW_NUMBER() OVER (PARTITION BY brand ORDER BY irev DESC, partkey) AS BIGINT) AS brand_rank,
-            CAST(ROW_NUMBER() OVER (ORDER BY irev DESC, partkey) AS BIGINT)                    AS global_rank
-        FROM per_part
-        QUALIFY brand_rank <= 20
+        SELECT repository_id, name, technology_category, stargazers_count, quality_score,
+            CAST(momentum_u AS DOUBLE) / 1000000.0 AS repo_momentum,
+            ROW_NUMBER() OVER (PARTITION BY technology_category
+                ORDER BY quality_score DESC, repository_id) AS category_quality_rank,
+            ROW_NUMBER() OVER (ORDER BY momentum_u DESC, repository_id) AS global_momentum_rank,
+            ROW_NUMBER() OVER (ORDER BY stargazers_count DESC, repository_id) AS global_star_rank,
+            partition_date
+        FROM scored
     """,
-    doc="Gold repo_ranks: per-entity momentum + partitioned (W2) and global (W1) ranks.",
+    doc="Gold repo_ranks: per-entity xlog10 momentum + partitioned (W2) and global (W1) ranks; gold.repo_ranks over parts as repos.",
 )
 def gold_repo_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    per_part = (
-        li.join(F.broadcast(part.select("p_partkey", "p_brand")), li.l_partkey == F.col("p_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"), F.col("l_partkey").alias("partkey"))
-        .agg(
-            F.sum(iscale("l_extendedprice")).alias("irev"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-    revenue = F.col("irev").cast("double") / 100.0
-    w_brand = W.partitionBy("brand").orderBy(F.desc("irev"), F.asc("partkey"))
-    w_global = W.orderBy(F.desc("irev"), F.asc("partkey"))
-    return (
-        per_part.select(
-            "brand",
-            "partkey",
-            "n_lineitems",
-            revenue.alias("revenue"),
-            # xlog10 over exact integer dollars: transcendental-free
-            # hashed surface (see gold_tech_metrics).
-            fround(
-                xlog10(F.greatest(F.expr("irev DIV 100"), F.lit(1))) * 20.0, 6
-            ).alias("momentum_score"),
-            F.row_number().over(w_brand).cast("long").alias("brand_rank"),
-            F.row_number().over(w_global).cast("long").alias("global_rank"),
-        )
-        .filter(F.col("brand_rank") <= 20)
-    )
+    return gold.repo_ranks(_load(spark, sf_dir, "part", _PART_REPOS))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 3: trend_daily (s2g:410-438) — (category, day) agg → W3
-# market share per day → REAL lag-based momentum change (the reference
-# stubbed momentum_change/rank_change with lit(0): s2g:423-424).
-# Mirror: (event_type, day) over events.
-# ---------------------------------------------------------------------------
+# Gold table 3: trend_daily (s2g:410-438), per event type and day
 @register(
     "gold_trend_daily",
     oracle=f"""
-        WITH daily AS (
-            SELECT
-                DATE_TRUNC('day', ts)            AS day,
-                event_type,
-                CAST(COUNT(*) AS BIGINT)         AS n_events,
-                SUM({sql_iscale('value')})       AS ivalue,
-                CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-            FROM events
-            GROUP BY 1, 2
+        WITH silver AS ({_select(_EVENT_REPOS, "events")}),
+        daily AS (
+            SELECT technology_category, partition_date,
+                CAST(COUNT(repository_id) AS BIGINT) AS repository_count,
+                CAST(SUM(stargazers_count) AS BIGINT) AS daily_total_stars,
+                {_avg('quality_score')} AS avg_quality, {_ACTIVE} AS active_count
+            FROM silver GROUP BY 1, 2
         )
-        SELECT
-            day, event_type, n_events, n_users,
-            CAST(ivalue AS DOUBLE) / 100.0 AS total_value,
-            {sql_round('CAST(ivalue AS DOUBLE) / CAST(SUM(ivalue) OVER (PARTITION BY day) AS DOUBLE)', 6)} AS market_share,
-            CAST(COALESCE(ivalue - LAG(ivalue) OVER (PARTITION BY event_type ORDER BY day), 0) AS DOUBLE) / 100.0 AS momentum_change,
-            CAST(COALESCE(n_events - LAG(n_events) OVER (PARTITION BY event_type ORDER BY day), 0) AS BIGINT) AS volume_change
+        SELECT *, CAST(daily_total_stars AS DOUBLE) / CAST(SUM(daily_total_stars)
+                OVER (PARTITION BY partition_date) AS DOUBLE) AS market_share,
+            0::DOUBLE AS momentum_change, CAST(0 AS BIGINT) AS rank_change
         FROM daily
     """,
-    doc="Gold trend_daily: A2 → W3 day-share → real lag momentum (reference stubbed W5).",
+    doc="Gold trend_daily: A2 → W3 day-share (NULL on a zero-star day); gold.trend_daily over events as repos.",
 )
 def gold_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    daily = (
-        events.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("day"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(iscale("value")).alias("ivalue"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
-    w_day = W.partitionBy("day")
-    w_type = W.partitionBy("event_type").orderBy("day")
-    return daily.select(
-        "day",
-        "event_type",
-        "n_events",
-        "n_users",
-        (F.col("ivalue").cast("double") / 100.0).alias("total_value"),
-        # r13 degenerate-corpus fix: a day whose value sum is exactly 0
-        # (all-zero purchase values) made ANSI Spark crash where DuckDB
-        # yields NULL market share; try_divide restores the NULL path.
-        fround(
-            F.try_divide(
-                F.col("ivalue").cast("double"),
-                F.sum("ivalue").over(w_day).cast("double"),
-            ),
-            6,
-        ).alias("market_share"),
-        (
-            F.coalesce(F.col("ivalue") - F.lag("ivalue").over(w_type), F.lit(0)).cast(
-                "double"
-            )
-            / 100.0
-        ).alias("momentum_change"),
-        F.coalesce(F.col("n_events") - F.lag("n_events").over(w_type), F.lit(0))
-        .cast("long")
-        .alias("volume_change"),
-    )
+    return gold.trend_daily(_load(spark, sf_dir, "events", _EVENT_REPOS))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 4: tech_health (s2g:460-492) — A1 variant + stddev (A8) →
-# sustainability / risk when-chains.
-# Mirror: supplier-balance health per nation.
-# ---------------------------------------------------------------------------
+# Gold table 4: tech_health (s2g:460-492), per market segment
 @register(
     "gold_tech_health",
     oracle=f"""
-        WITH stats AS (
-            SELECT
-                n.n_name                                   AS nation,
-                CAST(COUNT(*) AS BIGINT)                   AS n_suppliers,
-                {sql_davg('s.s_acctbal')}                  AS avg_balance,
-                {sql_dstd('s.s_acctbal')} AS balance_dispersion,
-                CAST(SUM(CASE WHEN s.s_acctbal < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
-            FROM supplier s
-            JOIN nation n ON s.s_nationkey = n.n_nationkey
-            GROUP BY n.n_name
+        WITH silver AS ({_select(_CUSTOMER_REPOS, "customer")}),
+        stats AS (
+            SELECT technology_category, CAST(COUNT(repository_id) AS BIGINT) AS repo_count,
+                {_avg('community_health_score')} AS avg_health,
+                {sql_dstd('stargazers_count')} AS star_dispersion, {_ACTIVE} AS active_repos,
+                CAST(COUNT(DISTINCT license_category) AS BIGINT) AS license_variety,
+                {_avg('open_issues_count')} AS avg_open_issues
+            FROM silver GROUP BY 1
         )
         SELECT *,
-            CASE WHEN avg_balance >= 5000 AND n_negative = 0 THEN 'Sustainable'
-                 WHEN avg_balance >= 2000                    THEN 'Stable'
-                 WHEN avg_balance >= 0                       THEN 'At Risk'
-                 ELSE 'Critical' END AS sustainability_status,
-            CASE WHEN n_negative * 4 >= n_suppliers THEN 'High'
-                 WHEN n_negative > 0                THEN 'Medium'
-                 ELSE 'Low' END AS abandonment_risk
+            CASE WHEN avg_health >= 80 AND active_repos * 10 >= repo_count * 7 THEN 'thriving'
+                 WHEN avg_health >= 60 THEN 'healthy' WHEN avg_health >= 40 THEN 'stable'
+                 ELSE 'at_risk' END AS health_status,
+            CASE WHEN active_repos * 5 < repo_count THEN 'high'
+                 WHEN active_repos * 2 < repo_count THEN 'medium' ELSE 'low' END AS abandonment_risk
         FROM stats
     """,
-    doc="Gold tech_health: agg + stddev (A8) → sustainability/risk CASE chains (s2g:460-492).",
+    doc="Gold tech_health: agg + dstd (A8) → health/abandonment CASE chains (s2g:460-492); gold.tech_health over customers as repos.",
 )
 def gold_tech_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    stats = (
-        supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            davg("s_acctbal").alias("avg_balance"),
-            # dstd: sample stddev from exact scaled-integer sums —
-            # STDDEV_SAMP's double summation order is engine-dependent.
-            dstd("s_acctbal").alias("balance_dispersion"),
-            F.sum(F.when(F.col("s_acctbal") < 0, 1).otherwise(0)).alias("n_negative"),
-        )
-    )
-    return stats.select(
-        "*",
-        F.when((F.col("avg_balance") >= 5000) & (F.col("n_negative") == 0), "Sustainable")
-        .when(F.col("avg_balance") >= 2000, "Stable")
-        .when(F.col("avg_balance") >= 0, "At Risk")
-        .otherwise("Critical")
-        .alias("sustainability_status"),
-        F.when(F.col("n_negative") * 4 >= F.col("n_suppliers"), "High")
-        .when(F.col("n_negative") > 0, "Medium")
-        .otherwise("Low")
-        .alias("abandonment_risk"),
-    )
+    return gold.tech_health(_load(spark, sf_dir, "customer", _CUSTOMER_REPOS))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 5: lang_stats (s2g:514-545) — rollup → W4 global share →
-# W1 rank → adoption-stage when-chain.
-# Mirror: nation-level order stats.
-# ---------------------------------------------------------------------------
+# Gold table 5: lang_stats (s2g:514-545), per nation
 @register(
     "gold_lang_stats",
     oracle=f"""
-        WITH nat AS (
-            SELECT
-                n.n_name                                 AS nation,
-                CAST(COUNT(*) AS BIGINT)                 AS n_orders,
-                SUM({sql_iscale('o.o_totalprice')})      AS irev,
-                CAST(COUNT(DISTINCT o.o_custkey) AS BIGINT) AS n_customers
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            GROUP BY n.n_name
+        WITH silver AS ({_select(_CUSTOMER_REPOS, "customer")}),
+        agg AS (
+            SELECT primary_language, CAST(COUNT(repository_id) AS BIGINT) AS repo_count,
+                CAST(SUM(stargazers_count) AS BIGINT) AS total_stars,
+                {_avg('quality_score')} AS avg_quality, {_ACTIVE} AS active_repos
+            FROM silver WHERE primary_language IS NOT NULL GROUP BY 1
+        ),
+        shared AS (
+            SELECT *, CAST(total_stars AS DOUBLE) / CAST(SUM(total_stars) OVER () AS DOUBLE)
+                AS star_share
+            FROM agg
         )
-        SELECT
-            nation, n_orders, n_customers,
-            CAST(irev AS DOUBLE) / 100.0 AS revenue,
-            {sql_round('CAST(irev AS DOUBLE) / CAST(SUM(irev) OVER () AS DOUBLE)', 6)} AS global_share,
-            CAST(ROW_NUMBER() OVER (ORDER BY irev DESC, nation) AS BIGINT) AS revenue_rank,
-            CASE WHEN CAST(irev AS DOUBLE) / CAST(SUM(irev) OVER () AS DOUBLE) >= 0.06 THEN 'Dominant'
-                 WHEN CAST(irev AS DOUBLE) / CAST(SUM(irev) OVER () AS DOUBLE) >= 0.04 THEN 'Major'
-                 WHEN CAST(irev AS DOUBLE) / CAST(SUM(irev) OVER () AS DOUBLE) >= 0.02 THEN 'Established'
-                 ELSE 'Niche' END AS adoption_stage
-        FROM nat
+        SELECT *,
+            ROW_NUMBER() OVER (ORDER BY total_stars DESC, primary_language) AS language_rank,
+            CASE WHEN star_share >= 0.2::DOUBLE THEN 'dominant'
+                 WHEN star_share >= 0.1::DOUBLE THEN 'major'
+                 WHEN star_share >= 0.02::DOUBLE THEN 'established' ELSE 'niche' END AS adoption_stage
+        FROM shared
     """,
-    doc="Gold lang_stats: rollup → W4 global share → W1 rank → adoption stage (s2g:514-545).",
+    doc="Gold lang_stats: rollup → W4 global share → W1 rank → adoption stage (s2g:514-545); gold.lang_stats over customers as repos.",
 )
 def gold_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    nat = (
-        orders.join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(iscale("o_totalprice")).alias("irev"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-    )
-    share = F.col("irev").cast("double") / F.sum("irev").over(W.partitionBy()).cast(
-        "double"
-    )
-    return nat.select(
-        "nation",
-        "n_orders",
-        "n_customers",
-        (F.col("irev").cast("double") / 100.0).alias("revenue"),
-        fround(share, 6).alias("global_share"),
-        F.row_number()
-        .over(W.orderBy(F.desc("irev"), F.asc("nation")))
-        .cast("long")
-        .alias("revenue_rank"),
-        F.when(share >= 0.06, "Dominant")
-        .when(share >= 0.04, "Major")
-        .when(share >= 0.02, "Established")
-        .otherwise("Niche")
-        .alias("adoption_stage"),
-    )
+    return gold.lang_stats(_load(spark, sf_dir, "customer", _CUSTOMER_REPOS))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 6: market_pulse (s2g:567-580) — single-row market summary
-# with derived indicator columns, all in-plan (no collect()).
-# ---------------------------------------------------------------------------
+# Gold table 6: market_pulse (s2g:567-580), one row over all events
 @register(
     "gold_market_pulse",
     oracle=f"""
-        WITH g AS (
-            SELECT
-                CAST(COUNT(*) AS BIGINT)                   AS n_events,
-                CAST(COUNT(DISTINCT user_id) AS BIGINT)    AS n_users,
-                CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_event_types,
-                SUM({sql_iscale('value')})                 AS ivalue,
-                CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
-            FROM events
+        WITH silver AS ({_select(_EVENT_REPOS, "events")}),
+        g AS (
+            SELECT CAST(COUNT(repository_id) AS BIGINT) AS total_repositories,
+                CAST(SUM(stargazers_count) AS BIGINT) AS total_stars,
+                {_avg('quality_score')} AS avg_quality_score,
+                {_avg('community_health_score')} AS avg_health_score,
+                {_ACTIVE} AS active_repositories,
+                CAST(COUNT(DISTINCT technology_category) AS BIGINT) AS categories_tracked
+            FROM silver
         )
-        SELECT
-            n_events, n_users, n_event_types, n_errors,
-            CAST(ivalue AS DOUBLE) / 100.0 AS total_value,
-            {sql_round('CAST(n_errors AS DOUBLE) / CAST(n_events AS DOUBLE)', 6)} AS error_rate,
-            {sql_round('CAST(n_events AS DOUBLE) / CAST(n_users AS DOUBLE)', 6)}  AS events_per_user,
-            CASE WHEN CAST(n_errors AS DOUBLE) / CAST(n_events AS DOUBLE) > 0.25 THEN 'Degraded'
-                 ELSE 'Healthy' END AS market_status
+        SELECT *, CAST(active_repositories AS DOUBLE) / CAST(total_repositories AS DOUBLE)
+                AS market_activity_ratio, '{_AS_OF}' AS measurement_date
         FROM g
     """,
-    doc="Gold market_pulse: single-row global indicators, fully in-plan (A5/A11 ⟲).",
+    doc="Gold market_pulse: single-row global indicators, fully in-plan (A5/A11 ⟲), NULL ratio when empty; gold.market_pulse over events as repos.",
 )
 def gold_market_pulse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    g = events.agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.countDistinct("event_type").alias("n_event_types"),
-        F.sum(iscale("value")).alias("ivalue"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("n_errors"),
-    )
-    # r13 empty-corpus fix: zero events (or zero users) made ANSI
-    # Spark crash on the rate divisions where DuckDB yields NULL;
-    # try_divide restores the NULL path (status then falls through
-    # the CASE to 'Healthy' on both engines).
-    error_rate = F.try_divide(
-        F.col("n_errors").cast("double"), F.col("n_events").cast("double")
-    )
-    return g.select(
-        "n_events",
-        "n_users",
-        "n_event_types",
-        "n_errors",
-        (F.col("ivalue").cast("double") / 100.0).alias("total_value"),
-        fround(error_rate, 6).alias("error_rate"),
-        fround(
-            F.try_divide(
-                F.col("n_events").cast("double"),
-                F.col("n_users").cast("double"),
-            ),
-            6,
-        ).alias("events_per_user"),
-        F.when(error_rate > 0.25, "Degraded").otherwise("Healthy").alias("market_status"),
-    )
+    return gold.market_pulse(_load(spark, sf_dir, "events", _EVENT_REPOS), _AS_OF)
 
 
-# ---------------------------------------------------------------------------
-# Gold table 7: adoption_matrix (s2g:603-630) — explode → self-pair →
-# HAVING → correlation strength co/sqrt(na*nb).
-# Mirror: word co-occurrence in part names with correlation scores.
-# ---------------------------------------------------------------------------
+# Gold table 7: adoption_matrix (s2g:603-630), part types × name words
 @register(
     "gold_adoption_matrix",
     oracle=f"""
-        WITH words AS (
-            SELECT DISTINCT p_partkey, UNNEST(STRING_SPLIT(LOWER(p_name), ' ')) AS word
-            FROM part
-        ),
-        counts AS (
-            SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM words GROUP BY word
-        ),
+        WITH silver AS ({_select(_PART_REPOS, "part")}),
         pairs AS (
-            SELECT a.word AS word_a, b.word AS word_b, CAST(COUNT(*) AS BIGINT) AS co_count
-            FROM words a
-            JOIN words b ON a.p_partkey = b.p_partkey AND a.word < b.word
-            GROUP BY a.word, b.word
-            HAVING COUNT(*) >= 3
+            SELECT technology_category, stargazers_count, UNNEST(topics_standardized) AS topic
+            FROM silver WHERE topics_standardized IS NOT NULL AND LEN(topics_standardized) > 0
+        ),
+        agg AS (
+            SELECT technology_category, topic, CAST(COUNT(*) AS BIGINT) AS co_occurrence_count,
+                SUM(stargazers_count) AS combined_stars
+            FROM pairs WHERE topic <> technology_category GROUP BY 1, 2 HAVING COUNT(*) >= 3
+        ),
+        scored AS (
+            SELECT *, CAST({sql_xlog10_micro('combined_stars')} AS DOUBLE) / 1000000.0
+                * SQRT(CAST(co_occurrence_count AS DOUBLE)) AS correlation_score
+            FROM agg
         )
-        SELECT
-            p.word_a, p.word_b, p.co_count,
-            ca.n AS count_a,
-            cb.n AS count_b,
-            {sql_round('CAST(p.co_count AS DOUBLE) / SQRT(CAST(ca.n AS DOUBLE) * CAST(cb.n AS DOUBLE))', 6)} AS correlation_strength
-        FROM pairs p
-        JOIN counts ca ON p.word_a = ca.word
-        JOIN counts cb ON p.word_b = cb.word
+        SELECT technology_category AS tech_primary, topic AS tech_secondary,
+            co_occurrence_count, correlation_score,
+            CASE WHEN correlation_score > 10 THEN 'strong' WHEN correlation_score > 5 THEN 'moderate'
+                 ELSE 'weak' END AS ecosystem_strength, '{_AS_OF}' AS partition_date
+        FROM scored
     """,
-    doc="Gold adoption_matrix: explode → pair counts → HAVING → co/sqrt(na*nb) (s2g:603-630).",
+    doc="Gold adoption_matrix: explode → pair counts → HAVING → xlog10(stars)·sqrt(co) (s2g:603-630); gold.adoption_matrix over parts as repos.",
 )
 def gold_adoption_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    words = (
-        part.select(
-            "p_partkey", F.explode(F.split(F.lower(F.col("p_name")), " ")).alias("word")
-        )
-        .distinct()
-    )
-    counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-    a = words.alias("a")
-    b = words.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.p_partkey") == F.col("b.p_partkey"))
-            & (F.col("a.word") < F.col("b.word")),
-        )
-        .groupBy(F.col("a.word").alias("word_a"), F.col("b.word").alias("word_b"))
-        .agg(F.count(F.lit(1)).alias("co_count"))
-        .filter(F.col("co_count") >= 3)
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    return (
-        pairs.join(F.broadcast(ca), pairs.word_a == F.col("ca.word"))
-        .join(F.broadcast(cb), pairs.word_b == F.col("cb.word"))
-        .select(
-            "word_a",
-            "word_b",
-            "co_count",
-            F.col("ca.n").alias("count_a"),
-            F.col("cb.n").alias("count_b"),
-            fround(
-                F.col("co_count").cast("double")
-                / F.sqrt(F.col("ca.n").cast("double") * F.col("cb.n").cast("double")),
-                6,
-            ).alias("correlation_strength"),
-        )
-    )
+    return gold.adoption_matrix(_load(spark, sf_dir, "part", _PART_REPOS), _AS_OF)
 
 
-# ---------------------------------------------------------------------------
 # Gold table 8: portfolio_overview (personal_repos_silver_to_gold.py:
-# 104-149) — global totals + top-5 breakdown + diversity score.
-# Mirror: one "portfolio" = customers of nation 0; top segments by
-# revenue as ranked rows (arrays → rows, hash-friendly).
-# ---------------------------------------------------------------------------
+# 104-149), all customers; the top-5 arrays hash as comma-joined strings
+def _top5(col: str) -> str:
+    return f"""(SELECT STRING_AGG({col}, ',' ORDER BY n DESC, {col}) FROM (
+            SELECT {col}, COUNT(*) AS n FROM silver WHERE {col} IS NOT NULL
+            GROUP BY 1 ORDER BY n DESC, {col} LIMIT 5))"""
+
+
 @register(
     "gold_portfolio_overview",
     oracle=f"""
-        WITH mine AS (
-            SELECT c.c_custkey, c.c_mktsegment, c.c_acctbal, o.o_orderkey, o.o_totalprice
-            FROM customer c
-            LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-            WHERE c.c_nationkey = 0
-        ),
-        seg AS (
-            SELECT
-                c_mktsegment                                   AS segment,
-                CAST(COUNT(DISTINCT c_custkey) AS BIGINT)      AS n_customers,
-                CAST(COUNT(o_orderkey) AS BIGINT)              AS n_orders,
-                SUM(COALESCE({sql_iscale('o_totalprice')}, 0)) AS irev
-            FROM mine
-            GROUP BY c_mktsegment
+        WITH silver AS ({_select(_CUSTOMER_REPOS, "customer")}),
+        totals AS (
+            SELECT CAST(COUNT(repository_id) AS BIGINT) AS total_repositories,
+                CAST(SUM(stargazers_count) AS BIGINT) AS total_stars,
+                CAST(SUM(forks_count) AS BIGINT) AS total_forks, {_ACTIVE} AS active_repositories,
+                {_avg('quality_score')} AS avg_quality_score,
+                CAST(COUNT(DISTINCT technology_category) AS BIGINT) AS n_categories,
+                CAST(COUNT(DISTINCT primary_language) AS BIGINT) AS n_languages,
+                GREATEST(COUNT(repository_id), 1) AS n
+            FROM silver
         )
-        SELECT
-            segment, n_customers, n_orders,
-            CAST(irev AS DOUBLE) / 100.0 AS revenue,
-            CAST(ROW_NUMBER() OVER (ORDER BY irev DESC, segment) AS BIGINT) AS segment_rank,
-            {sql_round('CAST(n_orders AS DOUBLE) / CAST(NULLIF(n_customers, 0) AS DOUBLE)', 6)} AS orders_per_customer
-        FROM seg
-        QUALIFY segment_rank <= 5
+        SELECT * EXCLUDE (n), {_top5('technology_category')} AS primary_technologies,
+            {_top5('primary_language')} AS primary_languages,
+            (CAST(n_categories AS DOUBLE) / CAST(n AS DOUBLE)
+                + CAST(n_languages AS DOUBLE) / CAST(n AS DOUBLE)) / 2::DOUBLE
+                AS portfolio_diversity_score,
+            CASE WHEN active_repositories * 10 >= n * 7 THEN 'high'
+                 WHEN active_repositories * 10 >= n * 3 THEN 'medium' ELSE 'low' END AS activity_level,
+            '{_AS_OF}' AS measurement_date, '{_AS_OF}' AS partition_date
+        FROM totals
     """,
-    doc="Gold portfolio_overview: scoped totals + top-5 breakdown as ranked rows (prs2g:104-149).",
+    doc="Gold portfolio_overview: totals + in-plan top-5 lists + diversity (prs2g:104-149); personal.portfolio_overview over customers as repos.",
 )
 def gold_portfolio_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer").filter(F.col("c_nationkey") == 0)
-    orders = load_table(spark, sf_dir, "orders")
-    mine = customer.join(orders, orders.o_custkey == customer.c_custkey, "left")
-    seg = mine.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.countDistinct("c_custkey").alias("n_customers"),
-        F.count("o_orderkey").alias("n_orders"),
-        F.sum(F.coalesce(iscale("o_totalprice"), F.lit(0))).alias("irev"),
-    )
-    return (
-        seg.select(
-            "segment",
-            "n_customers",
-            "n_orders",
-            (F.col("irev").cast("double") / 100.0).alias("revenue"),
-            F.row_number()
-            .over(W.orderBy(F.desc("irev"), F.asc("segment")))
-            .cast("long")
-            .alias("segment_rank"),
-            fround(
-                F.col("n_orders").cast("double")
-                / F.nullif(F.col("n_customers"), F.lit(0)).cast("double"),
-                6,
-            ).alias("orders_per_customer"),
-        )
-        .filter(F.col("segment_rank") <= 5)
+    out = personal.portfolio_overview(_load(spark, sf_dir, "customer", _CUSTOMER_REPOS), _AS_OF)
+    return out.withColumns(
+        {c: F.array_join(c, ",") for c in ("primary_technologies", "primary_languages")}
     )
 
 
-# ---------------------------------------------------------------------------
-# Gold table 9: repo_health_dashboard (prs2g:158-254) — left join to
-# activity metrics (J3) → weighted health score → grade/status/actions.
-# Mirror: per-user event health from the events table; "recommended
-# actions" emitted as a deterministic concat string (array → string for
-# hash-stable output; the array variant is in the pipelines module).
-# ---------------------------------------------------------------------------
-_HEALTH_SQL = sql_round(
-    "LEAST(100.0, GREATEST(0.0, "
-    "0.5 * LEAST(100.0, CAST(n_events AS DOUBLE)) "
-    "+ 30.0 * (CAST(n_purchases AS DOUBLE) / CAST(n_events AS DOUBLE)) "
-    "- 50.0 * (CAST(n_errors AS DOUBLE) / CAST(n_events AS DOUBLE)) "
-    "+ LEAST(20.0, CAST(ivalue AS DOUBLE) / 10000.0)))",
-    6,
-)
-
-
+# Gold table 9: repo_health_dashboard (prs2g:158-254): customers ⟕ their
+# 30-day event activity (J3); the actions array hashes comma-joined
 @register(
     "gold_repo_health_dashboard",
     oracle=f"""
-        WITH activity AS (
-            SELECT
-                user_id,
-                CAST(COUNT(*) AS BIGINT)   AS n_events,
-                CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
-                CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)    AS n_errors,
-                SUM({sql_iscale('value')}) AS ivalue,
-                MAX(ts)                    AS last_seen
-            FROM events
-            GROUP BY user_id
-        ),
+        WITH silver AS ({_select(_CUSTOMER_REPOS, "customer")}), {_ACTIVITY_30D},
         scored AS (
-            SELECT *, {_HEALTH_SQL} AS health_score
-            FROM activity
+            SELECT s.*, COALESCE(v.total_commits, 0) AS commits_30d,
+                COALESCE(v.total_issues, 0) AS issues_30d,
+                COALESCE(v.development_velocity, 0::DOUBLE) AS development_velocity,
+                LEAST(1.0::DOUBLE, (s.quality_score / 100.0::DOUBLE) * 0.4::DOUBLE
+                    + COALESCE(v.development_velocity, 0::DOUBLE) * 0.3::DOUBLE
+                    + CASE WHEN s.is_active THEN 0.3::DOUBLE ELSE 0::DOUBLE END) AS health_score
+            FROM silver s LEFT JOIN vel v ON s.repository_id = v.repository_id
+        ),
+        graded AS (
+            SELECT *, CASE WHEN health_score >= 0.8::DOUBLE THEN 'A'
+                     WHEN health_score >= 0.6::DOUBLE THEN 'B' WHEN health_score >= 0.4::DOUBLE THEN 'C'
+                     WHEN health_score >= 0.2::DOUBLE THEN 'D' ELSE 'F' END AS health_grade,
+                CASE WHEN days_since_push <= 7 THEN 'active' WHEN days_since_push <= 30 THEN 'stable'
+                     ELSE 'dormant' END AS activity_status
+            FROM scored
         )
-        SELECT
-            user_id, n_events, n_purchases, n_errors, last_seen,
-            CAST(ivalue AS DOUBLE) / 100.0 AS total_value,
-            health_score,
-            CASE WHEN health_score >= 80 THEN 'A'
-                 WHEN health_score >= 65 THEN 'B'
-                 WHEN health_score >= 50 THEN 'C'
-                 WHEN health_score >= 35 THEN 'D'
-                 ELSE 'F' END AS health_grade,
-            CASE WHEN last_seen >= TIMESTAMP '{_AS_OF_EVENTS}' - INTERVAL 7 DAY THEN 'active'
-                 WHEN last_seen >= TIMESTAMP '{_AS_OF_EVENTS}' - INTERVAL 30 DAY THEN 'recent'
-                 ELSE 'dormant' END AS activity_status,
-            CONCAT(
-                CASE WHEN n_errors * 4 > n_events THEN 'investigate-errors;' ELSE '' END,
-                CASE WHEN n_purchases = 0 THEN 'no-conversions;' ELSE '' END,
-                CASE WHEN health_score < 50 THEN 'needs-attention;' ELSE '' END
-            ) AS recommended_actions
-        FROM scored
+        SELECT repository_id, name AS repository_name, technology_category, stargazers_count,
+            commits_30d, issues_30d, development_velocity, health_grade, health_score,
+            activity_status, health_grade IN ('D', 'F') OR activity_status = 'dormant'
+                OR open_issues_count > 10 AS attention_needed,
+            CASE WHEN activity_status = 'dormant' THEN 'review-purpose,archive-or-update'
+                 WHEN open_issues_count > 10 THEN 'address-issues,triage-backlog'
+                 WHEN quality_score < 50.0::DOUBLE THEN 'improve-documentation,add-license'
+                 ELSE 'maintain-current-status' END AS recommended_actions,
+            '{_AS_OF}' AS measurement_date, '{_AS_OF}' AS partition_date
+        FROM graded
     """,
-    doc="Gold repo_health_dashboard: J3 join → weighted score → grade/status/actions (prs2g:158-254).",
+    doc="Gold repo_health_dashboard: J3 left join → weighted score → grade/status/actions (prs2g:158-254); personal.repo_health_dashboard over customers and their event activity.",
 )
 def gold_repo_health_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    activity = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "n_purchases"
-        ),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("n_errors"),
-        F.sum(iscale("value")).alias("ivalue"),
-        F.max("ts").alias("last_seen"),
+    out = personal.repo_health_dashboard(
+        _load(spark, sf_dir, "customer", _CUSTOMER_REPOS), _event_activity(spark, sf_dir), _AS_OF
     )
-    n_events_d = F.col("n_events").cast("double")
-    health = fround(
-        F.least(
-            F.lit(100.0),
-            F.greatest(
-                F.lit(0.0),
-                F.lit(0.5) * F.least(F.lit(100.0), n_events_d)
-                + F.lit(30.0) * (F.col("n_purchases").cast("double") / n_events_d)
-                - F.lit(50.0) * (F.col("n_errors").cast("double") / n_events_d)
-                + F.least(F.lit(20.0), F.col("ivalue").cast("double") / 10000.0),
-            ),
-        ),
-        6,
-    )
-    scored = activity.withColumn("health_score", health)
-    as_of = F.lit(_AS_OF_EVENTS).cast("timestamp")
-    hs = F.col("health_score")
-    return scored.select(
-        "user_id",
-        "n_events",
-        "n_purchases",
-        "n_errors",
-        "last_seen",
-        (F.col("ivalue").cast("double") / 100.0).alias("total_value"),
-        "health_score",
-        F.when(hs >= 80, "A")
-        .when(hs >= 65, "B")
-        .when(hs >= 50, "C")
-        .when(hs >= 35, "D")
-        .otherwise("F")
-        .alias("health_grade"),
-        F.when(F.col("last_seen") >= as_of - F.expr("INTERVAL 7 DAYS"), "active")
-        .when(F.col("last_seen") >= as_of - F.expr("INTERVAL 30 DAYS"), "recent")
-        .otherwise("dormant")
-        .alias("activity_status"),
-        F.concat(
-            F.when(F.col("n_errors") * 4 > F.col("n_events"), "investigate-errors;").otherwise(""),
-            F.when(F.col("n_purchases") == 0, "no-conversions;").otherwise(""),
-            F.when(hs < 50, "needs-attention;").otherwise(""),
-        ).alias("recommended_actions"),
-    )
+    return out.withColumn("recommended_actions", F.array_join("recommended_actions", ","))
 
 
-# ---------------------------------------------------------------------------
-# Gold table 10: development_velocity (prs2g:263-289) — 30d-window
-# per-entity velocity projections + trend label.
-# Mirror: per-user 30d event velocity with week-over-week trend.
-# ---------------------------------------------------------------------------
+# Gold table 10: development_velocity (prs2g:263-289), per user
 @register(
     "gold_development_velocity",
     oracle=f"""
-        WITH win AS (
-            SELECT user_id,
-                   CAST(COUNT(*) AS BIGINT) AS events_30d,
-                   CAST(SUM(CASE WHEN ts >= TIMESTAMP '{_AS_OF_EVENTS}' - INTERVAL 7 DAY
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS events_7d,
-                   SUM({sql_iscale('value')}) AS ivalue_30d
-            FROM events
-            WHERE ts >= TIMESTAMP '{_AS_OF_EVENTS}' - INTERVAL 30 DAY
-            GROUP BY user_id
-        )
-        SELECT
-            user_id, events_30d, events_7d,
-            CAST(ivalue_30d AS DOUBLE) / 100.0 AS value_30d,
-            {sql_round('CAST(events_30d AS DOUBLE) / 30.0', 6)} AS daily_velocity,
-            {sql_round('CAST(events_7d AS DOUBLE) * 30.0 / 7.0', 6)} AS projected_30d,
-            CASE WHEN CAST(events_7d AS DOUBLE) * 30.0 / 7.0 > CAST(events_30d AS DOUBLE) * 1.2 THEN 'accelerating'
-                 WHEN CAST(events_7d AS DOUBLE) * 30.0 / 7.0 < CAST(events_30d AS DOUBLE) * 0.8 THEN 'decelerating'
-                 ELSE 'steady' END AS velocity_trend
-        FROM win
+        WITH {_ACTIVITY_30D}
+        SELECT *,
+            CASE WHEN development_velocity >= 0.7::DOUBLE THEN 'increasing'
+                 WHEN development_velocity >= 0.3::DOUBLE THEN 'stable'
+                 ELSE 'decreasing' END AS activity_trend,
+            commit_frequency * 365 AS projected_annual_commits,
+            '{_AS_OF}' AS measurement_date, '{_AS_OF}' AS partition_date
+        FROM vel
     """,
-    doc="Gold development_velocity: 30d window velocity + projection + trend (prs2g:263-289).",
+    doc="Gold development_velocity: 30d activity metrics → velocity blend → trend + projection (prs2g:263-289); personal.development_velocity over event activity.",
 )
 def gold_development_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    as_of = F.lit(_AS_OF_EVENTS).cast("timestamp")
-    win = (
-        events.filter(F.col("ts") >= as_of - F.expr("INTERVAL 30 DAYS"))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("events_30d"),
-            F.sum(
-                F.when(F.col("ts") >= as_of - F.expr("INTERVAL 7 DAYS"), 1).otherwise(0)
-            ).alias("events_7d"),
-            F.sum(iscale("value")).alias("ivalue_30d"),
-        )
-    )
-    projected = F.col("events_7d").cast("double") * 30.0 / 7.0
-    return win.select(
-        "user_id",
-        "events_30d",
-        "events_7d",
-        (F.col("ivalue_30d").cast("double") / 100.0).alias("value_30d"),
-        fround(F.col("events_30d").cast("double") / 30.0, 6).alias("daily_velocity"),
-        fround(projected, 6).alias("projected_30d"),
-        F.when(projected > F.col("events_30d").cast("double") * 1.2, "accelerating")
-        .when(projected < F.col("events_30d").cast("double") * 0.8, "decelerating")
-        .otherwise("steady")
-        .alias("velocity_trend"),
-    )
+    return personal.development_velocity(_event_activity(spark, sf_dir), _AS_OF)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.keywords import TECH_KEYWORDS, extract_keywords
 from stacktrend_spark.pipelines.validation import Rule, violation_counts
+from stacktrend_spark.plans.gold_mirrors import exact_columns, tech_metrics_oracle
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.search_gen import randomized_search_queries
 from stacktrend_spark.functions.fsutil import tmpdir as _tmpdir
@@ -167,11 +168,12 @@ def search_query_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the final stored gold table, so the driver can hash-compare it against
 # an independent DuckDB recomputation: the oracle embeds the SAME seed
 # rows (fixtures.bronze_repos_rows / bronze_activity_rows) as a VALUES
-# CTE and re-derives the gold summary in SQL from scratch — it shares
-# the INPUT with the Spark pipeline, not any intermediate. Float
-# surfaces (log10 momentum, velocity doubles) stay out of the hashed
-# projection per PARITY.md Tier 0; value-level goldens for them live in
-# tests/test_orchestration.py.
+# CTE and re-derives silver and the gold summary in SQL from scratch —
+# it shares the INPUT with the Spark pipeline, not any intermediate.
+# Columns derived from silver's libm log10 quality_score, and the
+# DOUBLE forms of the µ-unit scores, stay out of the hashed projection
+# per PARITY.md Tier 0; value-level goldens for them live in
+# tests/test_pipeline_store.py.
 # ---------------------------------------------------------------------------
 
 
@@ -188,60 +190,53 @@ def _trend_gold_oracle() -> str:
     as_of = datetime.strptime(AS_OF_DATE, "%Y-%m-%d")
     vals = []
     for r in bronze_repos_rows():
-        rid, name, pushed = r[0], r[1], r[8]
-        stars, watchers, forks = r[10], r[11], r[12]
+        rid, name, desc, created, pushed = r[0], r[1], r[5], r[6], r[8]
+        stars, watchers, forks, size = r[10], r[11], r[12], r[14]
         topics, lic = r[16], r[17]
         vals.append(
             f"({rid}, {_sql_lit(name)}, {_sql_lit(' '.join(topics))}, "
             f"{_sql_lit(lic)}, {stars}, {forks}, {watchers}, "
-            f"{(as_of - pushed).days})"
+            f"{(as_of - pushed).days}, {(as_of - created).days}, "
+            f"{desc is not None}, {len(topics)}, {size})"
         )
     cat_whens = " ".join(
         f"WHEN haystack LIKE '%{kw}%' THEN '{category}'"
         for kw, category, _sub in _RULES
     )
-    return f"""
-        WITH seed(repository_id, name, topics, license_name, stars, forks,
-                  watchers, days_since_push) AS (VALUES {', '.join(vals)}),
+    return tech_metrics_oracle(f"""
+        WITH seed(repository_id, name, topics, license_name, stargazers_count,
+                  forks_count, watchers_count, days_since_push, days_since_creation,
+                  has_description, n_topics, size) AS (VALUES {', '.join(vals)}),
         -- b2s quality gate: missing/blank names quarantine
         kept AS (
-            SELECT *, lower(coalesce(name, '')) || ' ' || topics AS haystack
+            SELECT *, lower(coalesce(name, '')) || ' ' || topics AS haystack,
+                days_since_push <= 90 AS is_active
             FROM seed WHERE name IS NOT NULL AND trim(name) <> ''
-        ),
-        -- first-match-wins rule classifier + license categorization
-        cat AS (
-            SELECT CASE {cat_whens} ELSE 'Other' END AS technology_category,
-                CASE WHEN license_name IS NULL THEN 'none'
-                     WHEN license_name LIKE '%MIT%' OR license_name LIKE '%Apache%'
-                          OR license_name LIKE '%BSD%' THEN 'permissive'
-                     WHEN license_name LIKE '%GPL%' THEN 'copyleft'
-                     ELSE 'other' END AS license_category,
-                stars, forks, watchers, days_since_push
-            FROM kept
-        ),
-        agg AS (
-            SELECT technology_category,
-                CAST(COUNT(*) AS BIGINT) AS total_repositories,
-                CAST(SUM(stars) AS BIGINT) AS total_stars,
-                CAST(SUM(forks) AS BIGINT) AS total_forks,
-                CAST(SUM(watchers) AS BIGINT) AS total_watchers,
-                CAST(SUM(CASE WHEN days_since_push <= 90 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS active_repositories,
-                CAST(COUNT(DISTINCT license_category) AS BIGINT)
-                    AS license_diversity_count
-            FROM cat GROUP BY 1
         )
-        SELECT agg.*, CAST(ROW_NUMBER() OVER (
-                ORDER BY total_stars DESC, technology_category ASC
-            ) AS BIGINT) AS popularity_rank
-        FROM agg
-    """
+        -- first-match-wins rule classifier, license categorization and
+        -- the b2s metrics
+        SELECT CASE {cat_whens} ELSE 'Other' END AS technology_category,
+            CASE WHEN license_name IS NULL THEN 'none'
+                 WHEN license_name LIKE '%MIT%' OR license_name LIKE '%Apache%'
+                      OR license_name LIKE '%BSD%' THEN 'permissive'
+                 WHEN license_name LIKE '%GPL%' THEN 'copyleft'
+                 ELSE 'other' END AS license_category,
+            CASE WHEN days_since_creation > 0 THEN CAST(stargazers_count AS DOUBLE)
+                / CAST(GREATEST(days_since_creation, 1) AS DOUBLE) ELSE 0::DOUBLE END
+                AS star_velocity_30d,
+            CAST(CASE WHEN has_description THEN 20 ELSE 0 END
+                + CASE WHEN license_name IS NOT NULL THEN 20 ELSE 0 END
+                + CASE WHEN n_topics > 0 THEN 20 ELSE 0 END
+                + CASE WHEN is_active THEN 20 ELSE 0 END
+                + CASE WHEN size > 0 THEN 20 ELSE 0 END AS DOUBLE) AS community_health_score,
+            *
+        FROM kept""")
 
 
 @register(
     "pipeline_trend_gold",
     oracle=_trend_gold_oracle(),
-    doc="run_trend_pipeline (dfp:14-173): bronze→silver→7 gold tables against a MedallionStore; returns the exact-integer projection of gold.tech_metrics.",
+    doc="run_trend_pipeline (dfp:14-173): bronze→silver→7 gold tables against a MedallionStore; returns the exact columns of gold.tech_metrics (counts, µ-unit scores, labels, five ranks).",
 )
 def pipeline_trend_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stacktrend_spark.pipelines.fixtures import AS_OF_DATE, bronze_repos
@@ -250,22 +245,7 @@ def pipeline_trend_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = MedallionStore(_tmpdir(prefix="trend_store_"))
     out = run_trend_pipeline(spark, store, bronze_repos(spark), AS_OF_DATE)
-    tm = out["gold.tech_metrics"]
-    return tm.select(
-        "technology_category",
-        *[
-            F.col(c).cast("long").alias(c)
-            for c in (
-                "total_repositories",
-                "total_stars",
-                "total_forks",
-                "total_watchers",
-                "active_repositories",
-                "license_diversity_count",
-                "popularity_rank",
-            )
-        ],
-    ).orderBy("technology_category")
+    return exact_columns(out["gold.tech_metrics"]).orderBy("technology_category")
 
 
 def _personal_gold_oracle() -> str:

@@ -73,6 +73,24 @@ def spark_module():
 
 
 @pytest.fixture(scope="session")
+def registry_frames():
+    """Every registered query's frame at sf0.001 — or the exception its
+    build raised — built once per session for the whole-registry sweeps
+    (output types, parity audit): several builds execute work eagerly
+    (streaming availableNow runs, ranking checkpoints, the pipelines)."""
+    from stacktrend_spark.plans.registry import all_queries
+
+    spark = _live_spark()
+    frames: dict[str, object] = {}
+    for name, spec in all_queries().items():
+        try:
+            frames[name] = spec.fn(spark, SF_SMOKE)
+        except Exception as e:  # noqa: BLE001 — each sweep reports it
+            frames[name] = e
+    return frames
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

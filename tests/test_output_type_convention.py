@@ -23,7 +23,9 @@ bare gate on a query emitting it at both SFs), then widening here.
 
 Slow tier: schema resolution is lazy for batch plans (analysis only)
 but the streaming mirrors execute an availableNow run to produce
-their batch DataFrame (~4 min total at sf0.001).
+their batch DataFrame; the frames come from the session's shared
+``registry_frames`` build (tests/conftest.py), which the parity audit
+reuses.
 """
 
 from __future__ import annotations
@@ -31,11 +33,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
-from stacktrend_spark.plans.registry import all_queries
-
 pytestmark = pytest.mark.slow
-
-SF_SMOKE = "/root/testdata/sf0.001"
 
 #: exactly the types the strict-bare comparator canon provably
 #: handles: integers (canon → int64/float64), doubles (positional-NaN
@@ -53,11 +51,12 @@ SAFE_TYPES = (
 )
 
 
-def test_all_query_outputs_in_safe_emit_set(spark):
+def test_all_query_outputs_in_safe_emit_set(registry_frames):
     bad: list[str] = []
-    for name, spec in all_queries().items():
-        schema = spec.fn(spark, SF_SMOKE).schema
-        for field in schema.fields:
+    for name, df in registry_frames.items():
+        if isinstance(df, Exception):
+            raise df
+        for field in df.schema.fields:
             if not isinstance(field.dataType, SAFE_TYPES):
                 bad.append(
                     f"{name}.{field.name}: {field.dataType.simpleString()}"

@@ -11,8 +11,8 @@ from __future__ import annotations
 from tools.parity_audit import audit_oracle, audit_plan, run_audit
 
 
-def test_no_engine_dependent_math_on_hashed_surfaces(spark):
-    problems = run_audit("/root/testdata/sf0.001")
+def test_no_engine_dependent_math_on_hashed_surfaces(registry_frames, sf_dir):
+    problems = run_audit(sf_dir, frames=registry_frames)
     assert problems == [], "\n".join(problems)
 
 

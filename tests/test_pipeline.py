@@ -127,6 +127,22 @@ def test_gold_tables_run(silver):
     gold.adoption_matrix(silver, AS_OF_DATE).count()  # may be 0 rows; must run
 
 
+def test_gold_degrades_on_zero_stars_and_empty_silver(silver):
+    """Shares over a partition whose star sum is 0, and ratios over an
+    empty silver, are NULL: under ANSI mode a zero divisor would abort
+    the whole refresh."""
+    zero = silver.withColumn("stargazers_count", F.lit(0).cast("long"))
+    for df in (
+        gold.trend_daily(zero),
+        gold.lang_stats(zero),
+        gold.market_pulse(silver.limit(0), AS_OF_DATE),
+    ):
+        df.write.format("noop").mode("overwrite").save()
+    assert gold.trend_daily(zero).filter("market_share IS NOT NULL").count() == 0
+    assert gold.lang_stats(zero).filter("star_share IS NOT NULL").count() == 0
+    assert gold.market_pulse(silver.limit(0), AS_OF_DATE).first()["market_activity_ratio"] is None
+
+
 def test_trend_daily_lag_with_history(silver):
     today = gold.trend_daily(silver)
     history = today.withColumn("partition_date", F.lit("2025-07-31")).withColumn(

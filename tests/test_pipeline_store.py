@@ -110,22 +110,23 @@ def store_digests(spark, root: str) -> dict[str, tuple[str, str, int, str]]:
     return out
 
 
-#: digests of the Column-DSL builders' output, which the SQL-text
-#: builders reproduce exactly
+#: bronze and silver: digests of the Column-DSL builders' output, which
+#: the SQL-text builders reproduce exactly; gold: the exact-arithmetic
+#: formulas the gold_* oracles check (pipelines/gold.py docstring)
 STORE_DIGESTS: dict[str, tuple[str, str, int, str]] = {
     'bronze.github_my_activity': ('struct<repository_id:bigint,activity_type:string,activity_id:string,author_login:string,activity_date:timestamp,title:string,additions:bigint,deletions:bigint,changed_files:bigint,state:string,ingestion_timestamp:timestamp,partition_date:date>', 'repository_id,activity_type,activity_id', 800, '-182701470790873182483'),
     'bronze.github_my_repos': ('struct<repository_id:bigint,name:string,full_name:string,owner_login:string,owner_type:string,description:string,created_at:timestamp,updated_at:timestamp,pushed_at:timestamp,language:string,stargazers_count:bigint,watchers_count:bigint,forks_count:bigint,open_issues_count:bigint,size:bigint,default_branch:string,topics:array<string>,license_name:string,has_wiki:boolean,has_pages:boolean,archived:boolean,disabled:boolean,ingestion_timestamp:timestamp,partition_date:date>', 'repository_id', 120, '67460606409353172095'),
     'bronze.github_repos': ('struct<repository_id:bigint,name:string,full_name:string,owner_login:string,owner_type:string,description:string,created_at:timestamp,updated_at:timestamp,pushed_at:timestamp,language:string,stargazers_count:bigint,watchers_count:bigint,forks_count:bigint,open_issues_count:bigint,size:bigint,default_branch:string,topics:array<string>,license_name:string,has_wiki:boolean,has_pages:boolean,archived:boolean,disabled:boolean,ingestion_timestamp:timestamp,partition_date:date>', '', 400, '59392071963790239633'),
-    'gold.adoption_matrix': ('struct<tech_primary:string,tech_secondary:string,co_occurrence_count:bigint,correlation_score:double,ecosystem_strength:string,partition_date:string>', 'co_occurrence_count,ecosystem_strength,partition_date', 78, '38758141762161098009'),
+    'gold.adoption_matrix': ('struct<tech_primary:string,tech_secondary:string,co_occurrence_count:bigint,correlation_score:double,ecosystem_strength:string,partition_date:string>', 'co_occurrence_count,ecosystem_strength,partition_date', 78, '19471579015454749528'),
     'gold.development_velocity': ('struct<repository_id:bigint,total_commits:bigint,total_issues:bigint,total_releases:bigint,lines_added:bigint,lines_deleted:bigint,files_changed:bigint,commit_frequency:double,development_velocity:double,activity_trend:string,projected_annual_commits:double,measurement_date:string,partition_date:string>', 'measurement_date,partition_date', 104, '56216032736525241217'),
-    'gold.lang_stats': ('struct<primary_language:string,repo_count:bigint,total_stars:bigint,avg_quality:double,active_repos:bigint,star_share:double,language_rank:int,adoption_stage:string>', 'repo_count,language_rank,adoption_stage', 8, '1605870340278208596'),
-    'gold.market_pulse': ('struct<total_repositories:bigint,total_stars:bigint,avg_quality_score:double,avg_health_score:double,active_repositories:bigint,categories_tracked:bigint,market_activity_ratio:double,measurement_date:string>', 'total_repositories,categories_tracked,measurement_date', 1, '5366366836312207484'),
-    'gold.portfolio_overview': ('struct<total_repositories:bigint,total_stars:bigint,total_forks:bigint,active_repositories:bigint,avg_quality_score:double,n_categories:bigint,n_languages:bigint,primary_technologies:array<string>,primary_languages:array<string>,portfolio_diversity_score:double,activity_level:string,measurement_date:string,partition_date:string>', 'total_repositories,n_categories,n_languages,primary_technologies,primary_languages,activity_level,measurement_date,partition_date', 1, '-7122520542756271663'),
+    'gold.lang_stats': ('struct<primary_language:string,repo_count:bigint,total_stars:bigint,avg_quality:double,active_repos:bigint,star_share:double,language_rank:int,adoption_stage:string>', 'repo_count,language_rank,adoption_stage', 8, '-1612831954033905563'),
+    'gold.market_pulse': ('struct<total_repositories:bigint,total_stars:bigint,avg_quality_score:double,avg_health_score:double,active_repositories:bigint,categories_tracked:bigint,market_activity_ratio:double,measurement_date:string>', 'total_repositories,categories_tracked,measurement_date', 1, '1941479016886502676'),
+    'gold.portfolio_overview': ('struct<total_repositories:bigint,total_stars:bigint,total_forks:bigint,active_repositories:bigint,avg_quality_score:double,n_categories:bigint,n_languages:bigint,primary_technologies:array<string>,primary_languages:array<string>,portfolio_diversity_score:double,activity_level:string,measurement_date:string,partition_date:string>', 'total_repositories,n_categories,n_languages,primary_technologies,primary_languages,activity_level,measurement_date,partition_date', 1, '8754268386359354322'),
     'gold.repo_health_dashboard': ('struct<repository_id:bigint,repository_name:string,technology_category:string,stargazers_count:bigint,commits_30d:bigint,issues_30d:bigint,development_velocity:double,health_grade:string,health_score:double,activity_status:string,attention_needed:boolean,recommended_actions:array<string>,measurement_date:string,partition_date:string>', 'commits_30d,issues_30d,development_velocity,health_grade,health_score,activity_status,attention_needed,recommended_actions,recommended_actions.[],measurement_date,partition_date', 114, '-72529858224771828201'),
-    'gold.repo_ranks': ('struct<repository_id:bigint,name:string,technology_category:string,stargazers_count:bigint,quality_score:double,repo_momentum:double,category_quality_rank:int,global_momentum_rank:int,global_star_rank:int,partition_date:date>', 'category_quality_rank,global_momentum_rank,global_star_rank', 384, '-4971375484434895051'),
-    'gold.tech_health': ('struct<technology_category:string,repo_count:bigint,avg_health:double,star_dispersion:double,active_repos:bigint,license_variety:bigint,avg_open_issues:double,health_status:string,abandonment_risk:string>', 'repo_count,license_variety,health_status,abandonment_risk', 9, '19101165463215317241'),
-    'gold.tech_metrics': ('struct<technology_category:string,total_repositories:bigint,total_stars:bigint,total_forks:bigint,total_watchers:bigint,avg_stars_per_repo:double,avg_forks_per_repo:double,avg_community_health:double,avg_quality_score:double,avg_star_velocity:double,avg_commit_frequency:double,active_repositories:bigint,avg_repository_age_days:double,license_diversity_count:bigint,active_repositories_percentage:double,momentum_score:double,lifecycle_stage:string,momentum_trend:string,popularity_rank:int,growth_rank:int,health_rank:int,momentum_rank:int,overall_rank:int,single_maintainer_risk:double,license_diversity_score:double,sustainability_score:double>', 'total_repositories,license_diversity_count,lifecycle_stage,momentum_trend,popularity_rank,growth_rank,health_rank,momentum_rank,overall_rank,single_maintainer_risk,license_diversity_score', 9, '-9870866760823422571'),
-    'gold.trend_daily': ('struct<technology_category:string,partition_date:date,repository_count:bigint,daily_total_stars:bigint,avg_quality:double,active_count:bigint,market_share:double,momentum_change:double,rank_change:bigint>', 'repository_count,momentum_change,rank_change', 9, '27927509099102511006'),
+    'gold.repo_ranks': ('struct<repository_id:bigint,name:string,technology_category:string,stargazers_count:bigint,quality_score:double,repo_momentum:double,category_quality_rank:int,global_momentum_rank:int,global_star_rank:int,partition_date:date>', 'category_quality_rank,global_momentum_rank,global_star_rank', 384, '127228662983269400789'),
+    'gold.tech_health': ('struct<technology_category:string,repo_count:bigint,avg_health:double,star_dispersion:double,active_repos:bigint,license_variety:bigint,avg_open_issues:double,health_status:string,abandonment_risk:string>', 'repo_count,license_variety,health_status,abandonment_risk', 9, '22850396359951678336'),
+    'gold.tech_metrics': ('struct<technology_category:string,total_repositories:bigint,total_stars:bigint,total_forks:bigint,total_watchers:bigint,avg_stars_per_repo:double,avg_forks_per_repo:double,avg_community_health:double,avg_quality_score:double,avg_star_velocity:double,avg_commit_frequency:double,active_repositories:bigint,avg_repository_age_days:double,license_diversity_count:bigint,active_repositories_percentage:double,momentum_score:double,momentum_score_micro:bigint,lifecycle_stage:string,momentum_trend:string,popularity_rank:int,growth_rank:int,health_rank:int,momentum_rank:int,overall_rank:int,single_maintainer_risk:double,license_diversity_score:double,sustainability_score:double,sustainability_score_micro:bigint>', 'total_repositories,license_diversity_count,lifecycle_stage,momentum_trend,popularity_rank,growth_rank,health_rank,momentum_rank,overall_rank,single_maintainer_risk,license_diversity_score', 9, '-1406999169036529824'),
+    'gold.trend_daily': ('struct<technology_category:string,partition_date:date,repository_count:bigint,daily_total_stars:bigint,avg_quality:double,active_count:bigint,market_share:double,momentum_change:double,rank_change:bigint>', 'repository_count,momentum_change,rank_change', 9, '4480871116082421044'),
     'silver.github_curated': ('struct<repository_id:bigint,name:string,name_clean:string,full_name:string,owner_login:string,owner_type:string,description_clean:string,primary_language:string,language_distribution:map<string,double>,topics_standardized:array<string>,keywords:array<string>,technology_category:string,technology_subcategory:string,classification_confidence:double,license_category:string,stargazers_count:bigint,watchers_count:bigint,forks_count:bigint,open_issues_count:bigint,size:bigint,days_since_push:int,days_since_creation:int,is_active:boolean,star_velocity_30d:double,commit_frequency_30d:double,community_health_score:double,quality_score:double,data_quality_flags:array<string>,processed_timestamp:timestamp,partition_date:date>', 'keywords,technology_category,technology_subcategory,classification_confidence,license_category,community_health_score,quality_score,data_quality_flags,partition_date', 384, '-95167367145851216085'),
     'silver.github_my_activity_metrics': ('struct<repository_id:bigint,total_commits:bigint,total_issues:bigint,total_releases:bigint,lines_added:bigint,lines_deleted:bigint,files_changed:bigint,last_activity_date:timestamp,measurement_period:string,commit_frequency:double,development_velocity:double,activity_trend:string,partition_date:string>', 'measurement_period,development_velocity,activity_trend,partition_date', 269, '-21183078392745003695'),
     'silver.github_my_portfolio': ('struct<repository_id:bigint,name:string,name_clean:string,full_name:string,owner_login:string,owner_type:string,description_clean:string,primary_language:string,language_distribution:map<string,double>,topics_standardized:array<string>,keywords:array<string>,technology_category:string,technology_subcategory:string,classification_confidence:double,license_category:string,stargazers_count:bigint,watchers_count:bigint,forks_count:bigint,open_issues_count:bigint,size:bigint,days_since_push:int,days_since_creation:int,is_active:boolean,star_velocity_30d:double,commit_frequency_30d:double,community_health_score:double,quality_score:double,data_quality_flags:array<string>,processed_timestamp:timestamp,partition_date:date>', 'keywords,technology_category,technology_subcategory,classification_confidence,license_category,community_health_score,quality_score,data_quality_flags,partition_date', 114, '-63639995494424195543'),

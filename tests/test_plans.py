@@ -276,10 +276,9 @@ def test_tech_metrics_micro_scores_stay_bigint(spark, sf_dir):
     df = all_queries()["gold_tech_metrics"].fn(spark, sf_dir)
     types = dict(df.dtypes)
     for c in (
-        "revenue_cents",
-        "avg_price_micro",
+        "total_watchers",
         "momentum_score_micro",
-        "concentration_risk_micro",
+        "sustainability_score_micro",
     ):
         assert types[c] == "bigint", (c, types[c])
 

@@ -189,8 +189,13 @@ def audit_plan(name: str, plan_text: str) -> list[str]:
     return problems
 
 
-def run_audit(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
-    """Audit every registered oracle AND every query's analyzed plan."""
+def run_audit(sf_dir: str = "/root/testdata/sf0.001", frames=None) -> list[str]:
+    """Audit every registered oracle AND every query's analyzed plan.
+
+    ``frames`` maps each query name to its frame already built at
+    ``sf_dir``, or to the exception its build raised; without it every
+    frame is built here.
+    """
     import duckdb
 
     from stacktrend_spark.plans.registry import all_queries
@@ -207,7 +212,7 @@ def run_audit(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir.rstrip('/')}/{t}.parquet'"
         )
-    spark = get_spark("parity_audit")
+    spark = get_spark("parity_audit") if frames is None else None
     for name, spec in specs.items():
         if name in ALLOWLIST:
             continue
@@ -218,7 +223,9 @@ def run_audit(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
             # would run the pipelines as a side effect for zero value
             continue
         try:
-            df = spec.fn(spark, sf_dir)
+            df = spec.fn(spark, sf_dir) if frames is None else frames[name]
+            if isinstance(df, Exception):
+                raise df
             plan = df._jdf.queryExecution().analyzed().toString()
         except Exception as e:  # noqa: BLE001
             problems.append(f"{name}: could not analyze plan: {type(e).__name__}: {e}")
