@@ -18,9 +18,10 @@ loudly instead of returning wrong ranks.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 
 #: monotonically_increasing_id packs the row index in the low 33 bits
 _MID_OFFSET_MASK = (1 << 33) - 1
@@ -31,10 +32,6 @@ def release_pinned() -> int:
     changes only together with the benchmark: the operators no longer
     hold anything that needs releasing."""
     return 0
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def _ranged(
@@ -70,7 +67,7 @@ def global_rank_scalable(
     """Exact global row_number by ``order_cols`` without a
     single-partition window. ``order_cols`` must define a total order
     (include a unique tiebreaker) for a deterministic result."""
-    local = _checkpoint(_tagged(df, order_cols, num_partitions))
+    local = local_checkpoint(_tagged(df, order_cols, num_partitions))
     counts = sorted(
         (r["_pid"], r["_n"])
         for r in local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
@@ -133,7 +130,7 @@ def global_running_sum_scalable(
         # one shuffle, one sort, one checkpoint (vocab_coverage_curve
         # shape; r10 review)
         local = local.withColumn("_lrank", F.row_number().over(spec))
-    local = _checkpoint(local)
+    local = local_checkpoint(local)
     partials = sorted(
         (r["_pid"], r["_s"], r["_n"], r["_nn"])
         for r in local.groupBy("_pid")
@@ -209,7 +206,7 @@ def global_running_max_scalable(
         .orderBy(*order_cols)
         .rowsBetween(W.unboundedPreceding, upper)
     )
-    local = _checkpoint(
+    local = local_checkpoint(
         _ranged(df, order_cols, num_partitions)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_lmax", F.max(value_col).over(w))

@@ -14,6 +14,11 @@ with partition-aligned file skipping.
 dimension when the reference does) so daily reruns only touch one
 partition; readers filter on partition_date and get directory-level
 pruning for free.
+
+Table metadata stays with the store: on the parquet backend a read of
+a table this store wrote reuses the schema Spark inferred for it
+before, instead of running a footer-read job to rediscover what the
+store itself just wrote (``MedallionStore.read``).
 """
 
 from __future__ import annotations
@@ -22,7 +27,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.delta_backend import (
     delta_available,
     merge_into_delta,
@@ -37,6 +44,22 @@ from stacktrend_spark.operators.merge import (
 LAYERS = ("bronze", "silver", "gold")
 
 
+def _partition_dirs(path: str) -> tuple[str, ...]:
+    """Relative paths of every ``col=value`` directory under a table,
+    sorted; a listing on the driver, no Spark job."""
+    out: list[str] = []
+    pending = [""]
+    while pending:
+        rel = pending.pop()
+        with os.scandir(os.path.join(path, rel)) as entries:
+            for e in entries:
+                if e.is_dir() and "=" in e.name and not e.name.startswith(("_", ".")):
+                    sub = os.path.join(rel, e.name)
+                    pending.append(sub)
+                    out.append(sub)
+    return tuple(sorted(out))
+
+
 class MedallionStore:
     """``backend`` is "delta" when delta-spark is importable (storage
     merges run as true MERGE INTO — operators/delta_backend.py), else
@@ -48,6 +71,12 @@ class MedallionStore:
         self.backend = backend or ("delta" if delta_available() else "parquet")
         if self.backend not in ("delta", "parquet"):
             raise ValueError(f"unknown backend {self.backend!r}")
+        # parquet backend, per table path: the schema of the frame last
+        # written there, and the schema Spark inferred on the first read
+        # after a write, with the (written schema, partition dirs) key
+        # it was inferred under
+        self._written: dict[str, StructType] = {}
+        self._inferred: dict[str, tuple[tuple, StructType]] = {}
 
     def path(self, layer: str, table: str) -> str:
         if layer not in LAYERS:
@@ -58,7 +87,26 @@ class MedallionStore:
         return os.path.isdir(self.path(layer, table))
 
     def read(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
-        return spark.read.format(self.backend).load(self.path(layer, table))
+        """The stored table. A parquet table this store wrote is read
+        with the schema Spark inferred the last time its written schema
+        and its partition directories were the same: no footer-read job,
+        and partition columns keep their inferred types. A new partition
+        value, a new written schema, or a table written elsewhere is
+        inferred (once per key); the Delta path always resolves through
+        its log. The reuse assumes no other writer replaces a table with
+        another schema behind this store's back."""
+        path = self.path(layer, table)
+        reader = spark.read.format(self.backend)
+        written = self._written.get(path)
+        if written is None:
+            return reader.load(path)
+        key = (written, _partition_dirs(path))
+        recorded = self._inferred.get(path)
+        if recorded is not None and recorded[0] == key:
+            return reader.schema(recorded[1]).load(path)
+        df = reader.load(path)
+        self._inferred[path] = (key, df.schema)
+        return df
 
     def overwrite(
         self, df: DataFrame, layer: str, table: str, partition_by: list[str] | None = None
@@ -77,14 +125,22 @@ class MedallionStore:
         so the same code is right at sf0.001 and at 100 TB (r13
         optimization: the per-write task-commit overhead of 32 near-
         empty files dominated the medallion pipelines' wall time).
+
+        On the parquet backend a successful write records the frame's
+        schema, which keys ``read``'s schema reuse.
         """
+        path = self.path(layer, table)
+        self._written.pop(path, None)
+        written = df.schema if self.backend == "parquet" else None
         df = df.hint("rebalance", *partition_by) if partition_by else df.hint("rebalance")
         writer = df.write.format(self.backend).mode("overwrite")
         if self.backend == "delta":
             writer = writer.option("overwriteSchema", "true")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(self.path(layer, table))
+        writer.save(path)
+        if written is not None:
+            self._written[path] = written
 
     def upsert(
         self,
@@ -152,7 +208,7 @@ class MedallionStore:
                 merged = merge_full_sync(target, df, keys, sync_scope)
             else:
                 raise ValueError(f"unknown merge policy {policy!r}")
-        # parquet dirs can't be read and overwritten in one job —
-        # materialize then rewrite (Delta MERGE removes this at scale)
-        merged = merged.localCheckpoint(eager=True)
+            # parquet dirs can't be read and overwritten in one job —
+            # materialize then rewrite (Delta MERGE removes this at scale)
+            merged = local_checkpoint(merged)
         self.overwrite(merged, layer, table, partition_by)

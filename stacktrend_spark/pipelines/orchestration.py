@@ -18,23 +18,38 @@ Failure semantics mirror the trigger chain: a stage raising stops the
 run before any later layer is written (dfp's dependsOn blocks the
 downstream trigger), and each stage reads back what the previous stage
 WROTE (not the in-memory frame), so reruns resume from storage state.
+Writes of one layer that do not read each other run concurrently (the
+gold tables; the personal run's two bronze and two silver tables); the
+next layer starts once all of them have finished.
 
 Scale notes: every persisted layer is partitioned by partition_date
-(daily reruns rewrite one partition; readers prune on it), silver is
-written once and each gold table re-reads that single stored copy, and
-upserts go through the store's MERGE path (Delta MERGE INTO when
-available).
+(daily reruns rewrite one partition; readers prune on it), the silver
+plan runs once (one checkpoint feeds both the quarantine and the
+curated write), silver is written once and each gold table re-reads
+that single stored copy, the gold tables write concurrently, one
+thread per table, and upserts go through the store's MERGE path (Delta
+MERGE INTO when available). The read-backs cost no schema discovery
+on the parquet store: it reuses the schema it recorded for a table it
+wrote (``MedallionStore.read``).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from stacktrend_spark.functions.sqltext import iso_date
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.pipelines import gold, personal
 from stacktrend_spark.pipelines.classifier import Classifier, RuleBasedClassifier
 from stacktrend_spark.pipelines.medallion import MedallionStore
-from stacktrend_spark.pipelines.silver import build_silver
+from stacktrend_spark.pipelines.silver import build_silver, split_quality
+
+T = TypeVar("T")
 
 #: trend gold tables in the reference's s2g emit order (SURVEY §2.11)
 TREND_GOLD_TABLES = (
@@ -85,22 +100,18 @@ def run_trend_pipeline(
         else None
     )
     result = build_silver(bronze, classifier, as_of_date, existing_silver=existing)
-    # quarantine first: its plan (like silver's) lazily reads the stored
-    # silver, so it must flush before github_curated's directory is
-    # replaced; the curated frame itself is materialized before the
-    # self-referential overwrite (Delta MERGE removes this read-rewrite
-    # hazard at scale; see medallion.upsert)
-    store.overwrite(result.quarantined, "silver", "github_quarantine")
-    silver_df = result.silver
-    if existing is not None:
-        silver_df = silver_df.localCheckpoint(eager=True)
+    # the flagged rows are materialized once and both writes read that
+    # checkpoint: the silver plan runs once, and neither write reads the
+    # stored silver that github_curated's overwrite replaces (Delta
+    # MERGE removes this read-rewrite hazard at scale; see
+    # medallion.upsert)
+    silver_df, quarantined = split_quality(local_checkpoint(result.flagged))
+    store.overwrite(quarantined, "silver", "github_quarantine")
     store.overwrite(
         silver_df, "silver", "github_curated", partition_by=["partition_date"]
     )
     silver = store.read(spark, "silver", "github_curated")
     out["silver.github_curated"] = silver
-    # read back from storage (like every other layer): the lazy
-    # quarantine plan still references the PRE-overwrite silver files
     out["silver.github_quarantine"] = store.read(spark, "silver", "github_quarantine")
 
     # Stage 3 — silver_to_gold (dependsOn stage 2): seven tables off
@@ -129,22 +140,38 @@ def _write_gold_concurrently(
     directory, so the writes have no mutual dependency — only the
     driver's sequential ``for`` loop serialized them (optimization
     guide §2.6: actions are only sequential because driver code calls
-    them sequentially). A small pool keeps 3 write jobs in flight so
-    one job's task tail back-fills executors freed by another; the
-    dependency-ordered stages around this fan-out are untouched.
-    Job descriptions are thread-local, so each write labels itself."""
-    from concurrent.futures import ThreadPoolExecutor
+    them sequentially). Each table gets its own thread: the writes are
+    one- to five-job plans over a small silver, bound by per-job fixed
+    cost, so every job is in flight at once and one job's task tail
+    back-fills executors freed by another (widths compared in
+    OPTIMIZATION_r15.md section 4); the dependency-ordered stages
+    around this fan-out are untouched. Each write runs with the
+    caller's local properties (job group, scheduler pool), so
+    cancelling the caller's group cancels the writes too, and labels
+    itself with its own job description."""
 
-    def _write(item: tuple[str, DataFrame]) -> None:
-        name, df = item
-        spark.sparkContext.setJobDescription(f"gold overwrite: {name}")
-        store.overwrite(df, "gold", name)
+    def writer(name: str, df: DataFrame) -> Callable[[], None]:
+        def write() -> None:
+            spark.sparkContext.setJobDescription(f"gold overwrite: {name}")
+            store.overwrite(df, "gold", name)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        # list() so the first raised exception propagates (a failed
-        # gold write must fail the run, same as the sequential loop)
-        list(pool.map(_write, gold_frames.items()))
+        return write
+
+    _concurrently(spark, [writer(name, df) for name, df in gold_frames.items()])
     spark.sparkContext.setJobDescription(None)
+
+
+def _concurrently(spark: SparkSession, calls: list[Callable[[], T]]) -> list[T]:
+    """Run independent calls on one thread each; their results, in order.
+
+    Each call runs under its own copy of the caller's local properties
+    (``inheritable_thread_target``: job group, scheduler pool), so a
+    call's job description stays its own. Every call finishes before
+    this returns or raises the first failure in call order, so no later
+    stage starts while one of these is still writing."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+        return [f.result() for f in futures]
 
 
 def run_personal_pipeline(
@@ -163,30 +190,40 @@ def run_personal_pipeline(
     classifier = classifier or RuleBasedClassifier()
     out: dict[str, DataFrame] = {}
 
-    store.upsert(
-        spark,
-        bronze_repos,
-        "bronze",
-        "github_my_repos",
-        keys=["repository_id"],
-        partition_by=["partition_date"],
-    )
-    store.overwrite(
-        bronze_activity, "bronze", "github_my_activity", partition_by=["partition_date"]
-    )
-    repos = store.read(spark, "bronze", "github_my_repos")
-    activity = store.read(spark, "bronze", "github_my_activity")
+    def ingest_repos() -> DataFrame:
+        store.upsert(
+            spark,
+            bronze_repos,
+            "bronze",
+            "github_my_repos",
+            keys=["repository_id"],
+            partition_by=["partition_date"],
+        )
+        return store.read(spark, "bronze", "github_my_repos")
+
+    def ingest_activity() -> DataFrame:
+        store.overwrite(
+            bronze_activity, "bronze", "github_my_activity", partition_by=["partition_date"]
+        )
+        return store.read(spark, "bronze", "github_my_activity")
+
+    repos, activity = _concurrently(spark, [ingest_repos, ingest_activity])
     out["bronze.github_my_repos"] = repos
     out["bronze.github_my_activity"] = activity
 
-    result = build_silver(repos, classifier, as_of_date)
-    store.overwrite(
-        result.silver, "silver", "github_my_portfolio", partition_by=["partition_date"]
-    )
-    silver = store.read(spark, "silver", "github_my_portfolio")
-    metrics = personal.activity_metrics(activity, as_of_date)
-    store.overwrite(metrics, "silver", "github_my_activity_metrics")
-    metrics = store.read(spark, "silver", "github_my_activity_metrics")
+    def portfolio() -> DataFrame:
+        result = build_silver(repos, classifier, as_of_date)
+        store.overwrite(
+            result.silver, "silver", "github_my_portfolio", partition_by=["partition_date"]
+        )
+        return store.read(spark, "silver", "github_my_portfolio")
+
+    def activity_metrics() -> DataFrame:
+        metrics = personal.activity_metrics(activity, as_of_date)
+        store.overwrite(metrics, "silver", "github_my_activity_metrics")
+        return store.read(spark, "silver", "github_my_activity_metrics")
+
+    silver, metrics = _concurrently(spark, [portfolio, activity_metrics])
     out["silver.github_my_portfolio"] = silver
     out["silver.github_my_activity_metrics"] = metrics
 

@@ -14,6 +14,7 @@ SURVEY §4 anti-patterns fixed:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,8 +31,21 @@ CONFIDENCE_THRESHOLD = 0.8
 
 @dataclass
 class SilverResult:
-    silver: DataFrame
-    quarantined: DataFrame  # rows dropped by quality gates (b2s:795-809)
+    """``flagged`` holds every cleaned, classified and scored row with
+    its ``data_quality_flags``; ``silver`` and ``quarantined`` are its
+    two halves (``split_quality``). A caller that writes both halves
+    materializes ``flagged`` once and splits that instead, so the
+    silver plan runs once."""
+
+    flagged: DataFrame
+
+    @cached_property
+    def silver(self) -> DataFrame:
+        return split_quality(self.flagged)[0]
+
+    @cached_property
+    def quarantined(self) -> DataFrame:
+        return split_quality(self.flagged)[1]
 
 
 def _clean(bronze: DataFrame, as_of_date: str) -> DataFrame:
@@ -108,20 +122,38 @@ def _metrics(df: DataFrame) -> DataFrame:
     return df.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
-def _validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Quality gates (b2s:795-809): flag, then quarantine
-    missing-name / negative-star rows."""
-    flagged = df.withColumn(
+def _flag(df: DataFrame) -> DataFrame:
+    """Quality flags (b2s:795-809); the first failing check names the
+    row's flag."""
+    return df.withColumn(
         "data_quality_flags",
         F.expr(
             "CASE WHEN name IS NULL OR trim(name) = '' THEN array('missing_name')"
+            " WHEN stargazers_count IS NULL THEN array('missing_stars')"
             " WHEN stargazers_count < 0 THEN array('negative_stars')"
             " WHEN community_health_score < 0 THEN array('invalid_health_score')"
             " ELSE CAST(array() AS ARRAY<STRING>) END"
         ),
     )
-    bad = "array_contains(data_quality_flags, 'missing_name') OR stargazers_count < 0"
-    return flagged.filter(f"NOT ({bad})"), flagged.filter(bad)
+
+
+#: the silver gate (b2s:808: a name and ``stargazers_count >= 0``),
+#: NULL-safe: a row with NULL stars fails it rather than evaluating to
+#: NULL, which both ``filter(gate)`` and ``filter(NOT gate)`` would drop
+_SILVER_GATE = (
+    "coalesce(NOT array_contains(data_quality_flags, 'missing_name')"
+    " AND stargazers_count >= 0, false)"
+)
+
+
+def split_quality(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(silver, quarantined) of a flagged frame: every row lands in
+    exactly one of them; silver takes the 29-column projection
+    (b2s:822-853), quarantine keeps every column."""
+    return (
+        flagged.filter(_SILVER_GATE).selectExpr(*SILVER_COLUMNS),
+        flagged.filter(f"NOT {_SILVER_GATE}"),
+    )
 
 
 def smart_split(
@@ -163,15 +195,13 @@ def build_silver(
     existing_silver: DataFrame | None = None,
 ) -> SilverResult:
     """Full bronze→silver: clean → smart split → classify the needed
-    subset → broadcast-apply labels → union → metrics → quality gates →
-    the 29-column silver projection (b2s:822-853)."""
+    subset → broadcast-apply labels → union → metrics → quality flags;
+    the result splits into silver and quarantine."""
     needs, metrics_only, reusable = smart_split(bronze, existing_silver)
     fresh_labels = classifier.classify(needs)
     labels = fresh_labels.unionByName(reusable)
     labeled = apply_classification(bronze, labels)
-    cleaned = _metrics(_clean(labeled, as_of_date))
-    good, bad = _validate(cleaned)
-    return SilverResult(silver=good.selectExpr(*SILVER_COLUMNS), quarantined=bad)
+    return SilverResult(flagged=_flag(_metrics(_clean(labeled, as_of_date))))
 
 
 def observe_quality(df: DataFrame, name: str = "silver_quality"):

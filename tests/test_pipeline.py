@@ -13,7 +13,11 @@ from stacktrend_spark.pipelines import fixtures, gold, personal
 from stacktrend_spark.pipelines.classifier import RuleBasedClassifier
 from stacktrend_spark.pipelines.fixtures import AS_OF_DATE
 from stacktrend_spark.pipelines.medallion import MedallionStore
-from stacktrend_spark.pipelines.schemas import CATEGORIES, SILVER_COLUMNS
+from stacktrend_spark.pipelines.schemas import (
+    BRONZE_REPOS_SCHEMA,
+    CATEGORIES,
+    SILVER_COLUMNS,
+)
 from stacktrend_spark.pipelines.silver import build_silver, smart_split
 
 
@@ -39,6 +43,21 @@ def test_silver_schema_and_quarantine(silver, silver_result, bronze):
     assert silver.count() + n_bad == bronze.count()
     # quarantined rows are exactly the flagged ones
     assert silver.filter(F.array_contains("data_quality_flags", "missing_name")).count() == 0
+
+
+def test_null_stars_go_to_quarantine(spark):
+    """A row with NULL stars fails the silver gate (b2s:808,
+    ``stargazers_count >= 0``) and lands in quarantine flagged
+    ``missing_stars``: silver and quarantine partition the input."""
+    rows = fixtures.bronze_repos_rows(n=20)
+    named = [i for i, r in enumerate(rows) if r[1] and r[1].strip()][:3]
+    rows = [r[:10] + (None,) + r[11:] if i in named else r for i, r in enumerate(rows)]
+    bronze = spark.createDataFrame(rows, BRONZE_REPOS_SCHEMA)
+    res = build_silver(bronze, RuleBasedClassifier(), AS_OF_DATE)
+    assert res.silver.count() + res.quarantined.count() == 20
+    assert res.silver.filter("stargazers_count IS NULL").isEmpty()
+    flags = res.quarantined.filter("stargazers_count IS NULL").select("data_quality_flags")
+    assert [r[0] for r in flags.collect()] == [["missing_stars"]] * 3
 
 
 def test_silver_score_ranges(silver):

@@ -16,14 +16,26 @@
   Spark job.
 - ``test_bad_date_writes_nothing``: a malformed ``as_of_date`` fails
   both pipelines before the bronze MERGE touches the store.
+- ``test_read_reuses_recorded_schema`` and
+  ``test_reads_match_fresh_inference``: the store reads a table it
+  wrote with the schema Spark inferred for it before (no job), and
+  that read equals a fresh inferring read over every table both
+  pipelines write, through seeding, update, new-date and personal runs.
+- ``test_steady_state_job_budget``: an update trend cycle plus a
+  personal run, both warm, submit at most ``STEADY_STATE_JOB_BUDGET``
+  Spark jobs.
 """
 
 from __future__ import annotations
 
 import gc
+import uuid
+from functools import reduce
 
 import pytest
 from py4j.clientserver import ClientServerConnection
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stacktrend_spark.pipelines import fixtures, gold, personal
@@ -73,22 +85,31 @@ def _non_nullable(dt, path: str = "") -> list[str]:
     return out
 
 
-def store_digests(spark, root: str) -> dict[str, tuple[str, str, int, str]]:
-    store = _RecordingStore(root)
-    run_trend_pipeline(spark, store, fixtures.bronze_repos(spark), AS_OF_DATE)
-    # update cycle: 100 new repos plus every third seeded repo with more stars
-    new = [(r[0] + 300,) + r[1:] for r in fixtures.bronze_repos_rows(n=100, seed=7)]
+def _update_batch(spark, shift: int = 300, seed: int = 7, partition_date: str = AS_OF_DATE):
+    """An update cycle's bronze: 100 new repos (ids shifted past the
+    seeded ones) plus every third seeded repo with more stars."""
+    new = [(r[0] + shift,) + r[1:] for r in fixtures.bronze_repos_rows(n=100, seed=seed)]
     bumped = [r[:10] + (r[10] + 5,) + r[11:] for r in fixtures.bronze_repos_rows()[::3]]
-    batch = spark.createDataFrame(new + bumped, BRONZE_REPOS_SCHEMA)
-    run_trend_pipeline(spark, store, batch, AS_OF_DATE)
+    rows = [r[:-1] + (partition_date,) for r in new + bumped]
+    return spark.createDataFrame(rows, BRONZE_REPOS_SCHEMA)
+
+
+def _personal_run(spark, store, as_of_date: str = AS_OF_DATE) -> dict:
     ids = [r[0] for r in fixtures.bronze_repos_rows(n=120)]
-    run_personal_pipeline(
+    return run_personal_pipeline(
         spark,
         store,
         fixtures.bronze_repos(spark, n=120),
         fixtures.bronze_activity(spark, ids, n=800),
-        AS_OF_DATE,
+        as_of_date,
     )
+
+
+def store_digests(spark, root: str) -> dict[str, tuple[str, str, int, str]]:
+    store = _RecordingStore(root)
+    run_trend_pipeline(spark, store, fixtures.bronze_repos(spark), AS_OF_DATE)
+    run_trend_pipeline(spark, store, _update_batch(spark), AS_OF_DATE)
+    _personal_run(spark, store)
     out = {}
     for name in sorted(store.written):
         layer, table = name.split(".")
@@ -217,6 +238,116 @@ def test_bad_date_writes_nothing(spark, tmp_path, bad):
             spark, store, repos, fixtures.bronze_activity(spark, ids, n=50), bad
         )
     assert not root.exists()
+
+
+def _count_jobs(spark, action) -> int:
+    """Spark jobs submitted while ``action`` runs, counted under a job
+    group of their own. Every one of them must carry the group: the
+    gold fan-out's threads inherit it from the caller."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # the status tracker is fed by the listener bus: drain it first
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    drain()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    drain()
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_read_reuses_recorded_schema(spark, tmp_path):
+    """The first read after a write infers (a footer-read job); a read
+    under the same written schema and partition directories reuses that
+    schema and submits no job; a new partition value infers again."""
+    store = MedallionStore(str(tmp_path / "store"), backend="parquet")
+    bronze = fixtures.bronze_repos(spark, n=20)
+
+    def write(df):
+        store.overwrite(df, "bronze", "github_repos", partition_by=["partition_date"])
+
+    def read():
+        return store.read(spark, "bronze", "github_repos")
+
+    write(bronze)
+    assert _count_jobs(spark, read) >= 1
+    write(bronze)
+    assert _count_jobs(spark, read) == 0
+    assert read().schema["partition_date"].dataType == T.DateType()
+    write(bronze.unionByName(bronze.withColumn("partition_date", F.lit("2025-08-02"))))
+    assert _count_jobs(spark, read) >= 1
+    assert _count_jobs(spark, read) == 0
+    assert read().count() == 40
+
+
+def _json_rows(frames: dict[str, DataFrame]) -> DataFrame:
+    """Every table's rows as (table, JSON) pairs in one frame: map
+    columns cannot go through a set operation, their JSON can."""
+    return reduce(
+        DataFrame.unionAll,
+        (df.selectExpr(f"'{name}' AS t", "to_json(struct(*)) AS j") for name, df in frames.items()),
+    )
+
+
+def _assert_reads_match_inference(spark, store, out: dict) -> None:
+    """For every table a run wrote, ``store.read`` gives the schema and
+    the rows (``exceptAll`` both ways) of a fresh inferring read."""
+    ours, fresh = {}, {}
+    for name in out:
+        layer, table = name.split(".")
+        ours[name] = store.read(spark, layer, table)
+        fresh[name] = spark.read.format("parquet").load(store.path(layer, table))
+        assert ours[name].schema == fresh[name].schema, name
+    a, b = _json_rows(ours), _json_rows(fresh)
+    assert a.exceptAll(b).unionAll(b.exceptAll(a)).isEmpty()
+
+
+def test_reads_match_fresh_inference(spark, tmp_path):
+    root = str(tmp_path / "store")
+    store = MedallionStore(root, backend="parquet")
+    runs = [
+        lambda: run_trend_pipeline(spark, store, fixtures.bronze_repos(spark), AS_OF_DATE),
+        lambda: run_trend_pipeline(spark, store, _update_batch(spark), AS_OF_DATE),
+        # a new as_of_date: new bronze and silver partitions
+        lambda: run_trend_pipeline(
+            spark, store, _update_batch(spark, 400, 8, "2025-08-02"), "2025-08-02"
+        ),
+        lambda: _personal_run(spark, store),
+    ]
+    for run in runs:
+        _assert_reads_match_inference(spark, store, run())
+    # another store instance on the same root recorded nothing: it infers
+    other = MedallionStore(root, backend="parquet")
+    assert _count_jobs(spark, lambda: other.read(spark, "silver", "github_curated")) >= 1
+    _assert_reads_match_inference(spark, other, {"silver.github_curated": None})
+
+
+#: Spark jobs of one warm update trend cycle plus one warm personal run
+#: on the fixtures: 70 measured at 4 and at 8 cores, plus a margin. The
+#: code before the store recorded schemas ran 91, 40 of them gold
+#: writes outside the caller's job group: a footer-read job on every
+#: read-back, and the trend cycle's silver plan ran twice.
+STEADY_STATE_JOB_BUDGET = 74
+
+
+def test_steady_state_job_budget(spark, tmp_path):
+    store = MedallionStore(str(tmp_path / "store"), backend="parquet")
+    run_trend_pipeline(spark, store, fixtures.bronze_repos(spark), AS_OF_DATE)
+    run_trend_pipeline(spark, store, _update_batch(spark), AS_OF_DATE)
+    _personal_run(spark, store)
+    batch = _update_batch(spark, 400, 8)
+
+    def steady():
+        run_trend_pipeline(spark, store, batch, AS_OF_DATE)
+        _personal_run(spark, store)
+
+    n = _count_jobs(spark, steady)
+    assert n <= STEADY_STATE_JOB_BUDGET, n
 
 
 if __name__ == "__main__":
