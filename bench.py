@@ -375,12 +375,7 @@ def _noop(df) -> None:
 def measure(spark, name: str, fn, sf_dir: str | None) -> dict:
     """Time the frame ``fn(spark, sf_dir)``, built anew inside the timer
     and written through the noop sink under job group ``name``: one cold
-    run, then three warm runs whose median is the estimator.
-
-    Cached frames of earlier work are dropped first: several operators
-    persist() intermediates they cannot release, and a cache that grows
-    across a run makes later queries measure GC pressure."""
-    spark.catalog.clearCache()
+    run, then three warm runs whose median is the estimator."""
     spark.sparkContext.setJobGroup(name, name)
     runs = []
     for _ in range(4):

@@ -4,15 +4,16 @@
 rows in executor memory spilling to disk, serialized to bound the heap,
 and returns a frame whose lineage starts at those blocks: every later
 action reads the same rows instead of re-running the plan. Spark's
-ContextCleaner frees the blocks once the returned frame is dropped. On
-a cluster, losing an executor that holds them fails the reading query
-loudly; nothing is recomputed.
+ContextCleaner frees the blocks once the returned frame is dropped and,
+unlike ``persist()``'s, no other query reads them through an equal plan.
+On a cluster, losing an executor that holds them fails the reading
+query loudly; nothing is recomputed.
 
-Callers: the two-phase ranking operators (their offsets and local
-ranks must read one range partitioning), the trend cycle's silver
-(quarantine and curated silver are written from one run of the silver
-plan) and the parquet store's read-rewrite upsert (a parquet directory
-cannot be read and overwritten by one job).
+For an intermediate result, take the first that applies: (a) read once,
+or recomputing it measures no slower: materialize nothing; (b) the
+returned lazy plan reads it more than once: ``local_checkpoint``; (c)
+only driver actions inside the function read it (a convergence loop's
+counts): ``persist()``, and ``unpersist()`` before returning.
 """
 
 from __future__ import annotations

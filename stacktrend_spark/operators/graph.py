@@ -12,10 +12,10 @@ rounds close real corpora.
 
 Scale notes (100 TB): each iteration is one hash-shuffle join of the
 edge list against the label table plus a groupBy-min — both partition
-by node id, so AQE coalesces them; labels persist per round and the
-previous round unpersists (bounded memory). The convergence check is
-an O(1)-row count action per round — the driver-loop-with-actions
-pattern SURVEY §2.10/A11 sanctions for iterative algorithms. For
+by node id, so AQE coalesces them; labels are checkpointed per round
+(bounded lineage). The convergence check is an O(1)-row count action
+per round — the driver-loop-with-actions pattern SURVEY §2.10/A11
+sanctions for iterative algorithms. For
 graphs with genuinely long chains, swap the body for the large-star/
 small-star rounds of Kiveris et al. (MapReduce CC) behind this same
 signature; the simple propagation is the right default for dedup
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 
 
 def connected_components(
@@ -119,15 +121,13 @@ def connected_components(
         # labels is O(nodes) rows, cheap to materialize. At cluster
         # scale use checkpoint() with a reliable dir (executor-loss
         # recovery), same policy as kcore_peel / the star rounds.
-        new_labels = (
-            labels.join(neigh, labels["node"] == neigh["a"], "left")
-            .select(
+        new_labels = local_checkpoint(
+            labels.join(neigh, labels["node"] == neigh["a"], "left").select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce(F.col("_nc"), F.col("component"))
                 ).alias("component"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -234,10 +234,10 @@ def pagerank_scaled(
     Total mass stays ≤ ``scale``, so intermediates fit int64 with
     85× headroom.
 
-    Scale notes (100 TB): the edge list persists once; each iteration
-    is one shuffle — join ranks (partitioned by node) to edges
-    (partitioned by src, co-located after the first round under AQE),
-    then a groupBy(dst) sum. Ranks are O(nodes) ≪ O(edges). A fixed
+    Scale notes (100 TB): the edge list (with out-degrees) is
+    checkpointed once; each iteration is one shuffle — join ranks
+    (partitioned by node) to edges (partitioned by src, co-located
+    after the first round under AQE), then a groupBy(dst) sum. Ranks are O(nodes) ≪ O(edges). A fixed
     iteration count (not a convergence loop) keeps the plan static and
     the output deterministic.
 
@@ -245,9 +245,12 @@ def pagerank_scaled(
     for symmetric edge lists that is every node; pass dangling nodes
     as self-loop-free extra sources if needed.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node")).persist()
+    # every iteration reads both: the edges with their source's
+    # out-degree, and the node set (the sources)
+    edeg = local_checkpoint(e.join(deg, "src"))
+    nodes = local_checkpoint(edeg.select(F.col("src").alias("node")).distinct())
     n_nodes = nodes.count()  # O(1) driver scalar, sanctioned iterative pattern
     if n_nodes == 0:
         # r13 degenerate-corpus fix: an edgeless graph (no co-purchase
@@ -259,8 +262,6 @@ def pagerank_scaled(
         )
     base = (15 * scale) // (100 * n_nodes)
     ranks = nodes.select("node", F.lit(scale // n_nodes).alias("rank"))
-    edeg = e.join(deg, "src").persist()
-    prev = None
     for _ in range(iterations):
         contrib = (
             edeg.join(ranks, edeg["src"] == ranks["node"])
@@ -268,20 +269,11 @@ def pagerank_scaled(
             .groupBy("dst")
             .agg(F.sum("c").alias("incoming"))
         )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr("(85 * coalesce(incoming, 0)) DIV 100")
-                ).alias("rank"),
-            )
-            .persist()
+        # read once, by the next iteration: no materialization
+        ranks = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
+            "node",
+            (F.lit(base) + F.expr("(85 * coalesce(incoming, 0)) DIV 100")).alias("rank"),
         )
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
     return ranks.select("node", F.col("rank").cast("long").alias("rank_scaled"))
 
 
@@ -344,11 +336,10 @@ def connected_components_star(
     edge set only shrinks toward the star forest, and the convergence
     probe is a checksum action per round (bounded driver data).
     """
-    e = (
+    e = local_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     prev_sig = None
     for _ in range(max_iter):
@@ -358,7 +349,7 @@ def connected_components_star(
         # 14-edge graph. Checkpointing materializes AND cuts lineage
         # (at cluster scale use reliable checkpoint() so executor loss
         # can recompute; localCheckpoint trades that for speed).
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e2 = local_checkpoint(_small_star(_large_star(e)))
         # BIT_XOR, not SUM: summing 64-bit hashes overflows int64
         # (ANSI mode raises); xor is overflow-free and order-independent
         sig_row = e2.agg(

@@ -36,6 +36,7 @@ from stacktrend_spark.functions.rounding import (
     sql_xlog10,
     xlog10,
 )
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.graph import cobasket_pairs
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
@@ -1077,13 +1078,14 @@ def assoc_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("item")
     )
-    baskets = li.distinct().persist()
+    # three readers, recomputed: measured faster than a checkpoint
+    baskets = li.distinct()
     nb = baskets.agg(F.countDistinct("ok").cast("long").alias("n"))
     items = baskets.groupBy("item").agg(F.count(F.lit(1)).alias("n_item"))
     # groupBy + map-side pair explode replaces the basket self-join:
     # each basket emits each distinct pair once, so groupBy(pair).count
     # is n_both exactly as before (r13 optimization;
-    # operators/graph.cobasket_pairs — reads the persisted baskets)
+    # operators/graph.cobasket_pairs)
     pairs = (
         cobasket_pairs(baskets, "ok", "item", u="item_a", v="item_b")
         .groupBy("item_a", "item_b")
@@ -1760,12 +1762,10 @@ def session_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = W.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(
         W.unboundedPreceding, 0
     )
-    st = (
+    st = local_checkpoint(
         seq.select(
             "user_id", "event_type", F.sum("is_new").over(ws).alias("sid")
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
     n_sess = st.select("user_id", "sid").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("ns")

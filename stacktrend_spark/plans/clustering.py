@@ -29,6 +29,7 @@ from pyspark.sql.window import Window as W
 
 from stacktrend_spark.functions.hashing import sql_hex40
 from stacktrend_spark.functions.rounding import fround, sql_round
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.similarity import rank_cells_arrow, with_cell_arrow
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
@@ -244,12 +245,12 @@ def pipeline_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stacktrend_spark.plans.northstar import _NEAR_DUP_THRESHOLD, _emb_corpus
 
     corpus = _emb_corpus(spark, sf_dir)
-    # cache once: the assigned corpus feeds the pair kernel (rows +
+    # checkpoint once: the assigned corpus feeds the pair kernel (rows +
     # the hot-cell counts) and the final labeling join — without this
     # the centroid argmin recomputes per consumer (A10 cache-once
     # rule). r5: _assigned fuses row+cell in the map kernel, so the
     # r4 corpus ⋈ assignment shuffle (both sides corpus-sized) is gone.
-    pe = _assigned(corpus).withColumnRenamed("cid", "cell").persist()
+    pe = local_checkpoint(_assigned(corpus).withColumnRenamed("cid", "cell"))
     pairs = cosine_near_dup_pairs(
         pe,
         threshold=_NEAR_DUP_THRESHOLD,
@@ -257,9 +258,9 @@ def pipeline_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=64,
         max_bucket_rows=2000,  # hot-cell triangle-grid guard armed
     ).select("id_a", "id_b")
-    # nodes come from the CACHED pe (same vec_id set as corpus — the
-    # assignment join is key-preserving), not from corpus, whose
-    # unpersisted plan would re-run the scan + fan-out per consumer
+    # nodes come from the checkpointed pe (same vec_id set as corpus —
+    # the assignment join is key-preserving), not from corpus, whose
+    # plan would re-run the scan + fan-out per consumer
     comp = connected_components(
         pairs, nodes=pe.select(F.col("vec_id").alias("node"))
     )
@@ -341,9 +342,9 @@ def sim_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stacktrend_spark.sources.tables import fan_out
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    # two consumers (corpus rn=1, probes rn<=nprobe): persist so the
+    # two consumers (corpus rn=1, probes rn<=nprobe): checkpoint so the
     # centroid cross-join + window runs once, not per consumer
-    ranked = _assignment_ranked(emb).persist()
+    ranked = local_checkpoint(_assignment_ranked(emb))
     corpus = emb.join(
         ranked.filter(F.col("rn") == 1).select("vec_id", F.col("cid").alias("cell")),
         "vec_id",
@@ -1368,7 +1369,7 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deployment: how many cells must each query probe to hit its recall
 # target, and what candidate volume does that cost?
 #
-# 100 TB: the ranked assignment is computed once and persisted (Arrow
+# 100 TB: the ranked assignment is computed once and checkpointed (Arrow
 # kernel, map-only); each sweep point is the proven cell-bounded
 # cosine_topk equi-join (candidates = sum of probed cells, never N^2);
 # ground truth is the broadcast-20-queries brute force (linear, one
@@ -1463,16 +1464,14 @@ def ann_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stacktrend_spark.sources.tables import fan_out
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    ranked = _assignment_ranked(emb).persist()
+    ranked = local_checkpoint(_assignment_ranked(emb))
     corpus = emb.join(
         ranked.filter(F.col("rn") == 1).select("vec_id", F.col("cid").alias("cell")),
         "vec_id",
     )
     queries = emb.filter(F.col("vec_id") < _SWEEP_NQ)
-    bf = (
-        cosine_topk(emb, queries, k=_SWEEP_K, dim=_DIM)
-        .select("query_id", "neighbor_id")
-        .persist()
+    bf = local_checkpoint(
+        cosine_topk(emb, queries, k=_SWEEP_K, dim=_DIM).select("query_id", "neighbor_id")
     )
     arms = []
     for p in _SWEEP_NPROBES:

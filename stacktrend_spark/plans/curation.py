@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -891,15 +892,9 @@ def containment_join_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .distinct()
-        # two consumers (vocabulary derivation + the index join):
-        # cache the deduped postings instead of re-exploding the corpus.
-        # No unpersist can live here (the returned plan is lazy); the
-        # bench/verify harnesses clearCache() between queries instead
-        .persist()
-    )
+    # two consumers (vocabulary derivation + the index join), recomputed:
+    # measured faster than a checkpoint
+    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok")).distinct()
     vocab = (
         toks.select("tok")
         .distinct()
@@ -2135,20 +2130,21 @@ def bpe_merge_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pair"),
             "wc",
         )
-        best = (
+        # read twice: rewrite join + output row
+        best = local_checkpoint(
             pairs.groupBy("pair")
             .agg(F.sum("wc").cast("long").alias("n"))
             .orderBy(F.desc("n"), F.asc("pair"))
             .limit(1)
-            .persist()  # read twice: rewrite join + output row
         )
-        # 1-row winner broadcast into the vocabulary rewrite; persist
+        # 1-row winner broadcast into the vocabulary rewrite; checkpoint
         # each round's vocabulary so round k's lineage doesn't re-run
-        # all earlier rounds' explode+TakeOrdered subtrees (released
-        # by the caller's clearCache like every other persisted plan)
-        cur = cur.join(F.broadcast(best.select("pair"))).select(
-            F.expr(f"replace(w, pair, '{sym}')").alias("w"), "wc"
-        ).persist()
+        # all earlier rounds' explode+TakeOrdered subtrees
+        cur = local_checkpoint(
+            cur.join(F.broadcast(best.select("pair"))).select(
+                F.expr(f"replace(w, pair, '{sym}')").alias("w"), "wc"
+            )
+        )
         mass = cur.agg(
             F.sum(F.expr("wc * length(w)")).cast("long").alias("corpus_chars_after")
         )
@@ -2426,7 +2422,8 @@ def kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         # array — one-word docs must be filtered, not exploded.
         .filter(F.size("ws") >= 2)
     )
-    types = (
+    # read 4x: ctx, cont, types count, the join spine
+    types = local_checkpoint(
         docs.select(
             F.explode(
                 F.expr(
@@ -2439,7 +2436,6 @@ def kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()  # read 4x: ctx, cont, types count, the join spine
     )
     ctx = types.groupBy("w1").agg(
         F.sum("c").cast("long").alias("c_w1"),

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.rounding import fround, sql_round
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.dedup import (
     jaccard_from_arrays,
     lsh_star_edges,
@@ -101,7 +102,7 @@ _CONTAIN_NUM = 8  # keep pairs with containment >= 8/10 (exact integers)
 )
 def dedup_containment_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = fan_out(_corpus_near(spark, sf_dir))
-    arrs = shingle_arrays(corpus, "doc_id", "text", n=3).persist()
+    arrs = local_checkpoint(shingle_arrays(corpus, "doc_id", "text", n=3))
     sigs = minhash_signatures_from_arrays(arrs, "doc_id", num_hashes=_MINHASH_K)
     cand = lsh_star_edges(sigs, "doc_id", num_hashes=_MINHASH_K, band_size=_BAND_SIZE)
     scored = jaccard_from_arrays(arrs, "doc_id", pairs=cand, broadcast_pairs=False)
@@ -426,9 +427,9 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = fan_out(_corpus_near(spark, sf_dir))
     arrs = shingle_arrays(corpus, "doc_id", "text", n=3)
-    sigs = minhash_signatures_from_arrays(
-        arrs, "doc_id", num_hashes=_MINHASH_K
-    ).persist()
+    sigs = local_checkpoint(
+        minhash_signatures_from_arrays(arrs, "doc_id", num_hashes=_MINHASH_K)
+    )
     band_frames = []
     for i, (nb, bs) in enumerate(_TUNE_CFGS):
         rows = lsh_band_rows(sigs, "doc_id", num_hashes=nb * bs, band_size=bs)
@@ -436,7 +437,7 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = band_frames[0]
     for bf in band_frames[1:]:
         bands = bands.unionByName(bf)
-    bands = bands.persist()
+    bands = local_checkpoint(bands)
 
     buckets = bands.groupBy("cfg", "band_id", "band_key").agg(
         F.count(F.lit(1)).alias("n")

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.hashing import spark_hex40, sql_hex40
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -288,12 +289,11 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n"))
     # the dense-cell table is tiny by construction (bounded by the grid,
     # not the corpus) and is read three times (edge probes, edge build,
-    # final rollup): persist it so the fact scan + histogram run once
-    dense = (
+    # final rollup): checkpoint it so the fact scan + histogram run once
+    dense = local_checkpoint(
         cells.filter(F.col("n") >= _DB_MINPTS)
         .withColumn("k", (F.col("cx") + 16) * 1000 + (F.col("cy") + 16))
         .coalesce(4)
-        .persist()
     )
     offs = F.array(
         *[

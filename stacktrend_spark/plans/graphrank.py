@@ -15,9 +15,9 @@ so both engines produce the same BIGINTs bit-for-bit.
 
 Scale notes (100 TB): the edge build is a self-join on the order key
 (co-partitioned) plus one distinct; each PageRank iteration is one
-shuffle (ranks ⋈ edges on src, then groupBy dst). Edges persist
-once; ranks are O(parts) ≪ O(lineitem). Top-k is TakeOrdered — no
-global sort.
+shuffle (ranks ⋈ edges on src, then groupBy dst). Edges are
+checkpointed once; ranks are O(parts) ≪ O(lineitem). Top-k is
+TakeOrdered — no global sort.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from stacktrend_spark.functions.rounding import (
     sql_xlog10,
     xlog10,
 )
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.graph import (
     cobasket_pairs,
     pagerank_scaled,
@@ -223,7 +224,7 @@ def kcore_peel(
             .select("src", "dst")
         )
         if checkpoint_every and r % checkpoint_every == 0 and r < rounds:
-            edges = edges.localCheckpoint(eager=True)
+            edges = local_checkpoint(edges)
     return edges
 
 
@@ -505,7 +506,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # the shared-order weight — no (src,dst,orderkey) distinct needed;
     # weights aggregate on the <-oriented half and mirror after (r13
     # optimization; operators/graph.cobasket_pairs)
-    ew = (
+    # read by every round; ~|E| rows
+    ew = local_checkpoint(
         symmetrize(
             cobasket_pairs(li, "l_orderkey", "l_partkey", u="src", v="dst")
             .groupBy("src", "dst")
@@ -514,7 +516,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             u="src",
             v="dst",
         )
-        .persist()  # read by every round; ~|E| rows, released by clearCache
     )
     labels = ew.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -532,18 +533,15 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter(F.col("rn") == 1)
             .select("node", F.col("lbl").alias("new_lbl"))
         )
-        # persist each round's (node,lbl) frame: round r reads round
+        # checkpoint each round's (node,lbl) frame: round r reads round
         # r-1 TWICE (message join + keep-old left join) and the final
-        # sizes join reads the result twice more — unpersisted, the
+        # sizes join reads the result twice more — unmaterialized, the
         # lineage doubles per round (2^R plan blowup, measured 14.2 s
-        # -> 4.4 s at sf0.01). #nodes rows, released by clearCache.
-        labels = (
-            labels.join(winners, "node", "left")
-            .select(
-                "node",
-                F.coalesce("new_lbl", "lbl").alias("lbl"),
+        # -> 4.4 s at sf0.01). #nodes rows.
+        labels = local_checkpoint(
+            labels.join(winners, "node", "left").select(
+                "node", F.coalesce("new_lbl", "lbl").alias("lbl")
             )
-            .persist()
         )
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("sz"))
     return labels.join(sizes, "lbl").select(
@@ -624,51 +622,45 @@ _HITS_SCALE = 10**9  # L1-normalized each half-step => raw*SCALE <= 1e18 (int64)
 def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """100 TB: per half-step one edges⋈scores join + one groupBy sum
     (scores are node-sized); Σ normalizers broadcast as 1-row scalars.
-    The edge list persists across the 3 joins. L1 mass keeps every
-    score and every raw propagation sum ≤ 10⁹, so the normalization
+    The edge list is checkpointed once for the 3 joins. L1 mass keeps
+    every score and every raw propagation sum ≤ 10⁹, so the normalization
     product raw·10⁹ ≤ 10¹⁸ — int64-safe at ANY graph size (the scale
     choice is the overflow proof, not a tuning knob)."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = (
+    # materialized NOW: the plan below embeds edges in four
+    # broadcast/scalar subtrees that otherwise all race to rebuild the
+    # distinct (measured 21.8 s -> see COVERAGE)
+    edges = local_checkpoint(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
-        .persist()
     )
-    # materialize the cache NOW: the plan below embeds edges in four
-    # broadcast/scalar subtrees that otherwise all race to rebuild the
-    # distinct before the first fill (measured 21.8 s -> see COVERAGE)
-    edges.count()
     nc = edges.agg(F.countDistinct("c").cast("long").alias("n"))
-    # Persist each half-step's RAW score table eagerly (node-sized, the
-    # pagerank_scaled per-iteration discipline in operators/graph.py):
-    # without this, every Σ-normalizer's broadcast job recomputes the
-    # same edges⋈scores join + groupBy that the main plan then computes
-    # AGAIN — and the replay compounds per level (a1r feeds a1 feeds
-    # h1r feeds ...), so the three heavy joins ran ~2× each per
-    # execution. Measured solo A/B at sf0.1 in OPTIMIZATION_r13.md;
+    # Checkpoint the RAW score tables a later half-step builds on
+    # (node-sized): without this, every Σ-normalizer's broadcast job
+    # recomputes the same edges⋈scores join + groupBy that the main
+    # plan then computes AGAIN — and the replay compounds per level
+    # (a1r feeds a1 feeds h1r feeds ...), so the three heavy joins ran
+    # ~2× each per execution. Measured solo A/B at sf0.1 in OPTIMIZATION_r13.md;
     # plan diff: plans/r13/hits_hubs_authorities_{before,after}.txt.
-    a1r = (
+    a1r = local_checkpoint(
         edges.groupBy("p")
         .agg(F.count(F.lit(1)).alias("deg"))
         .join(F.broadcast(nc))
         .select("p", (F.col("deg") * F.expr(f"{_HITS_SCALE} DIV n")).alias("raw"))
-        .persist()
     )
-    a1r.count()
     s1 = a1r.agg(F.sum("raw").alias("s"))
     a1 = a1r.join(F.broadcast(s1)).select(
         "p", F.expr(f"raw * {_HITS_SCALE} DIV s").alias("a")
     )
-    h1r = edges.join(a1, "p").groupBy("c").agg(F.sum("a").alias("raw")).persist()
-    h1r.count()
+    h1r = local_checkpoint(edges.join(a1, "p").groupBy("c").agg(F.sum("a").alias("raw")))
     s2 = h1r.agg(F.sum("raw").alias("s"))
     h1 = h1r.join(F.broadcast(s2)).select(
         "c", F.expr(f"raw * {_HITS_SCALE} DIV s").alias("h")
     )
-    a2r = edges.join(h1, "c").groupBy("p").agg(F.sum("h").alias("raw")).persist()
-    a2r.count()
+    # the last half-step: its two readers recompute it faster (measured)
+    a2r = edges.join(h1, "c").groupBy("p").agg(F.sum("h").alias("raw"))
     s3 = a2r.agg(F.sum("raw").alias("s"))
     a2 = a2r.join(F.broadcast(s3)).select(
         "p", F.expr(f"raw * {_HITS_SCALE} DIV s").alias("a")
@@ -751,7 +743,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # groupBy + map-side pair explode (collect_set subsumes the old
     # pre-distinct); r13 optimization, operators/graph.cobasket_pairs
-    e = cobasket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
+    e = local_checkpoint(cobasket_pairs(li, "l_orderkey", "l_partkey").distinct())
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

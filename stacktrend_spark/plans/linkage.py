@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.graph import cobasket_pairs
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
@@ -288,7 +289,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     du = F.broadcast(deg).alias("du")
     dv = F.broadcast(deg).alias("dv")
-    oriented = (
+    oriented = local_checkpoint(
         und.join(du, F.col("u") == F.col("du.node"))
         .join(dv, F.col("v") == F.col("dv.node"))
         .select(
@@ -301,11 +302,8 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("e")
         )
         .select(F.col("e.s").alias("s"), F.col("e.t").alias("t"))
-        # three consumers (e1/e2/e3): without the persist each alias
-        # recomputes the scan -> pair-join -> distinct -> degree chain.
-        # No unpersist can live here (the returned plan is lazy); the
-        # bench/verify harnesses clearCache() between queries instead
-        .persist()
+        # three consumers (e1/e2/e3): without the checkpoint each alias
+        # recomputes the scan -> pair-join -> distinct -> degree chain
     )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
@@ -687,7 +685,7 @@ def clustering_coefficient_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # groupBy + map-side pair explode (collect_set subsumes the old
     # pre-distinct); r13 optimization, operators/graph.cobasket_pairs
-    e = cobasket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
+    e = local_checkpoint(cobasket_pairs(li, "l_orderkey", "l_partkey").distinct())
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -42,6 +42,7 @@ from stacktrend_spark.functions.rounding import (
     sql_iscale,
     sql_round,
 )
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -1486,11 +1487,10 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey")
-    pos = (
+    pos = local_checkpoint(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("p"))
         .distinct()
-        .persist()
     )
     np_ = part.agg((F.max("p_partkey") + 1).alias("n_parts"))
     hot = (

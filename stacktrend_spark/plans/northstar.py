@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.rounding import fround, sql_round
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.operators.dedup import (
     exact_dedup_groups,
     jaccard_from_arrays,
@@ -186,13 +187,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are a pure projection (array_min of salted md5s, no explode/
     # shuffle) and verification is array_intersect over broadcast
     # candidate pairs. Shuffles: the band self-join, nothing else.
-    # Persist the arrays: they feed the signature path AND both sides
-    # of verification (SURVEY §4 anti-pattern 1: cache once).
-    arrs = shingle_arrays(corpus, "doc_id", "text", n=3).persist()
-    # persist signatures too: the band self-join reads them from BOTH
+    # Checkpoint the arrays: they feed the signature path AND both sides
+    # of verification (SURVEY §4 anti-pattern 1: materialize once).
+    arrs = local_checkpoint(shingle_arrays(corpus, "doc_id", "text", n=3))
+    # checkpoint signatures too: the band self-join reads them from BOTH
     # sides, and each side would otherwise redo the k×md5 projection
     # over every shingle array
-    sigs = minhash_signatures_from_arrays(arrs, "doc_id", num_hashes=_MINHASH_K).persist()
+    sigs = local_checkpoint(minhash_signatures_from_arrays(arrs, "doc_id", num_hashes=_MINHASH_K))
     cand = lsh_candidate_pairs(sigs, "doc_id", num_hashes=_MINHASH_K, band_size=_BAND_SIZE)
     scored = jaccard_from_arrays(arrs, "doc_id", pairs=cand)
     jac = F.col("n_common").cast("double") / (
@@ -263,7 +264,7 @@ def dedup_minhash_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combine — a mega-bucket reduces before it shuffles)
     joined back to the band rows, then shuffle joins (NOT broadcast —
     the candidate set is O(N) by design, so nothing driver-side may
-    hold it) against the persisted shingle arrays for exact-Jaccard
+    hold it) against the checkpointed shingle arrays for exact-Jaccard
     verification of candidates only. A/B at sf0.1: window-min form
     1.5-2.0 s warm vs this 1.9-2.5 s — the ~0.3 s local cost buys
     removing WindowExec's whole-bucket single-task buffering, the
@@ -275,7 +276,7 @@ def dedup_minhash_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stacktrend_spark.operators.dedup import lsh_star_edges
 
     corpus = fan_out(_corpus_near(spark, sf_dir))
-    arrs = shingle_arrays(corpus, "doc_id", "text", n=3).persist()
+    arrs = local_checkpoint(shingle_arrays(corpus, "doc_id", "text", n=3))
     sigs = minhash_signatures_from_arrays(arrs, "doc_id", num_hashes=_MINHASH_K)
     cand = lsh_star_edges(sigs, "doc_id", num_hashes=_MINHASH_K, band_size=_BAND_SIZE)
     scored = jaccard_from_arrays(arrs, "doc_id", pairs=cand, broadcast_pairs=False)
@@ -461,8 +462,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.expr("substring(text, 1, length(text) - 20)").alias("text"),
     )
-    arr_i = shingle_arrays(docs, "doc_id", "text", n=3).persist()
-    arr_b = shingle_arrays(batch, "doc_id", "text", n=3).persist()
+    arr_i = local_checkpoint(shingle_arrays(docs, "doc_id", "text", n=3))
+    arr_b = local_checkpoint(shingle_arrays(batch, "doc_id", "text", n=3))
     sig_i = minhash_signatures_from_arrays(arr_i, "doc_id", num_hashes=_MINHASH_K)
     sig_b = minhash_signatures_from_arrays(arr_b, "doc_id", num_hashes=_MINHASH_K)
     bands_i = lsh_band_rows(sig_i, "doc_id", _MINHASH_K, _BAND_SIZE)
@@ -875,17 +876,15 @@ def dedup_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in cent_rows
     ]
     # map-only fused assignment (no corpus ⋈ assignment shuffle), then
-    # the pairing key narrows to (label, cell). PERSISTED: the pairing
+    # the pairing key narrows to (label, cell). CHECKPOINTED: the pairing
     # plan consumes the assigned corpus three times (A-side, B-side,
-    # chunk-factor counts) and without the cache each consumer re-runs
-    # the scan+assign kernel (seen in PLANS.md: MapInArrow ×2 + counts;
-    # at 100 TB you cache to cluster storage or pre-materialize the
-    # cell column at write time). Cannot unpersist here — the result
-    # depends on it lazily; bench/verify clear the cache per query.
+    # chunk-factor counts) and without it each consumer re-runs the
+    # scan+assign kernel (seen in PLANS.md: MapInArrow ×2 + counts; at
+    # 100 TB you pre-materialize the cell column at write time).
     assigned = with_cell_arrow(corpus, centroids, 64, out_col="cell")
-    bucketed = assigned.withColumn(
-        "_bucket", F.concat_ws(":", F.col("label"), F.col("cell").cast("string"))
-    ).persist()
+    bucketed = local_checkpoint(
+        assigned.withColumn("_bucket", F.concat_ws(":", F.col("label"), F.col("cell").cast("string")))
+    )
     return cosine_near_dup_pairs(
         bucketed,
         threshold=_NEAR_DUP_THRESHOLD,
@@ -1872,10 +1871,10 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sampled = docs.filter(F.col("doc_id") % 20 == 0)  # see _SQL_SH_CORPUS note
     corpus = fan_out(sampled.unionByName(copies))
-    # persist: the band self-join reads signatures from BOTH sides, and
-    # each side would otherwise recompute the 32-bit-vote projection
-    # (the dedup_minhash_lsh cache-once discipline)
-    sh = simhash_narrow(corpus, "doc_id", "text").persist()
+    # checkpoint: the band self-join reads signatures from BOTH sides,
+    # and each side would otherwise recompute the 32-bit-vote projection
+    # (the dedup_minhash_lsh materialize-once discipline)
+    sh = local_checkpoint(simhash_narrow(corpus, "doc_id", "text"))
     bands = sh.select(
         "doc_id",
         "simhash",

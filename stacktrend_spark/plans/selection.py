@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -369,9 +370,9 @@ def ngram_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a doc's novel count is just the first-occurrence aggregate
     # re-grouped by its min doc — two map-side-combinable aggregates
     # over the trigram stream and a doc-cardinality left join.
-    tg = docs.select(
-        "doc_id", F.explode(F.array_distinct(_word_ngrams("w", 3))).alias("g")
-    ).persist()
+    tg = local_checkpoint(
+        docs.select("doc_id", F.explode(F.array_distinct(_word_ngrams("w", 3))).alias("g"))
+    )
     counts = tg.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tg")
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -821,7 +822,7 @@ def bloom_prejoin_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     oprobe = orders.select("o_orderkey", "o_custkey", tri).select(
         "o_orderkey", "o_custkey", bitpos(F.col("o_custkey")).alias("bitpos")
     )
-    verdicts = (
+    verdicts = local_checkpoint(
         oprobe.join(F.broadcast(filt), F.expr("bitpos DIV 63") == filt.w, "left")
         .select(
             "o_orderkey",
@@ -836,7 +837,6 @@ def bloom_prejoin_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderkey", "o_custkey")
         .agg((F.min("hit") == 1).alias("passed"))
-        .persist()
     )
     joined = verdicts.join(
         F.broadcast(members), verdicts.o_custkey == members.c_custkey, "left_semi"

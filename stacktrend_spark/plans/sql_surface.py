@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from stacktrend_spark.functions.rounding import sql_iscale
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import register_views
 
@@ -47,9 +48,9 @@ _EDGES_SQL = f"""
     GROUP BY 1, 2
 """
 
-#: recursion over {{edges}} — the fn binds a CACHED edge view (Spark
-#: re-evaluates non-materialized CTEs once per recursion level; caching
-#: the edge table cut sf0.1 cold time 12.7 s -> ~4 s), the oracle
+#: recursion over {{edges}} — the fn binds a checkpointed edge view (Spark
+#: re-evaluates non-materialized CTEs once per recursion level;
+#: materializing the edge table cut sf0.1 cold time 12.7 s -> ~4 s), the oracle
 #: inlines the same SQL as a CTE (DuckDB materializes CTEs by default)
 _REACH_SQL = f"""
     WITH RECURSIVE
@@ -97,12 +98,10 @@ _LATERAL_SQL = """
 )
 def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    # persisted seed: every BFS level re-reads the edge set. No
-    # unpersist can live here (the returned plan is lazy); the
-    # bench/verify harnesses clearCache() between queries instead
-    edges = spark.sql(_EDGES_SQL).persist()
-    edges.createOrReplaceTempView("cp_edges_cached")
-    return spark.sql(_REACH_SQL.format(edges="cp_edges_cached"))
+    # checkpointed seed: every BFS level re-reads the edge set
+    edges = local_checkpoint(spark.sql(_EDGES_SQL))
+    # a call-scoped view: a session view would outlive the query
+    return spark.sql(_REACH_SQL, edges=edges)
 
 
 @register(

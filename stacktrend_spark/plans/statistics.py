@@ -1884,9 +1884,8 @@ def bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(iscale("o_totalprice")).alias("y")
     )
-    pts = daily.select(
-        F.row_number().over(W.orderBy("day")).alias("rn"), "y"
-    ).persist()
+    # two readers, recomputed: measured faster than a checkpoint
+    pts = daily.select(F.row_number().over(W.orderBy("day")).alias("rn"), "y")
     s = pts.agg(
         F.count(F.lit(1)).cast("long").alias("n"), F.sum("y").alias("toty")
     )
@@ -2227,7 +2226,7 @@ def ols_slope_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB: one custkey join + 5-group aggregate; the LCB math runs on
 # 5 rows.
 # ---------------------------------------------------------------------------
-_WILSON_Z = "1.96"
+_WILSON_Z = "CAST(1.96 AS DOUBLE)"  # a DECIMAL 1.96 squares exactly, off the double op tree
 
 
 def _wilson_sql(p: str, n: str) -> str:

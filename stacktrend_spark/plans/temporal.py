@@ -771,14 +771,11 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"), F.sum("y").alias("sy")
     )
-    # ~2.4k-day spine: global window bounded by construction
-    pts = (
-        daily.join(F.broadcast(s))
-        .select(
-            F.row_number().over(W.orderBy("day")).alias("rn"),
-            (F.col("n") * F.col("y") - F.col("sy")).cast("long").alias("dev"),
-        )
-        .persist()
+    # ~2.4k-day spine: global window bounded by construction; its three
+    # readers recompute it, measured faster than a checkpoint
+    pts = daily.join(F.broadcast(s)).select(
+        F.row_number().over(W.orderBy("day")).alias("rn"),
+        (F.col("n") * F.col("y") - F.col("sy")).cast("long").alias("dev"),
     )
     dec = "decimal(38,0)"
     den = pts.agg(

@@ -50,6 +50,7 @@ from stacktrend_spark.functions.rounding import (
     sql_iscale,
     sql_round,
 )
+from stacktrend_spark.operators.checkpoint import local_checkpoint
 from stacktrend_spark.plans.registry import register
 from stacktrend_spark.sources.tables import load_table
 
@@ -1075,11 +1076,11 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qual), li.l_partkey == qual.p_partkey)
         .select("l_suppkey", "l_partkey", F.col("l_quantity").cast("long").alias("qty"))
     )
-    # persist the shared partial: tot re-aggregates sq, and without the
-    # cache Catalyst re-executes the whole scan+join+agg subtree twice
-    # (observed in PLANS.md — two lineitem scans). The cached frame is
-    # (suppkey,partkey)-sized, ≪ the fact table.
-    sq = yr.groupBy("l_suppkey", "l_partkey").agg(F.sum("qty").alias("sqty")).persist()
+    # checkpoint the shared partial: tot re-aggregates sq, and without
+    # it Catalyst re-executes the whole scan+join+agg subtree twice
+    # (observed in PLANS.md — two lineitem scans). The checkpointed
+    # frame is (suppkey,partkey)-sized, ≪ the fact table.
+    sq = local_checkpoint(yr.groupBy("l_suppkey", "l_partkey").agg(F.sum("qty").alias("sqty")))
     tot = sq.groupBy("l_partkey").agg(F.sum("sqty").alias("tqty"))
     dom = (
         sq.join(tot, "l_partkey")

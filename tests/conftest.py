@@ -74,20 +74,15 @@ def spark_module():
 
 @pytest.fixture(scope="session")
 def registry_frames():
-    """Every registered query's frame at sf0.001 — or the exception its
-    build raised — built once per session for the whole-registry sweeps
-    (output types, parity audit): several builds execute work eagerly
-    (streaming availableNow runs, ranking checkpoints, the pipelines)."""
-    from stacktrend_spark.plans.registry import all_queries
+    """``tools.parity_audit.build_frames`` at sf0.001: every registered
+    query's frame — or the exception its build raised — and the frames
+    each build checkpointed, built once per session for the
+    whole-registry checks (output types, parity audit, the empty cache):
+    several builds execute work eagerly (streaming availableNow runs,
+    checkpoints, the pipelines)."""
+    from tools.parity_audit import build_frames
 
-    spark = _live_spark()
-    frames: dict[str, object] = {}
-    for name, spec in all_queries().items():
-        try:
-            frames[name] = spec.fn(spark, SF_SMOKE)
-        except Exception as e:  # noqa: BLE001 — each sweep reports it
-            frames[name] = e
-    return frames
+    return build_frames(_live_spark(), SF_SMOKE)
 
 
 @pytest.fixture(scope="session")

@@ -78,3 +78,39 @@ def test_measure_runs_the_whole_plan(spark, sf_dir):
     assert all(_WINDOW.search(p) for p in timed)
     counted = plans["count:window_lead_ntile"]
     assert counted and not any(_WINDOW.search(p) for p in counted)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_copurchase",
+        "label_propagation_communities",
+        "hits_hubs_authorities",
+        "bpe_merge_unrolled",
+        "dedup_minhash_lsh",
+        "dedup_incremental_batch",
+    ],
+)
+def test_second_run_repeats_the_first(spark, sf_dir, name):
+    """measure()'s warm runs must do the cold run's work: a query built
+    and run again in the same session, with nothing cleared, submits as
+    many jobs and stages as the first time (these six once read the
+    first run's cached intermediates through equal plans)."""
+    from stacktrend_spark.plans.registry import all_queries
+
+    fn = all_queries()[name].fn
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(group: str) -> tuple[int, int]:
+        spark.sparkContext.setJobGroup(group, group)
+        bench._noop(fn(spark, sf_dir))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        return len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+    try:
+        first = run(f"first:{name}")
+        assert run(f"second:{name}") == first
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)

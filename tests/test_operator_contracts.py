@@ -412,10 +412,16 @@ def test_operator_checkpoints_are_freed_with_their_results(spark):
     """The operators' local checkpoints are held only by their result
     frames: once those are dropped, Spark's ContextCleaner frees every
     block, so a long multi-query session does not accumulate them and
-    no harness has to release anything."""
+    no harness has to release anything. The graph loops also release
+    what they persist for their own driver actions."""
     import gc
     import time
 
+    from stacktrend_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+        pagerank_scaled,
+    )
     from stacktrend_spark.operators.ranking import (
         global_rank_scalable,
         global_running_max_scalable,
@@ -425,6 +431,11 @@ def test_operator_checkpoints_are_freed_with_their_results(spark):
     def run_and_drop():
         df = spark.range(0, 200, 1, 2).select(F.col("id"), (F.col("id") % 7).alias("v"))
         order = [F.col("v"), F.col("id")]
+        # a 40-node graph of 10-node chains, so the loops run rounds
+        edges = spark.range(0, 40, 1, 2).filter(F.col("id") % 10 != 9).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        nodes = spark.range(0, 40, 1, 2).select(F.col("id").alias("node"))
         for _ in range(20):
             for out in (
                 global_rank_scalable(df, order, num_partitions=2),
@@ -432,6 +443,13 @@ def test_operator_checkpoints_are_freed_with_their_results(spark):
                 global_running_max_scalable(df, order, "v", num_partitions=2),
             ):
                 out.write.format("noop").mode("overwrite").save()
+        for out in (
+            pagerank_scaled(edges, src="id_a", dst="id_b"),
+            connected_components(edges, nodes),
+            connected_components(edges, nodes, driver_fastpath_max_edges=0),
+            connected_components_star(edges, nodes),
+        ):
+            out.write.format("noop").mode("overwrite").save()
 
     def cached_rdds() -> int:
         # RDDInfo holds no reference to its RDD; getPersistentRDDs()

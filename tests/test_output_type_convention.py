@@ -53,7 +53,7 @@ SAFE_TYPES = (
 
 def test_all_query_outputs_in_safe_emit_set(registry_frames):
     bad: list[str] = []
-    for name, df in registry_frames.items():
+    for name, df in registry_frames[0].items():
         if isinstance(df, Exception):
             raise df
         for field in df.schema.fields:

@@ -16,6 +16,13 @@ def test_no_engine_dependent_math_on_hashed_surfaces(registry_frames, sf_dir):
     assert problems == [], "\n".join(problems)
 
 
+def test_registry_build_leaves_no_cached_plan(registry_frames, spark):
+    """No plan caches a result that an equal plan of a later query could
+    read: every in-plan materialization is a local checkpoint, held only
+    by the frames of the query that made it."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_audit_catches_libm_in_oracle():
     assert audit_oracle("q", "SELECT LOG10(x) FROM t")
     assert audit_oracle("q", "SELECT POWER(x, 2) FROM t")

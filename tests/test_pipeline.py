@@ -23,7 +23,9 @@ from stacktrend_spark.pipelines.silver import build_silver, smart_split
 
 @pytest.fixture(scope="module")
 def bronze(spark_module):
-    return fixtures.bronze_repos(spark_module, n=300).cache()
+    df = fixtures.bronze_repos(spark_module, n=300).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -33,7 +35,9 @@ def silver_result(spark_module, bronze):
 
 @pytest.fixture(scope="module")
 def silver(silver_result):
-    return silver_result.silver.cache()
+    df = silver_result.silver.cache()
+    yield df
+    df.unpersist()
 
 
 def test_silver_schema_and_quarantine(silver, silver_result, bronze):
@@ -174,10 +178,11 @@ def test_trend_daily_lag_with_history(silver):
     assert changed.count() > 0  # real lag, not the reference's lit(0)
 
 
-def test_personal_pipeline(spark, bronze, silver):
+def test_personal_pipeline(spark, bronze, silver, request):
     ids = [r[0] for r in bronze.select("repository_id").limit(50).collect()]
     activity = fixtures.bronze_activity(spark, ids, n=1000)
     am = personal.activity_metrics(activity, AS_OF_DATE).cache()
+    request.addfinalizer(am.unpersist)
     assert {r[0] for r in am.select("measurement_period").distinct().collect()} == {
         "7d", "30d", "90d"
     }

@@ -10,11 +10,11 @@ import io
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from stacktrend_spark.operators.dedup import simhash_narrow
 from stacktrend_spark.plans.registry import all_queries
 from stacktrend_spark.sources.tables import load_table
+from tools.parity_audit import checkpoint_inputs
 
 
 def plan_of(df) -> str:
@@ -25,20 +25,13 @@ def plan_of(df) -> str:
 
 
 @pytest.fixture()
-def checkpointed(monkeypatch):
+def checkpointed():
     """Every frame handed to localCheckpoint while the test builds its
     query. The ranking operators cut their lineage there, so their range
     exchange and _pid windows live in these plans, not in the query's
     own plan (which shows a LogicalRDD in their place)."""
-    frames = []
-    original = ClassicDataFrame.localCheckpoint
-
-    def capture(self, *args, **kwargs):
-        frames.append(self)
-        return original(self, *args, **kwargs)
-
-    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", capture)
-    return frames
+    with checkpoint_inputs() as frames:
+        yield frames
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
@@ -650,14 +643,16 @@ def test_nprobe_sweep_is_cell_bounded(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_semdedup_twin_plan_shape(spark, sf_dir):
+def test_semdedup_twin_plan_shape(spark, sf_dir, checkpointed):
     """The r9 SemDeDup scale twin: cell assignment is map-only
     (MapInArrow, broadcast centroids in the closure — no corpus join),
     chunk factors join as a broadcast hash join, pair scoring is a
-    grouped Pandas kernel, and nothing degenerates to a cartesian."""
+    grouped Pandas kernel, and nothing degenerates to a cartesian. The
+    assigned corpus is checkpointed, so its plan is read there."""
     from stacktrend_spark.plans.northstar import dedup_semdedup_pairs
 
-    p = plan_of(dedup_semdedup_pairs(spark, sf_dir))
+    df = dedup_semdedup_pairs(spark, sf_dir)
+    p = "\n".join(plan_of(f) for f in [df, *checkpointed])
     assert "MapInArrow" in p
     assert "FlatMapGroupsInPandas" in p
     assert "BroadcastHashJoin" in p  # the tiny chunk-factor table

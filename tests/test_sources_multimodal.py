@@ -191,11 +191,12 @@ def test_decode_rejects_garbage():
         decode_media(b"P6\n1 1\n255\n\x00\x00\x00", "font")
 
 
-def test_multimodal_features_and_frames(spark, sf_dir):
+def test_multimodal_features_and_frames(spark, sf_dir, request):
     docs = load_table(spark, sf_dir, "documents").limit(50)
     media = synthesize_media(docs)
     assert dict(media.dtypes)["payload"] == "binary"
     feats = extract_features(media).cache()
+    request.addfinalizer(feats.unpersist)
     row = feats.filter(F.col("doc_id") == 0).first()
     text0 = docs.filter(F.col("doc_id") == 0).first().text
     assert row.media_type == "image"  # 0 % 3

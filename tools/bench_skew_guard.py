@@ -33,6 +33,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import measure  # noqa: E402
+from stacktrend_spark.operators.checkpoint import local_checkpoint  # noqa: E402
 
 DIM = 16
 MAX_BUCKET_ROWS = 1000
@@ -62,9 +63,7 @@ def build_fixture(spark, n_rows: int, hot_fraction: float):
             ]
         ).alias("embedding"),
     )
-    # a checkpoint, not persist(): measure() clears the cache per query,
-    # and the fixture must stay materialized outside the timings
-    return df.repartition(32).localCheckpoint(eager=True)
+    return local_checkpoint(df.repartition(32))
 
 
 def near_dup_pairs(df, max_bucket_rows):

@@ -31,8 +31,9 @@ by the suite.
 
 from __future__ import annotations
 
-import re
+import contextlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -189,12 +190,52 @@ def audit_plan(name: str, plan_text: str) -> list[str]:
     return problems
 
 
-def run_audit(sf_dir: str = "/root/testdata/sf0.001", frames=None) -> list[str]:
-    """Audit every registered oracle AND every query's analyzed plan.
+@contextlib.contextmanager
+def checkpoint_inputs():
+    """Every frame handed to ``localCheckpoint`` inside the block. A
+    checkpointed frame's own plan shows only a ``LogicalRDD``; what ran
+    before the cut lives in these frames' plans. (Patching
+    ``pyspark.sql.DataFrame`` captures nothing in PySpark 4.)"""
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    ``frames`` maps each query name to its frame already built at
-    ``sf_dir``, or to the exception its build raised; without it every
-    frame is built here.
+    frames = []
+    original = DataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        frames.append(self)
+        return original(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = capture
+    try:
+        yield frames
+    finally:
+        DataFrame.localCheckpoint = original
+
+
+def build_frames(spark, sf_dir: str, names=None) -> tuple[dict, dict[str, list]]:
+    """Every registered query's frame at ``sf_dir`` (or the exception its
+    build raised) and the frames each build checkpointed; only
+    ``names``, when given."""
+    from stacktrend_spark.plans.registry import all_queries
+
+    frames: dict[str, object] = {}
+    below: dict[str, list] = {}
+    for name, spec in all_queries().items():
+        if names is None or name in names:
+            with checkpoint_inputs() as below[name]:
+                try:
+                    frames[name] = spec.fn(spark, sf_dir)
+                except Exception as e:  # noqa: BLE001 — each sweep reports it
+                    frames[name] = e
+    return frames, below
+
+
+def run_audit(sf_dir: str = "/root/testdata/sf0.001", frames=None) -> list[str]:
+    """Audit every registered oracle AND every query's analyzed plan,
+    including the plans its build checkpointed.
+
+    ``frames`` is :func:`build_frames`' result at ``sf_dir``; without it
+    every frame is built here.
     """
     import duckdb
 
@@ -212,38 +253,37 @@ def run_audit(sf_dir: str = "/root/testdata/sf0.001", frames=None) -> list[str]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir.rstrip('/')}/{t}.parquet'"
         )
-    spark = get_spark("parity_audit") if frames is None else None
+    # the end-to-end pipeline entries have no oracle, and building them
+    # EXECUTES the medallion chain (writes tables)
+    hashed = [n for n, spec in specs.items() if spec.oracle is not None]
+    frames, below = frames or build_frames(get_spark("parity_audit"), sf_dir, hashed)
     for name, spec in specs.items():
         if name in ALLOWLIST:
             continue
-        if spec.oracle is None:
-            # not a hashed surface — and for the end-to-end pipeline
-            # entries, spec.fn EXECUTES the medallion chain (writes
-            # tables) rather than just building a plan; auditing them
-            # would run the pipelines as a side effect for zero value
+        if spec.oracle is None:  # not a hashed surface
             continue
         try:
-            df = spec.fn(spark, sf_dir) if frames is None else frames[name]
+            df = frames[name]
             if isinstance(df, Exception):
                 raise df
-            plan = df._jdf.queryExecution().analyzed().toString()
+            plan = "\n".join(
+                f._jdf.queryExecution().analyzed().toString() for f in [df, *below[name]]
+            )
         except Exception as e:  # noqa: BLE001
             problems.append(f"{name}: could not analyze plan: {type(e).__name__}: {e}")
             continue
         problems.extend(audit_plan(name, plan))
-        if spec.oracle is not None:
-            # decimal gates only matter where values are hash-compared
-            problems.extend(audit_plan_decimals(name, plan))
-            problems.extend(audit_output_schema(name, df.schema))
-            try:
-                duck_cols = duck_describe(con, spec.oracle)
-            except Exception as e:  # noqa: BLE001
-                problems.append(
-                    f"{name}: oracle failed DuckDB DESCRIBE: "
-                    f"{type(e).__name__}: {e}"
-                )
-                continue
-            problems.extend(audit_oracle_types(name, duck_cols, df.schema))
+        problems.extend(audit_plan_decimals(name, plan))
+        problems.extend(audit_output_schema(name, df.schema))
+        try:
+            duck_cols = duck_describe(con, spec.oracle)
+        except Exception as e:  # noqa: BLE001
+            problems.append(
+                f"{name}: oracle failed DuckDB DESCRIBE: "
+                f"{type(e).__name__}: {e}"
+            )
+            continue
+        problems.extend(audit_oracle_types(name, duck_cols, df.schema))
     return problems
 
 

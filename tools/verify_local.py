@@ -91,14 +91,6 @@ def main() -> int:
     for name, spec in sorted(specs.items()):
         if only and name not in only:
             continue
-        # several plans persist() intermediates their lazy result
-        # depends on (shingle arrays, co-basket edges, SQL edge lists)
-        # and cannot unpersist inside the callable; dropping the cache
-        # between queries keeps a full-registry session from
-        # accumulating executor memory — same discipline as bench.py.
-        # The ranking operators' local checkpoints need no release:
-        # Spark frees them once the query's frames are dropped.
-        spark.catalog.clearCache()
         t0 = time.time()
         try:
             sdf = spec.fn(spark, sf_dir).toPandas()
