@@ -79,6 +79,16 @@ def xlog10_micro(x: str) -> str:
 _ACTIVE = "sum(CASE WHEN is_active THEN 1 ELSE 0 END)"
 
 
+def count_distinct(x: str) -> str:
+    """``count(DISTINCT x)`` as the size of the group's set of non-NULL
+    values: an ordinary aggregate, so the plan keeps one partial/final
+    aggregate pair where a DISTINCT aggregate beside others plans an
+    Expand, a second aggregate and another exchange. The set holds the
+    group's distinct values, which are few for the label columns it
+    counts here (licenses, categories, languages)."""
+    return f"CAST(size(collect_set({x})) AS BIGINT)"
+
+
 def _rank(key: str) -> str:
     """Row number over (key DESC, technology_category ASC) as 1 + the
     count of ``peers`` strictly ahead — the category is unique per row,
@@ -107,7 +117,7 @@ def tech_metrics(silver: DataFrame) -> DataFrame:
         f"{avg_micro('commit_frequency_30d')} AS commit_u",
         f"{_ACTIVE} AS active_repositories",
         f"{avg_micro('days_since_creation')} AS age_u",
-        "count(DISTINCT license_category) AS license_diversity_count",
+        f"{count_distinct('license_category')} AS license_diversity_count",
     )
     staged = agg.selectExpr(
         "*",
@@ -235,7 +245,7 @@ def tech_health(silver: DataFrame) -> DataFrame:
         f"{avg_of('community_health_score')} AS avg_health",
         f"{spark_sql_dstd('stargazers_count')} AS star_dispersion",
         f"{_ACTIVE} AS active_repos",
-        "count(DISTINCT license_category) AS license_variety",
+        f"{count_distinct('license_category')} AS license_variety",
         f"{avg_of('open_issues_count')} AS avg_open_issues",
     ).selectExpr(
         "*",
@@ -281,7 +291,7 @@ def market_pulse(silver: DataFrame, as_of_date: str) -> DataFrame:
         f"{avg_of('quality_score')} AS avg_quality_score",
         f"{avg_of('community_health_score')} AS avg_health_score",
         f"{_ACTIVE} AS active_repositories",
-        "count(DISTINCT technology_category) AS categories_tracked",
+        f"{count_distinct('technology_category')} AS categories_tracked",
     ).selectExpr(
         "*",
         "try_divide(active_repositories, total_repositories) AS market_activity_ratio",

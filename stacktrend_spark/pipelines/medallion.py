@@ -60,6 +60,22 @@ def _partition_dirs(path: str) -> tuple[str, ...]:
     return tuple(sorted(out))
 
 
+def _ends_in_exchange(df: DataFrame) -> bool:
+    """Whether the frame's output partitions are a shuffle's: the first
+    operator under its projections and filters is an aggregate or a
+    window, which plans an exchange below it (to one partition when it
+    has no keys) unless its input is already partitioned on its keys.
+    Read off the analyzed plan, which the frame already holds; asking
+    for the physical plan would plan the frame once more before the
+    write plans it again (about 20 ms a gold frame on 4 cores)."""
+    node = df._jdf.queryExecution().analyzed()
+    name = node.nodeName()
+    while name in ("Project", "Filter"):
+        node = node.child()
+        name = node.nodeName()
+    return name in ("Aggregate", "Window")
+
+
 class MedallionStore:
     """``backend`` is "delta" when delta-spark is importable (storage
     merges run as true MERGE INTO — operators/delta_backend.py), else
@@ -125,6 +141,10 @@ class MedallionStore:
         so the same code is right at sf0.001 and at 100 TB (r13
         optimization: the per-write task-commit overhead of 32 near-
         empty files dominated the medallion pipelines' wall time).
+        An unpartitioned frame whose rows already come out of a shuffle
+        (``_ends_in_exchange``) is written as it is: AQE coalesces that
+        exchange to the same advisory size, and a rebalance on top of
+        it would cost one more shuffle stage and job.
 
         On the parquet backend a successful write records the frame's
         schema, which keys ``read``'s schema reuse.
@@ -132,7 +152,10 @@ class MedallionStore:
         path = self.path(layer, table)
         self._written.pop(path, None)
         written = df.schema if self.backend == "parquet" else None
-        df = df.hint("rebalance", *partition_by) if partition_by else df.hint("rebalance")
+        if partition_by:
+            df = df.hint("rebalance", *partition_by)
+        elif not _ends_in_exchange(df):
+            df = df.hint("rebalance")
         writer = df.write.format(self.backend).mode("overwrite")
         if self.backend == "delta":
             writer = writer.option("overwriteSchema", "true")

@@ -19,18 +19,19 @@ run before any later layer is written (dfp's dependsOn blocks the
 downstream trigger), and each stage reads back what the previous stage
 WROTE (not the in-memory frame), so reruns resume from storage state.
 Writes of one layer that do not read each other run concurrently (the
-gold tables; the personal run's two bronze and two silver tables); the
-next layer starts once all of them have finished.
+gold tables; the trend cycle's quarantine and curated silver; the
+personal run's two bronze and two silver tables); the next layer
+starts once all of them have finished.
 
 Scale notes: every persisted layer is partitioned by partition_date
 (daily reruns rewrite one partition; readers prune on it), the silver
-plan runs once (one checkpoint feeds both the quarantine and the
-curated write), silver is written once and each gold table re-reads
-that single stored copy, the gold tables write concurrently, one
-thread per table, and upserts go through the store's MERGE path (Delta
-MERGE INTO when available). The read-backs cost no schema discovery
-on the parquet store: it reuses the schema it recorded for a table it
-wrote (``MedallionStore.read``).
+plan runs once (one checkpoint feeds the quarantine and the curated
+write, which run concurrently), silver is written once and each gold
+table re-reads that single stored copy, the gold tables write
+concurrently, one thread per table, and upserts go through the store's
+MERGE path (Delta MERGE INTO when available). The read-backs cost no
+schema discovery on the parquet store: it reuses the schema it
+recorded for a table it wrote (``MedallionStore.read``).
 """
 
 from __future__ import annotations
@@ -101,14 +102,19 @@ def run_trend_pipeline(
     )
     result = build_silver(bronze, classifier, as_of_date, existing_silver=existing)
     # the flagged rows are materialized once and both writes read that
-    # checkpoint: the silver plan runs once, and neither write reads the
-    # stored silver that github_curated's overwrite replaces (Delta
-    # MERGE removes this read-rewrite hazard at scale; see
-    # medallion.upsert)
+    # checkpoint, concurrently: the silver plan runs once, and neither
+    # write reads the stored silver that github_curated's overwrite
+    # replaces (Delta MERGE removes this read-rewrite hazard at scale;
+    # see medallion.upsert)
     silver_df, quarantined = split_quality(local_checkpoint(result.flagged))
-    store.overwrite(quarantined, "silver", "github_quarantine")
-    store.overwrite(
-        silver_df, "silver", "github_curated", partition_by=["partition_date"]
+    _concurrently(
+        spark,
+        [
+            lambda: store.overwrite(quarantined, "silver", "github_quarantine"),
+            lambda: store.overwrite(
+                silver_df, "silver", "github_curated", partition_by=["partition_date"]
+            ),
+        ],
     )
     silver = store.read(spark, "silver", "github_curated")
     out["silver.github_curated"] = silver

@@ -3,7 +3,8 @@ gold tables (SURVEY §2.11 rows 8-10).
 
 Semantics from personal_repos_bronze_to_silver.py:578-634 (per-period
 activity metrics — the reference loops 7d/30d/90d on the driver and
-unions; kept, it's 3 cheap plans) and personal_repos_silver_to_gold.py:
+unions three aggregates; here they are one aggregate over (repository,
+period)) and personal_repos_silver_to_gold.py:
 104-289 (portfolio overview, repo health dashboard, development
 velocity), with the pinned ``as_of_date`` replacing datetime.now()
 (SURVEY §4 anti-pattern 4) and the overview's driver-side collect()s
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stacktrend_spark.functions.sqltext import iso_date
-from stacktrend_spark.pipelines.gold import avg_of
+from stacktrend_spark.pipelines.gold import avg_of, count_distinct
 
 PERIODS = ("7d", "30d", "90d")
 
@@ -35,7 +36,14 @@ PERIODS = ("7d", "30d", "90d")
 def activity_metrics(activity: DataFrame, as_of_date: str) -> DataFrame:
     """Per-(repository, period) activity rollup (prb2s:578-634): commit/
     issue/release count-ifs, coalesced line stats, commit frequency and
-    the capped development-velocity blend."""
+    the capped development-velocity blend.
+
+    One aggregate over (repository_id, period): each activity row is
+    exploded against a literal array of the three (period, days, since)
+    structs and kept for the periods whose window holds it, so the
+    input is read and shuffled once where the reference's driver loop
+    unions three filtered aggregates. The array and its structs are
+    non-null literals, so ``measurement_period`` stays non-nullable."""
     as_of = iso_date(as_of_date)
     aggs = [
         F.expr(e)
@@ -49,39 +57,39 @@ def activity_metrics(activity: DataFrame, as_of_date: str) -> DataFrame:
             "max(activity_date) AS last_activity_date",
         )
     ]
-    frames = []
-    for period in PERIODS:
-        days = int(period[:-1])
-        frames.append(
-            activity.filter(
-                f"activity_date >= CAST({as_of} AS TIMESTAMP) - INTERVAL {days} DAYS"
-            )
-            .groupBy("repository_id")
-            .agg(*aggs)
-            .selectExpr(
-                "*",
-                f"'{period}' AS measurement_period",
-                f"CAST(total_commits / {days} AS DOUBLE) AS commit_frequency",
-            )
-            .selectExpr(
-                "*",
-                "CAST(least(1.0D, commit_frequency * 0.4D"
-                " + least(1.0D, lines_added / 1000.0D) * 0.3D"
-                " + least(1.0D, files_changed / 100.0D) * 0.3D) AS DOUBLE)"
-                " AS development_velocity",
-            )
-            .selectExpr(
-                "*",
-                "CASE WHEN development_velocity >= 0.7D THEN 'increasing'"
-                " WHEN development_velocity >= 0.3D THEN 'stable'"
-                " ELSE 'decreasing' END AS activity_trend",
-                f"{as_of} AS partition_date",
-            )
+    since = {p: f"CAST({as_of} AS TIMESTAMP) - INTERVAL {int(p[:-1])} DAYS" for p in PERIODS}
+    periods = ", ".join(
+        f"named_struct('period', '{p}', 'days', {int(p[:-1])}, 'since', {since[p]})"
+        for p in PERIODS
+    )
+    return (
+        # the widest window (PERIODS ascend) first: a filter the scan
+        # can push down
+        activity.filter(f"activity_date >= {since[PERIODS[-1]]}")
+        .selectExpr("*", f"explode(array({periods})) AS p")
+        .filter("activity_date >= p.since")
+        .groupBy("repository_id", "p")
+        .agg(*aggs)
+        .selectExpr(
+            "* EXCEPT (p)",
+            "p.period AS measurement_period",
+            "CAST(total_commits / p.days AS DOUBLE) AS commit_frequency",
         )
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df)
-    return out
+        .selectExpr(
+            "*",
+            "CAST(least(1.0D, commit_frequency * 0.4D"
+            " + least(1.0D, lines_added / 1000.0D) * 0.3D"
+            " + least(1.0D, files_changed / 100.0D) * 0.3D) AS DOUBLE)"
+            " AS development_velocity",
+        )
+        .selectExpr(
+            "*",
+            "CASE WHEN development_velocity >= 0.7D THEN 'increasing'"
+            " WHEN development_velocity >= 0.3D THEN 'stable'"
+            " ELSE 'decreasing' END AS activity_trend",
+            f"{as_of} AS partition_date",
+        )
+    )
 
 
 def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> DataFrame:
@@ -95,8 +103,8 @@ def portfolio_overview(silver: DataFrame, as_of_date: str, top_k: int = 5) -> Da
         "sum(forks_count) AS total_forks",
         "sum(CASE WHEN is_active THEN 1 ELSE 0 END) AS active_repositories",
         f"{avg_of('quality_score')} AS avg_quality_score",
-        "count(DISTINCT technology_category) AS n_categories",
-        "count(DISTINCT primary_language) AS n_languages",
+        f"{count_distinct('technology_category')} AS n_categories",
+        f"{count_distinct('primary_language')} AS n_languages",
     )
 
     def top_list(col: str) -> DataFrame:

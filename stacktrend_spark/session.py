@@ -13,7 +13,15 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``spark.sql.codegen.cache.maxEntries``: Spark's cache of compiled
+#: generated classes (one per JVM, LRU, default 100). A warm medallion
+#: pass (an update trend cycle plus a personal run on the fixtures)
+#: uses 207 distinct classes, in the same order every pass, so under
+#: the default each class is evicted before its next use and every
+#: pass recompiled about 215 of them with Janino (about 1.7 s of
+#: compile time summed over threads, 4 cores). 1000 holds that working
+#: set several times over.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_driver_memory(physical_bytes: int) -> str:
@@ -40,12 +48,16 @@ def get_spark(
       exactly what we want at 100 TB where stats are unreliable.
     - Arrow on — every pandas_udf / mapInPandas boundary is
       Arrow-batched.
+    - ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``
+      — a warm medallion pass compiles no class. The cache is static
+      and per JVM: it is sized by the session that starts the JVM.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -23,12 +23,16 @@
   pipelines write, through seeding, update, new-date and personal runs.
 - ``test_steady_state_job_budget``: an update trend cycle plus a
   personal run, both warm, submit at most ``STEADY_STATE_JOB_BUDGET``
-  Spark jobs.
+  Spark jobs, and every table they write holds one file per partition.
+- ``test_warm_pass_compiles_nothing``: a second such steady-state pass
+  compiles no generated class (Spark's codegen cache holds the pass's
+  working set, ``session.CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
 
 import gc
+import os
 import uuid
 from functools import reduce
 
@@ -328,15 +332,20 @@ def test_reads_match_fresh_inference(spark, tmp_path):
 
 
 #: Spark jobs of one warm update trend cycle plus one warm personal run
-#: on the fixtures: 70 measured at 4 and at 8 cores, plus a margin. The
+#: on the fixtures: 56 measured at 4 and at 8 cores, plus a margin. The
 #: code before the store recorded schemas ran 91, 40 of them gold
 #: writes outside the caller's job group: a footer-read job on every
 #: read-back, and the trend cycle's silver plan ran twice.
-STEADY_STATE_JOB_BUDGET = 74
+STEADY_STATE_JOB_BUDGET = 60
 
 
-def test_steady_state_job_budget(spark, tmp_path):
-    store = MedallionStore(str(tmp_path / "store"), backend="parquet")
+@pytest.fixture(scope="module")
+def steady_store(spark_module, tmp_path_factory):
+    """A store seeded by a trend cycle, an update cycle and a personal
+    run, and the steady-state pass over it: the next update cycle (the
+    same batch every time) plus a personal run."""
+    spark = spark_module
+    store = MedallionStore(str(tmp_path_factory.mktemp("steady") / "store"), backend="parquet")
     run_trend_pipeline(spark, store, fixtures.bronze_repos(spark), AS_OF_DATE)
     run_trend_pipeline(spark, store, _update_batch(spark), AS_OF_DATE)
     _personal_run(spark, store)
@@ -346,8 +355,35 @@ def test_steady_state_job_budget(spark, tmp_path):
         run_trend_pipeline(spark, store, batch, AS_OF_DATE)
         _personal_run(spark, store)
 
+    return store, steady
+
+
+def test_steady_state_job_budget(spark, steady_store):
+    store, steady = steady_store
     n = _count_jobs(spark, steady)
     assert n <= STEADY_STATE_JOB_BUDGET, n
+    # the writes that skip the rebalance (their rows come out of an
+    # aggregate's or a window's exchange) still land as one file
+    for layer in ("bronze", "silver", "gold"):
+        for table in os.listdir(os.path.join(store.root, layer)):
+            for d, subdirs, files in os.walk(store.path(layer, table)):
+                if not subdirs:
+                    parts = [f for f in files if f.startswith("part-")]
+                    assert len(parts) == 1, (layer, table, d, parts)
+
+
+def test_warm_pass_compiles_nothing(spark, steady_store):
+    """Spark keeps compiled generated classes in one LRU cache per JVM.
+    A pass uses each of its classes once, in the same order every time,
+    so a cache smaller than the pass's working set evicts every class
+    before its next use and each pass recompiles all of them (about
+    215 classes under Spark's default of 100 entries)."""
+    _, steady = steady_store
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    steady()
+    before = compiled.getCount()
+    steady()
+    assert compiled.getCount() - before == 0
 
 
 if __name__ == "__main__":
