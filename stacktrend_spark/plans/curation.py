@@ -945,9 +945,6 @@ def containment_join_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_SLICE_MOD = 10
 
 
-_LM_TERM_MICRO_SQL = None  # rendered below with sql_xlog10
-
-
 def _lm_oracle() -> str:
     from stacktrend_spark.functions.rounding import sql_xlog10
 
@@ -1002,7 +999,7 @@ def _lm_oracle() -> str:
 
 @register(
     "text_lm_score",
-    oracle=None,  # bound right below (needs the rendered sql_xlog10)
+    oracle=_lm_oracle(),
     doc=(
         "Bigram-LM quality scoring (CCNet/KenLM-style): LM trained on "
         f"the doc_id%{_LM_SLICE_MOD}==0 slice, add-1 smoothed, scores "
@@ -1074,13 +1071,6 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kept"),
         )
     )
-
-
-# bind the rendered oracle (sql_xlog10 import lives inside the helper
-# to keep module import light)
-from stacktrend_spark.plans.registry import _REGISTRY as _R  # noqa: E402
-
-_R["text_lm_score"].oracle = _lm_oracle()
 
 
 # ---------------------------------------------------------------------------

@@ -1754,9 +1754,62 @@ _QL_NQ = 3
 _QL_TOPK = 10
 
 
+def _ql_oracle() -> str:
+    from stacktrend_spark.functions.rounding import sql_xlog10
+
+    def silog(expr: str) -> str:
+        return (
+            f"CAST(FLOOR({sql_xlog10(f'GREATEST({expr}, 1)')}"
+            f" * 1000000.0) AS BIGINT)"
+        )
+
+    return f"""
+        WITH toks AS (
+            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+            FROM documents
+        ),
+        vocab AS (
+            SELECT term, CAST(COUNT(*) AS BIGINT) AS cf FROM toks GROUP BY 1
+        ),
+        ctot AS (SELECT SUM(cf) AS c FROM vocab),
+        qterms AS (
+            SELECT term, cf FROM vocab ORDER BY cf DESC, term LIMIT {_QL_NQ}
+        ),
+        lens AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len_d
+            FROM toks GROUP BY 1
+        ),
+        tf AS (
+            SELECT t.doc_id, t.term, CAST(COUNT(*) AS BIGINT) AS tf
+            FROM toks t JOIN qterms q USING (term)
+            GROUP BY 1, 2
+        ),
+        pairs AS (
+            SELECT l.doc_id, l.len_d, q.cf, COALESCE(tf.tf, 0) AS tf, ctot.c
+            FROM lens l CROSS JOIN qterms q CROSS JOIN ctot
+            LEFT JOIN tf ON tf.doc_id = l.doc_id AND tf.term = q.term
+        ),
+        scored AS (
+            SELECT doc_id,
+                   CAST(MAX(len_d) AS BIGINT) AS n_tokens,
+                   CAST(SUM({silog(f"tf * c + {_QL_MU} * cf")}
+                          - {silog(f"(len_d + {_QL_MU}) * c")}) AS BIGINT)
+                       AS ql_score_micro
+            FROM pairs GROUP BY 1
+        ),
+        ranked AS (
+            SELECT *, ROW_NUMBER() OVER (
+                       ORDER BY ql_score_micro DESC, doc_id) AS rnk
+            FROM scored
+        )
+        SELECT doc_id, n_tokens, ql_score_micro, CAST(rnk AS INTEGER) AS rnk
+        FROM ranked WHERE rnk <= {_QL_TOPK}
+    """
+
+
 @register(
     "query_likelihood_dirichlet",
-    oracle=None,  # bound right below (needs the rendered sql_xlog10)
+    oracle=_ql_oracle(),
     doc=(
         "Query-likelihood retrieval, Dirichlet smoothing (µ=100): "
         "query = the 3 most frequent corpus terms, scores as exact "
@@ -1810,61 +1863,6 @@ def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bind_ql_oracle() -> None:
-    from stacktrend_spark.functions.rounding import sql_xlog10
-    from stacktrend_spark.plans.registry import _REGISTRY
-
-    def silog(expr: str) -> str:
-        return (
-            f"CAST(FLOOR({sql_xlog10(f'GREATEST({expr}, 1)')}"
-            f" * 1000000.0) AS BIGINT)"
-        )
-
-    _REGISTRY["query_likelihood_dirichlet"].oracle = f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-            FROM documents
-        ),
-        vocab AS (
-            SELECT term, CAST(COUNT(*) AS BIGINT) AS cf FROM toks GROUP BY 1
-        ),
-        ctot AS (SELECT SUM(cf) AS c FROM vocab),
-        qterms AS (
-            SELECT term, cf FROM vocab ORDER BY cf DESC, term LIMIT {_QL_NQ}
-        ),
-        lens AS (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len_d
-            FROM toks GROUP BY 1
-        ),
-        tf AS (
-            SELECT t.doc_id, t.term, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM toks t JOIN qterms q USING (term)
-            GROUP BY 1, 2
-        ),
-        pairs AS (
-            SELECT l.doc_id, l.len_d, q.cf, COALESCE(tf.tf, 0) AS tf, ctot.c
-            FROM lens l CROSS JOIN qterms q CROSS JOIN ctot
-            LEFT JOIN tf ON tf.doc_id = l.doc_id AND tf.term = q.term
-        ),
-        scored AS (
-            SELECT doc_id,
-                   CAST(MAX(len_d) AS BIGINT) AS n_tokens,
-                   CAST(SUM({silog(f"tf * c + {_QL_MU} * cf")}
-                          - {silog(f"(len_d + {_QL_MU}) * c")}) AS BIGINT)
-                       AS ql_score_micro
-            FROM pairs GROUP BY 1
-        ),
-        ranked AS (
-            SELECT *, ROW_NUMBER() OVER (
-                       ORDER BY ql_score_micro DESC, doc_id) AS rnk
-            FROM scored
-        )
-        SELECT doc_id, n_tokens, ql_score_micro, CAST(rnk AS INTEGER) AS rnk
-        FROM ranked WHERE rnk <= {_QL_TOPK}
-    """
-
-
-_bind_ql_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1991,9 +1989,84 @@ def snippet_best_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NDCG_K = 10
 
 
+def _ndcg_oracle() -> str:
+    from stacktrend_spark.functions.rounding import sql_round, sql_xlog10
+
+    def silog(expr: str) -> str:
+        return (
+            f"CAST(FLOOR({sql_xlog10(f'GREATEST({expr}, 1)')}"
+            f" * 1000000.0) AS BIGINT)"
+        )
+
+    disc_r = f"((1.0 / 9.0) / ({sql_xlog10('(r + 1)')}))"
+    disc_i = f"((1.0 / 9.0) / ({sql_xlog10('(ri + 1)')}))"
+    return f"""
+        WITH toks AS (
+            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+            FROM documents
+        ),
+        vocab AS (
+            SELECT term, CAST(COUNT(*) AS BIGINT) AS cf FROM toks GROUP BY 1
+        ),
+        ctot AS (SELECT SUM(cf) AS c FROM vocab),
+        qterms AS (
+            SELECT term, cf FROM vocab ORDER BY cf DESC, term LIMIT {_QL_NQ}
+        ),
+        lens AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len_d
+            FROM toks GROUP BY 1
+        ),
+        tf AS (
+            SELECT t.term, t.doc_id, CAST(COUNT(*) AS BIGINT) AS tf
+            FROM toks t JOIN qterms q USING (term)
+            GROUP BY 1, 2
+        ),
+        scored AS (
+            SELECT tf.term, tf.doc_id, tf.tf,
+                   {silog(f"tf.tf * ctot.c + {_QL_MU} * q.cf")}
+                 - {silog(f"(l.len_d + {_QL_MU}) * ctot.c")} AS ql,
+                   LEAST(tf.tf, 3) AS grade
+            FROM tf
+            JOIN lens l USING (doc_id)
+            JOIN qterms q ON q.term = tf.term
+            CROSS JOIN ctot
+        ),
+        ranked AS (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY term
+                                         ORDER BY ql DESC, doc_id) AS r
+            FROM scored
+        ),
+        top AS (
+            SELECT term, doc_id, grade, r,
+                   (CAST(1 AS BIGINT) << CAST(grade AS INT)) - 1 AS gain
+            FROM ranked WHERE r <= {_NDCG_K}
+        ),
+        ideal AS (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY term
+                                         ORDER BY gain DESC, doc_id) AS ri
+            FROM top
+        ),
+        agg AS (
+            SELECT term,
+                   CAST(COUNT(*) AS BIGINT) AS n_ranked,
+                   SUM(gain * {disc_r})     AS dcg,
+                   SUM(gain * {disc_i})     AS idcg,
+                   MAX(CASE WHEN grade >= 3
+                            THEN CAST(1000000 // r AS BIGINT) END) AS mrr_raw
+            FROM ideal GROUP BY 1
+        )
+        SELECT term, n_ranked,
+               {sql_round('dcg', 6)}  AS dcg_r6,
+               {sql_round('idcg', 6)} AS idcg_r6,
+               CAST(FLOOR(dcg / idcg * 1000000.0 + 0.5) AS BIGINT) AS ndcg_ppm,
+               CAST(COALESCE(mrr_raw, 0) AS BIGINT) AS mrr_ppm
+        FROM agg
+    """
+
+
 @register(
     "retrieval_ndcg_eval",
-    oracle=None,  # bound right below (needs the rendered sql_xlog10)
+    oracle=_ndcg_oracle(),
     doc=(
         "NDCG@10 + MRR for the Dirichlet QL ranker: graded tf labels "
         "(gain 2^min(tf,3)-1), xlog10-exact log2 discounts, local-set "
@@ -2069,83 +2142,6 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bind_ndcg_oracle() -> None:
-    from stacktrend_spark.functions.rounding import sql_round, sql_xlog10
-    from stacktrend_spark.plans.registry import _REGISTRY
-
-    def silog(expr: str) -> str:
-        return (
-            f"CAST(FLOOR({sql_xlog10(f'GREATEST({expr}, 1)')}"
-            f" * 1000000.0) AS BIGINT)"
-        )
-
-    disc_r = f"((1.0 / 9.0) / ({sql_xlog10('(r + 1)')}))"
-    disc_i = f"((1.0 / 9.0) / ({sql_xlog10('(ri + 1)')}))"
-    _REGISTRY["retrieval_ndcg_eval"].oracle = f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-            FROM documents
-        ),
-        vocab AS (
-            SELECT term, CAST(COUNT(*) AS BIGINT) AS cf FROM toks GROUP BY 1
-        ),
-        ctot AS (SELECT SUM(cf) AS c FROM vocab),
-        qterms AS (
-            SELECT term, cf FROM vocab ORDER BY cf DESC, term LIMIT {_QL_NQ}
-        ),
-        lens AS (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS len_d
-            FROM toks GROUP BY 1
-        ),
-        tf AS (
-            SELECT t.term, t.doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-            FROM toks t JOIN qterms q USING (term)
-            GROUP BY 1, 2
-        ),
-        scored AS (
-            SELECT tf.term, tf.doc_id, tf.tf,
-                   {silog(f"tf.tf * ctot.c + {_QL_MU} * q.cf")}
-                 - {silog(f"(l.len_d + {_QL_MU}) * ctot.c")} AS ql,
-                   LEAST(tf.tf, 3) AS grade
-            FROM tf
-            JOIN lens l USING (doc_id)
-            JOIN qterms q ON q.term = tf.term
-            CROSS JOIN ctot
-        ),
-        ranked AS (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY term
-                                         ORDER BY ql DESC, doc_id) AS r
-            FROM scored
-        ),
-        top AS (
-            SELECT term, doc_id, grade, r,
-                   (CAST(1 AS BIGINT) << CAST(grade AS INT)) - 1 AS gain
-            FROM ranked WHERE r <= {_NDCG_K}
-        ),
-        ideal AS (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY term
-                                         ORDER BY gain DESC, doc_id) AS ri
-            FROM top
-        ),
-        agg AS (
-            SELECT term,
-                   CAST(COUNT(*) AS BIGINT) AS n_ranked,
-                   SUM(gain * {disc_r})     AS dcg,
-                   SUM(gain * {disc_i})     AS idcg,
-                   MAX(CASE WHEN grade >= 3
-                            THEN CAST(1000000 // r AS BIGINT) END) AS mrr_raw
-            FROM ideal GROUP BY 1
-        )
-        SELECT term, n_ranked,
-               {sql_round('dcg', 6)}  AS dcg_r6,
-               {sql_round('idcg', 6)} AS idcg_r6,
-               CAST(FLOOR(dcg / idcg * 1000000.0 + 0.5) AS BIGINT) AS ndcg_ppm,
-               CAST(COALESCE(mrr_raw, 0) AS BIGINT) AS mrr_ppm
-        FROM agg
-    """
-
-
-_bind_ndcg_oracle()
 
 
 # ---------------------------------------------------------------------------

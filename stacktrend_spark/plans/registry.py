@@ -8,9 +8,7 @@ runs both sides at sf0.01 and hash-matches values, so:
 - computed doubles are ROUNDed (identically on both sides) so the two
   engines produce bit-identical values;
 - every ranking/limit has a unique-key tiebreaker so the selected row
-  SET is deterministic across engines;
-- queries with genuinely non-SQL-expressible semantics register with
-  ``oracle=None`` (driver records a weaker rows-only check).
+  SET is deterministic across engines.
 """
 
 from __future__ import annotations
@@ -28,7 +26,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
@@ -70,7 +68,10 @@ _PLAN_MODULES = (
 )
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
+    if not isinstance(oracle, str):
+        raise TypeError(f"query {name!r}: oracle must be DuckDB SQL text")
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")

@@ -3,13 +3,12 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stacktrend_spark.session import get_spark
-from stacktrend_spark.sources.tables import TABLES
+from tools.verify_local import duck_con
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -87,10 +86,7 @@ def registry_frames():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
-    return con
+    return duck_con(SF_SMOKE)
 
 
 @pytest.fixture(scope="session")

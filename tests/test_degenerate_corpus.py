@@ -23,17 +23,16 @@ streaming mirrors' availableNow executions).
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import tempfile
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from stacktrend_spark.plans.registry import all_queries
+from tools.verify_local import run
 
 pytestmark = pytest.mark.slow
 
@@ -65,193 +64,89 @@ FIXED_R13 = (
 )
 
 
+#: the pathological corpus, one row per table: (column, type, value)
+_CORPUS = {
+    "region": [("r_regionkey", pa.int32(), 0), ("r_name", pa.string(), "AFRICA")],
+    "nation": [
+        ("n_nationkey", pa.int32(), 0),
+        ("n_name", pa.string(), "ALGERIA"),
+        ("n_regionkey", pa.int32(), 0),
+    ],
+    "customer": [
+        ("c_custkey", pa.int64(), 1),
+        ("c_name", pa.string(), "c1"),
+        ("c_nationkey", pa.int32(), 0),
+        ("c_acctbal", pa.float64(), 0.0),
+        ("c_mktsegment", pa.string(), "BUILDING"),
+    ],
+    "supplier": [
+        ("s_suppkey", pa.int64(), 1),
+        ("s_name", pa.string(), "s1"),
+        ("s_nationkey", pa.int32(), 0),
+        ("s_acctbal", pa.float64(), 0.0),
+    ],
+    "part": [
+        ("p_partkey", pa.int64(), 1),
+        ("p_name", pa.string(), "p"),
+        ("p_brand", pa.string(), "B"),
+        ("p_type", pa.string(), "T"),
+        ("p_size", pa.int32(), 1),
+        ("p_retailprice", pa.float64(), 1.0),
+    ],
+    "orders": [
+        ("o_orderkey", pa.int64(), 1),
+        ("o_custkey", pa.int64(), 1),
+        ("o_orderstatus", pa.string(), "F"),
+        ("o_totalprice", pa.float64(), 1.0),
+        ("o_orderdate", pa.timestamp("us"), _US),
+        ("o_orderpriority", pa.string(), "1-URGENT"),
+    ],
+    "lineitem": [
+        ("l_orderkey", pa.int64(), 1),
+        ("l_partkey", pa.int64(), 1),
+        ("l_suppkey", pa.int64(), 1),
+        ("l_linenumber", pa.int32(), 1),
+        ("l_quantity", pa.float64(), 1.0),
+        ("l_extendedprice", pa.float64(), 1.0),
+        ("l_discount", pa.float64(), 0.0),
+        ("l_tax", pa.float64(), 0.0),
+        ("l_returnflag", pa.string(), "A"),
+        ("l_linestatus", pa.string(), "O"),
+        ("l_shipdate", pa.timestamp("us"), _US),
+    ],
+    "events": [
+        ("event_id", pa.int64(), 1),
+        ("ts", pa.timestamp("us"), _EV_US),
+        ("user_id", pa.int64(), 1),
+        ("event_type", pa.string(), "purchase"),
+        ("value", pa.float64(), 0.0),
+        ("props", pa.string(), "{}"),
+    ],
+    "documents": [
+        ("doc_id", pa.int64(), 1),
+        ("text", pa.string(), "a"),
+        ("lang", pa.string(), "en"),
+        ("source", pa.string(), "web"),
+        ("n_chars", pa.int64(), 1),
+    ],
+    "embeddings": [
+        ("vec_id", pa.int64(), 1),
+        ("embedding", pa.list_(pa.float32()), [0.1] * 64),
+        ("label", pa.int32(), 0),
+    ],
+}
+
+
 def _build_corpus(n: int) -> str:
     """Write the pathological corpus with n rows per table (n in
-    {0, 1}); the 1-row shapes below are sliced to length n."""
+    {0, 1})."""
     d = tempfile.mkdtemp(prefix="degen_corpus_")
-
-    def w(name, cols, schema):
-        cols = {k: v[:n] for k, v in cols.items()}
+    for table, cols in _CORPUS.items():
+        schema = pa.schema([(c, t) for c, t, _ in cols])
+        data = {c: [v][:n] for c, _, v in cols}
         pq.write_table(
-            pa.table(cols, schema=schema), os.path.join(d, f"{name}.parquet")
+            pa.table(data, schema=schema), os.path.join(d, f"{table}.parquet")
         )
-
-    w(
-        "region",
-        {"r_regionkey": [0], "r_name": ["AFRICA"]},
-        pa.schema([("r_regionkey", pa.int32()), ("r_name", pa.string())]),
-    )
-    w(
-        "nation",
-        {"n_nationkey": [0], "n_name": ["ALGERIA"], "n_regionkey": [0]},
-        pa.schema(
-            [
-                ("n_nationkey", pa.int32()),
-                ("n_name", pa.string()),
-                ("n_regionkey", pa.int32()),
-            ]
-        ),
-    )
-    w(
-        "customer",
-        {
-            "c_custkey": [1],
-            "c_name": ["c1"],
-            "c_nationkey": [0],
-            "c_acctbal": [0.0],
-            "c_mktsegment": ["BUILDING"],
-        },
-        pa.schema(
-            [
-                ("c_custkey", pa.int64()),
-                ("c_name", pa.string()),
-                ("c_nationkey", pa.int32()),
-                ("c_acctbal", pa.float64()),
-                ("c_mktsegment", pa.string()),
-            ]
-        ),
-    )
-    w(
-        "supplier",
-        {
-            "s_suppkey": [1],
-            "s_name": ["s1"],
-            "s_nationkey": [0],
-            "s_acctbal": [0.0],
-        },
-        pa.schema(
-            [
-                ("s_suppkey", pa.int64()),
-                ("s_name", pa.string()),
-                ("s_nationkey", pa.int32()),
-                ("s_acctbal", pa.float64()),
-            ]
-        ),
-    )
-    w(
-        "part",
-        {
-            "p_partkey": [1],
-            "p_name": ["p"],
-            "p_brand": ["B"],
-            "p_type": ["T"],
-            "p_size": [1],
-            "p_retailprice": [1.0],
-        },
-        pa.schema(
-            [
-                ("p_partkey", pa.int64()),
-                ("p_name", pa.string()),
-                ("p_brand", pa.string()),
-                ("p_type", pa.string()),
-                ("p_size", pa.int32()),
-                ("p_retailprice", pa.float64()),
-            ]
-        ),
-    )
-    w(
-        "orders",
-        {
-            "o_orderkey": [1],
-            "o_custkey": [1],
-            "o_orderstatus": ["F"],
-            "o_totalprice": [1.0],
-            "o_orderdate": [_US],
-            "o_orderpriority": ["1-URGENT"],
-        },
-        pa.schema(
-            [
-                ("o_orderkey", pa.int64()),
-                ("o_custkey", pa.int64()),
-                ("o_orderstatus", pa.string()),
-                ("o_totalprice", pa.float64()),
-                ("o_orderdate", pa.timestamp("us")),
-                ("o_orderpriority", pa.string()),
-            ]
-        ),
-    )
-    w(
-        "lineitem",
-        {
-            "l_orderkey": [1],
-            "l_partkey": [1],
-            "l_suppkey": [1],
-            "l_linenumber": [1],
-            "l_quantity": [1.0],
-            "l_extendedprice": [1.0],
-            "l_discount": [0.0],
-            "l_tax": [0.0],
-            "l_returnflag": ["A"],
-            "l_linestatus": ["O"],
-            "l_shipdate": [_US],
-        },
-        pa.schema(
-            [
-                ("l_orderkey", pa.int64()),
-                ("l_partkey", pa.int64()),
-                ("l_suppkey", pa.int64()),
-                ("l_linenumber", pa.int32()),
-                ("l_quantity", pa.float64()),
-                ("l_extendedprice", pa.float64()),
-                ("l_discount", pa.float64()),
-                ("l_tax", pa.float64()),
-                ("l_returnflag", pa.string()),
-                ("l_linestatus", pa.string()),
-                ("l_shipdate", pa.timestamp("us")),
-            ]
-        ),
-    )
-    w(
-        "events",
-        {
-            "event_id": [1],
-            "ts": [_EV_US],
-            "user_id": [1],
-            "event_type": ["purchase"],
-            "value": [0.0],
-            "props": ["{}"],
-        },
-        pa.schema(
-            [
-                ("event_id", pa.int64()),
-                ("ts", pa.timestamp("us")),
-                ("user_id", pa.int64()),
-                ("event_type", pa.string()),
-                ("value", pa.float64()),
-                ("props", pa.string()),
-            ]
-        ),
-    )
-    w(
-        "documents",
-        {
-            "doc_id": [1],
-            "text": ["a"],
-            "lang": ["en"],
-            "source": ["web"],
-            "n_chars": [1],
-        },
-        pa.schema(
-            [
-                ("doc_id", pa.int64()),
-                ("text", pa.string()),
-                ("lang", pa.string()),
-                ("source", pa.string()),
-                ("n_chars", pa.int64()),
-            ]
-        ),
-    )
-    w(
-        "embeddings",
-        {"vec_id": [1], "embedding": [[0.1] * 64], "label": [0]},
-        pa.schema(
-            [
-                ("vec_id", pa.int64()),
-                ("embedding", pa.list_(pa.float32())),
-                ("label", pa.int32()),
-            ]
-        ),
-    )
     return d
 
 
@@ -269,63 +164,26 @@ def empty_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_no_query_crashes_on_degenerate_corpus(spark, degen_dir):
+def _deaths(spark, data_dir: str) -> list[str]:
     failures = []
     for name, spec in all_queries().items():
         try:
-            spec.fn(spark, degen_dir).collect()
+            spec.fn(spark, data_dir).collect()
         except Exception as e:  # noqa: BLE001 — collecting the sweep
             failures.append(f"{name}: {type(e).__name__}: {str(e)[:120]}")
+    return failures
+
+
+def test_no_query_crashes_on_degenerate_corpus(spark, degen_dir):
+    failures = _deaths(spark, degen_dir)
     assert not failures, (
         "queries DIED (instead of degrading) on the 1-row corpus:\n"
         + "\n".join(failures)
     )
 
 
-def _n(v):
-    import datetime
-
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    # the driver canon coerces date/datetime to one datetime64 dtype;
-    # mirror that here (DuckDB surfaces DATE, Spark TIMESTAMP)
-    if isinstance(v, datetime.datetime):
-        return v
-    if isinstance(v, datetime.date):
-        return datetime.datetime(v.year, v.month, v.day)
-    return v
-
-
 def test_fixed_queries_match_oracle_on_degenerate_corpus(spark, degen_dir):
-    con = duckdb.connect()
-    for f in os.listdir(degen_dir):
-        con.execute(
-            f"CREATE VIEW {f.removesuffix('.parquet')} AS SELECT * FROM "
-            f"'{os.path.join(degen_dir, f)}'"
-        )
-    specs = all_queries()
-    bad = []
-    for name in FIXED_R13:
-        spec = specs[name]
-        sdf = spec.fn(spark, degen_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        if spec.oracle is None:
-            continue
-        cur = con.execute(spec.oracle)
-        o_cols = [c[0] for c in cur.description]
-        o_rows = cur.fetchall()
-        s_ord = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-        o_ord = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-        s_canon = sorted(
-            (tuple(_n(r[i]) for i in s_ord) for r in s_rows), key=repr
-        )
-        o_canon = sorted(
-            (tuple(_n(r[i]) for i in o_ord) for r in o_rows), key=repr
-        )
-        if sorted(s_cols) != sorted(o_cols) or s_canon != o_canon:
-            bad.append(f"{name}: spark={s_canon[:4]} oracle={o_canon[:4]}")
-    assert not bad, "degenerate-parity drift:\n" + "\n".join(bad)
+    assert run(spark, degen_dir, FIXED_R13) == 0, "degenerate-parity drift"
 
 
 #: rows the r13 EMPTY-corpus audit found dying (driver-side collects
@@ -347,12 +205,7 @@ FIXED_R13_EMPTY = (
 
 
 def test_no_query_crashes_on_empty_corpus(spark, empty_dir):
-    failures = []
-    for name, spec in all_queries().items():
-        try:
-            spec.fn(spark, empty_dir).collect()
-        except Exception as e:  # noqa: BLE001 — collecting the sweep
-            failures.append(f"{name}: {type(e).__name__}: {str(e)[:120]}")
+    failures = _deaths(spark, empty_dir)
     assert not failures, (
         "queries DIED (instead of degrading) on the EMPTY corpus:\n"
         + "\n".join(failures)
@@ -360,32 +213,4 @@ def test_no_query_crashes_on_empty_corpus(spark, empty_dir):
 
 
 def test_fixed_queries_match_oracle_on_empty_corpus(spark, empty_dir):
-    con = duckdb.connect()
-    for f in os.listdir(empty_dir):
-        con.execute(
-            f"CREATE VIEW {f.removesuffix('.parquet')} AS SELECT * FROM "
-            f"'{os.path.join(empty_dir, f)}'"
-        )
-    specs = all_queries()
-    bad = []
-    for name in FIXED_R13_EMPTY:
-        spec = specs[name]
-        sdf = spec.fn(spark, empty_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        if spec.oracle is None:
-            continue
-        cur = con.execute(spec.oracle)
-        o_cols = [c[0] for c in cur.description]
-        o_rows = cur.fetchall()
-        s_ord = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-        o_ord = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-        s_canon = sorted(
-            (tuple(_n(r[i]) for i in s_ord) for r in s_rows), key=repr
-        )
-        o_canon = sorted(
-            (tuple(_n(r[i]) for i in o_ord) for r in o_rows), key=repr
-        )
-        if sorted(s_cols) != sorted(o_cols) or s_canon != o_canon:
-            bad.append(f"{name}: spark={s_canon[:4]} oracle={o_canon[:4]}")
-    assert not bad, "empty-corpus parity drift:\n" + "\n".join(bad)
+    assert run(spark, empty_dir, FIXED_R13_EMPTY) == 0, "empty-corpus parity drift"

@@ -1,54 +1,24 @@
 """Every registered query must match its DuckDB oracle at sf0.001.
 
-This is a fast local replica of the driver's t2 gate (which runs at
-sf0.01); tools/verify_local.py runs the same comparison at any sf.
+A fast local replica of the driver's t2 gate (which runs at sf0.01):
+each case goes through ``tools.verify_local.check``, the one oracle
+gate, which ``tools/verify_local.py`` runs at any sf.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 
 from stacktrend_spark.plans.registry import all_queries
+from tools.verify_local import check
 
 # heavy tier: excluded from the core gate (see pytest.ini)
 pytestmark = pytest.mark.slow
-SPECS = all_queries()
 
 
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = df[c].astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("float64") if df[c].isna().any() else df[c].astype("int64")
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-@pytest.mark.parametrize("name", sorted(SPECS))
+@pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_matches_oracle(name, spark, duck, sf_dir):
-    spec = SPECS[name]
-    sdf = spec.fn(spark, sf_dir).toPandas()
-    if spec.oracle is None:
-        # rows-only check (non-SQL-expressible op): must run and be stable
-        assert len(sdf) >= 0
-        return
-    ddf = duck.execute(spec.oracle).df()
-    assert len(sdf) == len(ddf), f"rowcount spark={len(sdf)} duck={len(ddf)}"
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    a, b = canon(sdf), canon(ddf)
-    for c in a.columns:
-        av, bv = a[c], b[c]
-        if pd.api.types.is_float_dtype(av) or pd.api.types.is_float_dtype(bv):
-            av = av.astype("float64").to_numpy()
-            bv = bv.astype("float64").to_numpy()
-            ok = (av == bv) | (np.isnan(av) & np.isnan(bv))
-            assert ok.all(), f"{name}.{c}: max abs diff {np.nanmax(np.abs(av - bv))}"
-        else:
-            ok = (av == bv) | (av.isna() & bv.isna())
-            assert ok.all(), f"{name}.{c}: values differ"
+    assert check(spark, sf_dir, name, con=duck) == []
 
 
 def test_priority_window_fully_registered():
@@ -57,3 +27,10 @@ def test_priority_window_fully_registered():
     from stacktrend_spark.plans.registry import priority_gaps
 
     assert priority_gaps() == []
+
+
+def test_every_query_registers_oracle_text():
+    from stacktrend_spark.plans.registry import register
+
+    with pytest.raises(TypeError):
+        register("no_oracle", None)

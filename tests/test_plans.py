@@ -5,9 +5,6 @@ a 100 TB performance bug even when results stay correct."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,13 +12,7 @@ from stacktrend_spark.operators.dedup import simhash_narrow
 from stacktrend_spark.plans.registry import all_queries
 from stacktrend_spark.sources.tables import load_table
 from tools.parity_audit import checkpoint_inputs
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tools.plan_shape import formatted_plan
 
 
 @pytest.fixture()
@@ -37,7 +28,7 @@ def checkpointed():
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
     """The flagship query's shipdate filter must reach the scan —
     otherwise every 100 TB scan reads every row group."""
-    p = plan_of(all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
     pushed = [l for l in p.splitlines() if "PushedFilters" in l]
     assert pushed and "l_shipdate" in pushed[0]
     assert "LessThanOrEqual" in pushed[0]
@@ -46,7 +37,7 @@ def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
 def test_column_pruning_reaches_scan(spark, sf_dir):
     """q1 touches 7 lineitem columns; the scan schema must not include
     untouched wide columns like l_comment."""
-    p = plan_of(all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
     schema_lines = [l for l in p.splitlines() if "ReadSchema" in l]
     assert schema_lines and "l_comment" not in schema_lines[0]
 
@@ -55,7 +46,7 @@ def test_dimension_joins_broadcast(spark, sf_dir):
     """Star joins against region/nation/customer must be broadcast hash
     joins (small dims), never sort-merge: at 100 TB a sort-merge here
     shuffles the full fact table."""
-    p = plan_of(all_queries()["join_revenue_by_nation"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["join_revenue_by_nation"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -63,21 +54,21 @@ def test_dimension_joins_broadcast(spark, sf_dir):
 def test_simhash_is_shuffle_free(spark, sf_dir):
     """The narrow SimHash promises a map-only plan: zero Exchanges."""
     docs = load_table(spark, sf_dir, "documents")
-    p = plan_of(simhash_narrow(docs, "doc_id", "text"))
+    p = formatted_plan(simhash_narrow(docs, "doc_id", "text"))
     assert "Exchange" not in p
 
 
 def test_bruteforce_cosine_broadcasts_queries(spark, sf_dir):
     """Brute-force ANN must broadcast the (tiny) query side; the corpus
     side streams through without a shuffle."""
-    p = plan_of(all_queries()["sim_bruteforce_topk"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["sim_bruteforce_topk"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in p
 
 
 def test_ivf_cosine_is_equi_join(spark, sf_dir):
     """The IVF path prunes via a bucket equi-join — must be a broadcast
     HASH join on the cell id, not a nested-loop scan."""
-    p = plan_of(all_queries()["sim_ivf_topk"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["sim_ivf_topk"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -85,7 +76,7 @@ def test_ivf_cosine_is_equi_join(spark, sf_dir):
 def test_multimodal_uses_arrow_batches(spark, sf_dir):
     """Feature extraction must cross the Python boundary via
     MapInPandas (Arrow batches), not row-at-a-time python UDFs."""
-    p = plan_of(all_queries()["multimodal_features"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["multimodal_features"].fn(spark, sf_dir))
     assert "MapInPandas" in p
     assert "BatchEvalPython" not in p
 
@@ -93,7 +84,7 @@ def test_multimodal_uses_arrow_batches(spark, sf_dir):
 def test_minhash_verification_broadcasts_candidates(spark, sf_dir):
     """Candidate verification joins must broadcast the candidate pair
     list — the corpus' shingle arrays must not shuffle."""
-    p = plan_of(all_queries()["dedup_minhash_lsh"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["dedup_minhash_lsh"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
 
 
@@ -101,7 +92,7 @@ def test_salted_agg_spreads_hot_key(spark, sf_dir):
     """The salted aggregate must be TWO aggregation rounds — the first
     keyed by (key, salt) so a hot key spreads over B reduce tasks. The
     salt must be deterministic (hash, not rand)."""
-    p = plan_of(all_queries()["skew_salted_agg"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["skew_salted_agg"].fn(spark, sf_dir))
     assert p.count("HashAggregate") >= 4  # partial+final × two rounds
     assert "rand" not in p.lower()
 
@@ -109,7 +100,7 @@ def test_salted_agg_spreads_hot_key(spark, sf_dir):
 def test_salted_join_broadcasts_replicated_small_side(spark, sf_dir):
     """The salted join replicates the small side B× — it must still be
     broadcast (B·|small| is tiny); the big side must not sort-merge."""
-    p = plan_of(all_queries()["skew_salted_join"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["skew_salted_join"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -126,7 +117,7 @@ def test_bucketed_join_is_shuffle_free(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        p = plan_of(spark.table("bkt_l").join(spark.table("bkt_r"), "k"))
+        p = formatted_plan(spark.table("bkt_l").join(spark.table("bkt_r"), "k"))
         assert "SortMergeJoin" in p
         assert "Exchange" not in p
     finally:
@@ -155,7 +146,7 @@ def test_asof_join_is_single_shuffle(spark, sf_dir):
     detail section; count the detail headers."""
     import re
 
-    p = plan_of(all_queries()["asof_purchase_login"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["asof_purchase_login"].fn(spark, sf_dir))
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", p, flags=re.M))
     assert n_exchanges == 1
 
@@ -164,7 +155,7 @@ def test_iqr_fences_broadcast(spark, sf_dir):
     """The per-type IQR fence table is dimension-sized at any data
     scale — joining it back must broadcast, never sort-merge the full
     event stream."""
-    p = plan_of(all_queries()["outlier_iqr_filter"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["outlier_iqr_filter"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -174,7 +165,7 @@ def test_stratified_sample_single_shuffle(spark, sf_dir):
     Exchange in the plan is the final per-type summary aggregation."""
     # formatted explain prints each node twice (tree + detail section);
     # count tree nodes only.
-    p = plan_of(all_queries()["sample_stratified_hash"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["sample_stratified_hash"].fn(spark, sf_dir))
     assert p.count("+- Exchange") == 1
 
 
@@ -186,7 +177,7 @@ def test_tech_metrics_single_window_pass_no_sorts(spark, sf_dir):
     five sorts)."""
     import re
 
-    p = plan_of(all_queries()["gold_tech_metrics"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["gold_tech_metrics"].fn(spark, sf_dir))
     assert len(re.findall(r"^\(\d+\) Window", p, flags=re.M)) == 1
     assert len(re.findall(r"^\(\d+\) Sort", p, flags=re.M)) == 0
 
@@ -195,7 +186,7 @@ def test_portfolio_crossjoins_broadcast(spark, sf_dir):
     """gold_portfolio_overview crossJoins three 1-row aggregates; the
     broadcast hints must hold so AQE plans broadcast loops, not a
     cartesian product."""
-    p = plan_of(all_queries()["gold_portfolio_overview"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["gold_portfolio_overview"].fn(spark, sf_dir))
     assert "CartesianProduct" not in p
 
 
@@ -203,7 +194,7 @@ def test_lsh_topk_joins_on_bucket_hash(spark, sf_dir):
     """Sign-LSH ANN must candidate-join on the bucket id with a HASH
     join (broadcast or shuffled) — a nested-loop scan would mean the
     signature pruning isn't reaching the join."""
-    p = plan_of(all_queries()["sim_lsh_topk"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["sim_lsh_topk"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p or "ShuffledHashJoin" in p or "SortMergeJoin" in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -224,7 +215,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     write_bucketed(orders, "b_orders", ["o_orderkey"], buckets=8)
     write_bucketed(li, "b_lineitem", ["o_orderkey"], buckets=8)
     joined = bucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
-    p = plan_of(joined)
+    p = formatted_plan(joined)
     assert "SortMergeJoin" in p
     assert len(re.findall(r"^\(\d+\) Exchange", p, flags=re.M)) == 0
     # and it actually produces the join's rows
@@ -235,7 +226,7 @@ def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):
     """Decontamination must broadcast the (tiny) benchmark gram set —
     the corpus side must never shuffle for the contamination check
     (plans/curation.py: benchmarks are MBs, corpora are TBs)."""
-    p = plan_of(all_queries()["text_decontaminate"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["text_decontaminate"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -246,7 +237,7 @@ def test_validation_counts_single_aggregate_no_extra_scans(spark, sf_dir):
     would multiply a 100 TB audit by the rule count."""
     import re
 
-    p = plan_of(all_queries()["validation_violations"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["validation_violations"].fn(spark, sf_dir))
     # count numbered plan nodes (each appears once in the tree and once
     # in the detail section; the detail header is "(N) NodeName")
     assert len(re.findall(r"^\(\d+\) Scan parquet", p, re.M)) == 1
@@ -257,7 +248,7 @@ def test_validation_counts_single_aggregate_no_extra_scans(spark, sf_dir):
 def test_keyword_extraction_is_fused_map_only(spark, sf_dir):
     """Keyword extraction is pure array/string exprs fused into the
     scan's projection: zero exchanges, zero Python evals."""
-    p = plan_of(all_queries()["silver_keyword_extraction"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["silver_keyword_extraction"].fn(spark, sf_dir))
     assert "Exchange" not in p
     assert "Python" not in p  # no UDF/eval nodes
 
@@ -284,7 +275,7 @@ def test_registered_bucketed_query_exchange_free_join(spark, sf_dir):
 
     from stacktrend_spark.plans.layout import _bucketed_join_frame
 
-    p = plan_of(_bucketed_join_frame(spark, sf_dir))
+    p = formatted_plan(_bucketed_join_frame(spark, sf_dir))
     assert "SortMergeJoin" in p
     joins = p.split("SortMergeJoin")[0]
     assert len(re.findall(r"^\(\d+\) Exchange", joins, flags=re.M)) == 0
@@ -296,7 +287,7 @@ def test_partition_pruning_filter_is_metadata_only(spark, sf_dir):
     over the scanned rows (plans/layout.py)."""
     from stacktrend_spark.plans.layout import _pruned_read_frame
 
-    p = plan_of(_pruned_read_frame(spark, sf_dir))
+    p = formatted_plan(_pruned_read_frame(spark, sf_dir))
     part_lines = [l for l in p.splitlines() if "PartitionFilters" in l]
     assert part_lines and "event_type" in part_lines[0]
     data_filters = [
@@ -311,7 +302,7 @@ def test_heavy_hitter_candidates_broadcast(spark, sf_dir):
     """The exact pass of the two-pass heavy hitters must BROADCAST the
     candidate set against the gram stream — at 100 TB the full gram
     stream must never shuffle (plans/curation.py)."""
-    p = plan_of(all_queries()["heavy_hitters_twopass"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["heavy_hitters_twopass"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -320,7 +311,7 @@ def test_lm_scoring_broadcasts_model(spark, sf_dir):
     """Bigram-LM scoring joins the corpus against the (tiny) count
     tables: both LM joins and the global-mean join must broadcast —
     the corpus side must never shuffle for scoring."""
-    p = plan_of(all_queries()["text_lm_score"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["text_lm_score"].fn(spark, sf_dir))
     assert "SortMergeJoin" not in p
     assert p.count("BroadcastHashJoin") + p.count("BroadcastNestedLoopJoin") >= 3
 
@@ -329,7 +320,7 @@ def test_er_cross_pairs_stay_on_distinct_values(spark, sf_dir):
     """Blocked ER's pairwise join runs over the per-block DISTINCT-name
     aggregate, not over part rows: both join inputs must be
     HashAggregate outputs (plans/linkage.py)."""
-    p = plan_of(all_queries()["er_blocked_name_match"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["er_blocked_name_match"].fn(spark, sf_dir))
     import re
 
     join_line = [l for l in p.splitlines() if "Join" in l and "Broadcast" in l]
@@ -353,7 +344,7 @@ def test_interval_overlap_is_a_hash_join_not_nested_loop(spark, sf_dir):
     equi-join Catalyst can hash: a BroadcastNestedLoopJoin or
     CartesianProduct here means the band key was lost and the join is
     O(|A|x|B|) per user (plans/linkage.py)."""
-    p = plan_of(all_queries()["interval_overlap_join"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["interval_overlap_join"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
     assert "HashJoin" in p or "SortMergeJoin" in p
@@ -363,7 +354,7 @@ def test_compliance_audit_broadcasts_deletion_keys(spark, sf_dir):
     """The right-to-be-forgotten audit must broadcast the (small)
     deletion key set down the FK chain — a fact-side shuffle for a
     key-list semi-join is a 100 TB anti-pattern (plans/lakehouse.py)."""
-    p = plan_of(all_queries()["compliance_delete_audit"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["compliance_delete_audit"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -373,7 +364,7 @@ def test_market_basket_broadcasts_item_counts(spark, sf_dir):
     broadcast — re-shuffling the pair table on item keys would be a
     second full shuffle of the largest intermediate
     (plans/behavioral.py)."""
-    p = plan_of(all_queries()["market_basket_rules"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["market_basket_rules"].fn(spark, sf_dir))
     assert p.count("BroadcastHashJoin") >= 2
 
 
@@ -427,7 +418,7 @@ def test_nearest_join_is_bucketed_equi_join(spark, sf_dir):
     (key, time-bucket) — a BroadcastNestedLoopJoin on the |gap| <= tol
     predicate would be a cross product at 100 TB
     (operators/temporal.nearest_join)."""
-    p = plan_of(all_queries()["asof_nearest_click"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["asof_nearest_click"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
     assert "HashJoin" in p or "SortMergeJoin" in p
@@ -438,7 +429,7 @@ def test_kmv_rank_cut_pushes_group_limit(spark, sf_dir):
     WindowGroupLimit (per-partition top-K push-down) — without it every
     group's FULL distinct-hash set sorts in one task before the cut
     (plans/sketches.py)."""
-    p = plan_of(all_queries()["kmv_distinct_sketch"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["kmv_distinct_sketch"].fn(spark, sf_dir))
     assert "WindowGroupLimit" in p
 
 
@@ -448,7 +439,7 @@ def test_compaction_running_sum_is_two_phase(spark, sf_dir, checkpointed):
     over the file catalog is the banned anti-pattern
     (operators/ranking.global_running_sum_scalable)."""
     df = all_queries()["compaction_bin_packing"].fn(spark, sf_dir)
-    plans = [plan_of(f) for f in (df, *checkpointed)]
+    plans = [formatted_plan(f) for f in (df, *checkpointed)]
     # two-phase = local window partitioned by _pid after a RangePartitioning
     assert any("rangepartitioning" in p.lower() for p in plans)
     for p in plans:
@@ -459,7 +450,7 @@ def test_table_diff_drill_broadcasts_bucket_list(spark, sf_dir):
     """The anti-entropy drill join must be pre-filtered by the (tiny,
     broadcast) mismatched-bucket list so repair cost scales with the
     diff, not the table (plans/lakehouse.table_diff_by_fingerprint)."""
-    p = plan_of(all_queries()["table_diff_by_fingerprint"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["table_diff_by_fingerprint"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
 
 
@@ -467,7 +458,7 @@ def test_geo_nearest_is_cell_equi_join(spark, sf_dir):
     """The grid nearest-neighbor must candidate via an equi-join on the
     cell id — a cartesian/nested-loop over customers × suppliers is
     exactly what the grid exists to avoid."""
-    p = plan_of(all_queries()["geo_grid_nearest"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["geo_grid_nearest"].fn(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -476,7 +467,7 @@ def test_cms_sketch_builds_from_count_table(spark, sf_dir):
     """CMS is linear: the sketch aggregates the per-key count table
     (one corpus shuffle) and broadcasts the ≤ d·w-row sketch to the
     probes — the probe join must be a broadcast, not a shuffle."""
-    p = plan_of(all_queries()["cms_heavy_hitters"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["cms_heavy_hitters"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
 
 
@@ -484,21 +475,21 @@ def test_target_encode_broadcasts_category_stats(spark, sf_dir):
     """LOO target encoding joins the #categories aggregate back to the
     fact side via broadcast — the fact table must not shuffle for the
     encode join."""
-    p = plan_of(all_queries()["target_encode_loo"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["target_encode_loo"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
 
 
 def test_weighted_sample_is_take_ordered(spark, sf_dir):
     """A-ES top-k must plan TakeOrderedAndProject (per-partition top-k),
     never a global Sort of the keyed corpus."""
-    p = plan_of(all_queries()["weighted_sample_aes"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["weighted_sample_aes"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
 
 
 def test_setsim_candidates_are_equi_join_on_shingle(spark, sf_dir):
     """Prefix filtering self-joins ONLY on the shingle equi-key; any
     nested-loop shape means the prefix filter degenerated to all-pairs."""
-    p = plan_of(all_queries()["setsim_prefix_join"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["setsim_prefix_join"].fn(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -507,7 +498,7 @@ def test_pq_codebook_broadcasts(spark, sf_dir):
     """PQ candidate generation crosses each vector with the 128-row
     codebook — that side must broadcast (map-side amplification), the
     corpus must not shuffle before the argmin."""
-    p = plan_of(all_queries()["embedding_pq_codes"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["embedding_pq_codes"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
 
 
@@ -515,7 +506,7 @@ def test_interval_merge_windows_share_one_sort(spark, sf_dir):
     """Both gaps-and-islands windows ride the same (user, s)-ordering:
     the plan must contain exactly ONE Exchange (the user_id shuffle) —
     a second Exchange means the island window re-partitioned."""
-    p = plan_of(all_queries()["interval_merge_coverage"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["interval_merge_coverage"].fn(spark, sf_dir))
     # count hashpartitioning Exchanges over user_id-rooted keys
     n_exchanges = p.count("Exchange hashpartitioning")
     assert n_exchanges <= 2  # one for the window chain, one for the final agg at most
@@ -566,7 +557,7 @@ def test_star_candidates_use_grouped_min_not_window_or_self_join(spark, sf_dir):
     mega-bucket reduces before the shuffle) joined back to the band
     rows — never a WindowExec (buffers the whole bucket in one task)
     and never the band self-join (whose output is Σ bucket²)."""
-    p = plan_of(all_queries()["dedup_minhash_star"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["dedup_minhash_star"].fn(spark, sf_dir))
     assert "HashAggregate" in p
     assert "Window" not in p
     assert "CartesianProduct" not in p
@@ -577,7 +568,7 @@ def test_incremental_dedup_probes_rep_index_only(spark, sf_dir):
     """Incremental batch dedup joins batch band rows to the per-bucket
     representative index on the band-key equi-join; no self-join of the
     corpus side may appear."""
-    p = plan_of(all_queries()["dedup_incremental_batch"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["dedup_incremental_batch"].fn(spark, sf_dir))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     # candidate generation aggregates the index side to (bucket → min)
@@ -604,7 +595,7 @@ def test_feature_hashing_no_joins_no_window(spark, sf_dir):
     """The hashing-trick encoder must stay vocabulary-free: a pure
     map-side explode + one aggregate — no joins, no windows — or it
     stops working on unbounded feature streams."""
-    p = plan_of(all_queries()["feature_hashing_trick"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["feature_hashing_trick"].fn(spark, sf_dir))
     assert "Join" not in p and "Window" not in p
     # two aggregate exchanges: (bucket, feat) partial for the distinct
     # count, then bucket — count the detail-section node headers
@@ -617,7 +608,7 @@ def test_feature_hashing_no_joins_no_window(spark, sf_dir):
 def test_t_closeness_broadcasts_global_band_counts(spark, sf_dir):
     """Global sensitive-band counts and the total must join as
     broadcasts — the per-class fact side never shuffles for them."""
-    p = plan_of(all_queries()["t_closeness_audit"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["t_closeness_audit"].fn(spark, sf_dir))
     assert p.count("BroadcastHashJoin") + p.count("BroadcastNestedLoopJoin") >= 2
     assert "SortMergeJoin" not in p
 
@@ -626,7 +617,7 @@ def test_gopher_rules_no_udf_no_cartesian(spark, sf_dir):
     """The published-rule panel is pure column exprs: no Python
     boundary, no cartesian product; the top-word share joins back
     key-local on doc_id (hash join, either side)."""
-    p = plan_of(all_queries()["gopher_quality_rules"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["gopher_quality_rules"].fn(spark, sf_dir))
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p
     assert "CartesianProduct" not in p
@@ -638,7 +629,7 @@ def test_nprobe_sweep_is_cell_bounded(spark, sf_dir):
     a hash join on the cell id, never a nested-loop over the corpus
     (the 20-query brute-force ground truth is the one deliberate
     broadcast scan)."""
-    p = plan_of(all_queries()["ann_nprobe_recall_sweep"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["ann_nprobe_recall_sweep"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
 
@@ -652,7 +643,7 @@ def test_semdedup_twin_plan_shape(spark, sf_dir, checkpointed):
     from stacktrend_spark.plans.northstar import dedup_semdedup_pairs
 
     df = dedup_semdedup_pairs(spark, sf_dir)
-    p = "\n".join(plan_of(f) for f in [df, *checkpointed])
+    p = "\n".join(formatted_plan(f) for f in [df, *checkpointed])
     assert "MapInArrow" in p
     assert "FlatMapGroupsInPandas" in p
     assert "BroadcastHashJoin" in p  # the tiny chunk-factor table
@@ -665,7 +656,7 @@ def test_rrf_lexical_leg_is_df_capped(spark, sf_dir):
     join (uncapped postings were measured quadratic — SCALE.md r9)."""
     from stacktrend_spark.plans.mlprep import hybrid_rrf_fusion
 
-    p = plan_of(hybrid_rrf_fusion(spark, sf_dir))
+    p = formatted_plan(hybrid_rrf_fusion(spark, sf_dir))
     assert "LeftSemi" in p
     assert "CartesianProduct" not in p
 
@@ -679,7 +670,7 @@ def test_substring_spans_two_exchanges_and_pushdown(spark, sf_dir):
     reaches the parquet scan."""
     import re
 
-    p = plan_of(all_queries()["dedup_substring_spans"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["dedup_substring_spans"].fn(spark, sf_dir))
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", p, flags=re.M))
     assert n_exchanges <= 2
     assert re.search(r"hashpartitioning\(g#", p)

@@ -9,22 +9,13 @@ value oracle cannot see.
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 
 from stacktrend_spark.plans.registry import all_queries
+from tools.plan_shape import formatted_plan
 
 # heavy tier: excluded from the core gate (see pytest.ini)
 pytestmark = pytest.mark.slow
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_dsir_broadcasts_and_distributed_topk(spark, sf_dir):
@@ -32,14 +23,14 @@ def test_dsir_broadcasts_and_distributed_topk(spark, sf_dir):
     (the token stream never shuffles for them), and the top-25 must be
     TakeOrderedAndProject — per-partition heaps, not a global sort or
     an unbounded single-partition window."""
-    p = plan_of(all_queries()["dsir_importance_resampling"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["dsir_importance_resampling"].fn(spark, sf_dir))
     assert p.count("BroadcastHashJoin") + p.count("BroadcastNestedLoopJoin") >= 2
     assert "SortMergeJoin" not in p
     assert "TakeOrderedAndProject" in p
 
 
 def test_surprisal_vocab_broadcasts(spark, sf_dir):
-    p = plan_of(all_queries()["unigram_surprisal_filter"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["unigram_surprisal_filter"].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -47,7 +38,7 @@ def test_surprisal_vocab_broadcasts(spark, sf_dir):
 def test_conformal_scalars_broadcast(spark, sf_dir):
     """Segment means, the target bucket, the offsets and q-hat are all
     tiny frames: every join in the selection spine must broadcast."""
-    p = plan_of(all_queries()["conformal_calibration_quantile"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["conformal_calibration_quantile"].fn(spark, sf_dir))
     assert "SortMergeJoin" not in p
     assert "ShuffledHashJoin" not in p
 
@@ -56,25 +47,25 @@ def test_matryoshka_argmax_is_aggregate_not_window(spark, sf_dir):
     """Top-1 per (k, qid) must be a partial-aggregable struct max over
     the scored stream — a Window here would serialize each (k, qid)
     group through sort machinery for no reason."""
-    p = plan_of(all_queries()["matryoshka_truncation_agreement"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["matryoshka_truncation_agreement"].fn(spark, sf_dir))
     assert "Window" not in p
     # the query panel broadcasts; candidates never shuffle to meet it
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
 
 
 def test_ql_query_terms_broadcast_and_topk_distributed(spark, sf_dir):
-    p = plan_of(all_queries()["query_likelihood_dirichlet"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["query_likelihood_dirichlet"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
     assert "SortMergeJoin" not in p
 
 
 def test_snippet_argmax_is_aggregate_not_window(spark, sf_dir):
-    p = plan_of(all_queries()["snippet_best_window"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["snippet_best_window"].fn(spark, sf_dir))
     assert "Window" not in p
 
 
 def test_decayed_trending_anchor_broadcasts(spark, sf_dir):
-    p = plan_of(all_queries()["decayed_halflife_trending"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["decayed_halflife_trending"].fn(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -82,7 +73,7 @@ def test_decayed_trending_anchor_broadcasts(spark, sf_dir):
 def test_srm_is_map_side_hash_plus_one_aggregate(spark, sf_dir):
     """Arm assignment must be a map-side hash: no join anywhere, one
     segment aggregate."""
-    p = plan_of(all_queries()["srm_allocation_check"].fn(spark, sf_dir))
+    p = formatted_plan(all_queries()["srm_allocation_check"].fn(spark, sf_dir))
     assert "Join" not in p
     n_exchanges = len(
         [l for l in p.splitlines() if l.startswith("(") and "Exchange" in l]
@@ -100,7 +91,7 @@ def test_dynamic_partition_pruning_injected(spark, sf_dir):
     or the cast lands on the partition attribute and kills the rule.)"""
     from stacktrend_spark.plans.layout import _dpp_frame
 
-    p = plan_of(_dpp_frame(spark, sf_dir)).lower()
+    p = formatted_plan(_dpp_frame(spark, sf_dir)).lower()
     assert "dynamicpruning" in p
 
 
@@ -127,6 +118,6 @@ def test_parameterized_sql_pushes_bound_literals_to_scan(spark, sf_dir):
     PushedFilters, exactly as hand-inlined literals would."""
     from stacktrend_spark.plans.sql_surface import parameterized_sql_binding
 
-    p = plan_of(parameterized_sql_binding(spark, sf_dir))
+    p = formatted_plan(parameterized_sql_binding(spark, sf_dir))
     assert "PushedFilters" in p
     assert "BUILDING" in p  # the bound literal itself reached the scan

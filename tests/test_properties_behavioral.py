@@ -30,13 +30,12 @@ import shutil
 import tempfile
 from collections import defaultdict
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from stacktrend_spark.plans.registry import all_queries
+from tools.verify_local import check
 
 pytestmark = pytest.mark.slow
 
@@ -93,40 +92,14 @@ def _events_dir(rows) -> str:
     return d
 
 
-def _n(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    return v
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted((tuple(_n(r[i]) for i in order) for r in rows), key=repr)
-
-
-def _three_way(spark, name: str, d: str, model_rows: list[dict]):
-    spec = all_queries()[name]
+def _agree(spark, name: str, d: str, model_rows: list[dict]):
+    """The registered Spark plan and its registered DuckDB oracle, run
+    on the tmp dir, must each exactly equal the independent model."""
     try:
-        sdf = spec.fn(spark, d)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        con = duckdb.connect()
-        for f in os.listdir(d):
-            t = f.removesuffix(".parquet")
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(d, f)}'"
-            )
-        cur = con.execute(spec.oracle)
-        o_cols = [c[0] for c in cur.description]
-        o_rows = cur.fetchall()
+        problems = check(spark, d, name, model_rows)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-    m_cols = sorted(model_rows[0]) if model_rows else sorted(s_cols)
-    m_rows = [tuple(r[c] for c in m_cols) for r in model_rows]
-    assert sorted(s_cols) == sorted(o_cols) == m_cols
-    want = _canon(m_rows, m_cols)
-    assert _canon(s_rows, s_cols) == want, f"{name}: spark != model"
-    assert _canon(o_rows, o_cols) == want, f"{name}: oracle != model"
+    assert not problems, f"{name}: {problems}"
 
 
 def _iscale(v: float) -> int:
@@ -189,7 +162,7 @@ def test_events_markov_transition_model(spark, rows):
         }
         for (cur, nxt), c in trans.items()
     ]
-    _three_way(spark, "events_markov_transition", _events_dir(ev), model)
+    _agree(spark, "events_markov_transition", _events_dir(ev), model)
 
 
 # ---------------------------------------------------------------------------
@@ -219,7 +192,7 @@ def test_user_activity_streaks_model(spark, rows):
                 "first_active_day": sorted_days[0],
             }
         )
-    _three_way(spark, "user_activity_streaks", _events_dir(ev), model)
+    _agree(spark, "user_activity_streaks", _events_dir(ev), model)
 
 
 # ---------------------------------------------------------------------------
@@ -262,7 +235,7 @@ def test_survival_km_curve_model(spark, rows):
                 continue
         obs.append((_KM_HORIZON, 0))
     if not obs:
-        _three_way(spark, "survival_km_curve", _events_dir(ev), [])
+        _agree(spark, "survival_km_curve", _events_dir(ev), [])
         return
     per: dict[int, list[int]] = {}
     for t, evt in obs:
@@ -290,7 +263,7 @@ def test_survival_km_curve_model(spark, rows):
                 "log10_surv_ppm": log_ppm,
             }
         )
-    _three_way(spark, "survival_km_curve", _events_dir(ev), model)
+    _agree(spark, "survival_km_curve", _events_dir(ev), model)
 
 
 # ---------------------------------------------------------------------------
@@ -341,7 +314,7 @@ def test_attribution_first_last_touch_model(spark, rows):
         }
         for ch, crs in credits.items()
     ]
-    _three_way(
+    _agree(
         spark,
         "attribution_first_last_touch",
         _events_dir(ev),
@@ -390,7 +363,7 @@ def test_running_max_drawdown_model(spark, rows):
         }
         for i, (u, n, peak, dd) in enumerate(dd_rows[:10])
     ]
-    _three_way(spark, "running_max_drawdown", _events_dir(ev), model)
+    _agree(spark, "running_max_drawdown", _events_dir(ev), model)
 
 
 # ---------------------------------------------------------------------------
@@ -452,7 +425,7 @@ def test_ks_drift_by_source_model(spark, rows):
             )
             ks = max(ks, dev)
         model.append({"source": s, "n_docs": tot, "ks_ppm": ks})
-    _three_way(spark, "ks_drift_by_source", d, model)
+    _agree(spark, "ks_drift_by_source", d, model)
 
 
 # ===========================================================================
@@ -500,7 +473,7 @@ def test_event_pattern_match_model(spark, rows):
                         "elapsed_us": t2 - t0,
                     }
                 )
-    _three_way(spark, "event_pattern_match", _events_dir(ev), model)
+    _agree(spark, "event_pattern_match", _events_dir(ev), model)
 
 
 def _fround(x: float, n: int) -> float:
@@ -552,7 +525,7 @@ def test_interevent_burstiness_model(spark, rows):
                 "burstiness_b": b,
             }
         )
-    _three_way(spark, "interevent_burstiness", _events_dir(ev), model)
+    _agree(spark, "interevent_burstiness", _events_dir(ev), model)
 
 
 @_SETTINGS
@@ -588,4 +561,4 @@ def test_capture_recapture_estimate_model(spark, rows):
             "err_ppm": err,
         }
     ]
-    _three_way(spark, "capture_recapture_estimate", _events_dir(ev), model)
+    _agree(spark, "capture_recapture_estimate", _events_dir(ev), model)

@@ -25,13 +25,12 @@ import os
 import shutil
 import tempfile
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from stacktrend_spark.plans.registry import all_queries
+from tools.verify_local import check
 
 pytestmark = pytest.mark.slow
 
@@ -99,47 +98,14 @@ def _write_dir(tables: dict[str, tuple[dict, pa.Schema]]) -> str:
     return d
 
 
-def _n(v):
-    """collect()/fetchall() value → hashable canonical form."""
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    if isinstance(v, bool):
-        return v
-    return v
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_n(r[i]) for i in order) for r in rows), key=repr
-    )
-
-
-def _three_way(spark, name: str, d: str, model_rows: list[dict]):
-    """Run the registered Spark plan AND its registered DuckDB oracle
-    on the tmp dir; both must exactly equal the independent model."""
-    spec = all_queries()[name]
+def _agree(spark, name: str, d: str, model_rows: list[dict]):
+    """The registered Spark plan and its registered DuckDB oracle, run
+    on the tmp dir, must each exactly equal the independent model."""
     try:
-        sdf = spec.fn(spark, d)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        con = duckdb.connect()
-        for f in os.listdir(d):
-            t = f.removesuffix(".parquet")
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(d, f)}'"
-            )
-        cur = con.execute(spec.oracle)
-        o_cols = [c[0] for c in cur.description]
-        o_rows = cur.fetchall()
+        problems = check(spark, d, name, model_rows)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-    m_cols = sorted(model_rows[0]) if model_rows else sorted(s_cols)
-    m_rows = [tuple(r[c] for c in m_cols) for r in model_rows]
-    assert sorted(s_cols) == sorted(o_cols) == m_cols
-    want = _canon(m_rows, m_cols)
-    assert _canon(s_rows, s_cols) == want, f"{name}: spark != model"
-    assert _canon(o_rows, o_cols) == want, f"{name}: oracle != model"
+    assert not problems, f"{name}: {problems}"
 
 
 def _iscale(v: float, d: int = 2) -> int:
@@ -216,7 +182,7 @@ def test_agg_percentiles_model(spark, rows):
                 "max_qty": max(qs),
             }
         )
-    _three_way(spark, "agg_percentiles", _lineitem_dir(rows), model)
+    _agree(spark, "agg_percentiles", _lineitem_dir(rows), model)
 
 
 # ---------------------------------------------------------------------------
@@ -281,7 +247,7 @@ def test_outlier_iqr_filter_model(spark, rows):
                 "fence_hi": hi / 100.0,
             }
         )
-    _three_way(spark, "outlier_iqr_filter", _events_dir(ev), model)
+    _agree(spark, "outlier_iqr_filter", _events_dir(ev), model)
 
 
 # ---------------------------------------------------------------------------
@@ -311,7 +277,7 @@ def test_benford_leading_digit_model(spark, cents):
                 "abs_dev_ppm": abs(obs - bppm),
             }
         )
-    _three_way(
+    _agree(
         spark,
         "benford_leading_digit",
         _lineitem_dir(rows, price_cents=cents),
@@ -412,7 +378,7 @@ def test_chi2_segment_status_model(spark, oc):
                 "cell_chi2_ppm": dnum * dnum * 1_000_000 // (n * r * c),
             }
         )
-    _three_way(spark, "chi2_segment_status", _oc_dir(cust, orders), model)
+    _agree(spark, "chi2_segment_status", _oc_dir(cust, orders), model)
 
 
 @_SETTINGS
@@ -444,7 +410,7 @@ def test_gini_revenue_by_nation_model(spark, oc):
                 "gini_ppm": gini,
             }
         )
-    _three_way(spark, "gini_revenue_by_nation", _oc_dir(cust, orders), model)
+    _agree(spark, "gini_revenue_by_nation", _oc_dir(cust, orders), model)
 
 
 # ---------------------------------------------------------------------------
@@ -515,7 +481,7 @@ def test_anova_oneway_f_model(spark, rows):
             "eta2_ppm": ssb * 1_000_000 // (ssb + ssw),
         }
     ]
-    _three_way(spark, "anova_oneway_f", _anova_dir(rows), model)
+    _agree(spark, "anova_oneway_f", _anova_dir(rows), model)
 
 
 @_SETTINGS
@@ -544,7 +510,7 @@ def test_kruskal_wallis_h_model(spark, rows):
             "h_micro": h,
         }
     ]
-    _three_way(spark, "kruskal_wallis_h", _anova_dir(rows), model)
+    _agree(spark, "kruskal_wallis_h", _anova_dir(rows), model)
 
 
 # ---------------------------------------------------------------------------
@@ -616,7 +582,7 @@ def test_cuped_variance_reduction_model(spark, rows):
             ),
         }
     ]
-    _three_way(spark, "cuped_variance_reduction", d, model)
+    _agree(spark, "cuped_variance_reduction", d, model)
 
 
 # ---------------------------------------------------------------------------
@@ -651,7 +617,7 @@ def test_spearman_rank_corr_model(spark, oc):
         (fn * sxx - fsx * fsx) * (fn * syy - fsy * fsy)
     )
     model = [{"n_rows": n, "spearman_rho": _fround(rho, 6)}]
-    _three_way(spark, "spearman_rank_corr", _oc_dir(cust, orders), model)
+    _agree(spark, "spearman_rank_corr", _oc_dir(cust, orders), model)
 
 
 # ---------------------------------------------------------------------------
@@ -710,7 +676,7 @@ def test_cohens_kappa_raters_model(spark, rows):
             "cohens_kappa": kappa,
         }
     ]
-    _three_way(spark, "cohens_kappa_raters", d, model)
+    _agree(spark, "cohens_kappa_raters", d, model)
 
 
 # ===========================================================================
@@ -746,7 +712,7 @@ def test_agg_weighted_median_model(spark, rows, cents):
                 "total_quantity": tq,
             }
         )
-    _three_way(
+    _agree(
         spark,
         "agg_weighted_median",
         _lineitem_dir(rows, price_cents=cents),
@@ -771,7 +737,7 @@ def test_exact_median_distributed_model(spark, cents):
             "median_cents": med,
         }
     ]
-    _three_way(
+    _agree(
         spark,
         "exact_median_distributed",
         _lineitem_dir(rows, price_cents=cents),
@@ -839,7 +805,7 @@ def test_rolling_zscore_anomaly_model(spark, rows):
                     ),
                 }
             )
-    _three_way(spark, "rolling_zscore_anomaly", d, model)
+    _agree(spark, "rolling_zscore_anomaly", d, model)
 
 
 @_SETTINGS
@@ -883,7 +849,7 @@ def test_moments_skew_kurtosis_model(spark, oc):
                 "excess_kurtosis": kurt,
             }
         )
-    _three_way(spark, "moments_skew_kurtosis", _oc_dir(cust, orders), model)
+    _agree(spark, "moments_skew_kurtosis", _oc_dir(cust, orders), model)
 
 
 def _wilson_lcb(pos: int, n: int) -> float:
@@ -921,6 +887,6 @@ def test_wilson_lcb_category_ranking_model(spark, oc):
         }
         for i, (seg, n, pos, lcb) in enumerate(scored)
     ]
-    _three_way(
+    _agree(
         spark, "wilson_lcb_category_ranking", _oc_dir(cust, orders), model
     )

@@ -10,8 +10,6 @@ pytest in tests/test_plans.py enforces the load-bearing ones).
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -20,6 +18,7 @@ sys.path.insert(0, ROOT)
 
 from stacktrend_spark.plans.registry import all_queries  # noqa: E402
 from stacktrend_spark.session import get_spark  # noqa: E402
+from tools.plan_shape import formatted_plan  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -296,10 +295,7 @@ def main() -> None:
     ]
     for name, why in SHOWCASE:
         df = qs[name].fn(spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(df)
         # keep the tree + the scan-evidence lines (pushdown/pruning
         # claims are only checkable from the per-node detail)
         tree = plan.split("\n\n")[0]

@@ -103,8 +103,8 @@ def audit_output_schema(name: str, schema) -> list[str]:
     ]
 
 
-def audit_oracle(name: str, oracle: str | None) -> list[str]:
-    if oracle is None or name in ALLOWLIST:
+def audit_oracle(name: str, oracle: str) -> list[str]:
+    if name in ALLOWLIST:
         return []
     problems = []
     for m in _BANNED.finditer(oracle):
@@ -212,21 +212,19 @@ def checkpoint_inputs():
         DataFrame.localCheckpoint = original
 
 
-def build_frames(spark, sf_dir: str, names=None) -> tuple[dict, dict[str, list]]:
+def build_frames(spark, sf_dir: str) -> tuple[dict, dict[str, list]]:
     """Every registered query's frame at ``sf_dir`` (or the exception its
-    build raised) and the frames each build checkpointed; only
-    ``names``, when given."""
+    build raised) and the frames each build checkpointed."""
     from stacktrend_spark.plans.registry import all_queries
 
     frames: dict[str, object] = {}
     below: dict[str, list] = {}
     for name, spec in all_queries().items():
-        if names is None or name in names:
-            with checkpoint_inputs() as below[name]:
-                try:
-                    frames[name] = spec.fn(spark, sf_dir)
-                except Exception as e:  # noqa: BLE001 — each sweep reports it
-                    frames[name] = e
+        with checkpoint_inputs() as below[name]:
+            try:
+                frames[name] = spec.fn(spark, sf_dir)
+            except Exception as e:  # noqa: BLE001 — each sweep reports it
+                frames[name] = e
     return frames, below
 
 
@@ -237,30 +235,19 @@ def run_audit(sf_dir: str = "/root/testdata/sf0.001", frames=None) -> list[str]:
     ``frames`` is :func:`build_frames`' result at ``sf_dir``; without it
     every frame is built here.
     """
-    import duckdb
-
     from stacktrend_spark.plans.registry import all_queries
     from stacktrend_spark.session import get_spark
-    from stacktrend_spark.sources.tables import TABLES
+    from tools.verify_local import duck_con
 
     specs = all_queries()
     problems: list[str] = []
     for name, spec in specs.items():
         problems.extend(audit_oracle(name, spec.oracle))
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir.rstrip('/')}/{t}.parquet'"
-        )
-    # the end-to-end pipeline entries have no oracle, and building them
-    # EXECUTES the medallion chain (writes tables)
-    hashed = [n for n, spec in specs.items() if spec.oracle is not None]
-    frames, below = frames or build_frames(get_spark("parity_audit"), sf_dir, hashed)
+    con = duck_con(sf_dir)
+    frames, below = frames or build_frames(get_spark("parity_audit"), sf_dir)
     for name, spec in specs.items():
         if name in ALLOWLIST:
-            continue
-        if spec.oracle is None:  # not a hashed surface
             continue
         try:
             df = frames[name]
